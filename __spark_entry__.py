@@ -93,12 +93,13 @@ def entry(spark: SparkSession) -> DataFrame:
     from sketchlib import CuckooConfig, CuckooFilter
     from sketchlib.sketches import BloomFilter, CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark import membership_udf
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     docs = _t(spark, SF001, "documents")
     n_docs = docs.count()
     cfg = CuckooConfig(capacity=max(n_docs * 2, 1024), fingerprint_bits=16, hash_strategy="xx")
-    merged = merge_web_sketches(
+    merged = merge_sketches(
         build_web_sketches(
             docs,
             {
@@ -147,8 +148,8 @@ def q_web_sketch_family(spark, sf_dir):
     from sketchlib import CuckooConfig, CuckooFilter
     from sketchlib.sketches import BloomFilter, CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark import membership_udf
-    from sketchlib.spark.merge import state_bytes_hint
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches, state_bytes_hint
+    from sketchlib.spark.webbuild import build_web_sketches
 
     docs = _t(spark, sf_dir, "documents")
     n_docs = docs.count()
@@ -160,7 +161,7 @@ def q_web_sketch_family(spark, sf_dir):
         "cms": lambda: CountMinSketch(width=1 << 14, depth=4),
         "kll": lambda: KLLSketch(200),
     }
-    merged = merge_web_sketches(
+    merged = merge_sketches(
         build_web_sketches(docs, factories, url_col="text"),
         # production shape: the byte-aware gate sized from real state
         # widths (at this geometry the direct path still wins — the
@@ -498,13 +499,30 @@ def q_bloom_membership(spark, sf_dir):
     return keys.withColumn("m", member("key")).where("m").select("key")
 
 
-# one ShardedProbeIndex broadcast per (session, sf_dir), not per call:
-# the returned frame is lazy, so the query can't destroy its own index —
-# an unbounded per-call broadcast would leak for the session's lifetime
-# when a bench loop re-invokes the query (ShardedProbeIndex's own
-# hygiene contract). Evicted/old-session entries are destroyed
-# best-effort (their context may already be stopped).
+# one ShardedProbeIndex broadcast per (application, sf_dir), not per
+# call: the returned frame is lazy, so the query can't destroy its own
+# index — an unbounded per-call broadcast would leak for the session's
+# lifetime when a bench loop re-invokes the query (ShardedProbeIndex's
+# own hygiene contract). Assumes the tables under an sf_dir never change
+# while the application runs: a rewritten dir would keep being probed
+# against the index built from its old keys.
 _SHARDED_IDX_CACHE: dict = {}
+
+
+def _remember_index(cache_key, idx) -> None:
+    """Insert into _SHARDED_IDX_CACHE, evicting the OLDEST entries past
+    four. Only indexes of another (stopped) application are destroyed:
+    one of this application's may still back a lazy frame a caller
+    holds, so it is just dropped and left to the context cleaner."""
+    while len(_SHARDED_IDX_CACHE) >= 4:
+        old_key = next(iter(_SHARDED_IDX_CACHE))
+        old = _SHARDED_IDX_CACHE.pop(old_key)
+        if old_key[0] != cache_key[0]:
+            try:
+                old.destroy()
+            except Exception:
+                pass  # owning context may already be stopped
+    _SHARDED_IDX_CACHE[cache_key] = idx
 
 
 def q_sharded_membership(spark, sf_dir):
@@ -531,13 +549,7 @@ def q_sharded_membership(spark, sf_dir):
         # false for present keys
         assert sum(int(r.fail_count) for r in rows) == 0
         idx = ShardedProbeIndex(spark, {int(r.shard_id): bytes(r.state) for r in rows})
-        while len(_SHARDED_IDX_CACHE) >= 4:
-            _, old = _SHARDED_IDX_CACHE.popitem()
-            try:
-                old.destroy()
-            except Exception:
-                pass  # owning context may already be stopped
-        _SHARDED_IDX_CACHE[cache_key] = idx
+        _remember_index(cache_key, idx)
     return probe_sharded(keys, "key", num_shards=8, index=idx).select("key", "member")
 
 
@@ -673,10 +685,11 @@ def q_quantile_sketches_check(spark, sf_dir):
     both sketches folded in ONE scan (build_column_sketches), not one
     pass each."""
     from sketchlib.sketches import KLLSketch, TDigest
-    from sketchlib.spark.webbuild import build_column_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_column_sketches
 
     li = _t(spark, sf_dir, "lineitem").select(F.col("l_extendedprice").alias("v"))
-    merged = merge_web_sketches(
+    merged = merge_sketches(
         build_column_sketches(
             li, "v", {"kll": lambda: KLLSketch(k=200), "tdigest": lambda: TDigest(100.0)},
             numeric=True,
@@ -2046,7 +2059,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #       sharded_membership (+ sharded_delete/sharded_bloom_
     #       membership siblings); byte-aware direct-merge gate (merge/
     #       webbuild) -> web_sketch_family passes state_bytes=
-    #       state_bytes_hint(...) through merge_web_sketches (gate
+    #       state_bytes_hint(...) through merge_sketches (gate
     #       arithmetic on the driver path; the forced executor-fold
     #       BRANCH is pinned by the byte-gate unit tests + the
     #       local-cluster fold-parity test, not by a driver query) +

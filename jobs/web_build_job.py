@@ -54,8 +54,8 @@ def _build_fixed(spark, docs, args):
 
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark.build import build_sketches
-    from sketchlib.spark.merge import state_bytes_hint, tree_merge
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches, state_bytes_hint, tree_merge
+    from sketchlib.spark.webbuild import build_web_sketches
 
     if not args.checkpoint:
         factories = {
@@ -63,7 +63,7 @@ def _build_fixed(spark, docs, args):
             "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
             "kll": lambda: KLLSketch(200),
         }
-        return merge_web_sketches(
+        return merge_sketches(
             build_web_sketches(docs, factories),
             # byte-aware gate: --cms-width defaults to 1<<16 (2 MB
             # state); at the 256-partition threshold the direct pull

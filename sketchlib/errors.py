@@ -41,3 +41,9 @@ class GeometryMismatchError(SketchError):
 
     def __init__(self, detail: str) -> None:
         super().__init__(f"cannot merge sketches with mismatched geometry: {detail}")
+
+
+class CheckpointMismatchError(SketchError):
+    """Raised when a checkpoint or state dir was written by a different
+    build — sketch kind, key, partitioning, row layout or shard routing
+    — than the one about to resume or extend it."""

@@ -40,22 +40,37 @@ def ensure_checkpoint_meta(session, checkpoint_dir: str, meta: dict) -> None:
     """Fingerprint a checkpoint dir against the build that writes it.
 
     Resume-by-file-existence is only sound for the SAME build: a dir
-    left by a different sketch kind / key column / partitioning would
-    silently re-emit foreign rows (HLL states merged as CMS, or rows
-    double-counted under a changed partition map). First use writes
-    ``_meta.json``; later uses validate and raise on ANY mismatch —
-    pass a fresh dir (or delete the stale one) to rebuild."""
+    left by a different sketch kind / key column / partitioning / row
+    layout / shard routing would silently re-emit foreign rows (HLL
+    states merged as CMS, rows double-counted under a changed partition
+    map, keys probed in the wrong shard). First use of an empty or
+    missing dir writes ``_meta.json``; later uses validate it and raise
+    ``CheckpointMismatchError`` on ANY mismatch, as does a dir that
+    already holds state but no fingerprint (written before its format
+    was fingerprinted) — pass a fresh dir (or delete the stale one) to
+    rebuild."""
+    from ..errors import CheckpointMismatchError
+
     path = f"{checkpoint_dir.rstrip('/')}/_meta.json"
     fs, p = _fs_path(session, path)
     if fs.exists(p):
         stored = json.loads(read_bytes(session, path).decode())
         if stored != meta:
-            raise ValueError(
+            raise CheckpointMismatchError(
                 f"checkpoint dir {checkpoint_dir} was written by a different "
                 f"build: stored {stored}, current {meta}; resume would merge "
                 "mismatched states — use a fresh dir or delete the stale one"
             )
         return
+    d = p.getParent()
+    if fs.exists(d) and any(
+        not st.getPath().getName().startswith(".") for st in fs.listStatus(d)
+    ):
+        raise CheckpointMismatchError(
+            f"checkpoint dir {checkpoint_dir} holds state written by a different "
+            f"build (no fingerprint; current {meta}) — use a fresh dir or "
+            "delete the stale one"
+        )
     write_text(session, path, json.dumps(meta, sort_keys=True))
 
 

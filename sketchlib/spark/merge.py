@@ -1,4 +1,4 @@
-"""Two-level associative merge of per-partition sketch rows.
+"""Adaptive two-level associative merge of state rows.
 
 The Spark analogue of ``treeAggregate`` (SURVEY.md §3.4 step 5):
 level 1 routes partition rows round-robin to ≤fanout groups and
@@ -27,33 +27,41 @@ Shuffle volume: fanout × state_size — KBs–MBs, never data-scale.
 from __future__ import annotations
 
 from ..serde import loads
-from .build import SKETCH_ROW_SCHEMA, sketch_metrics
+from .build import SKETCH_SCHEMA, state_row
+
+_FOLD_COLS = ("sketch", "part_id", "n_rows", "state")
+
+# the merge knobs' defaults (see merge_sketches)
+FANOUT = 16
+DIRECT_PARTITIONS = 256
+DIRECT_BYTES = 256 << 20
 
 
-def _fold_rows(rows):
-    """Streaming fold of one merge group's (part_id, n_rows, state)
-    tuples: the running sketch plus ONE incoming blob resident at a
-    time — memory is 2 × state_size regardless of group size."""
-    sk = None
-    part_id = 0
-    n_rows = 0
-    for pid, nr, blob in rows:
-        other = loads(bytes(blob))
-        if sk is None:
-            sk, part_id, n_rows = other, int(pid), int(nr)
+def fold_states(rows) -> dict:
+    """Streaming fold of ``(name, part, n_rows, state)`` rows →
+    ``{name: (merged sketch, min part, summed n_rows)}``.
+
+    One running sketch per name; each incoming blob is merged, then
+    dropped. Fed by an iterator that hands rows over one at a time
+    (an RDD partition, a collected list), memory is n_names ×
+    state_size + ONE blob no matter how many rows it yields. The same
+    fold runs on the driver (direct merge) and inside level-1 tasks."""
+    acc: dict = {}
+    for name, part, n, blob in rows:
+        sk = loads(bytes(blob))
+        cur = acc.get(name)
+        if cur is None:
+            acc[name] = (sk, int(part), int(n))
         else:
-            sk.merge(other)
-            part_id = min(part_id, int(pid))
-            n_rows += int(nr)
-    if sk is not None:
-        items, fails, load = sketch_metrics(sk)
-        yield (part_id, n_rows, items, fails, load, sk.to_bytes())
+            cur[0].merge(sk)
+            acc[name] = (cur[0], min(cur[1], int(part)), cur[2] + int(n))
+    return acc
 
 
 def fold_groups_rdd(rdd, k: int, fold):
     """Round-robin routing of an RDD's rows to ``k`` merge groups +
-    streaming per-group ``fold`` (shared by tree_merge and
-    webbuild.merge_web_sketches — keep the routing in ONE place).
+    streaming per-group ``fold`` (shared by tree_merge_df and
+    udfs.cms_heavy_hitters — keep the routing in ONE place).
 
     Keyed by ``(source_partition_index + row_index) % k`` — balanced
     for ANY input, independent of the part_id column's diversity. A
@@ -80,11 +88,11 @@ def _direct_collect(frame):
     ``spark.driver.maxResultSize`` rejection into actionable guidance.
 
     The direct path gates on PARTITION count — a fine proxy for
-    build_sketches/build_web_sketches outputs (a handful of rows per
-    partition) but not for a blob table re-read from storage or
-    coalesced after a union, where few partitions can hold many
-    MB-scale rows. maxResultSize (default 1g) is the loud backstop for
-    that shape; the remedy is the executor-level path."""
+    partition-build outputs (a handful of rows per partition) but not
+    for a blob table re-read from storage or coalesced after a union,
+    where few partitions can hold many MB-scale rows. maxResultSize
+    (default 1g) is the loud backstop for that shape; the remedy is
+    the executor-level path."""
     try:
         return frame.collect()
     except Exception as e:  # pragma: no cover - env-sized threshold
@@ -98,17 +106,16 @@ def _direct_collect(frame):
         raise
 
 
-def _tree_fold_rdd(sketch_df, fanout: int):
-    return fold_groups_rdd(
-        sketch_df.select("part_id", "n_rows", "state").rdd, fanout, _fold_rows
-    )
+def tree_merge_df(sketch_df, fanout: int = FANOUT):
+    """Level-1 merge: p partition rows → ≤fanout rows per sketch name,
+    executor-side."""
 
+    def fold(rows):
+        for name, (sk, part, n) in fold_states(rows).items():
+            yield tuple(state_row(sk, n, sketch=name, part_id=part).to_pylist()[0].values())
 
-def tree_merge_df(sketch_df, fanout: int = 16):
-    """Level-1 merge: p partition rows → ≤fanout rows, executor-side."""
-    return sketch_df.sparkSession.createDataFrame(
-        _tree_fold_rdd(sketch_df, fanout), SKETCH_ROW_SCHEMA
-    )
+    rdd = fold_groups_rdd(sketch_df.select(*_FOLD_COLS).rdd, fanout, fold)
+    return sketch_df.sparkSession.createDataFrame(rdd, SKETCH_SCHEMA)
 
 
 def state_bytes_hint(*factories) -> int:
@@ -122,60 +129,74 @@ def state_bytes_hint(*factories) -> int:
     return sum(len(fac().to_bytes()) for fac in factories)
 
 
-def tree_merge(
-    sketch_df,
-    fanout: int = 16,
-    direct_partitions: int = 256,
+def direct_merge(
+    p: int,
     state_bytes: int | None = None,
-    direct_bytes: int = 256 << 20,
-):
-    """Full merge → one sketch object on the driver.
+    direct_partitions: int = DIRECT_PARTITIONS,
+    direct_bytes: int = DIRECT_BYTES,
+) -> bool:
+    """The adaptive-depth gate: may a frame of ``p`` partitions, each
+    holding ``state_bytes`` of state rows, be folded on the driver in
+    one collect? See ``merge_sketches``."""
+    return p <= direct_partitions and (state_bytes is None or p * state_bytes <= direct_bytes)
 
-    Adaptive depth: when the blob frame has ≤ ``direct_partitions``
-    partitions, the executor level is SKIPPED — one ``collect`` of the
-    partition blobs, folded driver-side one at a time. The driver
-    transient is p × state_size (≤ 256 × ~0.5 MB ≈ 128 MB at the
-    flagship's CMS geometry), and the build stage keeps its full scan
-    parallelism because ``collect`` is a plain job over the existing
-    partitions. Measured on the 800k-doc bench corpus (65 blob rows):
-    the level-1 RDD route+partitionBy+fold costs 1.7 s of pure
-    task/python-shuffle overhead where the direct collect-fold costs
-    0.6 s — two extra stages buy nothing until the blob count is large
-    enough that a single driver pull would be GBs.
 
-    Past the threshold (100 TB ⇒ ~10^5-10^6 scan partitions) the
-    two-level shape engages: level 1 routes blobs round-robin to
-    ≤fanout streaming folds executor-side, so the driver never pulls
-    more than fanout blobs.
+def merge_sketches(
+    sketch_df,
+    fanout: int = FANOUT,
+    direct_partitions: int = DIRECT_PARTITIONS,
+    state_bytes: int | None = None,
+    direct_bytes: int = DIRECT_BYTES,
+) -> dict[str, object]:
+    """Bounded-memory merge of a SKETCH_SCHEMA frame → {name: merged
+    sketch object} on the driver.
 
-    ``state_bytes`` makes the gate BYTE-aware: when the caller knows
-    the per-partition state size (``state_bytes_hint(factory)`` —
-    exact for array-backed sketches, no Spark job), the direct path
-    additionally requires p × state_bytes ≤ ``direct_bytes`` (default
-    256 MB of driver transient). Without it the gate counts partitions
-    only, which a 2 MB-wide CMS at the 256-partition threshold turns
-    into a silent ~0.5 GB driver pull — maxResultSize is the loud
-    backstop, but the byte cap avoids tripping it at all. For
-    unusually large per-partition states with no hint available
-    (an unsharded CuckooFilter sized for 10^8+ keys is ~2 B/key PER
-    PARTIAL) pass ``direct_partitions=0``, or better, use
-    ``shard.build_sharded`` (the intended giant-membership path:
-    total state 2 B/key across ALL shards, nothing merges globally)."""
+    Adaptive depth: when the frame has ≤ ``direct_partitions``
+    partitions the executor level is SKIPPED — one ``collect`` of the
+    state rows, folded driver-side one blob at a time. The driver
+    transient is p × state_size per name (≤ 256 × ~0.5 MB ≈ 128 MB at
+    the flagship's CMS geometry), and the build stage keeps its full
+    scan parallelism because ``collect`` is a plain job over the
+    existing partitions. Measured on the 800k-doc bench corpus (65
+    blob rows): the level-1 RDD route+partitionBy+fold costs 1.1-1.7 s
+    of pure task/python-shuffle overhead where the direct collect-fold
+    costs 0.6 s — two extra stages buy nothing until the blob count is
+    large enough that a single driver pull would be GBs.
+
+    Past the threshold (100 TB ⇒ ~10^5-10^6 scan partitions) level 1
+    (``tree_merge_df``) routes the rows round-robin to ≤fanout
+    streaming folds executor-side, so the driver never pulls more than
+    fanout rows per name.
+
+    ``state_bytes`` makes the gate BYTE-aware: pass
+    ``state_bytes_hint(*factories)`` (the summed empty-state size of
+    one partition's row group — exact for array-backed sketches, no
+    Spark job) and the direct path additionally requires
+    p × state_bytes ≤ ``direct_bytes`` (default 256 MB of driver
+    transient). Without it the gate counts partitions only, which a
+    2 MB-wide CMS at the threshold turns into a silent ~0.5 GB driver
+    pull — maxResultSize is the loud backstop, but the byte cap avoids
+    tripping it at all. The gate also counts PARTITIONS, not rows: a
+    blob table re-read from storage can pack many rows per partition;
+    pass ``direct_partitions=0`` for it. For giant membership state
+    use ``shard.build_sharded`` instead (total state 2 B/key across
+    ALL shards, nothing merges globally)."""
     p = sketch_df.rdd.getNumPartitions()
-    fits_bytes = state_bytes is None or p * state_bytes <= direct_bytes
-    if p <= direct_partitions and fits_bytes:
-        sk = None
-        for r in _direct_collect(sketch_df.select("state")):
-            other = loads(bytes(r[0]))
-            if sk is None:
-                sk = other
-            else:
-                sk.merge(other)
-        return sk
-    rows = _tree_fold_rdd(sketch_df, fanout).collect()
-    if not rows:
-        return None
-    sk = loads(bytes(rows[0][5]))
-    for r in rows[1:]:
-        sk.merge(loads(bytes(r[5])))
-    return sk
+    if direct_merge(p, state_bytes, direct_partitions, direct_bytes):
+        rows = _direct_collect(sketch_df.select(*_FOLD_COLS))
+    else:
+        rows = tree_merge_df(sketch_df, min(fanout, max(p, 1))).select(*_FOLD_COLS).collect()
+    return {name: sk for name, (sk, _, _) in fold_states(rows).items()}
+
+
+def tree_merge(sketch_df, **knobs):
+    """Full merge of a one-sketch frame (``build_sketches`` output) →
+    the merged sketch, or None for an empty frame. ``knobs`` are
+    ``merge_sketches``'."""
+    merged = merge_sketches(sketch_df, **knobs)
+    if len(merged) > 1:
+        raise ValueError(
+            f"tree_merge got state rows of {sorted(merged)}; "
+            "use merge_sketches for multi-sketch frames"
+        )
+    return next(iter(merged.values()), None)

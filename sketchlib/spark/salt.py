@@ -69,10 +69,13 @@ def partition_sizes(df) -> list[int]:
     caller's runtime SQLConf, so planning confs like
     ``spark.sql.shuffle.partitions`` resolve identically; the frame is
     re-bound to the clone from its analyzed plan), so queries planned
-    concurrently in the caller's session never see the flipped conf. If the plan transfer is unavailable,
-    falls back to a save/restore flip of the caller's session conf —
-    only then is the diagnostic unsafe to run concurrently with
-    latency-sensitive queries."""
+    concurrently in the caller's session never see the flipped conf.
+    The rebind goes through ``org.apache.spark.sql.classic.Dataset``,
+    which exists only on Spark 4, so this isolation is Spark 4-only. On
+    Spark 3.x, and wherever else the plan transfer is unavailable (e.g.
+    Connect), it falls back to a save/restore flip of the caller's
+    session conf — only then is the diagnostic unsafe to run
+    concurrently with latency-sensitive queries."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     ones = _count_projection(df)

@@ -4,9 +4,12 @@ A single merged filter needs global geometry in every task (2 bytes ×
 total slots), which stops scaling around 10^9 capacity. Sharding keeps
 per-task memory constant at any scale:
 
-* build: repartition rows by ``pmod(xxhash64(key), num_shards)``; each
-  shard builds ONE filter of capacity/num_shards (mapInArrow fold);
-  the result table (shard_id, state, metrics) is the filter.
+* build: ``shard_id = pmod(hash(key), num_shards)`` is exactly the
+  partition expression of Spark's own ``HashPartitioning`` (murmur3),
+  so ``repartition(num_shards, key)`` lands shard i in partition i —
+  one task per shard. Each shard builds ONE filter of
+  capacity/num_shards (mapInArrow fold); the result table
+  (build.SHARD_SCHEMA state rows) is the filter.
 * probe: zero-shuffle broadcast lookup while total state fits the
   broadcast budget (blobs broadcast once per executor, probes answered
   on their scan partitions); above it, a cogroup on shard_id — probes
@@ -22,6 +25,7 @@ for combining incremental builds.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import replace
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
@@ -29,76 +33,53 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
 from ..serde import loads
+from .build import ROW_FORMAT, SHARD_SCHEMA, state_row
+from .merge import fold_states
+from .udfs import _sketch_from
 
-SHARD_SCHEMA = (
-    "shard_id int, n_rows long, item_count long, fail_count long, "
-    "load_factor double, state binary"
-)
+# key → shard assignment, pinned in checkpoint/state fingerprints: a
+# table built under another routing (the earlier pmod(xxhash64(key), n))
+# would be probed against the wrong shards — silent false negatives
+SHARD_ROUTING = "pmod(hash(key), num_shards)"
 
 
 def _shard_col(key_col: str, num_shards: int):
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_shards)).cast("int")
+    return F.pmod(F.hash(F.col(key_col)), F.lit(num_shards))
 
 
-# shard routing keys are a pure function of (num_shards) — Spark's
-# murmur3 is fixed — so the tiny discovery job runs once per size
-_ROUTE_KEYS: dict[int, list[int]] = {}
-
-
-def _identity_route_keys(spark, n: int) -> list[int]:
-    """Routing keys k_0..k_{n-1} with ``pmod(hash(k_i), n) == i``.
-
-    ``repartition(n, "shard_id")`` hash-partitions the shard id with
-    murmur3, which is NOT the identity: several shards collide into one
-    task while others sit empty, so a task holds 2-3 full per-shard
-    filters at once — breaking the 'exactly one task per shard /
-    per-task memory = one shard' contract this module exists for.
-    Routing through a key whose murmur3 pmod IS the shard id restores
-    the 1:1 layout. Keys are discovered with one tiny driver job
-    (coupon-collector over spark.range; murmur3 evaluated by Spark
-    itself so it can never drift from the engine's partitioner)."""
-    cached = _ROUTE_KEYS.get(n)
-    if cached is not None:
-        return cached
-    found: dict[int, int] = {}
-    start, step = 0, max(64 * n, 1024)
-    while len(found) < n:
-        # engine-side reduction: min(id) per residue, so the driver
-        # collects AT MOST n rows per round instead of the whole 64·n
-        # probe window (at 10^5 shards that was ~6.4M longs pulled to
-        # the driver once per session). min-of-window == the
-        # first-encountered id of the old scan, so the discovered keys
-        # are unchanged.
-        rows = (
-            spark.range(start, start + step)
-            .select(F.pmod(F.hash("id"), F.lit(n)).alias("p"), F.col("id"))
-            .groupBy("p")
-            .agg(F.min("id").alias("id"))
-            .collect()
-        )
-        for r in rows:
-            found.setdefault(int(r.p), int(r.id))
-        start += step
-    keys = [found[i] for i in range(n)]
-    _ROUTE_KEYS[n] = keys
-    return keys
-
-
-def _route_by_shard(keyed: DataFrame, num_shards: int) -> DataFrame:
-    """Exchange into EXACTLY one partition per shard (see
-    _identity_route_keys); the helper column is dropped after."""
-    route = _identity_route_keys(keyed.sparkSession, num_shards)
-    mapping = F.create_map(
-        *[x for i, k in enumerate(route) for x in (F.lit(i), F.lit(k))]
-    )
+def _shard_exchange(df: DataFrame, key_col: str, num_shards: int) -> DataFrame:
+    """(key, shard_id) rows after one shuffle through Spark's hash
+    partitioner: partition i holds exactly the rows of shard i (for
+    the one exception see build_sharded's fold)."""
     return (
-        # cast matters: murmur3 hashes int32 and int64 differently, and
-        # the discovery job hashed LONGs (spark.range ids) — an int32
-        # literal here would re-collide the routing
-        keyed.withColumn("_route", mapping[F.col("shard_id").cast("int")].cast("long"))
-        .repartition(num_shards, "_route")
-        .drop("_route")
+        df.select(F.col(key_col).alias("key"))
+        .withColumn("shard_id", _shard_col("key", num_shards))
+        .repartition(num_shards, "key")
     )
+
+
+def shard_fingerprint(op: str, key_col: str, num_shards: int, factory) -> dict:
+    """The ``ensure_checkpoint_meta`` fingerprint of a shard table's
+    lineage: row layout, routing, sketch kind, key and shard count."""
+    return {
+        "op": op,
+        "format": ROW_FORMAT,
+        "routing": SHARD_ROUTING,
+        "kind": type(factory()).__name__,
+        "key_col": key_col,
+        "num_shards": int(num_shards),
+    }
+
+
+def shard_factory(num_shards: int, cfg: CuckooConfig | None = None, factory=None):
+    """The per-shard sketch factory: ``factory`` when given, else a
+    CuckooFilter with capacity/num_shards geometry."""
+    if factory is not None:
+        return factory
+    if cfg is None:
+        raise ValueError("need cfg or factory")
+    shard_cfg = replace(cfg, capacity=max(cfg.capacity // num_shards, 64))
+    return lambda: CuckooFilter(shard_cfg)
 
 
 def build_sharded(
@@ -109,7 +90,8 @@ def build_sharded(
     factory=None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """→ one row per shard (SHARD_SCHEMA). Exactly one task per shard.
+    """→ one row per non-empty shard (SHARD_SCHEMA), one task per
+    shard (see module docstring).
 
     ``factory``: optional zero-arg callable building the per-shard
     sketch (any membership sketch with update/lookup_batch-or-contains);
@@ -121,153 +103,68 @@ def build_sharded(
     contract as build_sketches — each task atomically publishes its
     finished shard row (``shard-{id}.arrow``); a resumed run re-emits
     published rows instead of re-folding those shards. Valid because
-    the shard→rows assignment is the build's own hash partitioner
-    (stable for a given key set and num_shards, unlike scan-partition
-    ids)."""
-    if factory is None:
-        if cfg is None:
-            raise ValueError("need cfg or factory")
-        shard_cfg = CuckooConfig(
-            capacity=max(cfg.capacity // num_shards, 64),
-            bucket_size=cfg.bucket_size,
-            fingerprint_bits=cfg.fingerprint_bits,
-            max_kicks=cfg.max_kicks,
-            hash_strategy=cfg.hash_strategy,
-            seed=cfg.seed,
-        )
-        factory = lambda: CuckooFilter(shard_cfg)  # noqa: E731
-    keyed = df.select(F.col(key_col).alias("key")).withColumn(
-        "shard_id", _shard_col("key", num_shards)
-    )
-    # one shuffle, EXACTLY one partition per shard (identity routing —
-    # plain repartition on shard_id murmur3-collides shards into shared
-    # tasks, multiplying per-task filter memory; see _identity_route_keys)
-    keyed = _route_by_shard(keyed, num_shards)
-
+    the shard→rows assignment is the key hash (stable for a given key
+    set and num_shards, unlike scan-partition ids), so the fingerprint
+    pins routing/kind/shards/key but NOT input partition count."""
+    factory = shard_factory(num_shards, cfg, factory)
     if checkpoint_dir:
-        # shard→rows assignment is the key hash (stable across input
-        # partitioning), so the fingerprint pins kind/shards/key —
-        # but NOT partition count, which may legitimately change
         from .checkpoint import ensure_checkpoint_meta
 
         ensure_checkpoint_meta(
             df.sparkSession,
             checkpoint_dir,
-            {
-                "op": "build_sharded",
-                "kind": type(factory()).__name__,
-                "key_col": key_col,
-                "num_shards": int(num_shards),
-            },
+            shard_fingerprint("build_sharded", key_col, num_shards, factory),
         )
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import numpy as np
+
         from . import taskfs
 
-        out_schema = pa.schema(
-            [
-                ("shard_id", pa.int32()),
-                ("n_rows", pa.int64()),
-                ("item_count", pa.int64()),
-                ("fail_count", pa.int64()),
-                ("load_factor", pa.float64()),
-                ("state", pa.binary()),
-            ]
-        )
-        filters: dict[int, CuckooFilter] = {}
-        counts: dict[int, int] = {}
-        resumed: dict[int, pa.Table] = {}
-
-        # executor-side IO via pyarrow.fs (tasks have no JVM; os.path on
-        # an hdfs://-s3a:// dir writes executor-LOCAL files and resume
-        # silently never fires) — see sketchlib/spark/taskfs.py
-        ck_fs = ck_base = None
-        if checkpoint_dir:
-            ck_fs, ck_base = taskfs.task_fs(checkpoint_dir)
-
-        def ckpt_path(sid: int) -> str:
-            return f"{ck_base.rstrip('/')}/shard-{sid:06d}.arrow"
-
+        # {shard_id: [sketch, rows]}, sketch None when already published.
+        # Ids come from the rows, not TaskContext (a downstream union
+        # renumbers partitions). A task holds one shard unless Spark
+        # dropped the exchange — input already hash-partitioned by the
+        # key into num_shards partitions — and AQE then coalesced small
+        # partitions; each shard still gets its own sketch.
+        shards: dict[int, list] = {}
         for rb in batches:
-            keys = rb.column("key")
-            shards = rb.column("shard_id").to_numpy()
-            # a task normally owns one shard; group defensively anyway
-            import numpy as np
-
-            for sid in np.unique(shards):
-                sid_i = int(sid)
-                if checkpoint_dir and sid_i not in resumed and sid_i not in filters:
-                    p = ckpt_path(sid_i)
-                    if taskfs.exists(ck_fs, p):
-                        resumed[sid_i] = taskfs.read_ipc_table(ck_fs, p)
-                if sid_i in resumed:
-                    continue  # shard already published: skip the fold
-                mask = shards == sid
-                # NOT setdefault(sid_i, factory()): setdefault evaluates
-                # its default eagerly, allocating (and discarding) a
-                # full-size filter table per Arrow batch on the hot path
-                f = filters.get(sid_i)
-                if f is None:
-                    f = filters[sid_i] = factory()
+            sids = rb.column("shard_id").to_numpy()
+            present = np.unique(sids).tolist()
+            for sid in present:
+                acc = shards.get(sid)
+                if acc is None:
+                    done = taskfs.published(checkpoint_dir, f"shard-{sid:06d}")
+                    acc = shards[sid] = [None if done else factory(), 0]
+                if acc[0] is None:
+                    continue
+                keys = rb.column("key")
+                if len(present) > 1:
+                    keys = keys.filter(pa.array(sids == sid))
                 # factory protocol: cuckoo-style insert_batch, else the
                 # MergeableSketch update (Bloom/HLL/... shard the same way)
-                ins = getattr(f, "insert_batch", None) or f.update
-                ins(keys.filter(pa.array(mask)))
-                counts[sid_i] = counts.get(sid_i, 0) + int(mask.sum())
-        for table in resumed.values():
-            yield from table.to_batches()
-        for sid, f in filters.items():
-            out = pa.RecordBatch.from_pydict(
-                {
-                    "shard_id": [sid],
-                    "n_rows": [counts[sid]],
-                    "item_count": [int(getattr(f, "num_items", 0))],
-                    "fail_count": [int(getattr(f, "insert_failures", 0))],
-                    "load_factor": [float(f.load_factor()) if hasattr(f, "load_factor") else 0.0],
-                    "state": [f.to_bytes()],
-                },
-                schema=out_schema,
+                (getattr(acc[0], "insert_batch", None) or acc[0].update)(keys)
+                acc[1] += len(keys)
+        for sid, (f, n) in shards.items():
+            yield from taskfs.checkpointed(
+                checkpoint_dir, f"shard-{sid:06d}", lambda: [state_row(f, n, shard_id=sid)]
             )
-            if checkpoint_dir:
-                import uuid
 
-                # attempt-unique tmp + move = atomic publish; identical
-                # bytes per attempt make last-writer-wins safe; dead
-                # attempts' orphaned tmps are GC'd inside
-                taskfs.publish_ipc_batch(
-                    ck_fs,
-                    ck_base,
-                    f".shard-{sid:06d}.tmp-{uuid.uuid4().hex[:8]}",
-                    f"shard-{sid:06d}.arrow",
-                    out_schema,
-                    out,
-                )
-            yield out
-
-    return keyed.mapInArrow(fold, SHARD_SCHEMA)
+    return _shard_exchange(df, key_col, num_shards).mapInArrow(fold, SHARD_SCHEMA)
 
 
-_SHARD_COLS = ["shard_id", "n_rows", "item_count", "fail_count", "load_factor", "state"]
-
-# worker-level deserialized-shard cache for the broadcast probe path:
-# the docstring promises 'each worker deserializes a shard at most once
-# per call', but a per-task dict re-deserializes every shard for every
-# input partition (200 probe partitions × 8 shards = 1600 multi-MB
-# loads). Keyed by (JVM broadcast id, shard id) — broadcast ids are
-# unique per context and never reused, so a destroyed index can't alias
-# a later one. Bounded so destroyed indexes can't pin worker memory.
-_PROBE_DESER_CACHE: dict[tuple[int, int], object] = {}
-_PROBE_DESER_CACHE_MAX = 512
-
-
-def _shard_from(bid: int, sid: int, blob: bytes) -> object:
-    f = _PROBE_DESER_CACHE.get((bid, sid))
-    if f is None:
-        f = loads(blob)
-        while len(_PROBE_DESER_CACHE) >= _PROBE_DESER_CACHE_MAX:
-            _PROBE_DESER_CACHE.pop(next(iter(_PROBE_DESER_CACHE)))
-        _PROBE_DESER_CACHE[(bid, sid)] = f
-    return f
+def _has_state(state, op: str) -> bool:
+    """Whether a cogroup's shard group holds its state row. A
+    well-formed shard table has exactly one row per shard; duplicates
+    (unioned or unmerged shard tables, a double-emitting build) fail
+    loudly — using only one of them would silently drop the others'
+    filter state (false negatives after a probe or delete)."""
+    if len(state) > 1:
+        raise ValueError(
+            f"shard {int(state['shard_id'].iloc[0])} has {len(state)} state rows; "
+            f"merge duplicate shard rows (merge_sharded) before {op}"
+        )
+    return len(state) == 1
 
 
 def delete_sharded(
@@ -294,33 +191,14 @@ def delete_sharded(
     )
 
     def apply_deletes(dels: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
-        if state.empty:
-            # deletes hashed to a shard with no row: nothing was ever
-            # inserted there, so there is nothing to delete
-            return pd.DataFrame({c: [] for c in _SHARD_COLS})
-        if len(state) > 1:
-            # a well-formed shard table has exactly one row per shard;
-            # duplicates (unioned shard tables, a double-emitting build)
-            # must fail loudly — applying deletes to only one of the
-            # rows would silently drop the others' filter state
-            raise ValueError(
-                f"shard {int(state['shard_id'].iloc[0])} has {len(state)} state "
-                "rows; merge duplicate shard rows (merge_sharded) before delete"
-            )
-        if dels.empty:
-            return state[_SHARD_COLS]  # untouched shard passes through
+        # a shard with no row had nothing inserted, so there is nothing
+        # to delete; an untouched shard passes through undeserialized
+        if not _has_state(state, "delete") or dels.empty:
+            return state[SHARD_SCHEMA.names]
         f = loads(state["state"].iloc[0])
         f.delete_batch(dels["key"])
-        return pd.DataFrame(
-            {
-                "shard_id": [int(state["shard_id"].iloc[0])],
-                "n_rows": [int(state["n_rows"].iloc[0])],
-                "item_count": [int(getattr(f, "num_items", 0))],
-                "fail_count": [int(getattr(f, "insert_failures", 0))],
-                "load_factor": [float(f.load_factor()) if hasattr(f, "load_factor") else 0.0],
-                "state": [f.to_bytes()],
-            }
-        )
+        sid = int(state["shard_id"].iloc[0])
+        return state_row(f, int(state["n_rows"].iloc[0]), shard_id=sid).to_pandas()
 
     return (
         keyed.groupBy("shard_id")
@@ -333,28 +211,19 @@ def merge_sharded(shard_df: DataFrame) -> DataFrame:
     """ONE row per shard from a union of same-geometry shard tables
     (incremental builds, streaming micro-batches): per shard_id, the
     duplicate filter states merge associatively and the row counts add.
-    One applyInPandas group per shard — per-task memory is the handful
-    of duplicate states of a single shard, never the whole table."""
-    import pandas as pd
+    Rows are hash-partitioned by shard_id and streamed through
+    ``merge.fold_states`` — per-task memory is one running state per
+    shard in the task plus ONE incoming blob, never a materialized
+    group."""
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = loads(pdf["state"].iloc[0])
-        for blob in pdf["state"].iloc[1:]:
-            f.merge(loads(blob))
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "item_count": [int(getattr(f, "num_items", 0))],
-                "fail_count": [int(getattr(f, "insert_failures", 0))],
-                "load_factor": [
-                    float(f.load_factor()) if hasattr(f, "load_factor") else 0.0
-                ],
-                "state": [f.to_bytes()],
-            }
-        )
+    def fold(rows):
+        for sid, (f, _, n) in fold_states(rows).items():
+            yield tuple(state_row(f, n, shard_id=sid).to_pylist()[0].values())
 
-    return shard_df.groupBy("shard_id").applyInPandas(merge_group, SHARD_SCHEMA)
+    rows = shard_df.repartition("shard_id").select(
+        "shard_id", F.col("shard_id").alias("part"), "n_rows", "state"
+    )
+    return shard_df.sparkSession.createDataFrame(rows.rdd.mapPartitions(fold), SHARD_SCHEMA)
 
 
 class ShardedProbeIndex:
@@ -451,8 +320,7 @@ def probe_sharded(
             else ShardedProbeIndex.from_shards(shard_df).broadcast
         )
         # driver-side JVM broadcast id: the worker-level deser cache key
-        # (unique per context, never reused — the same contract as
-        # udfs._DESER_CACHE; id(bc) would alias after GC address reuse)
+        # (udfs._sketch_from; id(bc) would alias after GC address reuse)
         bid = bc._jbroadcast.id()
 
         def probe_batches(batches):
@@ -460,10 +328,9 @@ def probe_sharded(
                 member = np.zeros(len(pdf), bool)
                 if len(pdf):
                     for sid, idx in pdf.groupby("shard_id").indices.items():
-                        blob = bc.value.get(int(sid))
-                        if blob is None:
+                        f = _sketch_from(bid, bc, int(sid))
+                        if f is None:
                             continue  # empty shard: member stays False
-                        f = _shard_from(bid, int(sid), blob)
                         fn = getattr(f, "lookup_batch", None) or f.contains
                         member[idx] = np.asarray(fn(pdf[key_col].iloc[idx]), bool)
                 out = pdf.copy()
@@ -476,18 +343,9 @@ def probe_sharded(
         if probe_pdf.empty:
             return pd.DataFrame({c: [] for c in list(probe_pdf.columns) + ["member"]})
         out = probe_pdf.copy()
-        if state_pdf.empty:
+        if not _has_state(state_pdf, "probing"):
             out["member"] = False  # empty shard: key was never inserted
             return out
-        if len(state_pdf) > 1:
-            # mirror delete_sharded's loud guard: probing only the first
-            # of several duplicate state rows (unioned/unmerged shard
-            # tables) returns silent false negatives
-            raise ValueError(
-                f"shard {int(state_pdf['shard_id'].iloc[0])} has "
-                f"{len(state_pdf)} state rows; merge duplicate shard rows "
-                "(merge_sharded) before probing"
-            )
         f = loads(state_pdf["state"].iloc[0])
         fn = getattr(f, "lookup_batch", None) or f.contains
         out["member"] = np.asarray(fn(probe_pdf[key_col]), bool)

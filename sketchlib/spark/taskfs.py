@@ -48,7 +48,7 @@ def read_ipc_table(fs, path: str) -> pa.Table:
 
 
 def publish_ipc_batch(fs, base: str, tmp_name: str, final_name: str, schema, batch) -> None:
-    """Atomically publish one Arrow-IPC record batch: write an
+    """Atomically publish an Arrow-IPC record batch or table: write an
     attempt-unique tmp, move it over the final name, then best-effort
     GC any orphaned tmp siblings of the same final name (failed/killed
     attempts otherwise leak one tmp file each, forever, in a dir that
@@ -58,7 +58,7 @@ def publish_ipc_batch(fs, base: str, tmp_name: str, final_name: str, schema, bat
     final = f"{base.rstrip('/')}/{final_name}"
     with fs.open_output_stream(tmp) as sink:
         with pa.ipc.new_file(sink, schema) as w:
-            w.write_batch(batch)
+            w.write(batch)
     fs.move(tmp, final)
     # orphan GC: any remaining tmp for this final name belongs to a
     # dead attempt (ours just won). A racing live attempt whose tmp we
@@ -75,3 +75,39 @@ def publish_ipc_batch(fs, base: str, tmp_name: str, final_name: str, schema, bat
                     pass
     except Exception:
         pass
+
+
+def published(checkpoint_dir: str | None, name: str) -> bool:
+    """Whether ``{name}.arrow`` is published under ``checkpoint_dir``."""
+    if not checkpoint_dir:
+        return False
+    fs, base = task_fs(checkpoint_dir)
+    return exists(fs, f"{base.rstrip('/')}/{name}.arrow")
+
+
+def checkpointed(checkpoint_dir: str | None, name: str, build) -> list[pa.RecordBatch]:
+    """A task's output batches under checkpoint lineage: re-read
+    ``{name}.arrow`` when a previous attempt or run published it, else
+    ``build()`` them and publish them atomically (attempt-unique tmp +
+    move; every attempt writes identical bytes, so last-writer-wins is
+    safe). Nothing is published for an empty output; without a
+    ``checkpoint_dir`` this is just ``build()``."""
+    if not checkpoint_dir:
+        return build()
+    fs, base = task_fs(checkpoint_dir)
+    done = f"{base.rstrip('/')}/{name}.arrow"
+    if exists(fs, done):
+        return read_ipc_table(fs, done).to_batches()
+    out = build()
+    if out:
+        import uuid
+
+        publish_ipc_batch(
+            fs,
+            base,
+            f".{name}.tmp-{uuid.uuid4().hex[:8]}",
+            f"{name}.arrow",
+            out[0].schema,
+            pa.Table.from_batches(out),
+        )
+    return out

@@ -17,27 +17,38 @@ from pyspark.sql.types import BooleanType, LongType
 
 from ..serde import loads
 
-# Worker-process-level deserialization cache, keyed by the JVM
-# broadcast id (unique per SparkContext, NEVER reused — assigned by a
-# monotone counter). Keying by id(bc) — the Python object address —
-# is a latent wrong-answer bug in long-lived reused workers: once a
-# query's Broadcast object is garbage-collected, a LATER query's
-# broadcast can land at the same address and silently receive the
-# previous query's deserialized sketch (caught in round 4 when a CMS
-# estimate UDF was handed a CuckooFilter; with two same-typed sketches
-# it would have been wrong answers with no error). Bounded so destroyed
-# broadcasts can't accumulate multi-MB sketches in worker memory.
-_DESER_CACHE: dict[int, object] = {}
+# Worker-process-level deserialization cache: JVM broadcast id →
+# {part: sketch}, filled lazily — ONE sketch for a blob broadcast
+# (membership/cms UDFs, part None), one per shard for a ShardedProbeIndex
+# broadcast — so each worker deserializes a blob at most once per
+# broadcast, not once per task or batch. Keyed by the JVM broadcast id
+# (unique per SparkContext, NEVER reused — assigned by a monotone
+# counter). Keying by id(bc) — the Python object address — is a latent
+# wrong-answer bug in long-lived reused workers: once a query's
+# Broadcast object is garbage-collected, a LATER query's broadcast can
+# land at the same address and silently receive the previous query's
+# deserialized sketch (caught in round 4 when a CMS estimate UDF was
+# handed a CuckooFilter). Bounded by BROADCAST count, oldest first, so
+# destroyed broadcasts can't pin multi-MB sketches in worker memory;
+# an entry-count bound would instead thrash a many-shard probe.
+_DESER_CACHE: dict[int, dict] = {}
 _DESER_CACHE_MAX = 8
 
 
-def _sketch_from(bid: int, bc) -> object:
-    sk = _DESER_CACHE.get(bid)
-    if sk is None:
-        sk = loads(bc.value)
+def _sketch_from(bid: int, bc, part=None):
+    """Broadcast ``bid``'s deserialized sketch: its whole value, or
+    entry ``part`` of a {part: blob} broadcast (None when absent)."""
+    parts = _DESER_CACHE.get(bid)
+    if parts is None:
         while len(_DESER_CACHE) >= _DESER_CACHE_MAX:
             _DESER_CACHE.pop(next(iter(_DESER_CACHE)))
-        _DESER_CACHE[bid] = sk
+        parts = _DESER_CACHE[bid] = {}
+    sk = parts.get(part)
+    if sk is None:
+        blob = bc.value if part is None else bc.value.get(part)
+        if blob is None:
+            return None
+        sk = parts[part] = loads(blob)
     return sk
 
 
@@ -198,13 +209,13 @@ def cms_heavy_hitters(
     candidate list (Metwally et al., SpaceSaving, ICDT'05). Counts in
     the dict only RANK candidates — the CMS supplies the final
     estimates, so floor inflation never reaches the output. Partial
-    rows then merge like every other sketch frame:
-    ≤ ``merge.tree_merge``'s direct threshold → one collect + driver
-    fold; above it → ``merge.fold_groups_rdd`` streaming executor
-    folds (the groupBy().applyInPandas shape merge.py documents as the
-    multi-blob materialization anti-pattern is exactly what this
-    replaced). Rows shuffled: ≤fanout × (state + candidate list) —
-    k-scale, not data-scale.
+    rows then merge behind the same gate as every sketch frame
+    (``merge.direct_merge``, byte-aware with the CMS state size): one
+    collect + driver fold, or ``merge.fold_groups_rdd`` streaming
+    executor folds (the groupBy().applyInPandas shape merge.py
+    documents as the multi-blob materialization anti-pattern is exactly
+    what this replaced). Rows shuffled: ≤fanout × (state + candidate
+    list) — k-scale, not data-scale.
 
     Any key type is accepted — keys are cast to string up front (the
     same canonicalization the CMS hash applies), so a bigint user_id
@@ -219,15 +230,12 @@ def cms_heavy_hitters(
     from ..serde import loads
     from ..sketches import CountMinSketch
 
-    PARTIAL_SCHEMA = "part_id int, cand array<string>, state binary"
+    PARTIAL_SCHEMA = "cand array<string>, state binary"
     emit_n = candidate_factor * k
     prune_keep = 8 * emit_n
     prune_at = 32 * emit_n
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
         cms = CountMinSketch(width=width, depth=depth)
         counts: dict = {}
         floor = 0  # highest count ever evicted by a prune (SpaceSaving)
@@ -249,60 +257,40 @@ def cms_heavy_hitters(
             )
         top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:emit_n]
         yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": [pid],
-                "cand": [[t[0] for t in top]],
-                "state": [cms.to_bytes()],
-            },
-            schema=pa.schema(
-                [
-                    ("part_id", pa.int32()),
-                    ("cand", pa.list_(pa.string())),
-                    ("state", pa.binary()),
-                ]
-            ),
+            {"cand": [[t[0] for t in top]], "state": [cms.to_bytes()]},
+            schema=pa.schema([("cand", pa.list_(pa.string())), ("state", pa.binary())]),
         )
 
     keys = df.select(F.col(key_col).cast("string").alias("key"))
     partials = keys.mapInArrow(fold, PARTIAL_SCHEMA)
 
     def _fold_partial_rows(rows):
-        """Streaming per-row fold of (part_id, cand, state) tuples —
-        one running (cms, cand-set) per group, one incoming blob
-        resident at a time (same memory contract as merge._fold_rows)."""
+        """Streaming per-row fold of (cand, state) tuples — one running
+        (cms, cand-set), one incoming blob resident at a time (same
+        memory contract as merge.fold_states)."""
         cms = None
         cands: set = set()
-        part_id = 0
-        for pid, cand, blob in rows:
+        for cand, blob in rows:
             other = loads(bytes(blob))
             if cms is None:
-                cms, part_id = other, int(pid)
+                cms = other
             else:
                 cms.merge(other)
-                part_id = min(part_id, int(pid))
             cands.update(cand)
         if cms is not None:
-            yield (part_id, sorted(cands), cms.to_bytes())
+            yield (sorted(cands), cms.to_bytes())
 
-    from .merge import _direct_collect, fold_groups_rdd
+    from .merge import _direct_collect, direct_merge, fold_groups_rdd, state_bytes_hint
 
     p = partials.rdd.getNumPartitions()
-    if p <= 256:  # same crossover as merge.tree_merge
-        rows = _direct_collect(partials.select("part_id", "cand", "state"))
+    if direct_merge(p, state_bytes_hint(lambda: CountMinSketch(width=width, depth=depth))):
+        rows = _direct_collect(partials)
     else:
-        rows = fold_groups_rdd(
-            partials.select("part_id", "cand", "state").rdd,
-            min(fanout, p),
-            _fold_partial_rows,
-        ).collect()
-    if not rows:
+        rows = fold_groups_rdd(partials.rdd, min(fanout, p), _fold_partial_rows).collect()
+    merged = list(_fold_partial_rows(rows))
+    if not merged:
         return []
-    cms = loads(bytes(rows[0][2]))
-    cands = set(rows[0][1])
-    for r in rows[1:]:
-        cms.merge(loads(bytes(r[2])))
-        cands.update(r[1])
-    cand_list = sorted(cands)
-    est = cms.estimate(cand_list)
+    cand_list, blob = merged[0]
+    est = loads(blob).estimate(cand_list)
     ranked = sorted(zip(cand_list, est), key=lambda kv: (-int(kv[1]), kv[0]))
     return [(c, int(e)) for c, e in ranked[:k]]

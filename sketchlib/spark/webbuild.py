@@ -9,8 +9,7 @@ over the data and six.
 
 ``build_web_sketches`` folds ALL sketches in a single ``mapInArrow``
 pass over the scan partitions — zero shuffle of input rows, one row per
-(partition, sketch) out (KBs), then one tiny shuffle to merge per
-sketch name. Partition sizing is the scan's own
+(partition, sketch) out (KBs), merged by ``merge.merge_sketches``. Partition sizing is the scan's own
 (``spark.sql.files.maxPartitionBytes``), which is the correct knob at
 any scale; salting is only needed for *grouped* (per-key) builds, not
 global mergeable states (any row→partition assignment yields the same
@@ -23,35 +22,13 @@ string-y step), numpy everywhere else.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from ..serde import loads
-
-WEB_SKETCH_SCHEMA = (
-    "sketch string, part_id int, n_rows long, item_count long, "
-    "fail_count long, load_factor double, state binary"
-)
-
-_PA_SCHEMA = pa.schema(
-    [
-        ("sketch", pa.string()),
-        ("part_id", pa.int32()),
-        ("n_rows", pa.int64()),
-        ("item_count", pa.int64()),
-        ("fail_count", pa.int64()),
-        ("load_factor", pa.float64()),
-        ("state", pa.binary()),
-    ]
-)
-
-
-def _metrics(sk) -> tuple[int, int, float]:
-    from .build import sketch_metrics
-
-    return sketch_metrics(sk)
+from .build import column_update, fold_partitions
 
 
 def build_web_sketches(
@@ -66,66 +43,42 @@ def build_web_sketches(
     input kind — url sketches from the url column, ``token_sketches``
     from whitespace tokens of text, ``size_sketches`` from len(text).
 
-    Returns a DataFrame of WEB_SKETCH_SCHEMA rows (one per partition per
-    sketch). Merge with ``merge_web_sketches``.
+    Returns a DataFrame of build.SKETCH_SCHEMA rows (one per partition
+    per sketch). Merge with ``merge.merge_sketches``.
     """
     token_set = set(token_sketches)
     size_set = set(size_sketches)
 
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        sks = {name: fac() for name, fac in factories.items()}
-        n = 0
-        for rb in batches:
-            urls = rb.column(0)
-            texts = rb.column(1)
-            n += rb.num_rows
-            # page sizes: numpy from arrow offsets (no Python loop)
-            if size_set:
-                import pyarrow.compute as pc
-
-                sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
-            if token_set:
-                # C++ whitespace tokenizer (same semantics as str.split()),
-                # then batch-local pre-aggregation: value_counts collapses
-                # the Zipf-distributed token stream to its (much smaller)
-                # vocabulary before any Python-side hashing — the map-side
-                # combine of this pipeline, and the difference between
-                # hashing 250M tokens and ~50k uniques per partition
-                toks = pa.compute.utf8_split_whitespace(texts)
-                flat = pa.compute.list_flatten(toks)
-                flat = flat.filter(pa.compute.not_equal(flat, ""))
-                vc = flat.value_counts()
-                tok_vals = vc.field("values")
-                tok_counts = vc.field("counts").to_numpy(zero_copy_only=False)
-            for name, sk in sks.items():
-                if name in size_set:
-                    sk.update(sizes)
-                elif name in token_set:
-                    try:
-                        sk.update(tok_vals, weights=tok_counts)
-                    except TypeError:  # sketch without weighted updates
-                        sk.update(flat)
-                else:
-                    sk.update(urls)
+    def update(sks: dict, rb: pa.RecordBatch) -> None:
+        urls = rb.column(0)
+        texts = rb.column(1)
+        # page sizes: numpy from arrow offsets (no Python loop)
+        if size_set:
+            sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
+        if token_set:
+            # C++ whitespace tokenizer (same semantics as str.split()),
+            # then batch-local pre-aggregation: value_counts collapses
+            # the Zipf-distributed token stream to its (much smaller)
+            # vocabulary before any Python-side hashing — the map-side
+            # combine of this pipeline, and the difference between
+            # hashing 250M tokens and ~50k uniques per partition
+            flat = pc.list_flatten(pc.utf8_split_whitespace(texts))
+            flat = flat.filter(pc.not_equal(flat, ""))
+            vc = flat.value_counts()
+            tok_vals = vc.field("values")
+            tok_counts = vc.field("counts").to_numpy(zero_copy_only=False)
         for name, sk in sks.items():
-            items, fails, load = _metrics(sk)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "sketch": [name],
-                    "part_id": [pid],
-                    "n_rows": [n],
-                    "item_count": [items],
-                    "fail_count": [fails],
-                    "load_factor": [load],
-                    "state": [sk.to_bytes()],
-                },
-                schema=_PA_SCHEMA,
-            )
+            if name in size_set:
+                sk.update(sizes)
+            elif name in token_set:
+                try:
+                    sk.update(tok_vals, weights=tok_counts)
+                except TypeError:  # sketch without weighted updates
+                    sk.update(flat)
+            else:
+                sk.update(urls)
 
-    return docs_df.select(url_col, text_col).mapInArrow(fold, WEB_SKETCH_SCHEMA)
+    return fold_partitions(docs_df.select(url_col, text_col), factories, update)
 
 
 def build_column_sketches(
@@ -137,140 +90,8 @@ def build_column_sketches(
     """One pass over a single column updating EVERY factory's sketch —
     the generic sibling of build_web_sketches (e.g. KLL + t-digest
     quantiles of the same column in one scan instead of two).
-    Returns WEB_SKETCH_SCHEMA rows; merge with merge_web_sketches."""
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        sks = {name: fac() for name, fac in factories.items()}
-        n = 0
-        for rb in batches:
-            c = rb.column(0)
-            n += rb.num_rows
-            vals = c.to_numpy(zero_copy_only=False).astype(np.float64) if numeric else c
-            for sk in sks.values():
-                sk.update(vals)
-        for name, sk in sks.items():
-            items, fails, load = _metrics(sk)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "sketch": [name],
-                    "part_id": [pid],
-                    "n_rows": [n],
-                    "item_count": [items],
-                    "fail_count": [fails],
-                    "load_factor": [load],
-                    "state": [sk.to_bytes()],
-                },
-                schema=_PA_SCHEMA,
-            )
-
-    return df.select(col).mapInArrow(fold, WEB_SKETCH_SCHEMA)
-
-
-def _fold_blob_rows(rows) -> Iterator[tuple]:
-    """Streaming fold of one merge group's (sketch, part_id, n_rows,
-    state) tuples: one running sketch per name, each incoming blob
-    merged then dropped. The RDD iterator hands blobs over ONE AT A
-    TIME, so task memory is n_names × state_size + one blob no matter
-    how many rows the group holds — a mapInArrow fold would instead
-    materialize arrow.maxRecordsPerBatch (default 10k) blob rows per
-    input batch, which at MB-scale CMS states is tens of GB."""
-    sks: dict[str, object] = {}
-    n_rows: dict[str, int] = {}
-    part_id: dict[str, int] = {}
-    for name, pid, count, blob in rows:
-        sk = loads(bytes(blob))
-        if name in sks:
-            sks[name].merge(sk)
-            n_rows[name] += int(count)
-            part_id[name] = min(part_id[name], int(pid))
-        else:
-            sks[name] = sk
-            n_rows[name] = int(count)
-            part_id[name] = int(pid)
-    for name, sk in sks.items():
-        yield (name, part_id[name], n_rows[name], sk.to_bytes())
-
-
-def merge_web_sketches(
-    sketch_df,
-    fanout: int = 64,
-    direct_partitions: int = 256,
-    state_bytes: int | None = None,
-    direct_bytes: int = 256 << 20,
-) -> dict[str, object]:
-    """Bounded-memory merge → {name: merged sketch object}.
-
-    Adaptive depth (same crossover as ``merge.tree_merge``): at
-    ≤ ``direct_partitions`` blob partitions the executor level is
-    skipped — one collect, driver folds the p × n_names blobs one at a
-    time (transient = p × n_names × state_size; ~100 MB at the
-    flagship geometry). The level-1 RDD stage pair costs ~1.1 s of
-    task/python-shuffle overhead at bench scale while buying memory
-    bounds that only matter at 10^5+ scan partitions.
-
-    Two caveats, same as ``tree_merge``: the threshold counts
-    PARTITIONS (the right proxy for build outputs — n_names rows per
-    partition — but not for a blob table re-read from storage, where
-    few partitions can hold many rows: maxResultSize is the loud
-    backstop, ``direct_partitions=0`` the remedy); and without a
-    ``state_bytes`` hint it counts neither BYTES nor names (at
-    ``jobs/web_build_job.py``'s default 2 MB CMS width the direct pull
-    is p × n_names × 2 MB — ~1.5 GB at the threshold). Pass
-    ``state_bytes=merge.state_bytes_hint(*factories)`` (the summed
-    empty-state size of one partition's row group — exact for
-    array-backed sketches, no Spark job) and the direct path
-    additionally requires p × state_bytes ≤ ``direct_bytes`` (default
-    256 MB driver transient); wide-state builds then take the bounded
-    executor fold even at low partition counts.
-
-    Past the threshold, level 1 routes the P×n_names blob rows round-robin to ≤fanout
-    groups and STREAMS each group through a per-name running merge
-    (RDD mapPartitions via merge.fold_groups_rdd — the deliberate
-    imperative escape hatch, see sketchlib/spark/merge.py module
-    docstring: rows are KB–MB sketch blobs handed over one at a time,
-    so per-task memory is n_names × state_size + one blob no matter
-    how many scan partitions fed it, and the routing is balanced no
-    matter what the part_id column holds). The driver then finishes
-    ≤fanout blobs per name.
-
-    The earlier shapes both materialized multi-blob batches: ``groupBy
-    ("sketch").applyInPandas`` funneled EVERY partition's blob of a
-    name into one task as one pandas frame (~800k blobs × MB states ≈
-    TBs at 100 TB / 128 MB scan partitions), and a ``mapInArrow`` fold
-    still materializes 10k-row arrow batches (~tens of GB at MB
-    states) before the iterator sees them.
-    """
-    from .merge import fold_groups_rdd
-
-    p = sketch_df.rdd.getNumPartitions()
-    out: dict[str, object] = {}
-    fits_bytes = state_bytes is None or p * state_bytes <= direct_bytes
-    if p <= direct_partitions and fits_bytes:
-        from .merge import _direct_collect
-
-        for row in _direct_collect(sketch_df.select("sketch", "state")):
-            sk = loads(bytes(row[1]))
-            if row[0] in out:
-                out[row[0]].merge(sk)
-            else:
-                out[row[0]] = sk
-        return out
-    k = min(fanout, max(p, 1))
-    rows = fold_groups_rdd(
-        sketch_df.select("sketch", "part_id", "n_rows", "state").rdd,
-        k,
-        _fold_blob_rows,
-    ).collect()
-    for name, _pid, _n, blob in rows:
-        sk = loads(bytes(blob))
-        if name in out:
-            out[name].merge(sk)
-        else:
-            out[name] = sk
-    return out
+    Returns build.SKETCH_SCHEMA rows; merge with merge.merge_sketches."""
+    return fold_partitions(df.select(col), factories, column_update(numeric))
 
 
 def build_web_pipeline(
@@ -292,7 +113,8 @@ def build_web_pipeline(
     corpus size, so partition count can track core count freely.
 
     Job B — membership (cuckoo) built SHARDED: project url only
-    (~tens of bytes/row), shuffle by pmod(xxhash64(url), shards), one
+    (~tens of bytes/row), shuffle by Spark's hash partitioner —
+    shard_id = pmod(hash(url), shards), one task per shard — one
     capacity/shards filter per shard. Total filter state is
     capacity × 2 bytes regardless of shard or partition count, and
     probes route by the same hash — no global merge ever materializes.
@@ -321,14 +143,14 @@ def build_web_pipeline(
     )
 
     def job_a():
-        from .merge import state_bytes_hint
+        from .merge import merge_sketches, state_bytes_hint
 
         factories = {
             "hll": lambda: HyperLogLog(14),
             "cms": lambda: CountMinSketch(width=cms_width, depth=4),
             "kll": lambda: KLLSketch(200),
         }
-        return merge_web_sketches(
+        return merge_sketches(
             build_web_sketches(docs_df, factories),
             # byte-aware direct gate: one partition's row group is one
             # state per name; wide CMS configs route to the executor

@@ -130,7 +130,10 @@ class IncrementalSketchBuilder:
         commits would disarm the replay guard in exactly the
         at-least-once crash window it exists for. URI checkpoints are
         inspected through the session's Hadoop FS when a session is
-        available; without one they return False (fresh-dir side)."""
+        available; without one they return False (fresh-dir side). A
+        FAILED inspection returns True — the guard stays armed: an
+        unreadable checkpoint must not be taken for a fresh one, which
+        would let a replayed batch double-fold."""
         base = checkpoint_dir
         if base.startswith("file:"):
             base = base[len("file:") :] or "/"
@@ -151,7 +154,7 @@ class IncrementalSketchBuilder:
                     if not st.getPath().getName().startswith("."):
                         return True
             except Exception:
-                return False
+                return True
             return False
         offsets = os.path.join(base, "offsets")
         try:

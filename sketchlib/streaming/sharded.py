@@ -16,6 +16,10 @@ pointer file, goes through the Hadoop FileSystem API of the session,
 never the driver's local ``os`` module, so the layout works wherever
 the executors' parquet writes land)::
 
+    _meta.json          fingerprint (row layout, shard routing, sketch
+                        kind, key, shard count) — a state_dir written
+                        by another build or an older routing raises
+                        CheckpointMismatchError instead of being merged
     epoch-{batch_id}/   shard table (SHARD_SCHEMA parquet) AFTER batch
     CURRENT             pointer file: "{batch_id}" of the last applied
                         batch (written to a temp name + atomic rename)
@@ -38,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..config import CuckooConfig
-from ..spark.shard import build_sharded, merge_sharded
+from ..spark.checkpoint import ensure_checkpoint_meta
+from ..spark.shard import build_sharded, merge_sharded, shard_factory, shard_fingerprint
 
 
 class ShardedStreamBuilder:
@@ -56,8 +61,8 @@ class ShardedStreamBuilder:
         self.key_col = key_col
         self.num_shards = num_shards
         self.state_dir = state_dir.rstrip("/")
-        self.cfg = cfg
-        self.factory = factory
+        self.factory = shard_factory(num_shards, cfg, factory)
+        self._fingerprinted = False
 
     # ---------------------------------------------------- hadoop fs helpers
 
@@ -208,10 +213,23 @@ class ShardedStreamBuilder:
 
     # ------------------------------------------------------------ state io
 
+    def _ensure_format(self, spark) -> None:
+        """Fingerprint state_dir once per builder: shard tables written
+        under another layout or routing must never be merged or
+        probed (sketchlib.spark.checkpoint.ensure_checkpoint_meta)."""
+        if not self._fingerprinted:
+            ensure_checkpoint_meta(
+                spark,
+                self.state_dir,
+                shard_fingerprint("sharded_stream", self.key_col, self.num_shards, self.factory),
+            )
+            self._fingerprinted = True
+
     def current_shards(self, spark) -> DataFrame | None:
         """The shard table after the last applied batch (None before
         the first batch). This IS the filter — probe it with
         ``spark.shard.probe_sharded``."""
+        self._ensure_format(spark)
         cur = self._pointer(spark)
         if cur is None:
             return None
@@ -221,12 +239,11 @@ class ShardedStreamBuilder:
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        self._ensure_format(spark)
         cur = self._pointer(spark)
         if cur is not None and batch_id <= cur:
             return  # replayed epoch: merge already published, skip
-        delta = build_sharded(
-            batch_df, self.key_col, self.num_shards, cfg=self.cfg, factory=self.factory
-        )
+        delta = build_sharded(batch_df, self.key_col, self.num_shards, factory=self.factory)
         prev = self.current_shards(spark)
         merged = merge_sharded(delta.unionByName(prev)) if prev is not None else delta
         merged.write.mode("overwrite").parquet(f"{self.state_dir}/epoch-{batch_id}")

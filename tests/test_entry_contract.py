@@ -75,6 +75,42 @@ def test_entry_runs(spark):
     assert abs(r.hll_estimate - r.distinct_text) / r.distinct_text < 0.1
 
 
+def test_sharded_index_cache_evicts_oldest_keeps_live_broadcasts(spark):
+    """The per-(application, sf_dir) probe-index cache evicts its
+    OLDEST entry past four and destroys only indexes of another
+    application: after a 5th key, this application's indexes — the
+    most recent above all — still back lazy probe frames."""
+    from sketchlib.spark.shard import ShardedProbeIndex
+
+    cache = entry_mod._SHARDED_IDX_CACHE
+    saved = dict(cache)
+    cache.clear()
+    app = spark.sparkContext.applicationId
+    destroyed = []
+
+    class StoppedAppIndex:
+        def destroy(self):
+            destroyed.append(self)
+
+    idx = [ShardedProbeIndex(spark, {0: f"blob{i}".encode()}) for i in range(5)]
+    try:
+        entry_mod._remember_index(("stopped-app", SF), StoppedAppIndex())
+        for i, ix in enumerate(idx):
+            entry_mod._remember_index((app, f"{SF}/v{i}"), ix)
+        assert len(destroyed) == 1  # the stopped application's index
+        assert list(cache) == [(app, f"{SF}/v{i}") for i in range(1, 5)]
+        sc = spark.sparkContext
+        for i, ix in enumerate(idx):  # evicted (v0) or cached: none destroyed
+            bc = ix.broadcast
+            got = sc.parallelize([0], 1).map(lambda _, bc=bc: bc.value[0]).collect()
+            assert got == [f"blob{i}".encode()]
+    finally:
+        cache.clear()
+        cache.update(saved)
+        for ix in idx:
+            ix.destroy()
+
+
 @pytest.mark.parametrize(
     "name",
     [

@@ -15,6 +15,7 @@ at local[4] and local-cluster[2,2,1024] and assert:
 * order-sensitive state (KLL compaction, cuckoo kick sequences) agrees
   semantically — same n, rank-valid quantiles, same per-shard
   row/item/failure counts, no-false-negative probes;
+* the sharded build's exchange puts exactly shard i in partition i;
 * a checkpoint → SIGKILL → resume cycle under local-cluster re-emits
   the pre-kill-published shards byte-identically (the taskfs contract)
   and completes to the same semantic result as a clean single run.
@@ -139,6 +140,15 @@ def test_flagship_sharded_counts_and_probes_agree(flagship):
     # 20k absent probes, 16-bit fingerprints, b=4: bound 2*4/2^16 ≈ 1.2e-4
     assert lc["probe_false_pos"] <= 10 and l4["probe_false_pos"] <= 10
     assert lc["hll_estimate"] == flagship["local"]["hll_estimate"]
+
+
+def test_shard_exchange_one_shard_per_partition_both_masters(flagship):
+    """The sharded build's 1:1 layout holds across executor JVMs too:
+    partition i of the shard exchange holds exactly shard i."""
+    for tag in ("cluster", "local"):
+        layout = flagship[tag]["shard_layout"]
+        assert len(layout) == 8
+        assert all(ids == [i] for i, ids in layout), (tag, layout)
 
 
 def test_checkpoint_kill_resume_under_local_cluster(docs_parquet, tmp_path):

@@ -493,9 +493,19 @@ def test_udf_deser_cache_keyed_by_broadcast_id():
     b = udfs._sketch_from(102, FakeBC(cms.to_bytes()))
     assert type(a) is BloomFilter and type(b) is CountMinSketch
     assert udfs._sketch_from(101, FakeBC(b"garbage-never-read")) is a  # cached
-    for i in range(20):  # bounded: old entries evicted
+    # the sharded probe's {shard: blob} broadcasts share the cache: one
+    # entry per broadcast holding its shards, so a 16-shard probe never
+    # evicts its own shards, and absent shards answer None
+    shards = {sid: BloomFilter(capacity=8, fp_rate=0.5).to_bytes() for sid in range(16)}
+    got = [udfs._sketch_from(103, FakeBC(shards), sid) for sid in range(16)]
+    garbage = FakeBC({sid: b"garbage-never-read" for sid in range(16)})
+    assert all(udfs._sketch_from(103, garbage, sid) is f for sid, f in enumerate(got))
+    assert udfs._sketch_from(103, FakeBC(shards), 99) is None
+    assert udfs._sketch_from(101, FakeBC(b"garbage-never-read")) is a
+    for i in range(20):  # bounded by broadcasts: oldest evicted first
         udfs._sketch_from(200 + i, FakeBC(BloomFilter(capacity=8, fp_rate=0.5).to_bytes()))
     assert len(udfs._DESER_CACHE) <= udfs._DESER_CACHE_MAX
+    assert 101 not in udfs._DESER_CACHE and 219 in udfs._DESER_CACHE
     udfs._DESER_CACHE.clear()
 
 

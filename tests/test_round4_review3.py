@@ -32,7 +32,7 @@ def test_fsio_roundtrip(spark, tmp_path):
     assert read_bytes(spark, tpath) == b'{"ok": true}'
 
 
-# ------------------------------------------------- merge_web_sketches shape
+# ----------------------------------------------------- merge_sketches shape
 
 
 def test_merge_web_sketches_bounded_fanout(spark, docs_df):
@@ -44,7 +44,8 @@ def test_merge_web_sketches_bounded_fanout(spark, docs_df):
     materialized pandas group (~TBs at 100 TB / 128 MB partitions)."""
     from sketchlib.serde import loads
     from sketchlib.sketches import CountMinSketch, HyperLogLog
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     docs = docs_df.repartition(16)  # P=16 partition partials per name
     partials = build_web_sketches(
@@ -58,7 +59,7 @@ def test_merge_web_sketches_bounded_fanout(spark, docs_df):
         # direct_partitions=0 forces the executor level (P >> fanout);
         # the ≤threshold direct path is covered by the adaptive-merge
         # equivalence test in test_round4_review5.py
-        merged = merge_web_sketches(partials, fanout=3, direct_partitions=0)
+        merged = merge_sketches(partials, fanout=3, direct_partitions=0)
         # oracle: fold every partial driver-side
         oracle = {}
         for r in partials.collect():

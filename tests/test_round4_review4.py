@@ -56,7 +56,7 @@ def test_tree_merge_streams_one_blob_at_a_time(spark):
     still referenced."""
     from sketchlib.sketches import HyperLogLog
     from sketchlib.spark import build_sketches, tree_merge
-    from sketchlib.spark.merge import _fold_rows
+    from sketchlib.spark.merge import fold_states
 
     alive = []
 
@@ -65,9 +65,10 @@ def test_tree_merge_streams_one_blob_at_a_time(spark):
         sk.update([f"u{i}-{j}" for j in range(10)])
         return sk.to_bytes()
 
-    out = list(_fold_rows(_liveness_rows(64, make, alive)))
-    assert len(out) == 1
-    assert out[0][1] == 640  # n_rows summed
+    rows = (("key", pid, n, blob) for pid, n, blob in _liveness_rows(64, make, alive))
+    out = fold_states(rows)
+    assert list(out) == ["key"]
+    assert out["key"][2] == 640  # n_rows summed
     assert len(alive) == 64  # generator fully consumed
 
     # end-to-end: the distributed result still matches a driver fold
@@ -85,17 +86,14 @@ def test_tree_merge_streams_one_blob_at_a_time(spark):
 
 
 def test_merge_web_sketches_fold_is_per_row(spark, docs_df):
-    """merge_web_sketches' level-1 fold streams its row iterator
+    """merge_sketches' level-1 fold streams its row iterator
     per-ROW (weakref liveness pin, same harness as the tree_merge
     test), and the merged bytes still match a driver-side fold for
     order-independent sketches."""
     from sketchlib.serde import loads
     from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.webbuild import (
-        _fold_blob_rows,
-        build_web_sketches,
-        merge_web_sketches,
-    )
+    from sketchlib.spark.merge import fold_states, merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     alive = []
 
@@ -107,15 +105,15 @@ def test_merge_web_sketches_fold_is_per_row(spark, docs_df):
     rows = (
         ("hll", pid, 5, blob) for pid, _ten, blob in _liveness_rows(8, make, alive)
     )
-    out = list(_fold_blob_rows(rows))
-    assert len(out) == 1 and out[0][0] == "hll" and out[0][2] == 40
+    out = fold_states(rows)
+    assert list(out) == ["hll"] and out["hll"][2] == 40
     assert len(alive) == 8
 
     partials = build_web_sketches(
         docs_df.repartition(8), {"hll": lambda: HyperLogLog(12)}
     ).persist()
     try:
-        merged = merge_web_sketches(partials, fanout=3, direct_partitions=0)
+        merged = merge_sketches(partials, fanout=3, direct_partitions=0)
         oracle = None
         for r in partials.collect():
             sk = loads(r.state)

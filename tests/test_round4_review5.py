@@ -1,6 +1,6 @@
 """Round-4 fifth pass: adaptive merge depth.
 
-The blob merges (merge.tree_merge, webbuild.merge_web_sketches) skip
+The blob merges (merge.tree_merge, merge.merge_sketches) skip
 their executor level when the blob frame has ≤ direct_partitions
 partitions: at bench scale (65 blob rows) the level-1 RDD
 route+partitionBy+fold pair costs ~1.1-1.7 s of pure task/python-
@@ -82,12 +82,13 @@ def test_tree_merge_tree_engages_past_threshold(spark, monkeypatch):
 
 
 def test_merge_web_sketches_direct_equals_tree(spark, docs_df):
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     partials = build_web_sketches(docs_df.repartition(8), _hll_cms_factories()).persist()
     try:
-        direct = merge_web_sketches(partials)  # 8 ≤ threshold → direct
-        tree = merge_web_sketches(partials, fanout=3, direct_partitions=0)
+        direct = merge_sketches(partials)  # 8 ≤ threshold → direct
+        tree = merge_sketches(partials, fanout=3, direct_partitions=0)
         assert set(direct) == set(tree) == {"hll", "cms"}
         for name in direct:
             assert direct[name].to_bytes() == tree[name].to_bytes()
@@ -98,25 +99,26 @@ def test_merge_web_sketches_direct_equals_tree(spark, docs_df):
 def test_merge_web_sketches_direct_skips_executor_level(spark, docs_df, monkeypatch):
     from sketchlib.spark import merge as merge_mod
     from sketchlib.spark import webbuild
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("executor level ran below direct_partitions")
 
-    # merge_web_sketches imports fold_groups_rdd from .merge at call time
+    # merge_sketches looks fold_groups_rdd up in .merge at call time
     monkeypatch.setattr(merge_mod, "fold_groups_rdd", boom)
     assert webbuild  # module present; import-at-call means merge_mod patch suffices
     partials = build_web_sketches(docs_df.repartition(4), _hll_cms_factories())
-    merged = merge_web_sketches(partials)
+    merged = merge_sketches(partials)
     assert set(merged) == {"hll", "cms"}
 
 
 def test_tree_merge_direct_empty_frame(spark):
     """Empty blob frame → None on the direct path too."""
-    from sketchlib.spark.build import SKETCH_ROW_SCHEMA
+    from sketchlib.spark.build import SKETCH_SCHEMA
     from sketchlib.spark.merge import tree_merge
 
-    empty = spark.createDataFrame([], SKETCH_ROW_SCHEMA)
+    empty = spark.createDataFrame([], SKETCH_SCHEMA)
     assert tree_merge(empty) is None
 
 

@@ -1,5 +1,5 @@
 """Round-4 seventh-pass regressions (review of __spark_entry__, shard,
-streaming incremental/stateful): identity shard routing, lazy filter
+streaming incremental/stateful): one-shard-per-task routing, lazy filter
 construction, worker-level probe deser cache, lineage-scoped replay
 guard, real timeout eviction, required value_col."""
 
@@ -10,41 +10,27 @@ import pytest
 from pyspark.sql import functions as F
 
 
-# ---------------------------------------------------- identity routing
-
-
-def test_identity_route_keys_invert_murmur3(spark):
-    from sketchlib.spark.shard import _identity_route_keys
-
-    for n in (4, 8, 64):
-        keys = _identity_route_keys(spark, n)
-        assert len(keys) == n
-        got = (
-            spark.createDataFrame([(i, k) for i, k in enumerate(keys)], "i int, k long")
-            .select("i", F.pmod(F.hash("k"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        assert all(r.p == r.i for r in got)
+# ---------------------------------------------------- shard routing
 
 
 def test_build_sharded_one_shard_per_task(spark):
-    """The build exchange must land EXACTLY one shard per partition:
-    plain repartition(n, shard_id) murmur3-collides shards into shared
-    tasks (2-3 full filters resident at once) while other tasks idle."""
-    from sketchlib.spark.shard import _route_by_shard, _shard_col
+    """The build exchange must land EXACTLY one shard per partition,
+    and partition i must hold shard i: shard_id = pmod(hash(key), n) is
+    Spark's own HashPartitioning expression, so repartition(n, key)
+    needs no route-key discovery. NULL keys route like any other."""
+    from sketchlib.spark.shard import _shard_exchange
 
-    n = 8
-    keyed = (
-        spark.range(2000)
-        .select(F.concat(F.lit("k"), F.col("id")).alias("key"))
-        .withColumn("shard_id", _shard_col("key", n))
-    )
-    routed = _route_by_shard(keyed, n)
-    per_part = routed.rdd.mapPartitions(
-        lambda it: [len({r.shard_id for r in it})]
-    ).collect()
-    assert len(per_part) == n
-    assert all(c == 1 for c in per_part), per_part  # exactly 1:1, none empty
+    keys = spark.range(20000).select(
+        F.concat(F.lit("https://u"), F.col("id"), F.lit(".com/")).alias("url")
+    ).unionByName(spark.createDataFrame([(None,)], "url string"))
+    for n in (1, 7, 16, 64):
+        layout = (
+            _shard_exchange(keys, "url", n)
+            .rdd.mapPartitionsWithIndex(lambda i, it: [(i, sorted({r.shard_id for r in it}))])
+            .collect()
+        )
+        assert len(layout) == n
+        assert all(ids == [i] for i, ids in layout), (n, layout)  # 1:1, none empty
 
 
 def test_build_sharded_end_to_end_unchanged(spark):

@@ -216,7 +216,8 @@ def test_tree_merge_byte_gate_forces_executor_fold(spark, monkeypatch):
 def test_merge_web_sketches_byte_gate(spark, monkeypatch):
     from sketchlib.sketches import CountMinSketch, HyperLogLog
     from sketchlib.spark import merge as merge_mod
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     docs = spark.createDataFrame(
         [(f"https://h/{i}", f"tok{i} body text") for i in range(500)],
@@ -236,13 +237,13 @@ def test_merge_web_sketches_byte_gate(spark, monkeypatch):
         return orig(frame)
 
     monkeypatch.setattr(merge_mod, "_direct_collect", spy)
-    forced = merge_web_sketches(
+    forced = merge_sketches(
         build_web_sketches(docs, factories, size_sketches=()),
         state_bytes=hint,
         direct_bytes=2 * hint,
     )
     assert calls["direct"] == 0
-    direct = merge_web_sketches(
+    direct = merge_sketches(
         build_web_sketches(docs, factories, size_sketches=()), state_bytes=hint
     )
     assert calls["direct"] == 1
@@ -600,3 +601,18 @@ def test_checkpoint_has_batches_uri_via_session(spark, tmp_path):
     (ckpt / "offsets" / "3").write_text("v1")
     assert has(uri, spark) is True
     assert has(f"file://{tmp_path}/nope", spark) is False
+
+
+def test_checkpoint_has_batches_fs_error_keeps_guard_armed(monkeypatch):
+    """A failing Hadoop FS inspection must not read as a fresh
+    checkpoint: that would disarm the replay guard and let a replayed
+    batch double-fold into a legacy state file."""
+    from sketchlib.spark import fsio
+    from sketchlib.streaming.incremental import IncrementalSketchBuilder
+
+    def unreachable(*_a, **_kw):
+        raise OSError("namenode unreachable")
+
+    monkeypatch.setattr(fsio, "_fs_path", unreachable)
+    has = IncrementalSketchBuilder._checkpoint_has_batches
+    assert has("hdfs://nn/ckpt", object()) is True

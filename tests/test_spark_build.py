@@ -84,10 +84,11 @@ def test_web_sketch_composite_build(spark, docs_df):
     """One-pass build of the whole sketch family equals per-kind local
     builds (same states where merge is exact)."""
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     cfg = _cfg(4096)
-    merged = merge_web_sketches(
+    merged = merge_sketches(
         build_web_sketches(
             docs_df.repartition(4),
             {
@@ -651,6 +652,70 @@ def test_sharded_build_checkpoint_resume(spark, docs_df, tmp_path):
     rows3 = {r.shard_id: bytes(r.state) for r in partial.collect()}
     assert rows3 == rows1  # deterministic rebuild matches the original
     assert len([f for f in os.listdir(ck) if f.endswith(".arrow")]) == 4  # republished
+
+
+def test_build_sharded_input_already_partitioned_by_key(spark):
+    """Input already hash-partitioned by the key into num_shards
+    partitions (a distinct() at shuffle.partitions == num_shards): Spark
+    drops the shard exchange and AQE may coalesce the aggregate's small
+    partitions, so one task can hold several shards — each must still
+    get its own filter."""
+    from sketchlib.spark.shard import build_sharded, probe_sharded
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = spark.range(3000).select(
+        F.concat(F.lit("k"), (F.col("id") % 1000).cast("string")).alias("key")
+    ).distinct()
+    rows = build_sharded(keys, "key", n, cfg=_cfg()).collect()
+    assert sorted(r.shard_id for r in rows) == list(range(n))
+    assert sum(r.n_rows for r in rows) == 1000
+    shards = spark.createDataFrame(rows)
+    assert probe_sharded(keys, "key", shards, n).where("member").count() == 1000
+
+
+def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
+    """State written under the previous row layout or shard routing
+    (pmod(xxhash64(key), n)) must raise the typed mismatch error, never
+    be resumed or probed: a build_sharded checkpoint dir, a
+    build_sketches checkpoint dir and a sharded stream state_dir."""
+    import json
+
+    from sketchlib.errors import CheckpointMismatchError
+    from sketchlib.spark.shard import build_sharded
+    from sketchlib.streaming.sharded import ShardedStreamBuilder
+
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(100)], "key string")
+
+    shard_ck = tmp_path / "shard-ck"
+    shard_ck.mkdir()
+    (shard_ck / "_meta.json").write_text(json.dumps(
+        {"op": "build_sharded", "kind": "CuckooFilter", "key_col": "key", "num_shards": 4}
+    ))
+    (shard_ck / "shard-000000.arrow").write_bytes(b"old")
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=str(shard_ck))
+
+    part_ck = tmp_path / "part-ck"
+    part_ck.mkdir()
+    (part_ck / "_meta.json").write_text(json.dumps(
+        {"op": "build_sketches", "kind": "HyperLogLog", "key_col": "key",
+         "numeric": False, "partitions": keys.rdd.getNumPartitions()}
+    ))
+    (part_ck / "part-00000.arrow").write_bytes(b"old")
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        build_sketches(keys, "key", lambda: HyperLogLog(10), checkpoint_dir=str(part_ck))
+
+    # stream state_dirs predating the fingerprint carry none at all
+    state = tmp_path / "stream"
+    (state / "epoch-0").mkdir(parents=True)
+    (state / "epoch-0" / "_SUCCESS").write_text("")
+    (state / "CURRENT").write_text("0")
+    b = ShardedStreamBuilder("key", num_shards=4, state_dir=str(state), cfg=_cfg())
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        b.process_batch(keys, 1)
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        b.current_shards(spark)
+    assert (state / "CURRENT").read_text() == "0"  # nothing merged or moved
 
 
 def test_sharded_empty_shards_probe_and_delete(spark):

@@ -18,7 +18,8 @@ Modes:
   flagship  — build_web_pipeline (HLL/CMS/KLL + sharded cuckoo), merge
               through BOTH the adaptive direct path and the forced
               fold_groups_rdd executor path, probe every url through
-              the broadcast index. Emits digests/counts.
+              the broadcast index, record the shard exchange's
+              partition → shard layout. Emits digests/counts.
   sharded   — build_sharded with optional --checkpoint (taskfs path)
               and optional --slow-ms (per-batch insert delay so the
               parent test can SIGKILL mid-build), then probe. Emits
@@ -62,12 +63,9 @@ def _executor_count(spark) -> int:
 def run_flagship(spark, docs_path: str) -> dict:
     from pyspark.sql import functions as F
 
-    from sketchlib.spark.shard import ShardedProbeIndex, probe_sharded
-    from sketchlib.spark.webbuild import (
-        build_web_pipeline,
-        build_web_sketches,
-        merge_web_sketches,
-    )
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.shard import ShardedProbeIndex, _shard_exchange, probe_sharded
+    from sketchlib.spark.webbuild import build_web_pipeline, build_web_sketches
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
 
     docs = spark.read.parquet(docs_path)
@@ -86,7 +84,7 @@ def run_flagship(spark, docs_path: str) -> dict:
         "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
         "kll": lambda: KLLSketch(200),
     }
-    rdd_fixed = merge_web_sketches(
+    rdd_fixed = merge_sketches(
         build_web_sketches(docs, factories), direct_partitions=0
     )
 
@@ -111,6 +109,13 @@ def run_flagship(spark, docs_path: str) -> dict:
     )
     idx.destroy()
 
+    # the build's shard exchange: which shard ids each partition holds
+    layout = (
+        _shard_exchange(docs, "url", num_shards)
+        .rdd.mapPartitionsWithIndex(lambda i, it: [(i, sorted({r.shard_id for r in it}))])
+        .collect()
+    )
+
     kll = fixed["kll"]
     return {
         "n": n,
@@ -129,6 +134,7 @@ def run_flagship(spark, docs_path: str) -> dict:
         },
         "probe_hits": hits,
         "probe_false_pos": fp,
+        "shard_layout": layout,
     }
 
 

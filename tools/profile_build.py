@@ -29,11 +29,8 @@ def main() -> None:
     from sketchlib.config import CuckooConfig
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark.shard import build_sharded
-    from sketchlib.spark.webbuild import (
-        build_web_pipeline,
-        build_web_sketches,
-        merge_web_sketches,
-    )
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_pipeline, build_web_sketches
 
     sz = os.path.getsize(docs_path)
     partitions = 64
@@ -62,7 +59,7 @@ def main() -> None:
     docs.select(F.count("*")).collect()
     spark.range(10000).repartition(32).mapInArrow(lambda it: it, "id long").count()
 
-    timed("jobA build+merge", lambda: merge_web_sketches(build_web_sketches(docs, factories)))
+    timed("jobA build+merge", lambda: merge_sketches(build_web_sketches(docs, factories)))
     timed("jobB sharded cuckoo", lambda: build_sharded(docs.select("url"), "url", 64, cfg=cfg).collect())
 
     # split job A: persist the blob frame, time build and merge apart
@@ -72,7 +69,7 @@ def main() -> None:
         sk.count()
         t_build = time.perf_counter() - t0
         t0 = time.perf_counter()
-        merge_web_sketches(sk)
+        merge_sketches(sk)
         t_merge = time.perf_counter() - t0
         sk.unpersist()
         print(f"    split: build={t_build:.3f} merge={t_merge:.3f}", flush=True)

@@ -21,7 +21,8 @@ def main() -> None:
 
     from sketchlib.serde import loads
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
-    from sketchlib.spark.webbuild import build_web_sketches, merge_web_sketches
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.webbuild import build_web_sketches
 
     sz = os.path.getsize(docs_path)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sz // 64, 1 << 20)))
@@ -66,10 +67,10 @@ def main() -> None:
                 out[row.sketch] = o
         return out
 
-    timed("current fold_groups_rdd", lambda: merge_web_sketches(sk))
+    timed("current fold_groups_rdd", lambda: merge_sketches(sk))
     timed("driver toLocalIterator", driver_fold)
     timed("driver collect+fold", driver_collect)
-    timed("current fold_groups_rdd k=8", lambda: merge_web_sketches(sk, fanout=8))
+    timed("current fold_groups_rdd k=8", lambda: merge_sketches(sk, fanout=8))
     spark.stop()
 
 

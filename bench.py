@@ -139,10 +139,11 @@ def lc_scaling_report(docs_path: str, rounds: int = 2) -> dict:
 
 
 def build_throughput(spark, docs_path: str, partitions: int, trials: int = 3) -> dict:
-    """Flagship two-job pipeline (webbuild.build_web_pipeline):
-    zero-shuffle fixed-size sketches (HLL/CMS/KLL) over scan partitions
-    + sharded cuckoo membership over a url-only shuffle. No heavy
-    column is ever shuffled; per-task state is constant in corpus size.
+    """Flagship pipeline (webbuild.build_web_pipeline): fixed-size
+    sketches (HLL/CMS/KLL) and sharded cuckoo membership folded in one
+    zero-shuffle pass over the scan partitions while their state fits
+    the merge's byte gate, else two jobs (the shards over a url-only
+    shuffle). No heavy column is ever shuffled.
     One UNTIMED warm-up build runs first (page cache, Python workers,
     route-key cache — costs a long-lived cluster job amortizes in its
     first seconds), then ``trials`` measured builds; reports best AND

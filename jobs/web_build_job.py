@@ -192,10 +192,11 @@ def _run(spark, args) -> None:
         finally:
             urls.unpersist()
 
-    # the two jobs are independent — submit them concurrently (driver
-    # threads; Spark's scheduler interleaves their tasks), the same
-    # shape build_web_pipeline implements: the url shuffle overlaps the
-    # CPU-bound token hashing
+    # two jobs, not build_web_pipeline's single pass: the shards are
+    # built from the persisted DISTINCT urls and written to parquet.
+    # They are independent, so submit them concurrently (driver
+    # threads; Spark's scheduler interleaves their tasks): the url
+    # shuffle overlaps the CPU-bound token hashing
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as ex:

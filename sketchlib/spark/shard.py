@@ -37,10 +37,18 @@ from .build import ROW_FORMAT, SHARD_SCHEMA, state_row
 from .merge import fold_states
 from .udfs import _sketch_from
 
+
+def shard_expr(key: str, num_shards) -> str:
+    """The key → shard assignment as a SQL expression over column
+    ``key`` (for ``selectExpr``; quote non-identifier names with
+    backticks). ``_shard_col`` is the same expression as a Column."""
+    return f"pmod(hash({key}), {num_shards})"
+
+
 # key → shard assignment, pinned in checkpoint/state fingerprints: a
 # table built under another routing (the earlier pmod(xxhash64(key), n))
 # would be probed against the wrong shards — silent false negatives
-SHARD_ROUTING = "pmod(hash(key), num_shards)"
+SHARD_ROUTING = shard_expr("key", "num_shards")
 
 
 def _shard_col(key_col: str, num_shards: int):

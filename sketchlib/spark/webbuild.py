@@ -9,15 +9,25 @@ over the data and six.
 
 ``build_web_sketches`` folds ALL sketches in a single ``mapInArrow``
 pass over the scan partitions — zero shuffle of input rows, one row per
-(partition, sketch) out (KBs), merged by ``merge.merge_sketches``. Partition sizing is the scan's own
-(``spark.sql.files.maxPartitionBytes``), which is the correct knob at
-any scale; salting is only needed for *grouped* (per-key) builds, not
-global mergeable states (any row→partition assignment yields the same
-merged sketch, proven by the merge-associativity tests).
+(partition, sketch) out (KBs), merged by ``merge.merge_sketches``.
+Partition sizing is the scan's own (``spark.sql.files.maxPartitionBytes``),
+which is the correct knob at any scale; salting is only needed for
+*grouped* (per-key) builds, not global mergeable states (any
+row→partition assignment yields the same merged sketch, proven by the
+merge-associativity tests).
+
+``build_web_pipeline`` adds sharded cuckoo membership on url. While
+every scan partition's state (fixed sketches + one small filter per
+shard) fits the merge's direct byte gate, that is the same single pass:
+each row carries its shard id, each task folds one filter per shard,
+and the merge re-homes the partition filters per shard — one job, no
+shuffle. Above the gate (the 100 TB regime, where one task must not
+hold the whole filter) the shards are built by ``shard.build_sharded``
+over a url-only exchange, one task per shard, concurrently with the
+fixed-sketch pass.
 
 Per-partition work is fully vectorized: one kernel hash pass per keyed
-sketch, pandas str.split only for tokenization (the one genuinely
-string-y step), numpy everywhere else.
+sketch, the Arrow C++ tokenizer for text, numpy everywhere else.
 """
 
 from __future__ import annotations
@@ -29,6 +39,53 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .build import column_update, fold_partitions
+from .merge import direct_merge, merge_sketches, state_bytes_hint
+
+# docs tokenized at a time: bounds the per-task token-list transient
+# (both scan tasks of a build fold at once); CMS counters are additive,
+# so the merged state does not depend on the slicing
+TOKEN_SLICE = 2500
+
+
+def _web_update(token_sketches, size_sketches) -> Callable[[dict, pa.RecordBatch], None]:
+    """Fold step over (url, text, ...) batches: ``size_sketches`` take
+    len(text), ``token_sketches`` whitespace tokens of text, every
+    other sketch the url column."""
+    token_set = set(token_sketches)
+    size_set = set(size_sketches)
+
+    def update(sks: dict, rb: pa.RecordBatch) -> None:
+        urls = rb.column(0)
+        texts = rb.column(1)
+        if size_set:
+            # page sizes: numpy from arrow offsets (no Python loop)
+            sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
+        tok = []
+        for name, sk in sks.items():
+            if name in size_set:
+                sk.update(sizes)
+            elif name in token_set:
+                tok.append(sk)
+            else:
+                sk.update(urls)
+        for off in range(0, len(texts) if tok else 0, TOKEN_SLICE):
+            # C++ whitespace tokenizer (same semantics as str.split()),
+            # then slice-local pre-aggregation: value_counts collapses
+            # the Zipf-distributed token stream to its (much smaller)
+            # vocabulary before any Python-side hashing — the map-side
+            # combine of this pipeline
+            flat = pc.list_flatten(pc.utf8_split_whitespace(texts.slice(off, TOKEN_SLICE)))
+            flat = flat.filter(pc.not_equal(flat, ""))
+            vc = flat.value_counts()
+            tok_vals = vc.field("values")
+            tok_counts = vc.field("counts").to_numpy(zero_copy_only=False)
+            for sk in tok:
+                try:
+                    sk.update(tok_vals, weights=tok_counts)
+                except TypeError:  # sketch without weighted updates
+                    sk.update(flat)
+
+    return update
 
 
 def build_web_sketches(
@@ -46,38 +103,7 @@ def build_web_sketches(
     Returns a DataFrame of build.SKETCH_SCHEMA rows (one per partition
     per sketch). Merge with ``merge.merge_sketches``.
     """
-    token_set = set(token_sketches)
-    size_set = set(size_sketches)
-
-    def update(sks: dict, rb: pa.RecordBatch) -> None:
-        urls = rb.column(0)
-        texts = rb.column(1)
-        # page sizes: numpy from arrow offsets (no Python loop)
-        if size_set:
-            sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
-        if token_set:
-            # C++ whitespace tokenizer (same semantics as str.split()),
-            # then batch-local pre-aggregation: value_counts collapses
-            # the Zipf-distributed token stream to its (much smaller)
-            # vocabulary before any Python-side hashing — the map-side
-            # combine of this pipeline, and the difference between
-            # hashing 250M tokens and ~50k uniques per partition
-            flat = pc.list_flatten(pc.utf8_split_whitespace(texts))
-            flat = flat.filter(pc.not_equal(flat, ""))
-            vc = flat.value_counts()
-            tok_vals = vc.field("values")
-            tok_counts = vc.field("counts").to_numpy(zero_copy_only=False)
-        for name, sk in sks.items():
-            if name in size_set:
-                sk.update(sizes)
-            elif name in token_set:
-                try:
-                    sk.update(tok_vals, weights=tok_counts)
-                except TypeError:  # sketch without weighted updates
-                    sk.update(flat)
-            else:
-                sk.update(urls)
-
+    update = _web_update(token_sketches, size_sketches)
     return fold_partitions(docs_df.select(url_col, text_col), factories, update)
 
 
@@ -94,6 +120,59 @@ def build_column_sketches(
     return fold_partitions(df.select(col), factories, column_update(numeric))
 
 
+def _shard_name(sid: int) -> str:
+    return f"shard-{sid}"
+
+
+def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
+    """The gated flagship fold: (url, text, shard_id) rows → one
+    SKETCH_SCHEMA row per (partition, fixed sketch) and per
+    (partition, shard) — the shard filters named ``_shard_name(sid)``.
+    ``shard_id`` is SHARD_ROUTING, so each url lands in the shard
+    ``build_sharded`` and the probes route it to."""
+    from .shard import shard_expr
+
+    web = _web_update(("cms",), ("kll",))
+    names = [_shard_name(sid) for sid in range(num_shards)]
+    fixed = tuple(factories)
+
+    def update(sks: dict, rb: pa.RecordBatch) -> None:
+        web({k: sks[k] for k in fixed}, rb)
+        sids = rb.column(2).to_numpy()
+        order = np.argsort(sids, kind="stable")
+        bounds = np.searchsorted(sids[order], np.arange(num_shards + 1))
+        urls = rb.column(0).take(pa.array(order))
+        for sid in np.flatnonzero(np.diff(bounds)):
+            lo, hi = bounds[sid], bounds[sid + 1]
+            sks[names[sid]].insert_batch(urls.slice(lo, hi - lo))
+
+    # selectExpr, not pyspark.sql.functions: the first F.* call on the
+    # driver's main thread makes PySpark capture a call site, which
+    # imports IPython (~26 MB of driver RSS)
+    frame = docs_df.selectExpr("url", "text", f"{shard_expr('url', num_shards)} AS shard_id")
+    return fold_partitions(frame, {**factories, **{n: shard_fac for n in names}}, update)
+
+
+def _exchange_plan(docs_df, factories: dict, fixed_bytes: int, num_shards: int, cfg):
+    """Above the gate: the fixed sketches on the scan partitions and the
+    shards over a url-only exchange (``build_sharded``), submitted
+    concurrently from two driver threads so the url shuffle overlaps
+    the CPU-bound token hashing."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .shard import build_sharded
+
+    def fixed_job():
+        return merge_sketches(build_web_sketches(docs_df, factories), state_bytes=fixed_bytes)
+
+    def shard_job():
+        return build_sharded(docs_df.select("url"), "url", num_shards, cfg=cfg).collect()
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        fa, fb = ex.submit(fixed_job), ex.submit(shard_job)
+        return fa.result(), fb.result()
+
+
 def build_web_pipeline(
     docs_df,
     n_docs: int,
@@ -102,34 +181,37 @@ def build_web_pipeline(
     fingerprint_bits: int = 16,
     capacity_slack: float = 1.1,
 ):
-    """The 100 TB-shaped flagship: two jobs, neither shuffles a heavy
-    column.
-
-    Job A — fixed-size sketches (HLL distinct urls, CMS token
-    frequencies, KLL page sizes; build_web_sketches can add t-digest
-    via its size_sketches arg, the pipeline's dict is hll/cms/kll
-    only) built on the SCAN partitions
-    with zero shuffle; per-partition state is KBs–1 MB independent of
-    corpus size, so partition count can track core count freely.
-
-    Job B — membership (cuckoo) built SHARDED: project url only
-    (~tens of bytes/row), shuffle by Spark's hash partitioner —
-    shard_id = pmod(hash(url), shards), one task per shard — one
-    capacity/shards filter per shard. Total filter state is
+    """The flagship: HLL distinct urls, CMS token frequencies and KLL
+    page sizes, plus cuckoo membership on url sharded ``num_shards``
+    ways by ``shard_id = pmod(hash(url), num_shards)`` (SHARD_ROUTING),
+    each shard a capacity/num_shards filter. Total filter state is
     capacity × 2 bytes regardless of shard or partition count, and
-    probes route by the same hash — no global merge ever materializes.
+    probes route by the same hash — no global filter materializes.
 
-    The two jobs are independent, so they are submitted CONCURRENTLY
-    (two driver threads; Spark's scheduler interleaves their tasks) —
-    job B's url shuffle overlaps job A's CPU-bound token hashing.
+    The plan is picked by the merge's byte gate (``merge.direct_merge``)
+    over one scan partition's state — the fixed sketches plus
+    ``num_shards`` empty shard filters:
 
-    Returns (fixed_sketches: dict, shard_rows: list[Row[SHARD_SCHEMA]]).
+    * under it: ONE pass over the scan partitions. Each task folds the
+      fixed sketches and one filter per shard; the driver merges the
+      partition rows (``merge_sketches``), re-homing each shard's
+      partition filters into one (``CuckooFilter.merge``, lossless).
+      One job, no shuffle, one Python task per scan partition.
+    * above it (the 100 TB regime, where one task must not hold every
+      shard's filter): two concurrent jobs — the fixed sketches on the
+      scan partitions, and ``build_sharded`` over a url-only shuffle,
+      one task per shard.
+
+    Both plans return (fixed_sketches: {"hll", "cms", "kll"},
+    shard_rows: list[Row[SHARD_SCHEMA]]) with one row per non-empty
+    shard, ``n_rows`` = urls routed to it (item_count + fail_count).
     """
-    from concurrent.futures import ThreadPoolExecutor
+    from pyspark.sql import Row
 
     from ..config import CuckooConfig
     from ..sketches import CountMinSketch, HyperLogLog, KLLSketch
-    from .shard import build_sharded
+    from .build import state_row
+    from .shard import shard_factory
 
     # capacity sizing: per-shard load must stay under the ~0.95 kick
     # limit INCLUDING Poisson variance of the key→shard split. At
@@ -141,26 +223,23 @@ def build_web_pipeline(
         fingerprint_bits=fingerprint_bits,
         hash_strategy="xx",
     )
+    factories = {
+        "hll": lambda: HyperLogLog(14),
+        "cms": lambda: CountMinSketch(width=cms_width, depth=4),
+        "kll": lambda: KLLSketch(200),
+    }
+    shard_fac = shard_factory(num_shards, cfg)
+    fixed_bytes = state_bytes_hint(*factories.values())
+    state_bytes = fixed_bytes + num_shards * state_bytes_hint(shard_fac)
+    frame = _single_pass(docs_df, factories, num_shards, shard_fac)
+    if not direct_merge(frame.rdd.getNumPartitions(), state_bytes):
+        return _exchange_plan(docs_df, factories, fixed_bytes, num_shards, cfg)
 
-    def job_a():
-        from .merge import merge_sketches, state_bytes_hint
-
-        factories = {
-            "hll": lambda: HyperLogLog(14),
-            "cms": lambda: CountMinSketch(width=cms_width, depth=4),
-            "kll": lambda: KLLSketch(200),
-        }
-        return merge_sketches(
-            build_web_sketches(docs_df, factories),
-            # byte-aware direct gate: one partition's row group is one
-            # state per name; wide CMS configs route to the executor
-            # fold instead of a multi-GB driver pull
-            state_bytes=state_bytes_hint(*factories.values()),
-        )
-
-    def job_b():
-        return build_sharded(docs_df.select("url"), "url", num_shards, cfg=cfg).collect()
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fa, fb = ex.submit(job_a), ex.submit(job_b)
-        return fa.result(), fb.result()
+    merged = merge_sketches(frame, state_bytes=state_bytes)
+    shard_rows = []
+    for sid in range(num_shards):
+        f = merged.get(_shard_name(sid))
+        n = 0 if f is None else f.count() + f.insert_failures
+        if n:
+            shard_rows.append(Row(**state_row(f, n, shard_id=sid).to_pylist()[0]))
+    return {k: merged[k] for k in factories if k in merged}, shard_rows

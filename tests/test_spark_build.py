@@ -118,6 +118,123 @@ def test_web_sketch_composite_build(spark, docs_df):
     assert merged["kll"].n == 1000
 
 
+def test_web_sketches_token_slices_keep_cms_exact(spark, docs_df, monkeypatch):
+    """Tokenizing a batch in slices leaves the CMS byte-identical to one
+    whole-batch tokenization (counters are additive)."""
+    from sketchlib.spark import webbuild
+    from sketchlib.spark.merge import merge_sketches
+
+    def cms_bytes():
+        sks = webbuild.build_web_sketches(
+            docs_df, {"cms": lambda: CountMinSketch(width=1 << 12, depth=4)}
+        )
+        return merge_sketches(sks)["cms"].to_bytes()
+
+    whole = cms_bytes()
+    monkeypatch.setattr(webbuild, "TOKEN_SLICE", 37)
+    assert cms_bytes() == whole
+
+
+# ------------------------------------------------------------ flagship pipeline
+
+
+def _shard_counts(rows):
+    return [(r.shard_id, r.n_rows, r.item_count, r.fail_count) for r in rows]
+
+
+def _fixed_bytes(fixed: dict) -> dict:
+    return {k: fixed[k].to_bytes() for k in ("hll", "cms") if k in fixed}
+
+
+@pytest.mark.parametrize("single_pass", [True, False])
+def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch, single_pass):
+    """Both plans of build_web_pipeline — the gated single pass and the
+    exchange plan above the gate — give build_sharded's per-shard
+    counts, probe every url present, and give the HLL/CMS states of a
+    standalone build_web_sketches merge."""
+    from sketchlib.spark import webbuild
+    from sketchlib.spark.merge import merge_sketches
+    from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
+
+    if not single_pass:
+        monkeypatch.setattr(webbuild, "direct_merge", lambda *a, **k: False)
+    docs = docs_df.repartition(3)  # several partition filters per shard to merge
+    fixed, rows = webbuild.build_web_pipeline(
+        docs, 1000, num_shards=8, cms_width=1 << 12, capacity_slack=1.5
+    )
+    cfg = CuckooConfig(capacity=1500, fingerprint_bits=16, hash_strategy="xx")
+    want = sorted(build_sharded(docs.select("url"), "url", 8, cfg=cfg).collect())
+    assert _shard_counts(rows) == _shard_counts(want)
+    assert sum(r.n_rows for r in rows) == 1000
+
+    idx = ShardedProbeIndex(spark, {int(r.shard_id): bytes(r.state) for r in rows})
+    keys = docs_df.select(F.col("url").alias("key"))
+    assert probe_sharded(keys, "key", num_shards=8, index=idx).where("member").count() == 1000
+    idx.destroy()
+
+    web = merge_sketches(
+        webbuild.build_web_sketches(
+            docs,
+            {
+                "hll": lambda: HyperLogLog(14),
+                "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
+                "kll": lambda: KLLSketch(200),
+            },
+        )
+    )
+    assert sorted(fixed) == ["cms", "hll", "kll"]
+    assert _fixed_bytes(fixed) == _fixed_bytes(web)
+    assert fixed["kll"].n == 1000
+
+
+def test_web_pipeline_single_pass_has_no_exchange(spark, docs_df):
+    """Under the gate the flagship is one narrow pass over the scan."""
+    from sketchlib.spark.shard import shard_factory
+    from sketchlib.spark.webbuild import _single_pass
+
+    fold = _single_pass(
+        docs_df, {"hll": lambda: HyperLogLog(14)}, 8, shard_factory(8, _cfg())
+    )
+    plan = fold._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan
+
+
+def test_web_pipeline_empty_input_same_under_both_plans(spark, monkeypatch):
+    from sketchlib.spark import webbuild
+
+    empty = spark.createDataFrame([], "url string, text string")
+    fixed, rows = webbuild.build_web_pipeline(empty, 0, num_shards=4)
+    monkeypatch.setattr(webbuild, "direct_merge", lambda *a, **k: False)
+    fixed2, rows2 = webbuild.build_web_pipeline(empty, 0, num_shards=4)
+    assert rows == rows2 == []
+    assert sorted(fixed) == sorted(fixed2)
+    assert {k: v.to_bytes() for k, v in fixed.items()} == {
+        k: v.to_bytes() for k, v in fixed2.items()
+    }
+
+
+def test_shard_expr_routes_like_shard_col(spark):
+    """The SQL routing string and the Column expression give the same
+    shard ids — ASCII, non-ASCII and NULL keys."""
+    from sketchlib.spark.shard import _shard_col, shard_expr
+
+    keys = spark.createDataFrame(
+        [("https://a.example/",), ("ключ-ü-€-😀",), ("",), (None,)]
+        + [(f"k{i}",) for i in range(200)],
+        "key string",
+    )
+    for n in (1, 7, 16):
+        rows = (
+            keys.select("key", _shard_col("key", n).alias("col"))
+            .selectExpr("col", f"{shard_expr('key', n)} AS sql")
+            .collect()
+        )
+        assert all(r.col == r.sql and 0 <= r.sql < n for r in rows)
+        if n == 16:
+            assert len({r.sql for r in rows}) == 16
+
+
 # --------------------------------------------------------------- broadcast UDFs
 
 

@@ -319,14 +319,18 @@ class CuckooFilter:
 
     # ------------------------------------------------------------ merge
 
-    def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        """Union-in-place of another filter with identical geometry.
+    def merge(self, *others: "CuckooFilter") -> "CuckooFilter":
+        """Union-in-place of other filters with identical geometry.
 
-        Every stored (bucket, fp) pair of ``other`` is re-placed here;
+        Every stored (bucket, fp) pair of the others is re-placed here;
         the pair's two legal homes are {bucket, alt(bucket, fp)} by the
         self-inverse alternate-index property, so no information about
-        original items is needed. Failure accounting is LINEAGE-TOTAL:
-        ``other``'s own ``insert_failures`` are absorbed (those items
+        original items is needed. The pairs of all ``others`` are placed
+        as ONE batch, so the fixed numpy cost of a placement and its
+        kick loop is paid once per call, not once per filter (folding
+        many sparse partition filters into one shard). Failure
+        accounting is LINEAGE-TOTAL: the others' own
+        ``insert_failures`` are absorbed (those items
         are lost forever — a merged filter must not report 0 failures
         while missing keys a part already dropped) and merge-time
         overflow adds on top, so after any merge tree the root's
@@ -334,15 +338,17 @@ class CuckooFilter:
         item stored (explicit accounting, SURVEY.md §7; serde
         round-trips the counter, so this holds across tree_merge's
         serialized parts)."""
-        if self.config.geometry_key() != other.config.geometry_key():
-            raise GeometryMismatchError(
-                f"{self.config.geometry_key()} vs {other.config.geometry_key()}"
-            )
-        self.insert_failures += other.insert_failures
-        rows, cols = np.nonzero(other.table)
-        if len(rows):
-            fps = other.table[rows, cols]
-            i1 = rows.astype(np.int64)
+        for other in others:
+            if self.config.geometry_key() != other.config.geometry_key():
+                raise GeometryMismatchError(
+                    f"{self.config.geometry_key()} vs {other.config.geometry_key()}"
+                )
+        self.insert_failures += sum(other.insert_failures for other in others)
+        # flat indices: 1-D nonzero is ~2x cheaper than the 2-D one
+        flat = [np.flatnonzero(other.table) for other in others]
+        if sum(map(len, flat)):
+            fps = np.concatenate([o.table.reshape(-1)[f] for o, f in zip(others, flat)])
+            i1 = np.concatenate(flat) // self.config.bucket_size
             i2 = self._alt(i1, fps)
             self._place(i1, i2, fps)
         return self
@@ -392,7 +398,11 @@ class CuckooFilter:
             num_buckets, bucket_size
         )
         f.table = table.copy()
-        f.fill = np.count_nonzero(f.table, axis=1).astype(np.int32)
+        # per-bucket count via flat indices: count_nonzero(axis=1) over
+        # the narrow bucket axis costs ~2x more per blob
+        f.fill = np.bincount(
+            np.flatnonzero(table) // bucket_size, minlength=num_buckets
+        ).astype(np.int32)
         f.num_items = num_items
         f.insert_failures = failures
         return f

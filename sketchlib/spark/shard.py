@@ -41,7 +41,7 @@ from .udfs import _sketch_from
 def shard_expr(key: str, num_shards) -> str:
     """The key → shard assignment as a SQL expression over column
     ``key`` (for ``selectExpr``; quote non-identifier names with
-    backticks). ``_shard_col`` is the same expression as a Column."""
+    backticks). ``_shard_col`` is this expression as a Column."""
     return f"pmod(hash({key}), {num_shards})"
 
 
@@ -52,7 +52,8 @@ SHARD_ROUTING = shard_expr("key", "num_shards")
 
 
 def _shard_col(key_col: str, num_shards: int):
-    return F.pmod(F.hash(F.col(key_col)), F.lit(num_shards))
+    quoted = key_col.replace("`", "``")
+    return F.expr(shard_expr(f"`{quoted}`", num_shards))
 
 
 def _shard_exchange(df: DataFrame, key_col: str, num_shards: int) -> DataFrame:

@@ -18,13 +18,14 @@ merge-associativity tests).
 
 ``build_web_pipeline`` adds sharded cuckoo membership on url. While
 every scan partition's state (fixed sketches + one small filter per
-shard) fits the merge's direct byte gate, that is the same single pass:
-each row carries its shard id, each task folds one filter per shard,
-and the merge re-homes the partition filters per shard — one job, no
-shuffle. Above the gate (the 100 TB regime, where one task must not
-hold the whole filter) the shards are built by ``shard.build_sharded``
-over a url-only exchange, one task per shard, concurrently with the
-fixed-sketch pass.
+shard) fits the merge's direct byte gate and the driver has at most
+``SINGLE_PASS_FILTERS`` partition filters to fold, that is the same
+single pass: each row carries its shard id, each task folds one filter
+per shard, and the driver re-homes the partition filters per shard —
+one job, no shuffle. Otherwise (the 100 TB regime, where one task must
+not hold the whole filter, or many partitions × shards) the shards are
+built by ``shard.build_sharded`` over a url-only exchange, one task per
+shard, concurrently with the fixed-sketch pass.
 
 Per-partition work is fully vectorized: one kernel hash pass per keyed
 sketch, the Arrow C++ tokenizer for text, numpy everywhere else.
@@ -38,13 +39,28 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from ..serde import loads
 from .build import column_update, fold_partitions
-from .merge import direct_merge, merge_sketches, state_bytes_hint
+from .merge import (
+    _FOLD_COLS,
+    _direct_collect,
+    direct_merge,
+    fold_states,
+    merge_sketches,
+    state_bytes_hint,
+)
 
 # docs tokenized at a time: bounds the per-task token-list transient
 # (both scan tasks of a build fold at once); CMS counters are additive,
 # so the merged state does not depend on the slicing
 TOKEN_SLICE = 2500
+
+# most partition filters (scan partitions × shards) the single pass
+# leaves to the driver's serial fold; past it the exchange plan's shard
+# tasks cost less. Measured at 800k docs, 64 shards, local[4] on a
+# 4-core host (BENCH.md): the single pass won 4 of 4 pairs at 33
+# partitions (2,112 filters), 1 of 3 at 65 (4,160) and 0 of 3 at 97
+SINGLE_PASS_FILTERS = 4096
 
 
 def _web_update(token_sketches, size_sketches) -> Callable[[dict, pa.RecordBatch], None]:
@@ -153,6 +169,23 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
     return fold_partitions(frame, {**factories, **{n: shard_fac for n in names}}, update)
 
 
+def _merge_single_pass(frame, fixed_names) -> dict:
+    """Driver side of the single pass (it runs only under the direct
+    gate, so one collect): the fixed sketches fold row by row; each
+    shard's partition filters merge in ONE ``CuckooFilter.merge`` call,
+    one batched placement instead of one per partition."""
+    rows = _direct_collect(frame.select(*_FOLD_COLS))
+    fixed = fold_states(r for r in rows if r[0] in fixed_names)
+    merged = {name: sk for name, (sk, _, _) in fixed.items()}
+    parts: dict[str, list] = {}
+    for name, _, _, blob in rows:
+        if name not in fixed_names:
+            parts.setdefault(name, []).append(blob)
+    for name, blobs in parts.items():
+        merged[name] = loads(blobs[0]).merge(*map(loads, blobs[1:]))
+    return merged
+
+
 def _exchange_plan(docs_df, factories: dict, fixed_bytes: int, num_shards: int, cfg):
     """Above the gate: the fixed sketches on the scan partitions and the
     shards over a url-only exchange (``build_sharded``), submitted
@@ -190,17 +223,20 @@ def build_web_pipeline(
 
     The plan is picked by the merge's byte gate (``merge.direct_merge``)
     over one scan partition's state — the fixed sketches plus
-    ``num_shards`` empty shard filters:
+    ``num_shards`` empty shard filters — and by the count of partition
+    filters the driver would fold (partitions × ``num_shards`` ≤
+    ``SINGLE_PASS_FILTERS``, the measured crossover):
 
-    * under it: ONE pass over the scan partitions. Each task folds the
+    * under both: ONE pass over the scan partitions. Each task folds the
       fixed sketches and one filter per shard; the driver merges the
-      partition rows (``merge_sketches``), re-homing each shard's
-      partition filters into one (``CuckooFilter.merge``, lossless).
-      One job, no shuffle, one Python task per scan partition.
-    * above it (the 100 TB regime, where one task must not hold every
-      shard's filter): two concurrent jobs — the fixed sketches on the
-      scan partitions, and ``build_sharded`` over a url-only shuffle,
-      one task per shard.
+      partition rows, re-homing each shard's partition filters into
+      one (``CuckooFilter.merge``, lossless, one batched call per
+      shard). One job, no shuffle, one Python task per scan partition.
+    * otherwise (the 100 TB regime, where one task must not hold every
+      shard's filter, or so many partition filters that the serial
+      driver fold costs more than the shard tasks): two concurrent
+      jobs — the fixed sketches on the scan partitions, and
+      ``build_sharded`` over a url-only shuffle, one task per shard.
 
     Both plans return (fixed_sketches: {"hll", "cms", "kll"},
     shard_rows: list[Row[SHARD_SCHEMA]]) with one row per non-empty
@@ -232,10 +268,11 @@ def build_web_pipeline(
     fixed_bytes = state_bytes_hint(*factories.values())
     state_bytes = fixed_bytes + num_shards * state_bytes_hint(shard_fac)
     frame = _single_pass(docs_df, factories, num_shards, shard_fac)
-    if not direct_merge(frame.rdd.getNumPartitions(), state_bytes):
+    p = frame.rdd.getNumPartitions()
+    if not (direct_merge(p, state_bytes) and p * num_shards <= SINGLE_PASS_FILTERS):
         return _exchange_plan(docs_df, factories, fixed_bytes, num_shards, cfg)
 
-    merged = merge_sketches(frame, state_bytes=state_bytes)
+    merged = _merge_single_pass(frame, set(factories))
     shard_rows = []
     for sid in range(num_shards):
         f = merged.get(_shard_name(sid))

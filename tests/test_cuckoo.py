@@ -229,6 +229,29 @@ def test_merge_equals_single_build_membership(strategy):
     assert merged.insert_failures == 0
 
 
+def test_batched_merge_equals_sequential_membership():
+    """merge(*others) places every other filter's entries in one batch;
+    the union holds the same items as one merge per filter, including
+    past the kick loop (parts near the merged filter's load limit)."""
+    cfg = CuckooConfig(capacity=2000, fingerprint_bits=16, hash_strategy="xx")
+    items = [f"b-{i}" for i in range(1900)]
+
+    def parts():
+        out = [CuckooFilter(cfg) for _ in range(8)]
+        for j, p in enumerate(out):
+            p.insert_batch(items[j::8])
+        return out
+
+    seq = parts()
+    for p in seq[1:]:
+        seq[0].merge(p)
+    batched = parts()
+    batched[0].merge(*batched[1:])
+    for f in (seq[0], batched[0]):
+        assert f.count() == 1900 and f.insert_failures == 0
+        assert f.lookup_batch(items).all()
+
+
 def test_merge_associative_commutative():
     cfg = CuckooConfig(capacity=2000, fingerprint_bits=16, hash_strategy="xx")
     items = [f"a-{i}" for i in range(900)]
@@ -253,6 +276,13 @@ def test_merge_geometry_mismatch():
     b = mk(capacity=5000)
     with pytest.raises(GeometryMismatchError):
         a.merge(b)
+    # a mismatch anywhere in a batched merge leaves the target untouched
+    ok = mk(capacity=1000)
+    ok.insert_batch([f"g-{i}" for i in range(100)])
+    before = a.to_bytes()
+    with pytest.raises(GeometryMismatchError):
+        a.merge(ok, b)
+    assert a.to_bytes() == before
 
 
 # ------------------------------------------------------------------ serde

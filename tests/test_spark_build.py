@@ -187,6 +187,23 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
     assert fixed["kll"].n == 1000
 
 
+def test_web_pipeline_many_partition_filters_take_exchange_plan(spark, docs_df, monkeypatch):
+    """Past SINGLE_PASS_FILTERS partition filters (partitions × shards)
+    the exchange plan runs, even under the byte gate."""
+    from sketchlib.spark import webbuild
+
+    calls = []
+    exchange = webbuild._exchange_plan
+    monkeypatch.setattr(webbuild, "_exchange_plan", lambda *a: calls.append(a) or exchange(*a))
+    docs = docs_df.repartition(3)
+    _, single = webbuild.build_web_pipeline(docs, 1000, num_shards=8, capacity_slack=1.5)
+    assert calls == []
+    monkeypatch.setattr(webbuild, "SINGLE_PASS_FILTERS", 3 * 8 - 1)
+    _, rows = webbuild.build_web_pipeline(docs, 1000, num_shards=8, capacity_slack=1.5)
+    assert len(calls) == 1
+    assert _shard_counts(sorted(rows)) == _shard_counts(single)
+
+
 def test_web_pipeline_single_pass_has_no_exchange(spark, docs_df):
     """Under the gate the flagship is one narrow pass over the scan."""
     from sketchlib.spark.shard import shard_factory
@@ -212,27 +229,6 @@ def test_web_pipeline_empty_input_same_under_both_plans(spark, monkeypatch):
     assert {k: v.to_bytes() for k, v in fixed.items()} == {
         k: v.to_bytes() for k, v in fixed2.items()
     }
-
-
-def test_shard_expr_routes_like_shard_col(spark):
-    """The SQL routing string and the Column expression give the same
-    shard ids — ASCII, non-ASCII and NULL keys."""
-    from sketchlib.spark.shard import _shard_col, shard_expr
-
-    keys = spark.createDataFrame(
-        [("https://a.example/",), ("ключ-ü-€-😀",), ("",), (None,)]
-        + [(f"k{i}",) for i in range(200)],
-        "key string",
-    )
-    for n in (1, 7, 16):
-        rows = (
-            keys.select("key", _shard_col("key", n).alias("col"))
-            .selectExpr("col", f"{shard_expr('key', n)} AS sql")
-            .collect()
-        )
-        assert all(r.col == r.sql and 0 <= r.sql < n for r in rows)
-        if n == 16:
-            assert len({r.sql for r in rows}) == 16
 
 
 # --------------------------------------------------------------- broadcast UDFs

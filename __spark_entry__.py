@@ -920,7 +920,7 @@ def q_streaming_incremental(spark, sf_dir):
     events table is replayed through a REAL Structured Streaming query
     (readStream → foreachBatch → availableNow) that incrementally folds
     an HLL over user_id and a CMS over event_type via the per-batch
-    build+merge path with atomic on-disk state checkpoints. The final
+    build+merge path with one committed state epoch per batch. The final
     states are then gated against exact batch SQL over the same rows —
     HLL within 3σ, CMS never undercounting any event_type."""
     import tempfile
@@ -934,10 +934,10 @@ def q_streaming_incremental(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="stream-oracle-")
     in_dir = _stage_event_halves(ev, tmp)
     hll_b = IncrementalSketchBuilder(
-        lambda: HyperLogLog(14), "user_key", f"{tmp}/hll.bin"
+        lambda: HyperLogLog(14), "user_key", f"{tmp}/hll"
     )
     cms_b = IncrementalSketchBuilder(
-        lambda: CountMinSketch(width=4096, depth=5), "event_type", f"{tmp}/cms.bin"
+        lambda: CountMinSketch(width=4096, depth=5), "event_type", f"{tmp}/cms"
     )
 
     def process(batch_df, batch_id):
@@ -959,12 +959,9 @@ def q_streaming_incremental(spark, sf_dir):
     )
     _await_or_raise(q, "incremental")
 
-    # read back through the builder API: the state file carries a
-    # (magic, last-batch-id) replay-protection header ahead of the
-    # sketch blob, so a raw loads() of the file bytes would fail
-    hll = hll_b.current()
-    cms = cms_b.current()
-    assert hll_b.last_batch_id() == cms_b.last_batch_id() == 1, (
+    hll = hll_b.current(spark)
+    cms = cms_b.current(spark)
+    assert hll_b.last_batch_id(spark) == cms_b.last_batch_id(spark) == 1, (
         "expected exactly 2 micro-batches (ids 0,1) folded into state"
     )
     ev = _t(spark, sf_dir, "events")

@@ -45,5 +45,5 @@ class GeometryMismatchError(SketchError):
 
 class CheckpointMismatchError(SketchError):
     """Raised when a checkpoint or state dir was written by a different
-    build — sketch kind, key, partitioning, row layout or shard routing
-    — than the one about to resume or extend it."""
+    build — sketch kind, key, partitioning, row layout, shard routing or
+    streaming state layout — than the one about to resume or extend it."""

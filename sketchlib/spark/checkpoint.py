@@ -1,27 +1,23 @@
 """Checkpoint-resumable build lineage (north-rule requirement).
 
-Two granularities:
-* partition-level: build_sketches(checkpoint_dir=...) — each task
-  atomically publishes its finished sketch row as
-  ``part-{pid}.arrow``; a rerun re-emits stored rows instead of
-  recomputing (the anti-join on completed lineage happens implicitly
-  by file existence, with identical input partitioning guaranteed by
-  deterministic parquet splits under fixed maxPartitionBytes).
-* run-level: the ``mark_stage_done`` / ``stage_done`` manifest
-  primitives — a resumed job checks ``stage_done`` and short-circuits
-  completed stages (see jobs/web_build_job.py for the usage shape).
+build_sketches / build_sharded(checkpoint_dir=...): each task
+atomically publishes its finished sketch row as ``part-{pid}.arrow``
+(``shard-{id}.arrow``); a rerun re-emits stored rows instead of
+recomputing (the anti-join on completed lineage happens implicitly by
+file existence, with identical input partitioning guaranteed by
+deterministic parquet splits under fixed maxPartitionBytes). The
+streaming sinks' state dirs (``streaming.epochs``) share the
+fingerprint below.
 
 Paths may be URIs (hdfs://, s3a://): every driver-side helper routes
-through the session's Hadoop FileSystem when given a session; the
-executor-side partition/shard files use pyarrow.fs (taskfs.py) because
-tasks have no JVM.
+through the session's Hadoop FileSystem; the executor-side
+partition/shard files use pyarrow.fs (taskfs.py) because tasks have no
+JVM.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import time
 
 from pyspark.sql import DataFrame
 
@@ -143,70 +139,3 @@ def drop_materialized(df: DataFrame) -> None:
     if path is None:
         return
     _delete_fs_path(df.sparkSession, path)
-
-
-def _require_local(checkpoint_dir: str, fn: str) -> None:
-    """The os.path fallback only speaks the driver's local disk — a
-    URI would silently create a literal local 's3a:'/'hdfs:' directory
-    (the exact failure fsio.py documents) and the manifest would never
-    reach the real store."""
-    if "://" in checkpoint_dir:
-        raise ValueError(
-            f"{fn} on a URI checkpoint dir needs the SparkSession: pass "
-            "spark= so the manifest goes through the Hadoop FileSystem"
-        )
-
-
-def lineage_manifest(checkpoint_dir: str, spark=None) -> dict:
-    path = f"{checkpoint_dir.rstrip('/')}/_lineage.json"
-    if spark is not None:
-        fs, p = _fs_path(spark, path)
-        if fs.exists(p):
-            return json.loads(read_bytes(spark, path).decode())
-        return {"stages": {}}
-    _require_local(checkpoint_dir, "lineage_manifest")
-    if os.path.exists(path):
-        with open(path) as fh:
-            return json.load(fh)
-    return {"stages": {}}
-
-
-def mark_stage_done(
-    checkpoint_dir: str, stage: str, meta: dict | None = None, spark=None
-) -> None:
-    m = lineage_manifest(checkpoint_dir, spark=spark)
-    m["stages"][stage] = {"done_at": time.time(), **(meta or {})}
-    if spark is not None:
-        # FileSystem.create is an atomic-enough single-writer replace
-        # for a driver-side manifest (one writer: the driver)
-        write_text(spark, f"{checkpoint_dir.rstrip('/')}/_lineage.json", json.dumps(m))
-        return
-    _require_local(checkpoint_dir, "mark_stage_done")
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = os.path.join(checkpoint_dir, "_lineage.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.replace(tmp, os.path.join(checkpoint_dir, "_lineage.json"))
-
-
-def stage_done(checkpoint_dir: str, stage: str, spark=None) -> bool:
-    return stage in lineage_manifest(checkpoint_dir, spark=spark)["stages"]
-
-
-def completed_partitions(checkpoint_dir: str, spark=None) -> list[int]:
-    names: list[str]
-    if spark is not None:
-        fs, p = _fs_path(spark, checkpoint_dir)
-        if not fs.exists(p):
-            return []
-        names = [st.getPath().getName() for st in fs.listStatus(p)]
-    else:
-        _require_local(checkpoint_dir, "completed_partitions")
-        if not os.path.isdir(checkpoint_dir):
-            return []
-        names = os.listdir(checkpoint_dir)
-    return sorted(
-        int(f[len("part-") : -len(".arrow")])
-        for f in names
-        if f.startswith("part-") and f.endswith(".arrow")
-    )

@@ -275,14 +275,12 @@ def probe_sharded(
     shard_df: DataFrame | None = None,
     num_shards: int = 0,
     broadcast_threshold_bytes: int = 64 << 20,
-    state_bytes: int | None = None,
     index: ShardedProbeIndex | None = None,
 ) -> DataFrame:
     """→ probes + boolean ``member`` column.
 
-    Two plans, picked by total filter size (``state_bytes``; measured
-    with one tiny aggregation when not supplied — persist the shard
-    table, it is the filter):
+    Two plans, picked by total filter size (measured with one tiny
+    aggregation — persist the shard table, it is the filter):
 
     * ≤ ``broadcast_threshold_bytes``: ZERO-SHUFFLE — the shard blobs
       broadcast once per executor (each worker deserializes a shard at
@@ -313,7 +311,7 @@ def probe_sharded(
         raise ValueError("need shard_df or a prebuilt ShardedProbeIndex")
     if num_shards <= 0:
         raise ValueError("num_shards must match the build's shard count")
-    if index is None and state_bytes is None:
+    if index is None:
         state_bytes = (
             shard_df.select(F.sum(F.length("state")).alias("b")).first().b or 0
         )

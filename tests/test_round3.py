@@ -332,54 +332,6 @@ def test_cms_abs_total_merge_guard_and_serde_roundtrip():
         b.merge(CountMinSketch.from_bytes(blob))
 
 
-# --------------------------------------------------------- streaming sharded
-
-
-def test_sharded_stream_builder_merges_and_replays(spark, tmp_path):
-    """Micro-batches fold into the running shard table per shard; a
-    replayed batch_id is skipped (idempotent foreachBatch contract), so
-    crash-replay cannot double-insert."""
-    from sketchlib.spark.shard import probe_sharded
-    from sketchlib.streaming.sharded import ShardedStreamBuilder
-
-    b = ShardedStreamBuilder(
-        "key", num_shards=4, state_dir=str(tmp_path / "state"), cfg=_cfg()
-    )
-    batch0 = spark.createDataFrame([(f"a{i}",) for i in range(200)], "key string")
-    batch1 = spark.createDataFrame([(f"b{i}",) for i in range(200)], "key string")
-    b.process_batch(batch0, 0)
-    b.process_batch(batch1, 1)
-    shards = b.current_shards(spark).persist()
-    items_after = {r.shard_id: r.item_count for r in shards.collect()}
-    both = batch0.unionByName(batch1)
-    hits = probe_sharded(both, "key", shards, num_shards=4).where("member").count()
-    assert hits == 400  # both batches answered, no false negatives
-    # replay batch 1 (the engine re-delivers after a crash): must be a
-    # no-op — same pointer, same per-shard item counts
-    b.process_batch(batch1, 1)
-    shards2 = b.current_shards(spark)
-    assert {r.shard_id: r.item_count for r in shards2.collect()} == items_after
-    shards.unpersist()
-    # epoch pruning: after batch 2 publishes, epochs older than the
-    # predecessor of CURRENT are deleted (steady-state = 2 copies)
-    import os
-
-    batch2 = spark.createDataFrame([(f"c{i}",) for i in range(50)], "key string")
-    b.process_batch(batch2, 2)
-    state = tmp_path / "state"
-    assert not (state / "epoch-0").exists()
-    assert (state / "epoch-1").exists() and (state / "epoch-2").exists()
-    assert (state / "CURRENT").read_text().strip() == "2"
-    assert os.path.isdir(state)
-    # pointer-loss recovery: a crash mid pointer-swap (delete+rename is
-    # not atomic) loses CURRENT but never published state — _pointer
-    # must recover from the newest COMPLETE (_SUCCESS-marked) epoch
-    (state / "CURRENT").unlink()
-    assert b._pointer(spark) == 2
-    recovered = b.current_shards(spark)
-    assert recovered is not None and recovered.count() > 0
-
-
 def test_cms_legacy_blob_mixed_sign_guard_reconstruction():
     """A pre-abs_total blob with mixed-sign weights has total≈0;
     reconstruction must NOT take abs(total)=0 (which would disable the

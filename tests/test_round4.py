@@ -280,72 +280,6 @@ def test_probe_sharded_rejects_duplicate_state_rows_cogroup(spark):
         ).collect()
 
 
-def test_sharded_stream_pointer_recovery_republishes(spark, tmp_path):
-    """After CURRENT is lost, the first _pointer call recovers from the
-    newest complete epoch AND rewrites CURRENT immediately, so later
-    calls read the pointer file instead of re-listing every epoch."""
-    import os
-
-    from sketchlib.streaming.sharded import ShardedStreamBuilder
-
-    state_dir = str(tmp_path / "state")
-    b = ShardedStreamBuilder("key", num_shards=2, state_dir=state_dir, cfg=_cfg())
-    batch = spark.createDataFrame([(f"k{i}",) for i in range(100)], "key string")
-    b.process_batch(batch, batch_id=0)
-    cur = os.path.join(state_dir, "CURRENT")
-    assert os.path.exists(cur)
-    os.remove(cur)
-    assert b._pointer(spark) == 0
-    assert os.path.exists(cur), "recovery must republish the pointer file"
-    with open(cur) as fh:
-        assert fh.read().strip() == "0"
-
-
-def test_sharded_stream_pointer_forward_only(spark, tmp_path):
-    """Pointer-regression guard (round-4 second review): (a) a reader
-    heal is CREATE-ONLY — it must never replace an existing CURRENT
-    with an older value; (b) even if a stale pointer file exists (crash
-    + stale-heal interleaving), _pointer detects it via the consecutive
-    batch-id staleness check and answers with the newest complete
-    epoch — no merge can ever base itself on a stale epoch; (c) no
-    .CURRENT.tmp-* orphans accumulate."""
-    import os
-
-    from sketchlib.streaming.sharded import ShardedStreamBuilder
-
-    state_dir = str(tmp_path / "state")
-    b = ShardedStreamBuilder("key", num_shards=2, state_dir=state_dir, cfg=_cfg())
-    batch0 = spark.createDataFrame([(f"a{i}",) for i in range(50)], "key string")
-    batch1 = spark.createDataFrame([(f"b{i}",) for i in range(50)], "key string")
-    b.process_batch(batch0, batch_id=0)
-    b.process_batch(batch1, batch_id=1)
-    cur = os.path.join(state_dir, "CURRENT")
-
-    # (a) stale heal attempt against an existing pointer: no-op
-    b._publish_pointer(spark, 0, overwrite=False)
-    with open(cur) as fh:
-        assert fh.read().strip() == "1"
-
-    # (b) stale pointer FILE: consumer must still see epoch 1
-    # (drop the Hadoop local-FS sidecar checksum — a hand-edited file
-    # would otherwise fail the checksummed read with ChecksumException)
-    with open(cur, "w") as fh:
-        fh.write("0")
-    crc = os.path.join(state_dir, ".CURRENT.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    assert b._pointer(spark) == 1
-    shards = b.current_shards(spark)
-    got = {(r.key, r.member) for r in
-           __import__("sketchlib.spark.shard", fromlist=["probe_sharded"])
-           .probe_sharded(batch1, "key", shards, num_shards=2).collect()}
-    assert all(m for _k, m in got)  # batch-1 keys present: no lost batch
-
-    # (c) no tmp litter from any publish/heal above
-    litter = [f for f in os.listdir(state_dir) if f.startswith(".CURRENT.tmp")]
-    assert litter == []
-
-
 def test_warc_open_archive_stream_non_seekable(tmp_path):
     """Object-store streams are frequently forward-only: the gzip sniff
     must use peek, never seek. A raw stream whose seek raises must

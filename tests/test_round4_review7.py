@@ -1,7 +1,7 @@
 """Round-4 seventh-pass regressions (review of __spark_entry__, shard,
 streaming incremental/stateful): one-shard-per-task routing, lazy filter
-construction, worker-level probe deser cache, lineage-scoped replay
-guard, real timeout eviction, required value_col."""
+construction, worker-level probe deser cache, real timeout eviction,
+required value_col."""
 
 from __future__ import annotations
 
@@ -131,54 +131,3 @@ def test_stateful_fold_arms_timeout_every_batch():
     assert out[0]["n_rows"].iloc[0] == 4
     assert st.timeout_set == 60_000
     assert st.updated is not None
-
-
-# --------------------------------------------- incremental lineage guard
-
-
-def test_incremental_new_lineage_does_not_drop_batches(spark, tmp_path):
-    """Batch ids restart at 0 under a new streaming checkpoint; the
-    replay guard must be scoped to the lineage or the first last+1
-    batches of FRESH data are silently discarded."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "state.bin")
-    b1 = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    b1._lineage = b1._lineage_hash("/ckpt/A")
-    df1 = spark.createDataFrame([(f"a{i}",) for i in range(100)], "key string")
-    b1.process_batch(df1, 57)
-    assert b1.last_batch_id() == 57
-
-    # same lineage, replayed id -> no-op (the original guarantee)
-    before = b1.current().estimate()
-    b1.process_batch(df1, 57)
-    assert b1.current().estimate() == before
-
-    # NEW lineage restarts numbering at 0: the batch must be FOLDED
-    b2 = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    b2._lineage = b2._lineage_hash("/ckpt/B")
-    df2 = spark.createDataFrame([(f"b{i}",) for i in range(100)], "key string")
-    b2.process_batch(df2, 0)
-    est = b2.current().estimate()
-    assert est > 150  # ~200 distinct: both lineages' data folded
-    assert b2.last_batch_id() == 0  # numbering restarted
-
-    # replay of the new lineage's batch 0 is again a no-op
-    b2.process_batch(df2, 0)
-    assert b2.current().estimate() == est
-
-
-def test_incremental_legacy_unscoped_behavior(spark, tmp_path):
-    """Manual process_batch callers (lineage unknown) keep the original
-    unscoped skip semantics."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "state2.bin")
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    df = spark.createDataFrame([(f"x{i}",) for i in range(50)], "key string")
-    b.process_batch(df, 3)
-    before = b.current().estimate()
-    b.process_batch(df, 2)  # stale id, unknown lineage -> skipped
-    assert b.current().estimate() == before

@@ -1,6 +1,6 @@
 """Round-4 eighth-pass regressions (checkpoint/resume path): task-side
-IO through pyarrow.fs, checkpoint-dir fingerprinting, URI-aware lineage
-manifest, snapshot pin validation, orphan tmp GC."""
+IO through pyarrow.fs, checkpoint-dir fingerprinting, snapshot pin
+validation, orphan tmp GC."""
 
 from __future__ import annotations
 
@@ -66,39 +66,6 @@ def test_read_pages_rejects_snapshot_on_parquet(spark, tmp_path):
     with pytest.raises(ValueError, match="iceberg"):
         read_pages(spark, p, fmt="parquet", snapshot_id=42)
     assert read_pages(spark, p, fmt="parquet").count() == 1
-
-
-def test_lineage_manifest_uri_requires_session(tmp_path):
-    """os.path on a URI would create a literal local 's3a:' dir and the
-    manifest would never reach the store — refuse loudly."""
-    from sketchlib.spark.checkpoint import mark_stage_done, stage_done
-
-    with pytest.raises(ValueError, match="SparkSession"):
-        mark_stage_done("s3a://bucket/ck", "build")
-    with pytest.raises(ValueError, match="SparkSession"):
-        stage_done("hdfs://nn/ck", "build")
-    # local dirs keep working without a session
-    d = str(tmp_path / "lin")
-    assert not stage_done(d, "build")
-    mark_stage_done(d, "build", {"rows": 7})
-    assert stage_done(d, "build")
-
-
-def test_lineage_manifest_through_hadoop_fs(spark, tmp_path):
-    """With a session the manifest goes through the Hadoop FS — the
-    path that also works for hdfs:///s3a:// dirs."""
-    from sketchlib.spark.checkpoint import (
-        completed_partitions,
-        mark_stage_done,
-        stage_done,
-    )
-
-    d = f"file://{tmp_path}/lin2"
-    assert not stage_done(d, "build", spark=spark)
-    mark_stage_done(d, "build", {"rows": 9}, spark=spark)
-    assert stage_done(d, "build", spark=spark)
-    assert not stage_done(d, "merge", spark=spark)
-    assert completed_partitions(d, spark=spark) == []
 
 
 def test_taskfs_publish_gcs_orphan_tmps(tmp_path):

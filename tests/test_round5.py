@@ -1,6 +1,5 @@
-"""Round-5 fixes: SpaceSaving prune floor in cms_heavy_hitters, legacy
-lineage handling in IncrementalSketchBuilder, session-scoped
-partition_sizes diagnostic."""
+"""Round-5 fixes: SpaceSaving prune floor in cms_heavy_hitters,
+session-scoped partition_sizes diagnostic."""
 
 import pytest
 
@@ -99,57 +98,6 @@ def test_heavy_hitters_end_to_end_still_exact_at_test_scale(spark):
     top = cms_heavy_hitters(df, "tok", k=2)
     assert [t[0] for t in top] == ["alpha", "beta"]
     assert top[0][1] >= 12000 and top[1][1] >= 6000
-
-
-# --------------------------------------- legacy lineage = changed lineage
-
-
-def test_incremental_legacy_state_under_new_lineage_folds(spark, tmp_path):
-    """A legacy (ISB1/headerless) state file re-attached under a NEW
-    checkpoint must treat lineage as CHANGED: the new query's batch ids
-    restart at 0, and skipping them against the legacy file's numbering
-    silently discards fresh data (ADVICE r4)."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "legacy.bin")
-    legacy = HyperLogLog(12)
-    legacy.update([f"old{i}" for i in range(200)])
-    with open(state, "wb") as fh:
-        fh.write(
-            IncrementalSketchBuilder._MAGIC
-            + (57).to_bytes(8, "little", signed=True)
-            + legacy.to_bytes()
-        )
-
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    b._lineage = b._lineage_hash("/ckpt/fresh")
-    df = spark.createDataFrame([(f"new{i}",) for i in range(200)], "key string")
-    b.process_batch(df, 0)  # id 0 < legacy 57: MUST fold, not skip
-    est = b.current().estimate()
-    assert est > 300  # ~400 distinct: legacy + fresh both present
-    # the fold stamped the new lineage: replay of batch 0 is a no-op
-    b.process_batch(df, 0)
-    assert b.current().estimate() == est
-    assert b.last_batch_id() == 0
-
-
-def test_incremental_headerless_under_new_lineage_folds(spark, tmp_path):
-    """Same contract for raw headerless blobs (lineage reads as 0)."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "raw.bin")
-    old = HyperLogLog(12)
-    old.update([f"o{i}" for i in range(100)])
-    with open(state, "wb") as fh:
-        fh.write(old.to_bytes())  # no header: loads as batch -1/lineage 0
-
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    b._lineage = b._lineage_hash("/ckpt/other")
-    df = spark.createDataFrame([(f"n{i}",) for i in range(100)], "key string")
-    b.process_batch(df, 0)
-    assert b.current().estimate() > 150
 
 
 # ---------------------------------------- partition_sizes conf isolation
@@ -498,121 +446,3 @@ def test_partition_sizes_inherits_runtime_conf(spark):
         assert sum(sizes) == 500
     finally:
         spark.conf.set(key, prev)
-
-
-# ------------------------------ legacy lineage resolved from the checkpoint
-
-
-def _legacy_state_file(tmp_path, n_old=200, last=57):
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "legacy.bin")
-    old = HyperLogLog(12)
-    old.update([f"old{i}" for i in range(n_old)])
-    with open(state, "wb") as fh:
-        fh.write(
-            IncrementalSketchBuilder._MAGIC
-            + last.to_bytes(8, "little", signed=True)
-            + old.to_bytes()
-        )
-    return state
-
-
-def test_legacy_state_original_checkpoint_keeps_replay_guard(spark, tmp_path):
-    """A legacy (ISB1) state file re-attached to its ORIGINAL checkpoint
-    (the in-place upgrade path — the dir has assigned batch ids, so
-    numbering CONTINUES) must keep the replay guard armed: a replayed
-    batch id <= last must NOT double-fold. The signal is the offsets
-    dir (written BEFORE a batch processes), so the guard stays armed
-    even when the pre-upgrade run crashed before its commit."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = _legacy_state_file(tmp_path)
-    ckpt = tmp_path / "ckpt"
-    (ckpt / "offsets").mkdir(parents=True)
-    (ckpt / "offsets" / "57").write_text("v1")
-    # NO commits entry: the crash-before-commit window
-
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    # the attach-time resolution, without starting a real stream
-    b._lineage = b._lineage_hash(str(ckpt))
-    b._legacy_same_lineage = b._checkpoint_has_batches(str(ckpt))
-    assert b._legacy_same_lineage is True
-
-    before = b.current().estimate()
-    df = spark.createDataFrame([(f"replay{i}",) for i in range(200)], "key string")
-    b.process_batch(df, 57)  # replayed batch: already folded pre-upgrade
-    assert b.current().estimate() == before  # no double-fold
-    b.process_batch(df, 58)  # genuinely new batch folds and stamps ISB2
-    assert b.current().estimate() > before
-    assert b.last_batch_id() == 58
-
-
-def test_legacy_state_fresh_checkpoint_counts_as_changed(spark, tmp_path):
-    """The same legacy file pointed at a FRESH checkpoint (no commits:
-    batch ids restart at 0) must fold batch 0 instead of skipping it
-    against the old numbering (ADVICE r4 — unchanged by the
-    original-checkpoint fix)."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = _legacy_state_file(tmp_path)
-    fresh = str(tmp_path / "fresh-ckpt")  # does not exist yet
-
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    b._lineage = b._lineage_hash(fresh)
-    b._legacy_same_lineage = b._checkpoint_has_batches(fresh)
-    assert b._legacy_same_lineage is False
-
-    df = spark.createDataFrame([(f"new{i}",) for i in range(200)], "key string")
-    b.process_batch(df, 0)  # 0 < legacy 57: MUST fold
-    assert b.current().estimate() > 300  # legacy + fresh both present
-    assert b.last_batch_id() == 0
-
-
-def test_checkpoint_has_batches_variants(tmp_path):
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    has = IncrementalSketchBuilder._checkpoint_has_batches
-    ckpt = tmp_path / "c"
-    (ckpt / "offsets").mkdir(parents=True)
-    assert has(str(ckpt)) is False  # empty offsets dir: no batch assigned
-    (ckpt / "offsets" / "0").write_text("v1")
-    assert has(str(ckpt)) is True
-    assert has(f"file:{ckpt}") is True  # file: URI maps to the local path
-    (ckpt / "offsets" / ".0.crc").write_text("x")  # sidecars don't count
-    assert has(str(tmp_path / "missing")) is False
-    # non-local URI without a session can't be inspected: fresh side
-    assert has("hdfs://nn/ckpt") is False
-
-
-def test_checkpoint_has_batches_uri_via_session(spark, tmp_path):
-    """URI checkpoints resolve through the session's Hadoop FS — a
-    file:// URI with offsets entries must read as numbering-continues."""
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    has = IncrementalSketchBuilder._checkpoint_has_batches
-    ckpt = tmp_path / "u"
-    (ckpt / "offsets").mkdir(parents=True)
-    uri = f"file://{ckpt}"
-    assert has(uri, spark) is False
-    (ckpt / "offsets" / "3").write_text("v1")
-    assert has(uri, spark) is True
-    assert has(f"file://{tmp_path}/nope", spark) is False
-
-
-def test_checkpoint_has_batches_fs_error_keeps_guard_armed(monkeypatch):
-    """A failing Hadoop FS inspection must not read as a fresh
-    checkpoint: that would disarm the replay guard and let a replayed
-    batch double-fold into a legacy state file."""
-    from sketchlib.spark import fsio
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    def unreachable(*_a, **_kw):
-        raise OSError("namenode unreachable")
-
-    monkeypatch.setattr(fsio, "_fs_path", unreachable)
-    has = IncrementalSketchBuilder._checkpoint_has_batches
-    assert has("hdfs://nn/ckpt", object()) is True

@@ -5,6 +5,8 @@ and the end-to-end text invariant through Arrow (FIXTURES.md §4).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -378,24 +380,12 @@ def test_checkpoint_resume(spark, docs_df, tmp_path):
     urls = docs_df.select(F.col("url").alias("key")).repartition(4)
     df1 = build_sketches(urls, "key", lambda: HyperLogLog(12), checkpoint_dir=ckpt)
     merged1 = tree_merge(df1)
-    from sketchlib.spark.checkpoint import completed_partitions
-
-    done = completed_partitions(ckpt)
+    done = [f for f in os.listdir(ckpt) if f.startswith("part-") and f.endswith(".arrow")]
     assert len(done) == 4
     # resume: identical result without recompute (stored rows re-emitted)
     df2 = build_sketches(urls, "key", lambda: HyperLogLog(12), checkpoint_dir=ckpt)
     merged2 = tree_merge(df2)
     assert merged1.to_bytes() == merged2.to_bytes()
-
-
-def test_lineage_manifest(tmp_path):
-    from sketchlib.spark.checkpoint import mark_stage_done, stage_done
-
-    d = str(tmp_path / "lineage")
-    assert not stage_done(d, "build")
-    mark_stage_done(d, "build", {"rows": 123})
-    assert stage_done(d, "build")
-    assert not stage_done(d, "merge")
 
 
 # ------------------------------------------------------------------- sharded
@@ -787,14 +777,17 @@ def test_build_sharded_input_already_partitioned_by_key(spark):
 
 
 def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
-    """State written under the previous row layout or shard routing
-    (pmod(xxhash64(key), n)) must raise the typed mismatch error, never
-    be resumed or probed: a build_sharded checkpoint dir, a
-    build_sketches checkpoint dir and a sharded stream state_dir."""
+    """State written under the previous row layout, shard routing
+    (pmod(xxhash64(key), n)) or streaming state layout must raise the
+    typed mismatch error, never be resumed, probed or misread: a
+    build_sharded checkpoint dir, a build_sketches checkpoint dir,
+    sharded stream state_dirs with a pointer file, and incremental
+    state files with an ISB1/ISB2 header or none."""
     import json
 
     from sketchlib.errors import CheckpointMismatchError
-    from sketchlib.spark.shard import build_sharded
+    from sketchlib.spark.shard import build_sharded, shard_factory, shard_fingerprint
+    from sketchlib.streaming.incremental import IncrementalSketchBuilder
     from sketchlib.streaming.sharded import ShardedStreamBuilder
 
     keys = spark.createDataFrame([(f"k{i}",) for i in range(100)], "key string")
@@ -818,17 +811,41 @@ def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
     with pytest.raises(CheckpointMismatchError, match="different"):
         build_sketches(keys, "key", lambda: HyperLogLog(10), checkpoint_dir=str(part_ck))
 
-    # stream state_dirs predating the fingerprint carry none at all
-    state = tmp_path / "stream"
-    (state / "epoch-0").mkdir(parents=True)
-    (state / "epoch-0" / "_SUCCESS").write_text("")
-    (state / "CURRENT").write_text("0")
-    b = ShardedStreamBuilder("key", num_shards=4, state_dir=str(state), cfg=_cfg())
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        b.process_batch(keys, 1)
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        b.current_shards(spark)
-    assert (state / "CURRENT").read_text() == "0"  # nothing merged or moved
+    # pointer-file stream state_dirs: predating the fingerprint (none
+    # at all) and fingerprinted before the epoch layout (no "layout")
+    old_meta = shard_fingerprint("sharded_stream", "key", 4, shard_factory(4, _cfg()))
+    for name, meta in (("stream", None), ("stream-fp", old_meta)):
+        state = tmp_path / name
+        (state / "epoch-0").mkdir(parents=True)
+        (state / "epoch-0" / "_SUCCESS").write_text("")
+        (state / "CURRENT").write_text("0")
+        if meta is not None:
+            (state / "_meta.json").write_text(json.dumps(meta))
+        b = ShardedStreamBuilder("key", num_shards=4, state_dir=str(state), cfg=_cfg())
+        with pytest.raises(CheckpointMismatchError, match="different"):
+            b.process_batch(keys, 1)
+        with pytest.raises(CheckpointMismatchError, match="different"):
+            b.current_shards(spark)
+        assert (state / "CURRENT").read_text() == "0"  # nothing merged or moved
+
+    # incremental state files: ISB1 (batch id), ISB2 (batch id +
+    # lineage) and headerless blobs, given as the state path as before
+    old = HyperLogLog(12)
+    old.update([f"o{i}" for i in range(100)])
+    blob = old.to_bytes()
+    for name, raw in (
+        ("isb1.bin", b"ISB1" + (57).to_bytes(8, "little") + blob),
+        ("isb2.bin", b"ISB2" + (57).to_bytes(8, "little") + (7).to_bytes(8, "little") + blob),
+        ("raw.bin", blob),
+    ):
+        path = tmp_path / name
+        path.write_bytes(raw)
+        b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", str(path))
+        with pytest.raises(CheckpointMismatchError, match="different"):
+            b.process_batch(keys, 58)
+        with pytest.raises(CheckpointMismatchError, match="different"):
+            b.current(spark)
+        assert path.read_bytes() == raw  # nothing merged or moved
 
 
 def test_sharded_empty_shards_probe_and_delete(spark):

@@ -446,96 +446,6 @@ def test_frame_sample_plan(spark):
 # ----------------------------------------------------------------- streaming
 
 
-def test_incremental_builder_batches(spark, docs_df, tmp_path):
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "hll.bin")
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    urls = docs_df.select(F.col("url").alias("key"))
-    # simulate three micro-batches
-    for i in range(3):
-        batch = urls.where(F.pmod(F.xxhash64("key"), F.lit(3)) == i)
-        b.process_batch(batch, i)
-    est = b.current().estimate()
-    assert abs(est - 1000) / 1000 <= 3 * b.current().std_error()
-
-
-def test_incremental_builder_replay_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: a crash between the state write
-    and Spark's offset commit re-delivers the batch. Sketch merges are
-    NOT idempotent (CMS counts would double), so the builder persists
-    the last applied batch id with the state and skips replays."""
-    from sketchlib.sketches import CountMinSketch
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    state = str(tmp_path / "cms.bin")
-    b = IncrementalSketchBuilder(
-        lambda: CountMinSketch(width=512, depth=3), "key", state
-    )
-    batch = spark.createDataFrame([("k",)] * 100, "key string")
-    b.process_batch(batch, 0)
-    assert b.last_batch_id() == 0
-    assert int(b.current().estimate(["k"])[0]) == 100
-    # crash-replay of the SAME batch id: must be a no-op
-    b.process_batch(batch, 0)
-    assert int(b.current().estimate(["k"])[0]) == 100
-    # an empty batch still advances the id so ITS replay is also a no-op
-    b.process_batch(batch.limit(0), 1)
-    assert b.last_batch_id() == 1
-    b.process_batch(batch.limit(0), 1)
-    assert b.last_batch_id() == 1
-    # a fresh builder over the same file resumes from the persisted id
-    b2 = IncrementalSketchBuilder(
-        lambda: CountMinSketch(width=512, depth=3), "key", state
-    )
-    assert b2.last_batch_id() == 1
-    b2.process_batch(batch, 1)  # replay across restart: still a no-op
-    assert int(b2.current().estimate(["k"])[0]) == 100
-
-
-def test_incremental_builder_legacy_headerless_state(spark, tmp_path):
-    """Pre-header state files (raw sketch blob, no magic) load as
-    batch -1: the sketch is preserved and replay protection starts
-    from the next write."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    legacy = HyperLogLog(12)
-    legacy.update([f"u{i}" for i in range(500)])
-    state = str(tmp_path / "hll.bin")
-    with open(state, "wb") as fh:
-        fh.write(legacy.to_bytes())  # old format: no ISB1 header
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", state)
-    assert b.last_batch_id() == -1
-    assert b.current().estimate() == legacy.estimate()
-    batch = spark.createDataFrame([(f"v{i}",) for i in range(500)], "key string")
-    b.process_batch(batch, 0)  # upgrade write adds the header
-    assert b.last_batch_id() == 0
-    est = b.current().estimate()
-    assert abs(est - 1000) / 1000 <= 3 * b.current().std_error()
-
-
-def test_streaming_incremental_end_to_end(spark, docs_parquet, tmp_path):
-    """Real Structured Streaming run: file source -> foreachBatch
-    incremental HLL build -> availableNow trigger -> state on disk."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-
-    import shutil
-
-    (tmp_path / "in").mkdir()
-    shutil.copy(docs_parquet, tmp_path / "in" / "p0.parquet")
-    schema = spark.read.parquet(docs_parquet).schema
-    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
-    state = str(tmp_path / "hll.bin")
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "url", state)
-    q = b.attach(stream.select("url"), str(tmp_path / "ckpt"), trigger_once=True)
-    q.awaitTermination(120)
-    est = b.current().estimate()
-    assert abs(est - 1000) / 1000 <= 3 * b.current().std_error()
-
-
 def test_stateful_hll_by_key_stream(spark, docs_parquet, tmp_path):
     """applyInPandasWithState: per-key running HLL over a 2-micro-batch
     stream; state persists across batches (final estimate ~= per-lang

@@ -653,14 +653,7 @@ def q_grouped_quantiles(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
     )
-
-    class _NumKLL(KLLSketch):
-        def update(self, values):  # grouped build passes a pandas Series
-            import numpy as np
-
-            super().update(np.asarray(values, np.float64))
-
-    grouped = build_grouped_sketches(li, "g", "v", lambda: _NumKLL(200), salt_buckets=4)
+    grouped = build_grouped_sketches(li, "g", "v", lambda: KLLSketch(200), salt_buckets=4)
     rows = grouped.collect()
     # one aggregation computes each group-median's exact rank
     aggs = [F.count("*").alias("n")]

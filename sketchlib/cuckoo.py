@@ -224,6 +224,9 @@ class CuckooFilter:
         i1, i2, fp = self._indices(items)
         return self._contains(i1, i2, fp)
 
+    # membership-protocol alias (Bloom's name), as update aliases insert_batch
+    contains = lookup_batch
+
     def _contains(self, i1, i2, fp) -> np.ndarray:
         f = fp[:, None]
         return ((self.table[i1] == f).any(1)) | ((self.table[i2] == f).any(1))

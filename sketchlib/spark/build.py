@@ -6,11 +6,14 @@ vectorized numpy kernels, emitting one state row per (partition,
 sketch) — no groupBy, no shuffle, no per-row Python. The merge
 (sketchlib.spark.merge) then combines the per-partition states.
 
-Every table this layer produces — partition builds, merge levels and
-shard tables (sketchlib.spark.shard) — is a *state row* table: a key
-(``sketch, part_id`` or ``shard_id``) followed by the metric tail
+Every table this layer produces — partition builds, merge levels,
+shard tables (sketchlib.spark.shard) and per-group tables
+(sketchlib.spark.grouped) — is a *state row* table: a key (``sketch,
+part_id``, ``shard_id`` or ``group_key``) followed by the metric tail
 ``n_rows, item_count, fail_count, load_factor, state``, emitted by the
-single ``state_row``.
+single ``state_row``. Keyed tables (shards, groups) are built by the
+one keyed fold ``fold_keyed``, which routes each batch's rows with
+``split_by_key``.
 
 Scale notes (100 TB / 10^12 docs):
 * HLL/CMS/KLL/t-digest/Bloom states are KBs–MBs regardless of input
@@ -32,6 +35,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.pandas.types import from_arrow_schema
 
 # the metric tail every state row carries, after its key columns
@@ -42,18 +46,28 @@ _TAIL = [
     ("load_factor", pa.float64()),
     ("state", pa.binary()),
 ]
-_KEY_TYPES = {"sketch": pa.string(), "part_id": pa.int32(), "shard_id": pa.int32()}
+_KEY_TYPES = {
+    "sketch": pa.string(),
+    "part_id": pa.int32(),
+    "shard_id": pa.int32(),
+    "group_key": pa.string(),
+}
 
 
 def _state_schema(*key: str) -> pa.Schema:
     return pa.schema([(k, _KEY_TYPES[k]) for k in key] + _TAIL)
 
 
-# Spark schemas of the two state-row tables: partition builds and
+def keyed_schema(key: str):
+    """Spark schema of a keyed state-row table (one row per ``key``)."""
+    return from_arrow_schema(_state_schema(key))
+
+
+# Spark schemas of the two fixed state-row tables: partition builds and
 # merge levels (one row per partition per sketch name), and shard
 # tables (one row per shard, sketchlib.spark.shard)
 SKETCH_SCHEMA = from_arrow_schema(_state_schema("sketch", "part_id"))
-SHARD_SCHEMA = from_arrow_schema(_state_schema("shard_id"))
+SHARD_SCHEMA = keyed_schema("shard_id")
 
 # Version of the state-row layout, pinned in checkpoint fingerprints:
 # rows published under an older layout must not be re-emitted.
@@ -108,6 +122,72 @@ def fold_partitions(
         yield from taskfs.checkpointed(checkpoint_dir, f"part-{pid:05d}", build)
 
     return df.mapInArrow(fold, SKETCH_SCHEMA)
+
+
+def split_by_key(keys: pa.Array, values: pa.Array):
+    """Route one batch: → ``(key, values of that key)`` per distinct
+    key, nulls forming one key. One dictionary encode and one stable
+    argsort, so each key's values keep their batch order; a batch
+    holding a single key is yielded whole, without a take."""
+    enc = pc.dictionary_encode(keys, null_encoding="encode")
+    uniq = enc.dictionary.to_pylist()
+    if len(uniq) == 1:
+        yield uniq[0], values
+        return
+    codes = enc.indices.to_numpy(zero_copy_only=False)
+    order = np.argsort(codes, kind="stable")
+    bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
+    values = values.take(pa.array(order))
+    for i, key in enumerate(uniq):
+        yield key, values.slice(bounds[i], bounds[i + 1] - bounds[i])
+
+
+def fold_keyed(df, key: str, factory: Callable[[], object], checkpoint_dir: str | None = None):
+    """``(key, value)`` rows → one state row per ``key`` value present
+    in a task (``keyed_schema(key)``). ``df`` holds the ``key`` column
+    and one value column, behind the exchange that co-locates each
+    key's rows, and each task must see a key's rows as one run: a
+    shard exchange puts one shard in each partition (a task that AQE
+    coalesced reads whole partitions in order), the grouped build
+    sorts within partitions. The task keeps ONE live sketch, folded
+    from its key's values batch by batch and emitted when the next key
+    starts, so its memory is one sketch and one Arrow batch however
+    many keys or rows it holds. A key that came back after its run
+    ended would be emitted twice (sharded probes reject duplicate
+    shard rows; grouped partials are merged anyway).
+
+    With ``checkpoint_dir`` (integer keys: shard ids) each key's row is
+    published as ``shard-{key:06d}.arrow`` and a rerun re-emits it
+    instead of folding (sketchlib/spark/taskfs.py)."""
+    (value,) = [c for c in df.columns if c != key]
+
+    def ckpt_name(k) -> str:
+        return f"shard-{k:06d}" if checkpoint_dir else ""
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from . import taskfs
+
+        def emit(k, sk, n):
+            return taskfs.checkpointed(
+                checkpoint_dir, ckpt_name(k), lambda: [state_row(sk, n, **{key: k})]
+            )
+
+        # run = [key, sketch (None when already published), rows]
+        run = None
+        for rb in batches:
+            for k, vals in split_by_key(rb.column(key), rb.column(value)):
+                if run is None or run[0] != k:
+                    if run is not None:
+                        yield from emit(*run)
+                    done = taskfs.published(checkpoint_dir, ckpt_name(k))
+                    run = [k, None if done else factory(), 0]
+                if run[1] is not None:
+                    run[1].update(vals)
+                    run[2] += len(vals)
+        if run is not None:
+            yield from emit(*run)
+
+    return df.mapInArrow(fold, keyed_schema(key))
 
 
 def column_update(numeric: bool) -> Callable[[dict, pa.RecordBatch], None]:

@@ -3,17 +3,24 @@
 One sketch PER GROUP (per host, per source, per language...) differs
 from the global builds in webbuild/build: the shuffle key is the group
 column, and web-host-like keys are Zipf-skewed — the top key can carry
-30%+ of all rows, so a plain ``groupBy(key).applyInPandas`` puts 30% of
-the corpus in one task. AQE's skew handling does not split
-applyInPandas groups (SURVEY.md §4.2), so salting is explicit:
+30%+ of all rows, so a plain exchange on the group puts 30% of the
+corpus in one task. AQE's skew handling does not split a keyed
+exchange's partitions outside joins (SURVEY.md §4.2), so salting is
+explicit:
 
-  stage 1: groupBy(key, salt) — each hot key splits into
-           ``salt_buckets`` bounded subgroups, each building a partial
-           sketch (vectorized fold);
-  stage 2: groupBy(key) over the (key, salt) partials — merges
-           ``salt_buckets``-many KB-sized states per key; the shuffle
-           carries states, not rows.
+  stage 1: repartition(key, salt), sorted by key within each task —
+           each hot key splits into ``salt_buckets`` bounded
+           subgroups; the keyed fold (``build.fold_keyed``) streams
+           each task's Arrow batches into one partial sketch per key,
+           one key at a time;
+  stage 2: ``merge.merge_keyed`` on the key — streams the
+           ``salt_buckets``-many KB-sized partial states per key one
+           blob at a time; the shuffle carries states, not rows.
 
+Both stages stream (Arrow batches, then blobs) rather than using
+``groupBy().applyInPandas``, which loads a whole group into one pandas
+frame — a hot group's rows, or every partial of a group, in memory at
+once. Each task holds one live sketch whatever its number of groups.
 Both stages are associative-merge applications, so results are
 identical to an unsalted build (property-tested).
 """
@@ -26,9 +33,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..serde import loads
+from .build import fold_keyed
+from .merge import merge_keyed
 from .salt import salt_grouped
-
-GROUP_SKETCH_SCHEMA = "group_key string, n_rows long, state binary"
 
 
 def build_grouped_sketches(
@@ -39,8 +46,10 @@ def build_grouped_sketches(
     salt_buckets: int = 8,
     row_key: str | None = None,
 ) -> DataFrame:
-    """→ one row per group (GROUP_SKETCH_SCHEMA) via salted two-stage
-    build. ``row_key`` feeds the salt hash (defaults to ``key_col``).
+    """→ one state row per group (``group_key``, then the metric tail
+    ``n_rows, item_count, fail_count, load_factor, state``) via the
+    salted two-stage build. ``row_key`` feeds the salt hash (defaults
+    to ``key_col``).
 
     Pass a distinct ``row_key`` (e.g. the url column) when ``key_col``
     values repeat heavily inside a hot group: salting on the value
@@ -59,42 +68,17 @@ def build_grouped_sketches(
     else:
         salt_col = "key"
     salted = salt_grouped(df.select(*proj), "group_key", salt_buckets, row_key=salt_col)
-    if salt_col == "_salt_row_key":
-        # only needed to compute _salt — shipping a full row-key column
-        # (urls) through the stage-1 shuffle would roughly double its
-        # volume; the docstring's "dropped after" happens HERE
-        salted = salted.drop("_salt_row_key")
-
-    def build_partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = factory()
-        sk.update(pdf["key"])
-        return pd.DataFrame(
-            {
-                "group_key": [pdf["group_key"].iloc[0]],
-                "n_rows": [len(pdf)],
-                "state": [sk.to_bytes()],
-            }
-        )
-
-    partials = salted.groupBy("group_key", "_salt").applyInPandas(
-        build_partial, GROUP_SKETCH_SCHEMA
+    # the salt only picks the partition: the stage-1 shuffle carries
+    # (group_key, key, _salt), never the row-key column (urls would
+    # roughly double its volume) — the docstring's "dropped after"
+    # happens HERE; the sort hands fold_keyed each group as one run
+    keyed = (
+        salted.select("group_key", "key", "_salt")
+        .repartition("group_key", "_salt")
+        .sortWithinPartitions("group_key")
+        .select("group_key", "key")
     )
-
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = loads(pdf["state"].iloc[0])
-        for blob in pdf["state"].iloc[1:]:
-            sk.merge(loads(blob))
-        return pd.DataFrame(
-            {
-                "group_key": [pdf["group_key"].iloc[0]],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "state": [sk.to_bytes()],
-            }
-        )
-
-    return partials.groupBy("group_key").applyInPandas(
-        merge_partials, GROUP_SKETCH_SCHEMA
-    )
+    return merge_keyed(fold_keyed(keyed, "group_key", factory), "group_key")
 
 
 def grouped_estimates(grouped_df: DataFrame) -> DataFrame:

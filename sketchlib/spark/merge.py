@@ -26,8 +26,11 @@ Shuffle volume: fanout × state_size — KBs–MBs, never data-scale.
 
 from __future__ import annotations
 
+from itertools import groupby
+from operator import itemgetter
+
 from ..serde import loads
-from .build import SKETCH_SCHEMA, state_row
+from .build import SKETCH_SCHEMA, keyed_schema, state_row
 
 _FOLD_COLS = ("sketch", "part_id", "n_rows", "state")
 
@@ -116,6 +119,26 @@ def tree_merge_df(sketch_df, fanout: int = FANOUT):
 
     rdd = fold_groups_rdd(sketch_df.select(*_FOLD_COLS).rdd, fanout, fold)
     return sketch_df.sparkSession.createDataFrame(rdd, SKETCH_SCHEMA)
+
+
+def merge_keyed(df, key: str):
+    """ONE state row per ``key`` value from a keyed state-row table
+    holding duplicates (per-task partials, unioned incremental builds):
+    per key the states merge associatively and the row counts add.
+    Rows are hash-partitioned by ``key``, sorted within each task and
+    streamed through ``fold_states`` one key at a time — per-task
+    memory is ONE running state plus ONE incoming blob however many
+    keys the task holds, never a materialized group."""
+
+    def fold(rows):
+        for _, run in groupby(rows, itemgetter(0)):
+            for k, (sk, _, n) in fold_states(run).items():
+                yield tuple(state_row(sk, n, **{key: k}).to_pylist()[0].values())
+
+    # fold_states' min-part column means nothing for keyed tables
+    rows = df.repartition(key).sortWithinPartitions(key)
+    rows = rows.selectExpr(key, "0 AS part", "n_rows", "state")
+    return df.sparkSession.createDataFrame(rows.rdd.mapPartitions(fold), keyed_schema(key))
 
 
 def state_bytes_hint(*factories) -> int:

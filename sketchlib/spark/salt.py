@@ -2,16 +2,20 @@
 
 Web-page tables are host-skewed (the fixture's Zipf(1.3) hosts put
 ~25-35% of rows on the top host). AQE's skew-join splitting does not
-help ``applyInPandas``/``mapInArrow`` groups (SURVEY.md §4.2), so
-builds that key by a skewed column must salt explicitly:
+split the partitions of a keyed exchange feeding ``mapInArrow`` or an
+RDD fold (SURVEY.md §4.2), so builds that key by a skewed column must
+salt explicitly:
 
 * ``salted_repartition`` — spread rows uniformly by a row-level hash
   (url), regardless of the skewed column. Correct whenever the sketch
   is global (cuckoo/HLL/CMS/... merges don't care which partition saw
   which row).
-* ``salt_grouped`` — for per-key grouped builds (one sketch per host):
-  hot keys split into ``k`` salted subgroups, each builds a partial
-  sketch, a second associative merge per key collapses them.
+* ``salt_grouped`` — for per-key grouped builds (one sketch per host,
+  sketchlib.spark.grouped): hot keys split into ``k`` salted
+  subgroups, each folded into a partial sketch from streamed Arrow
+  batches, then a second associative merge per key streams the
+  partial blobs. Neither stage uses ``applyInPandas``, which would
+  load a whole group into one pandas frame.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ def salted_repartition(df, num_partitions: int, row_key: str = "url"):
 def salt_grouped(df, group_key: str, salt_buckets: int, row_key: str = "url"):
     """Add a bounded salt column for grouped builds on a skewed key.
 
-    groupBy(group_key, _salt) bounds any single group's rows to
+    Keying by (group_key, _salt) bounds any single group's rows to
     ~rows(key)/salt_buckets; merge partial sketches per key afterwards.
     """
     return df.withColumn(

@@ -8,7 +8,7 @@ per-task memory constant at any scale:
   partition expression of Spark's own ``HashPartitioning`` (murmur3),
   so ``repartition(num_shards, key)`` lands shard i in partition i —
   one task per shard. Each shard builds ONE filter of
-  capacity/num_shards (mapInArrow fold); the result table
+  capacity/num_shards (``build.fold_keyed``); the result table
   (build.SHARD_SCHEMA state rows) is the filter.
 * probe: zero-shuffle broadcast lookup while total state fits the
   broadcast budget (blobs broadcast once per executor, probes answered
@@ -24,17 +24,15 @@ for combining incremental builds.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import replace
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
 from ..serde import loads
-from .build import ROW_FORMAT, SHARD_SCHEMA, state_row
-from .merge import fold_states
+from .build import ROW_FORMAT, SHARD_SCHEMA, fold_keyed, state_row
+from .merge import merge_keyed
 from .udfs import _sketch_from
 
 
@@ -59,7 +57,7 @@ def _shard_col(key_col: str, num_shards: int):
 def _shard_exchange(df: DataFrame, key_col: str, num_shards: int) -> DataFrame:
     """(key, shard_id) rows after one shuffle through Spark's hash
     partitioner: partition i holds exactly the rows of shard i (for
-    the one exception see build_sharded's fold)."""
+    the one exception see build.fold_keyed)."""
     return (
         df.select(F.col(key_col).alias("key"))
         .withColumn("shard_id", _shard_col("key", num_shards))
@@ -103,7 +101,7 @@ def build_sharded(
     shard (see module docstring).
 
     ``factory``: optional zero-arg callable building the per-shard
-    sketch (any membership sketch with update/lookup_batch-or-contains);
+    sketch (any membership sketch with update/contains);
     default builds a CuckooFilter with capacity/num_shards geometry —
     total state across shards stays ~capacity × 2 bytes regardless of
     shard count, the property that makes this the 10^12-key path.
@@ -125,41 +123,8 @@ def build_sharded(
             shard_fingerprint("build_sharded", key_col, num_shards, factory),
         )
 
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from . import taskfs
-
-        # {shard_id: [sketch, rows]}, sketch None when already published.
-        # Ids come from the rows, not TaskContext (a downstream union
-        # renumbers partitions). A task holds one shard unless Spark
-        # dropped the exchange — input already hash-partitioned by the
-        # key into num_shards partitions — and AQE then coalesced small
-        # partitions; each shard still gets its own sketch.
-        shards: dict[int, list] = {}
-        for rb in batches:
-            sids = rb.column("shard_id").to_numpy()
-            present = np.unique(sids).tolist()
-            for sid in present:
-                acc = shards.get(sid)
-                if acc is None:
-                    done = taskfs.published(checkpoint_dir, f"shard-{sid:06d}")
-                    acc = shards[sid] = [None if done else factory(), 0]
-                if acc[0] is None:
-                    continue
-                keys = rb.column("key")
-                if len(present) > 1:
-                    keys = keys.filter(pa.array(sids == sid))
-                # factory protocol: cuckoo-style insert_batch, else the
-                # MergeableSketch update (Bloom/HLL/... shard the same way)
-                (getattr(acc[0], "insert_batch", None) or acc[0].update)(keys)
-                acc[1] += len(keys)
-        for sid, (f, n) in shards.items():
-            yield from taskfs.checkpointed(
-                checkpoint_dir, f"shard-{sid:06d}", lambda: [state_row(f, n, shard_id=sid)]
-            )
-
-    return _shard_exchange(df, key_col, num_shards).mapInArrow(fold, SHARD_SCHEMA)
+    keyed = _shard_exchange(df, key_col, num_shards)
+    return fold_keyed(keyed, "shard_id", factory, checkpoint_dir)
 
 
 def _has_state(state, op: str) -> bool:
@@ -218,21 +183,9 @@ def delete_sharded(
 
 def merge_sharded(shard_df: DataFrame) -> DataFrame:
     """ONE row per shard from a union of same-geometry shard tables
-    (incremental builds, streaming micro-batches): per shard_id, the
-    duplicate filter states merge associatively and the row counts add.
-    Rows are hash-partitioned by shard_id and streamed through
-    ``merge.fold_states`` — per-task memory is one running state per
-    shard in the task plus ONE incoming blob, never a materialized
-    group."""
-
-    def fold(rows):
-        for sid, (f, _, n) in fold_states(rows).items():
-            yield tuple(state_row(f, n, shard_id=sid).to_pylist()[0].values())
-
-    rows = shard_df.repartition("shard_id").select(
-        "shard_id", F.col("shard_id").alias("part"), "n_rows", "state"
-    )
-    return shard_df.sparkSession.createDataFrame(rows.rdd.mapPartitions(fold), SHARD_SCHEMA)
+    (incremental builds, streaming micro-batches): ``merge.merge_keyed``
+    on shard_id."""
+    return merge_keyed(shard_df, "shard_id")
 
 
 class ShardedProbeIndex:
@@ -338,8 +291,7 @@ def probe_sharded(
                         f = _sketch_from(bid, bc, int(sid))
                         if f is None:
                             continue  # empty shard: member stays False
-                        fn = getattr(f, "lookup_batch", None) or f.contains
-                        member[idx] = np.asarray(fn(pdf[key_col].iloc[idx]), bool)
+                        member[idx] = np.asarray(f.contains(pdf[key_col].iloc[idx]), bool)
                 out = pdf.copy()
                 out["member"] = member
                 yield out
@@ -354,8 +306,7 @@ def probe_sharded(
             out["member"] = False  # empty shard: key was never inserted
             return out
         f = loads(state_pdf["state"].iloc[0])
-        fn = getattr(f, "lookup_batch", None) or f.contains
-        out["member"] = np.asarray(fn(probe_pdf[key_col]), bool)
+        out["member"] = np.asarray(f.contains(probe_pdf[key_col]), bool)
         return out
 
     return (

@@ -40,7 +40,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..serde import loads
-from .build import column_update, fold_partitions
+from .build import column_update, fold_partitions, split_by_key
 from .merge import (
     _FOLD_COLS,
     _direct_collect,
@@ -154,13 +154,8 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
 
     def update(sks: dict, rb: pa.RecordBatch) -> None:
         web({k: sks[k] for k in fixed}, rb)
-        sids = rb.column(2).to_numpy()
-        order = np.argsort(sids, kind="stable")
-        bounds = np.searchsorted(sids[order], np.arange(num_shards + 1))
-        urls = rb.column(0).take(pa.array(order))
-        for sid in np.flatnonzero(np.diff(bounds)):
-            lo, hi = bounds[sid], bounds[sid + 1]
-            sks[names[sid]].insert_batch(urls.slice(lo, hi - lo))
+        for sid, urls in split_by_key(rb.column(2), rb.column(0)):
+            sks[names[sid]].update(urls)
 
     # selectExpr, not pyspark.sql.functions: the first F.* call on the
     # driver's main thread makes PySpark capture a call site, which

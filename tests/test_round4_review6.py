@@ -1,7 +1,7 @@
 """Round-4 sixth-pass regressions (review of round-3-era modules:
 similarity, grouped, udfs, sampling): NaN-safe cosine, LSH parameter
 validation, bounded heavy-hitter candidate memory + any-type keys,
-salt row-key projection, sample helper-column collision."""
+sample helper-column collision."""
 
 from __future__ import annotations
 
@@ -119,41 +119,7 @@ def test_cms_heavy_hitters_candidate_dict_bounded(spark):
     assert hh[0][1] >= 400 and hh[1][1] >= 300  # CMS never undercounts
 
 
-# ------------------------------------------------ salt projection + sample
-
-
-def test_grouped_salt_row_key_dropped_before_shuffle(spark):
-    """The row-key column feeds only the salt hash; it must not ride
-    the stage-1 groupBy shuffle (docstring: 'dropped after')."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.grouped import build_grouped_sketches
-    from sketchlib.spark import salt as salt_mod
-
-    captured = {}
-    real = salt_mod.salt_grouped
-
-    def spy(df, group_col, buckets, row_key=None):
-        out = real(df, group_col, buckets, row_key=row_key)
-        captured["cols_after_salt"] = out.columns
-        return out
-
-    import sketchlib.spark.grouped as grouped_mod
-
-    orig = grouped_mod.salt_grouped
-    grouped_mod.salt_grouped = spy
-    try:
-        df = spark.createDataFrame(
-            [("h1", f"tok{i}", f"url{i}") for i in range(100)],
-            "host string, tok string, url string",
-        )
-        grouped = build_grouped_sketches(
-            df, "host", "tok", lambda: HyperLogLog(10), salt_buckets=2, row_key="url"
-        )
-        rows = grouped.collect()
-        assert len(rows) == 1 and rows[0].n_rows == 100
-    finally:
-        grouped_mod.salt_grouped = orig
-    assert "_salt_row_key" in captured["cols_after_salt"]  # salt saw it
+# ------------------------------------------------------- sample helper
 
 
 def test_stratified_sample_preserves_user_rk_column(spark):

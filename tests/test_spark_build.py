@@ -1,5 +1,5 @@
 """Spark-layer tests: per-partition build + tree merge == single build,
-salting, checkpoint/resume lineage, sharded build/probe, broadcast UDFs,
+checkpoint/resume lineage, sharded build/probe, broadcast UDFs,
 and the end-to-end text invariant through Arrow (FIXTURES.md §4).
 """
 
@@ -17,11 +17,9 @@ from sketchlib.spark import (
     build_sketches,
     cms_estimate_udf,
     membership_udf,
-    salted_repartition,
     tree_merge,
     tree_merge_df,
 )
-from sketchlib.spark.salt import partition_sizes, salt_grouped
 
 
 def _cfg(capacity=8192):
@@ -272,104 +270,6 @@ def test_cms_estimate_udf_never_under(spark, docs_df):
     exact = langs.groupBy("key").agg(F.count("*").alias("c")).withColumn("e", est("key"))
     bad = exact.where(F.col("e") < F.col("c")).count()
     assert bad == 0
-
-
-# ------------------------------------------------------------------- salting
-
-
-def test_salted_repartition_uniform(spark, docs_df):
-    # Zipf hosts are skewed; salting by url hash must even partitions out
-    host = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    by_host = docs_df.select(F.col("url"), host.alias("host")).repartition(8, "host")
-    sizes_skewed = partition_sizes(by_host)
-    salted = salted_repartition(docs_df.select("url"), 8, row_key="url")
-    sizes_salted = partition_sizes(salted)
-    n = 1000
-    assert max(sizes_salted) < n / 8 * 1.5
-    assert max(sizes_salted) <= max(sizes_skewed)
-
-
-def test_salt_grouped_bounds_groups(spark, docs_df):
-    host = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    d = docs_df.select("url", host.alias("host"))
-    top_sz = d.groupBy("host").count().agg(F.max("count")).first()[0]
-    salted = salt_grouped(d, "host", salt_buckets=8, row_key="url")
-    top_salted = salted.groupBy("host", "_salt").count().agg(F.max("count")).first()[0]
-    assert top_salted <= top_sz / 8 * 2.5
-
-
-# -------------------------------------------------------------- grouped/salted
-
-
-def test_grouped_salted_equals_unsalted(spark, docs_df):
-    """Salted two-stage grouped build == per-group local build (exact
-    HLL register states), on the Zipf-skewed host column."""
-    from sketchlib.serde import loads
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.grouped import build_grouped_sketches
-
-    host = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    d = docs_df.select(host.alias("host"), "url")
-    rows = build_grouped_sketches(
-        d, "host", "url", lambda: HyperLogLog(12), salt_buckets=4
-    ).collect()
-    got = {r.group_key: loads(r.state).to_bytes() for r in rows}
-    # local oracle per host
-    local = {}
-    for r in d.collect():
-        local.setdefault(r.host, []).append(r.url)
-    assert set(got) == set(local)
-    for h, urls in local.items():
-        sk = HyperLogLog(12)
-        sk.update(urls)
-        assert got[h] == sk.to_bytes(), h
-
-
-def test_grouped_estimates_within_bound(spark, docs_df):
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.grouped import build_grouped_sketches, grouped_estimates
-
-    host = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    d = docs_df.select(host.alias("host"), "url")
-    est = grouped_estimates(
-        build_grouped_sketches(d, "host", "url", lambda: HyperLogLog(14))
-    ).collect()
-    exact = {
-        r.host: r.c
-        for r in d.groupBy("host").agg(F.countDistinct("url").alias("c")).collect()
-    }
-    for r in est:
-        assert abs(r.estimate - exact[r.group_key]) / max(exact[r.group_key], 1) <= 0.1
-
-
-def test_grouped_build_distinct_row_key(spark, docs_df):
-    """row_key variant: when key_col values repeat heavily inside a
-    group, salting on the value sends every copy of a hot value to one
-    salt bucket; a row-unique row_key spreads them. The row_key column
-    is projected through for the salt hash only — results must be
-    byte-identical to the value-salted build (associative merges) and
-    the helper column must not leak into the output schema."""
-    from sketchlib.serde import loads
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.grouped import build_grouped_sketches
-
-    # lang takes a handful of distinct values per group (maximally
-    # repeated key_col); url is row-unique
-    d = docs_df.select(
-        (F.xxhash64("url") % 2).cast("string").alias("grp"),
-        F.col("lang").alias("val"),
-        "url",
-    )
-    by_val = build_grouped_sketches(
-        d, "grp", "val", lambda: HyperLogLog(12), salt_buckets=4
-    )
-    by_url = build_grouped_sketches(
-        d, "grp", "val", lambda: HyperLogLog(12), salt_buckets=4, row_key="url"
-    )
-    got_val = {r.group_key: (r.n_rows, loads(r.state).to_bytes()) for r in by_val.collect()}
-    got_url = {r.group_key: (r.n_rows, loads(r.state).to_bytes()) for r in by_url.collect()}
-    assert got_val == got_url
-    assert set(by_url.columns) == {"group_key", "n_rows", "state"}
 
 
 # ------------------------------------------------------------ checkpoint/resume

@@ -441,143 +441,3 @@ def test_frame_sample_plan(spark):
     assert by_doc[2] == [0]
     # zero-frame media yield NO sampled frames (not a spurious frame 0)
     assert 3 not in by_doc
-
-
-# ----------------------------------------------------------------- streaming
-
-
-def test_stateful_hll_by_key_stream(spark, docs_parquet, tmp_path):
-    """applyInPandasWithState: per-key running HLL over a 2-micro-batch
-    stream; state persists across batches (final estimate ~= per-lang
-    distinct urls)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.streaming.stateful import hll_distinct_by_key
-
-    src = tmp_path / "in2"
-    src.mkdir()
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    full = spark.read.parquet(docs_parquet)
-    full.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0).write.parquet(str(src / "a"))
-    full.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 1).write.parquet(str(src / "b"))
-    stream = (
-        spark.readStream.schema(full.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-        .select("lang", "url")
-    )
-    out = hll_distinct_by_key(
-        stream.groupBy("lang"), lambda: HyperLogLog(12), value_col="url"
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("hll_by_lang")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "SELECT key, max(n_rows) AS n, max(estimate) AS est FROM hll_by_lang GROUP BY key"
-    ).collect()
-    got = {r.key: (r.n, r.est) for r in rows}
-    exact = {
-        r.lang: r.c
-        for r in full.groupBy("lang").agg(F.countDistinct("url").alias("c")).collect()
-    }
-    assert set(got) == set(exact)
-    for lang, (n, est) in got.items():
-        # state crossed micro-batches: final n == all rows of that lang
-        assert n == full.where(F.col("lang") == lang).count()
-        assert abs(est - exact[lang]) / max(exact[lang], 1) <= 0.15
-
-
-def test_windowed_distinct_watermark_drops_late(spark, tmp_path):
-    """Watermarked windowed distinct over a real 3-batch stream. The
-    hard guarantee under append mode: a window is emitted AT MOST ONCE
-    after the watermark passes it, and later batches cannot reopen it —
-    a very-late row (batch 3, window already finalized+evicted) never
-    produces a second hour-00 output row. (Row-level late filtering
-    before eviction is best-effort in Spark and not asserted.)"""
-    import glob
-    import shutil
-
-    from sketchlib.streaming.incremental import windowed_distinct_stream
-
-    src = tmp_path / "wm_in"
-    src.mkdir()
-
-    def write_batch(name, rows):
-        df = spark.createDataFrame(rows, "ts string, user_id string").select(
-            F.col("ts").cast("timestamp").alias("ts"), "user_id"
-        )
-        tmp = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        shutil.move(part, src / f"{name}.parquet")
-
-    # batch 1: on-time rows in hour 00 and a row at hour 06 that will
-    # advance the watermark (6h - 2h watermark = 04:00) past hour 00
-    write_batch(
-        "b1",
-        [
-            ("2026-01-01 00:10:00", "a"),
-            ("2026-01-01 00:20:00", "b"),
-            ("2026-01-01 06:00:00", "z"),
-        ],
-    )
-    # batch 2: a LATE row for hour 00 (behind the 04:00 watermark)
-    write_batch(
-        "b2",
-        [("2026-01-01 00:30:00", "late-user"), ("2026-01-01 06:30:00", "z2")],
-    )
-    # batch 3: a VERY late row for hour 00 — by now the hour-00 window
-    # is finalized (emitted + state evicted)
-    write_batch("b3", [("2026-01-01 00:40:00", "very-late"), ("2026-01-01 07:30:00", "z3")])
-    # the file source orders same-batch candidates by mtime: make the
-    # intended batch order explicit
-    import os as _os
-    import time as _time
-
-    now = _time.time()
-    _os.utime(src / "b1.parquet", (now - 240, now - 240))
-    _os.utime(src / "b2.parquet", (now - 120, now - 120))
-    _os.utime(src / "b3.parquet", (now, now))
-    stream = (
-        spark.readStream.schema("ts timestamp, user_id string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = windowed_distinct_stream(stream, "ts", "user_id", window="1 hour", watermark="2 hours")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_distinct")
-        .option("checkpointLocation", str(tmp_path / "wm_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT window.start AS s, approx_distinct FROM wm_distinct").collect()
-    hour00 = [r.approx_distinct for r in rows if str(r.s) == "2026-01-01 00:00:00"]
-    # exactly one finalized emission for hour 00, and the very-late
-    # batch-3 row is NOT in it (on-time a,b (+ possibly the batch-2
-    # pre-eviction row) but never 4)
-    assert len(hour00) == 1
-    assert 2 <= hour00[0] <= 3
-
-
-def test_windowed_distinct_stream_plan(spark):
-    # plan-level check: the streaming agg builds without a real stream
-    from sketchlib.streaming.incremental import windowed_distinct_stream
-
-    df = spark.createDataFrame(
-        [("2026-01-01 00:00:00", "u1")], "ts string, user_id string"
-    ).select(F.col("ts").cast("timestamp").alias("ts"), "user_id")
-    out = windowed_distinct_stream(df, "ts", "user_id")
-    assert "approx_distinct" in out.columns

@@ -1,12 +1,16 @@
-"""Streaming sinks: IncrementalSketchBuilder and ShardedStreamBuilder on
-the one epoch store (sketchlib.streaming.epochs) — folding, replay
-idempotence, lineage-scoped re-attach, crash recovery, pruning."""
+"""Streaming: the IncrementalSketchBuilder and ShardedStreamBuilder sinks
+on the one epoch store (sketchlib.streaming.epochs) — folding, replay
+idempotence, lineage-scoped re-attach, crash recovery, pruning — plus
+the stateful per-key HLL (applyInPandasWithState) and the watermarked
+windowed distinct."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sketchlib import CuckooConfig
@@ -257,3 +261,227 @@ def test_sharded_stream_reattach_fresh_checkpoint_folds_new_stream(spark, tmp_pa
     shards = b.current_shards(spark)
     for keys in (first, second):
         assert probe_sharded(keys, "key", shards, num_shards=4).where("member").count() == 1000
+
+
+# ---------------------------------------------------- stateful per-key HLL
+
+
+class _FakeState:
+    def __init__(self, stored=None, timed_out=False):
+        self._stored = stored
+        self.hasTimedOut = timed_out
+        self.removed = False
+        self.updated = None
+        self.timeout_set = None
+
+    @property
+    def exists(self):
+        return self._stored is not None
+
+    @property
+    def get(self):
+        return self._stored
+
+    def update(self, v):
+        self.updated = v
+        self._stored = v
+
+    def remove(self):
+        self.removed = True
+        self._stored = None
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_set = ms
+
+
+def test_stateful_value_col_required(spark):
+    from sketchlib.sketches import HyperLogLog
+    from sketchlib.streaming.stateful import hll_distinct_by_key
+
+    df = spark.createDataFrame([("a", "x")], "k string, v string")
+    with pytest.raises(ValueError, match="value_col"):
+        hll_distinct_by_key(df.groupBy("k"), lambda: HyperLogLog(10))
+
+
+def test_stateful_timeout_validation(spark):
+    from sketchlib.sketches import HyperLogLog
+    from sketchlib.streaming.stateful import hll_distinct_by_key
+
+    df = spark.createDataFrame([("a", "x")], "k string, v string")
+    g = df.groupBy("k")
+    with pytest.raises(ValueError, match="timeout_duration_ms"):
+        hll_distinct_by_key(g, lambda: HyperLogLog(10), timeout="ProcessingTimeTimeout", value_col="v")
+    with pytest.raises(NotImplementedError, match="EventTimeTimeout"):
+        hll_distinct_by_key(g, lambda: HyperLogLog(10), timeout="EventTimeTimeout", value_col="v")
+    with pytest.raises(ValueError, match="unknown timeout"):
+        hll_distinct_by_key(g, lambda: HyperLogLog(10), timeout="Bogus", value_col="v")
+
+
+def test_stateful_fold_timed_out_evicts_not_resurrects():
+    """A timed-out invocation must emit the final snapshot and REMOVE
+    the state — update() would resurrect it and re-emit stale rows on
+    every later timeout."""
+    from sketchlib.sketches import HyperLogLog
+    from sketchlib.streaming.stateful import _make_fold
+
+    sk = HyperLogLog(10)
+    sk.update(["a", "b", "c"])
+    st = _FakeState(stored=(sk.to_bytes(), 3), timed_out=True)
+    fold = _make_fold(lambda: HyperLogLog(10), "v", "ProcessingTimeTimeout", 60_000)
+    out = list(fold(("k1",), iter([]), st))
+    assert len(out) == 1 and out[0]["n_rows"].iloc[0] == 3
+    assert st.removed and st.updated is None
+    assert st.timeout_set is None  # no re-arm after eviction
+
+
+def test_stateful_fold_arms_timeout_every_batch():
+    from sketchlib.sketches import HyperLogLog
+    from sketchlib.streaming.stateful import _make_fold
+
+    st = _FakeState()
+    fold = _make_fold(lambda: HyperLogLog(10), "v", "ProcessingTimeTimeout", 60_000)
+    pdf = pd.DataFrame({"k": ["k1"] * 4, "v": ["a", "b", "a", "c"]})
+    out = list(fold(("k1",), iter([pdf]), st))
+    assert out[0]["n_rows"].iloc[0] == 4
+    assert st.timeout_set == 60_000
+    assert st.updated is not None
+
+
+def test_stateful_hll_by_key_stream(spark, docs_parquet, tmp_path):
+    """applyInPandasWithState: per-key running HLL over a 2-micro-batch
+    stream; state persists across batches (final estimate ~= per-lang
+    distinct urls)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sketchlib.sketches import HyperLogLog
+    from sketchlib.streaming.stateful import hll_distinct_by_key
+
+    src = tmp_path / "in2"
+    src.mkdir()
+    # two files -> two micro-batches with maxFilesPerTrigger=1
+    full = spark.read.parquet(docs_parquet)
+    full.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0).write.parquet(str(src / "a"))
+    full.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 1).write.parquet(str(src / "b"))
+    stream = (
+        spark.readStream.schema(full.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+        .select("lang", "url")
+    )
+    out = hll_distinct_by_key(
+        stream.groupBy("lang"), lambda: HyperLogLog(12), value_col="url"
+    )
+    q = (
+        out.writeStream.outputMode("update")
+        .format("memory")
+        .queryName("hll_by_lang")
+        .option("checkpointLocation", str(tmp_path / "ck2"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    rows = spark.sql(
+        "SELECT key, max(n_rows) AS n, max(estimate) AS est FROM hll_by_lang GROUP BY key"
+    ).collect()
+    got = {r.key: (r.n, r.est) for r in rows}
+    exact = {
+        r.lang: r.c
+        for r in full.groupBy("lang").agg(F.countDistinct("url").alias("c")).collect()
+    }
+    assert set(got) == set(exact)
+    for lang, (n, est) in got.items():
+        # state crossed micro-batches: final n == all rows of that lang
+        assert n == full.where(F.col("lang") == lang).count()
+        assert abs(est - exact[lang]) / max(exact[lang], 1) <= 0.15
+
+
+# ------------------------------------------------------ windowed distinct
+
+
+def test_windowed_distinct_watermark_drops_late(spark, tmp_path):
+    """Watermarked windowed distinct over a real 3-batch stream. The
+    hard guarantee under append mode: a window is emitted AT MOST ONCE
+    after the watermark passes it, and later batches cannot reopen it —
+    a very-late row (batch 3, window already finalized+evicted) never
+    produces a second hour-00 output row. (Row-level late filtering
+    before eviction is best-effort in Spark and not asserted.)"""
+    import glob
+    import shutil
+
+    from sketchlib.streaming.incremental import windowed_distinct_stream
+
+    src = tmp_path / "wm_in"
+    src.mkdir()
+
+    def write_batch(name, rows):
+        df = spark.createDataFrame(rows, "ts string, user_id string").select(
+            F.col("ts").cast("timestamp").alias("ts"), "user_id"
+        )
+        tmp = str(tmp_path / f"stage_{name}")
+        df.coalesce(1).write.parquet(tmp)
+        part = glob.glob(f"{tmp}/part-*.parquet")[0]
+        shutil.move(part, src / f"{name}.parquet")
+
+    # batch 1: on-time rows in hour 00 and a row at hour 06 that will
+    # advance the watermark (6h - 2h watermark = 04:00) past hour 00
+    write_batch(
+        "b1",
+        [
+            ("2026-01-01 00:10:00", "a"),
+            ("2026-01-01 00:20:00", "b"),
+            ("2026-01-01 06:00:00", "z"),
+        ],
+    )
+    # batch 2: a LATE row for hour 00 (behind the 04:00 watermark)
+    write_batch(
+        "b2",
+        [("2026-01-01 00:30:00", "late-user"), ("2026-01-01 06:30:00", "z2")],
+    )
+    # batch 3: a VERY late row for hour 00 — by now the hour-00 window
+    # is finalized (emitted + state evicted)
+    write_batch("b3", [("2026-01-01 00:40:00", "very-late"), ("2026-01-01 07:30:00", "z3")])
+    # the file source orders same-batch candidates by mtime: make the
+    # intended batch order explicit
+    import os as _os
+    import time as _time
+
+    now = _time.time()
+    _os.utime(src / "b1.parquet", (now - 240, now - 240))
+    _os.utime(src / "b2.parquet", (now - 120, now - 120))
+    _os.utime(src / "b3.parquet", (now, now))
+    stream = (
+        spark.readStream.schema("ts timestamp, user_id string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    out = windowed_distinct_stream(stream, "ts", "user_id", window="1 hour", watermark="2 hours")
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("wm_distinct")
+        .option("checkpointLocation", str(tmp_path / "wm_ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    rows = spark.sql("SELECT window.start AS s, approx_distinct FROM wm_distinct").collect()
+    hour00 = [r.approx_distinct for r in rows if str(r.s) == "2026-01-01 00:00:00"]
+    # exactly one finalized emission for hour 00, and the very-late
+    # batch-3 row is NOT in it (on-time a,b (+ possibly the batch-2
+    # pre-eviction row) but never 4)
+    assert len(hour00) == 1
+    assert 2 <= hour00[0] <= 3
+
+
+def test_windowed_distinct_stream_plan(spark):
+    # plan-level check: the streaming agg builds without a real stream
+    from sketchlib.streaming.incremental import windowed_distinct_stream
+
+    df = spark.createDataFrame(
+        [("2026-01-01 00:00:00", "u1")], "ts string, user_id string"
+    ).select(F.col("ts").cast("timestamp").alias("ts"), "user_id")
+    out = windowed_distinct_stream(df, "ts", "user_id")
+    assert "approx_distinct" in out.columns

@@ -156,6 +156,10 @@ _CHUNK_KERNELS = {
     "xx": (_xxvariant64_chunk, 8),
 }
 
+# a chunk of rows wider than 64 bytes and fewer than this many rows is
+# hashed row by row with the scalar reference instead of a kernel
+_SCALAR_ROWS = 8
+
 
 def hash64_batch(values, strategy: str, max_cells: int = 1 << 26) -> np.ndarray:
     """Hash a column of str/bytes → uint64 vector, in input order.
@@ -163,7 +167,9 @@ def hash64_batch(values, strategy: str, max_cells: int = 1 << 26) -> np.ndarray:
     Rows are length-sorted with an Arrow-side ``take`` (one C++ copy) so
     each chunk's bytes are a contiguous data-buffer slice — no Python
     gathers — and the per-byte/per-word active-row set inside a kernel
-    is a prefix slice of the chunk matrix.
+    is a prefix slice of the chunk matrix. A chunk of fewer than
+    ``_SCALAR_ROWS`` rows wider than 64 bytes is hashed by the scalar
+    reference instead.
     """
     kernel, pad = _CHUNK_KERNELS[strategy]
     arr = as_binary_array(values)
@@ -199,6 +205,15 @@ def hash64_batch(values, strategy: str, max_cells: int = 1 << 26) -> np.ndarray:
             # split would degenerate to row-at-a-time chunks on ties.
             cut = int(np.searchsorted(-lens, -((width + 1) // 2), side="right"))
             rows = min(rows, max(cut - pos, 1))
+            if rows < _SCALAR_ROWS:
+                # a few long rows: a kernel loops over every 8-byte
+                # word (xx) or byte (fnv, crc32c) with several numpy
+                # calls each, so a lone 10 kB value costs 27 ms in the
+                # xx kernel and 2.9 ms in the scalar reference
+                for i in range(pos, pos + rows):
+                    out[order[i]] = scalar.hash64(data[starts[i] : starts[i + 1]].tobytes(), strategy)
+                pos += rows
+                continue
         chunk_lens = lens[pos : pos + rows]
         flat = data[starts[pos] : starts[pos + rows]]
         mat, _ = padded_matrix(chunk_lens, flat, pad_to=pad)

@@ -93,13 +93,14 @@ def state_row(sk, n_rows: int, **key) -> pa.RecordBatch:
 def fold_partitions(
     df,
     factories: dict[str, Callable[[], object]],
-    update: Callable[[dict, pa.RecordBatch], None],
+    step: Callable[[dict, Iterator[pa.RecordBatch]], None],
     checkpoint_dir: str | None = None,
 ):
     """``df`` → one SKETCH_SCHEMA row per (partition, factory name).
 
-    Each task builds one sketch per factory and hands every Arrow batch
-    of its partition to ``update(sketches, batch)``. With
+    Each task builds one sketch per factory and hands ``step(sketches,
+    batches)`` its partition's Arrow batch iterator, so a step can carry
+    work across batches and finish it when the partition ends. With
     ``checkpoint_dir`` each task atomically publishes its rows as
     ``part-{pid}.arrow`` and a rerun re-emits published rows instead of
     folding (sketchlib/spark/taskfs.py)."""
@@ -114,9 +115,14 @@ def fold_partitions(
         def build() -> list[pa.RecordBatch]:
             sks = {name: fac() for name, fac in factories.items()}
             n = 0
-            for rb in batches:
-                update(sks, rb)
-                n += rb.num_rows
+
+            def counted():
+                nonlocal n
+                for rb in batches:
+                    n += rb.num_rows
+                    yield rb
+
+            step(sks, counted())
             return [state_row(sk, n, sketch=name, part_id=pid) for name, sk in sks.items()]
 
         yield from taskfs.checkpointed(checkpoint_dir, f"part-{pid:05d}", build)
@@ -190,17 +196,18 @@ def fold_keyed(df, key: str, factory: Callable[[], object], checkpoint_dir: str 
     return df.mapInArrow(fold, keyed_schema(key))
 
 
-def column_update(numeric: bool) -> Callable[[dict, pa.RecordBatch], None]:
-    """Fold step for single-column builds: every sketch takes the
+def column_update(numeric: bool) -> Callable[[dict, Iterator[pa.RecordBatch]], None]:
+    """Fold step for single-column builds: every sketch takes each
     batch's first column, as float64 when ``numeric`` (KLL/t-digest)."""
 
-    def update(sks: dict, rb: pa.RecordBatch) -> None:
-        col = rb.column(0)
-        vals = col.to_numpy(zero_copy_only=False).astype(np.float64) if numeric else col
-        for sk in sks.values():
-            sk.update(vals)
+    def step(sks: dict, batches: Iterator[pa.RecordBatch]) -> None:
+        for rb in batches:
+            col = rb.column(0)
+            vals = col.to_numpy(zero_copy_only=False).astype(np.float64) if numeric else col
+            for sk in sks.values():
+                sk.update(vals)
 
-    return update
+    return step
 
 
 def build_sketches(

@@ -28,12 +28,22 @@ built by ``shard.build_sharded`` over a url-only exchange, one task per
 shard, concurrently with the fixed-sketch pass.
 
 Per-partition work is fully vectorized: one kernel hash pass per keyed
-sketch, the Arrow C++ tokenizer for text, numpy everywhere else.
+sketch, the Arrow C++ tokenizers for text, numpy everywhere else. The
+tokens of a document are exactly its ``str.split()``: maximal runs of
+characters outside Arrow's Unicode whitespace set, which is the set of
+``str.isspace()`` (U+001C-001F and the non-ASCII spaces included).
+Each slice of documents is split at ASCII whitespace and value-counted;
+only its distinct tokens are re-split at the rest of the Unicode set,
+and a slice holding invalid UTF-8 is split by the Unicode tokenizer
+itself, so the counts are those of ``str.split()`` on valid text and of
+Arrow's Unicode tokenizer on any text. The CMS hashes the partition's
+merged vocabulary once (once per bounded flush), not once per slice.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import inspect
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -51,8 +61,10 @@ from .merge import (
 )
 
 # docs tokenized at a time: bounds the per-task token-list transient
-# (both scan tasks of a build fold at once); CMS counters are additive,
-# so the merged state does not depend on the slicing
+# (both scan tasks of a build fold at once) and, through the slice's
+# text bytes, the vocabulary a task holds before hashing it. CMS
+# counters are additive, so the merged state does not depend on the
+# slicing
 TOKEN_SLICE = 2500
 
 # most partition filters (scan partitions × shards) the single pass
@@ -63,45 +75,104 @@ TOKEN_SLICE = 2500
 SINGLE_PASS_FILTERS = 4096
 
 
-def _web_update(token_sketches, size_sketches) -> Callable[[dict, pa.RecordBatch], None]:
-    """Fold step over (url, text, ...) batches: ``size_sketches`` take
-    len(text), ``token_sketches`` whitespace tokens of text, every
-    other sketch the url column."""
+def _tokens(texts: pa.Array) -> pa.Array:
+    """The token contract: each document's ``str.split()`` — maximal
+    runs of non-whitespace, whitespace being Arrow's Unicode set
+    (``str.isspace()``) — flattened in order, nulls and empty docs
+    giving no tokens."""
+    flat = pc.list_flatten(pc.utf8_split_whitespace(texts))
+    return flat.filter(pc.not_equal(flat, ""))
+
+
+def _vocabulary(texts: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """``_tokens(texts)`` as (distinct tokens, counts), without running
+    the Unicode splitter over the text: the ASCII splitter (2-3x faster)
+    cuts at a subset of the Unicode whitespace, so re-splitting each of
+    its distinct tokens with the Unicode splitter, every piece keeping
+    its token's count, gives the same multiset. Only tokens holding
+    0x1C-0x1F or non-ASCII whitespace split again; empty pieces drop.
+    The Unicode splitter stops splitting at a document's first invalid
+    UTF-8 byte, so a slice whose vocabulary is not valid UTF-8 (iff one
+    of its documents is not) is counted from ``_tokens`` itself."""
+    vc = pc.list_flatten(pc.ascii_split_whitespace(texts)).value_counts()
+    vals = vc.field("values")
+    try:
+        vals.validate(full=True)
+    except pa.ArrowInvalid:
+        vc = _tokens(texts).value_counts()
+        return vc.field("values"), vc.field("counts").to_numpy(zero_copy_only=False)
+    pieces = pc.utf8_split_whitespace(vals)
+    reps = pc.list_value_length(pieces).to_numpy(zero_copy_only=False)
+    counts = np.repeat(vc.field("counts").to_numpy(zero_copy_only=False), reps)
+    flat = pc.list_flatten(pieces)
+    keep = pc.not_equal(flat, "")
+    return flat.filter(keep), counts[keep.to_numpy(zero_copy_only=False)]
+
+
+def _merge_vocabularies(parts: list) -> tuple[pa.Array, np.ndarray]:
+    """(tokens, counts) pairs → one pair, each distinct token once."""
+    if len(parts) == 1:
+        return parts[0]
+    t = pa.table({"v": pa.chunked_array([v for v, _ in parts]), "c": np.concatenate([c for _, c in parts])})
+    t = t.group_by("v", use_threads=False).aggregate([("c", "sum")])
+    return t.column("v").combine_chunks(), t.column("c_sum").to_numpy()
+
+
+def _web_update(token_sketches, size_sketches) -> Callable[[dict, Iterator[pa.RecordBatch]], None]:
+    """Fold step over a partition's (url, text, ...) batches:
+    ``size_sketches`` take len(text), ``token_sketches`` the ``_tokens``
+    of text, every other sketch the url column."""
     token_set = set(token_sketches)
     size_set = set(size_sketches)
 
-    def update(sks: dict, rb: pa.RecordBatch) -> None:
-        urls = rb.column(0)
-        texts = rb.column(1)
-        if size_set:
-            # page sizes: numpy from arrow offsets (no Python loop)
-            sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
-        tok = []
+    def step(sks: dict, batches: Iterator[pa.RecordBatch]) -> None:
+        # weighted token sketches (CMS) take the vocabulary with counts,
+        # the others every token
+        weighted, plain = [], []
         for name, sk in sks.items():
-            if name in size_set:
-                sk.update(sizes)
-            elif name in token_set:
-                tok.append(sk)
-            else:
-                sk.update(urls)
-        for off in range(0, len(texts) if tok else 0, TOKEN_SLICE):
-            # C++ whitespace tokenizer (same semantics as str.split()),
-            # then slice-local pre-aggregation: value_counts collapses
-            # the Zipf-distributed token stream to its (much smaller)
-            # vocabulary before any Python-side hashing — the map-side
-            # combine of this pipeline
-            flat = pc.list_flatten(pc.utf8_split_whitespace(texts.slice(off, TOKEN_SLICE)))
-            flat = flat.filter(pc.not_equal(flat, ""))
-            vc = flat.value_counts()
-            tok_vals = vc.field("values")
-            tok_counts = vc.field("counts").to_numpy(zero_copy_only=False)
-            for sk in tok:
-                try:
-                    sk.update(tok_vals, weights=tok_counts)
-                except TypeError:  # sketch without weighted updates
-                    sk.update(flat)
+            if name in token_set:
+                takes = "weights" in inspect.signature(sk.update).parameters
+                (weighted if takes else plain).append(sk)
+        # The slices' vocabularies are merged across the partition's
+        # batches and hashed into the weighted sketches once, when the
+        # partition ends; counters are additive, so the state is the
+        # per-slice one. A held vocabulary that outgrows the largest
+        # slice's text so far (which bounds a slice's token list) is
+        # hashed at once, so between slices a task holds no more.
+        pending, bound = [], 0
 
-    return update
+        def flush():
+            if pending:
+                vals, counts = _merge_vocabularies(pending)
+                for sk in weighted:
+                    sk.update(vals, weights=counts)
+                pending.clear()
+
+        for rb in batches:
+            urls = rb.column(0)
+            texts = rb.column(1)
+            if size_set:
+                # page sizes: numpy from arrow offsets (no Python loop)
+                sizes = pc.utf8_length(texts).to_numpy(zero_copy_only=False).astype(np.float64)
+            for name, sk in sks.items():
+                if name in size_set:
+                    sk.update(sizes)
+                elif name not in token_set:
+                    sk.update(urls)
+            for off in range(0, len(texts) if weighted or plain else 0, TOKEN_SLICE):
+                sl = texts.slice(off, TOKEN_SLICE)
+                if plain:
+                    flat = _tokens(sl)
+                    for sk in plain:
+                        sk.update(flat)
+                if weighted:
+                    pending.append(_vocabulary(sl))
+                    bound = max(bound, sl.nbytes)
+                    if sum(v.nbytes + c.nbytes for v, c in pending) > bound:
+                        flush()
+        flush()
+
+    return step
 
 
 def build_web_sketches(
@@ -119,8 +190,8 @@ def build_web_sketches(
     Returns a DataFrame of build.SKETCH_SCHEMA rows (one per partition
     per sketch). Merge with ``merge.merge_sketches``.
     """
-    update = _web_update(token_sketches, size_sketches)
-    return fold_partitions(docs_df.select(url_col, text_col), factories, update)
+    step = _web_update(token_sketches, size_sketches)
+    return fold_partitions(docs_df.select(url_col, text_col), factories, step)
 
 
 def build_column_sketches(
@@ -152,16 +223,20 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
     names = [_shard_name(sid) for sid in range(num_shards)]
     fixed = tuple(factories)
 
-    def update(sks: dict, rb: pa.RecordBatch) -> None:
-        web({k: sks[k] for k in fixed}, rb)
-        for sid, urls in split_by_key(rb.column(2), rb.column(0)):
-            sks[names[sid]].update(urls)
+    def step(sks: dict, batches: Iterator[pa.RecordBatch]) -> None:
+        def routed():
+            for rb in batches:
+                for sid, urls in split_by_key(rb.column(2), rb.column(0)):
+                    sks[names[sid]].update(urls)
+                yield rb
+
+        web({k: sks[k] for k in fixed}, routed())
 
     # selectExpr, not pyspark.sql.functions: the first F.* call on the
     # driver's main thread makes PySpark capture a call site, which
     # imports IPython (~26 MB of driver RSS)
     frame = docs_df.selectExpr("url", "text", f"{shard_expr('url', num_shards)} AS shard_id")
-    return fold_partitions(frame, {**factories, **{n: shard_fac for n in names}}, update)
+    return fold_partitions(frame, {**factories, **{n: shard_fac for n in names}}, step)
 
 
 def _merge_single_pass(frame, fixed_names) -> dict:

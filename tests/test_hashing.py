@@ -118,6 +118,23 @@ def test_batch_equals_scalar_1024_stress(strategy):
 
 
 @pytest.mark.parametrize("strategy", STRATEGIES)
+@pytest.mark.parametrize("size", [10_000, 20_000])
+def test_batch_equals_scalar_one_long_row(strategy, size):
+    """A lone long value (routed to the scalar reference) and the same
+    value through its chunk kernel both give the scalar hash."""
+    from sketchlib.hashing.bytesview import padded_matrix
+
+    rng = np.random.Generator(np.random.PCG64(size))
+    item = bytes(rng.integers(0, 256, size, dtype=np.uint8))
+    want = scalar.hash64(item, strategy)
+    assert [int(x) for x in kernels.hash64_batch([item], strategy)] == [want]
+    kernel, pad = kernels._CHUNK_KERNELS[strategy]
+    lens = np.array([size])
+    mat, _ = padded_matrix(lens, np.frombuffer(item, np.uint8), pad_to=pad)
+    assert int(kernel(mat, lens)[0]) == want
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_batch_chunking_preserves_order(strategy):
     # force multiple internal chunks via a tiny max_cells
     items = [b"x" * (i % 50 + 1) for i in range(500)]
@@ -231,14 +248,15 @@ def test_batch_geometric_chunking_long_outliers(strategy):
     width/2 chunk split must keep batch == scalar while the outlier
     gets its own narrow chunk (web text routinely has 10 kB
     minified-JS 'tokens'; pre-split, the outlier dragged every short
-    row into its padded width — 20x the cells)."""
+    row into its padded width — 20x the cells). Chunks of a few long
+    rows go to the scalar reference."""
     rng = np.random.Generator(np.random.PCG64(11))
     items = [
         bytes(rng.integers(0, 256, int(rng.integers(1, 12)), dtype=np.uint8))
         for _ in range(2000)
     ]
     # outliers at several length scales, including ties at a power of 2
-    for ln in (10_000, 5_000, 4_096, 4_096, 300, 65, 64):
+    for ln in (20_000, 10_000, 5_000, 4_096, 4_096, 300, 65, 64):
         items.insert(int(rng.integers(0, len(items))), bytes(rng.integers(0, 256, ln, dtype=np.uint8)))
     got = kernels.hash64_batch(items, strategy)
     want = [scalar.hash64(v, strategy) for v in items]

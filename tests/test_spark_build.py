@@ -119,10 +119,13 @@ def test_web_sketch_composite_build(spark, docs_df):
 
 
 def test_web_sketches_token_slices_keep_cms_exact(spark, docs_df, monkeypatch):
-    """Tokenizing a batch in slices leaves the CMS byte-identical to one
-    whole-batch tokenization (counters are additive)."""
+    """Tokenizing in slices, and in Arrow batches of any size, leaves
+    the CMS byte-identical to one whole-batch tokenization
+    (counters are additive)."""
     from sketchlib.spark import webbuild
     from sketchlib.spark.merge import merge_sketches
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
     def cms_bytes():
         sks = webbuild.build_web_sketches(
@@ -131,8 +134,15 @@ def test_web_sketches_token_slices_keep_cms_exact(spark, docs_df, monkeypatch):
         return merge_sketches(sks)["cms"].to_bytes()
 
     whole = cms_bytes()
-    monkeypatch.setattr(webbuild, "TOKEN_SLICE", 37)
-    assert cms_bytes() == whole
+    saved = spark.conf.get(conf)
+    try:
+        for batch_rows in ("10000", "64", "7"):
+            spark.conf.set(conf, batch_rows)
+            for slice_docs in (2500, 37, 5):
+                monkeypatch.setattr(webbuild, "TOKEN_SLICE", slice_docs)
+                assert cms_bytes() == whole, (batch_rows, slice_docs)
+    finally:
+        spark.conf.set(conf, saved)
 
 
 # ------------------------------------------------------------ flagship pipeline

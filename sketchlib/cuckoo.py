@@ -29,27 +29,21 @@ mutex (shared-nothing partitions) and no goroutine batch chunking
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import serde
 from .config import CuckooConfig
 from .errors import GeometryMismatchError
 from .hashing import kernels
-
-_MAGIC = b"SKCF"
-_VERSION = 1
-_HEADER = struct.Struct("<4sBB6xQQQQQQB7x")  # magic, ver, strategy, geometry+counters
+from .sketches.base import MergeableSketch
 
 
-_STRATEGY_CODE = {"fnv": 0, "crc32c": 1, "xx": 2}
-_STRATEGY_NAME = {v: k for k, v in _STRATEGY_CODE.items()}
-
-
-class CuckooFilter:
+class CuckooFilter(MergeableSketch):
     """Batch-first cuckoo filter. Public surface mirrors the reference's
     13-method API (/root/reference/filter.go:9-51) plus ``merge`` and
     ``to_bytes``/``from_bytes`` for Spark shuffle/checkpoint."""
+
+    KIND, DTYPE = 1, np.uint16  # sketchlib.serde
 
     def __init__(self, config: CuckooConfig):
         self.config = config
@@ -358,54 +352,22 @@ class CuckooFilter:
 
     # ------------------------------------------------------------ serde
 
-    def to_bytes(self) -> bytes:
-        header = _HEADER.pack(
-            _MAGIC,
-            _VERSION,
-            _STRATEGY_CODE[self.config.hash_strategy],
-            self.config.capacity,
-            self.config.num_buckets,
-            self.config.bucket_size,
-            self.num_items,
-            self.insert_failures,
-            self.config.max_kicks,
-            self.config.fingerprint_bits,
-        )
-        return header + self.table.tobytes()
+    def state(self):
+        c = self.config  # every CuckooConfig field, in its init order
+        strategy = serde.STRATEGIES.index(c.hash_strategy)
+        cfg = (c.capacity, c.bucket_size, c.fingerprint_bits, c.max_kicks, strategy, c.batch_size, c.seed)
+        return (*cfg, self.num_items, self.insert_failures), [self.table]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "CuckooFilter":
-        (
-            magic,
-            version,
-            strategy,
-            capacity,
-            num_buckets,
-            bucket_size,
-            num_items,
-            failures,
-            max_kicks,
-            fp_bits,
-        ) = _HEADER.unpack_from(blob)
-        if magic != _MAGIC or version != _VERSION:
-            raise ValueError("not a sketchlib cuckoo filter blob")
-        cfg = CuckooConfig(
-            capacity=capacity,
-            bucket_size=bucket_size,
-            fingerprint_bits=fp_bits,
-            max_kicks=max_kicks,
-            hash_strategy=_STRATEGY_NAME[strategy],
-        )
-        f = cls(cfg)
-        table = np.frombuffer(blob, np.uint16, offset=_HEADER.size).reshape(
-            num_buckets, bucket_size
-        )
-        f.table = table.copy()
+    def from_state(cls, words, arrays) -> "CuckooFilter":
+        capacity, bucket_size, fp_bits, max_kicks, strategy, batch_size, seed, items, failures = words
+        strategy = serde.strategy_name(strategy)
+        f = cls(CuckooConfig(capacity, bucket_size, fp_bits, max_kicks, strategy, batch_size, seed))
+        (table,) = arrays
+        num_buckets = f.config.num_buckets
+        f.table = table.reshape(num_buckets, bucket_size)
         # per-bucket count via flat indices: count_nonzero(axis=1) over
         # the narrow bucket axis costs ~2x more per blob
-        f.fill = np.bincount(
-            np.flatnonzero(table) // bucket_size, minlength=num_buckets
-        ).astype(np.int32)
-        f.num_items = num_items
-        f.insert_failures = failures
+        f.fill = np.bincount(np.flatnonzero(table) // bucket_size, minlength=num_buckets).astype(np.int32)
+        f.num_items, f.insert_failures = items, failures
         return f

@@ -43,6 +43,11 @@ class GeometryMismatchError(SketchError):
         super().__init__(f"cannot merge sketches with mismatched geometry: {detail}")
 
 
+class CorruptBlobError(SketchError):
+    """Raised when a sketch blob is truncated or extended, fails its
+    checksum, or names a kind, version or geometry this build cannot load."""
+
+
 class CheckpointMismatchError(SketchError):
     """Raised when a checkpoint or state dir was written by a different
     build — sketch kind, key, partitioning, row layout, shard routing or

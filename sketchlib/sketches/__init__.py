@@ -3,8 +3,8 @@
 Each sketch is a monoid: ``update(batch)`` folds an Arrow-sized numpy
 batch into fixed-size state, ``merge(other)`` is associative and
 commutative (property-tested), ``to_bytes``/``from_bytes`` round-trip
-through BinaryType columns. The cuckoo filter (sketchlib.cuckoo) shares
-the same contract.
+through BinaryType columns as ``sketchlib.serde`` frames. The cuckoo
+filter (sketchlib.cuckoo) shares the same contract and base class.
 """
 
 from .bloom import BloomFilter
@@ -14,15 +14,6 @@ from .kll import KLLSketch
 from .kmv import KMVSketch
 from .tdigest import TDigest
 
-SKETCH_KINDS = {
-    "bloom": BloomFilter,
-    "cms": CountMinSketch,
-    "hll": HyperLogLog,
-    "kll": KLLSketch,
-    "kmv": KMVSketch,
-    "tdigest": TDigest,
-}
-
 __all__ = [
     "BloomFilter",
     "CountMinSketch",
@@ -30,5 +21,4 @@ __all__ = [
     "KLLSketch",
     "KMVSketch",
     "TDigest",
-    "SKETCH_KINDS",
 ]

@@ -5,17 +5,16 @@ state (north-rule requirement: merge associativity is property-tested
 in tests/test_sketches.py). States are fixed-size-ish numpy arrays so
 they serialize into BinaryType columns for Spark shuffle + checkpoint.
 
-Serialization is numpy-savez based (no pickle — blobs cross the JVM
-boundary and must be safe to load from untrusted shuffle files).
+Serialization is ``sketchlib.serde``'s checksummed frame of int64 words
+and raw arrays (no pickle — blobs cross the JVM boundary and must be
+safe to load from untrusted shuffle files).
 """
 
 from __future__ import annotations
 
-import io
-import json
-
 import numpy as np
 
+from .. import serde
 from ..hashing import kernels
 
 U64 = np.uint64
@@ -31,21 +30,13 @@ def split_hash(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h & U64(0xFFFFFFFF), h >> U64(32)
 
 
-def save_arrays(meta: dict, **arrays) -> bytes:
-    buf = io.BytesIO()
-    np.savez(buf, __meta__=np.frombuffer(json.dumps(meta).encode(), np.uint8), **arrays)
-    return buf.getvalue()
-
-
-def load_arrays(blob: bytes) -> tuple[dict, dict]:
-    with np.load(io.BytesIO(blob), allow_pickle=False) as z:
-        meta = json.loads(z["__meta__"].tobytes().decode())
-        arrays = {k: z[k] for k in z.files if k != "__meta__"}
-    return meta, arrays
-
-
 class MergeableSketch:
     """Interface contract (duck-typed; see subclasses)."""
+
+    # blob kind code, unique across sketchlib, and dtype of the state
+    # arrays; with ``state`` and ``from_state``, see sketchlib.serde
+    KIND: int
+    DTYPE: type
 
     def update(self, values) -> None:  # pragma: no cover - interface
         raise NotImplementedError
@@ -53,5 +44,9 @@ class MergeableSketch:
     def merge(self, other):  # pragma: no cover - interface
         raise NotImplementedError
 
-    def to_bytes(self) -> bytes:  # pragma: no cover - interface
-        raise NotImplementedError
+    def to_bytes(self) -> bytes:
+        return serde.dumps(self)
+
+    @classmethod
+    def from_bytes(cls, blob: bytes):
+        return serde.loads(blob, cls)

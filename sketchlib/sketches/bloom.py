@@ -12,12 +12,15 @@ import math
 
 import numpy as np
 
-from .base import MergeableSketch, hash_column, load_arrays, save_arrays, split_hash
+from .. import serde
+from .base import MergeableSketch, hash_column, split_hash
 
 U64 = np.uint64
 
 
 class BloomFilter(MergeableSketch):
+    KIND, DTYPE = 2, np.uint8  # sketchlib.serde
+
     def __init__(
         self,
         capacity: int,
@@ -75,26 +78,16 @@ class BloomFilter(MergeableSketch):
         """(1 - e^{-kn/m})^k with n = items observed."""
         return (1.0 - math.exp(-self.num_hashes * self.num_items / self.num_bits)) ** self.num_hashes
 
-    def to_bytes(self) -> bytes:
-        meta = {
-            "kind": "bloom",
-            "capacity": self.capacity,
-            "num_bits": self.num_bits,
-            "num_hashes": self.num_hashes,
-            "hash_strategy": self.hash_strategy,
-            "num_items": self.num_items,
-        }
-        return save_arrays(meta, bits=self.bits)
+    def state(self):
+        strategy = serde.STRATEGIES.index(self.hash_strategy)
+        return (self.capacity, self.num_bits, self.num_hashes, strategy, self.num_items), [self.bits]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        meta, arrays = load_arrays(blob)
-        f = cls(
-            capacity=meta["capacity"],
-            hash_strategy=meta["hash_strategy"],
-            num_bits=meta["num_bits"],
-            num_hashes=meta["num_hashes"],
-        )
-        f.bits = arrays["bits"].copy()
-        f.num_items = meta["num_items"]
+    def from_state(cls, words, arrays) -> "BloomFilter":
+        capacity, num_bits, num_hashes, strategy, num_items = words
+        strategy = serde.strategy_name(strategy)
+        f = cls(capacity, hash_strategy=strategy, num_bits=num_bits, num_hashes=num_hashes)
+        (bits,) = arrays
+        f.bits = bits.reshape(f.bits.shape)
+        f.num_items = num_items
         return f

@@ -12,12 +12,15 @@ import math
 
 import numpy as np
 
-from .base import MergeableSketch, hash_column, load_arrays, save_arrays, split_hash
+from .. import serde
+from .base import MergeableSketch, hash_column, split_hash
 
 U64 = np.uint64
 
 
 class CountMinSketch(MergeableSketch):
+    KIND, DTYPE = 3, np.int64  # sketchlib.serde
+
     def __init__(
         self,
         width: int | None = None,
@@ -104,7 +107,7 @@ class CountMinSketch(MergeableSketch):
             other.hash_strategy,
         ):
             raise ValueError("cms geometry mismatch")
-        self._grow_abs_total(int(getattr(other, "_abs_total", other.total)))
+        self._grow_abs_total(other._abs_total)
         self.counts += other.counts
         self.total += other.total
         return self
@@ -113,33 +116,15 @@ class CountMinSketch(MergeableSketch):
         """Additive bound e/w · N holding w.p. ≥ 1 - e^{-d}."""
         return math.e / self.width * self.total
 
-    def to_bytes(self) -> bytes:
-        meta = {
-            "kind": "cms",
-            "width": self.width,
-            "depth": self.depth,
-            "hash_strategy": self.hash_strategy,
-            "total": self.total,
-            "abs_total": self._abs_total,
-        }
-        return save_arrays(meta, counts=self.counts)
+    def state(self):
+        strategy = serde.STRATEGIES.index(self.hash_strategy)
+        return (self.width, self.depth, strategy, self.total, self._abs_total), [self.counts]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "CountMinSketch":
-        meta, arrays = load_arrays(blob)
-        s = cls(width=meta["width"], depth=meta["depth"], hash_strategy=meta["hash_strategy"])
-        s.counts = arrays["counts"].copy()
-        s.total = meta["total"]
-        if "abs_total" in meta:
-            s._abs_total = meta["abs_total"]
-        else:
-            # pre-abs_total blob: Σ|w| unknown. abs(total) alone would
-            # under-reconstruct for mixed-sign weights (e.g. +2^62 and
-            # -2^62 → total 0) and silently disable the wrap guard, so
-            # take the max with the largest per-row Σ|bin| — every bin
-            # is ≤ Σ|w|, so this keeps "bins ≤ _abs_total" true and the
-            # guard sound for all future growth. (Python ints: the row
-            # sums themselves may exceed int64.)
-            row_abs = np.abs(s.counts.astype(object)).sum(axis=1)
-            s._abs_total = max(abs(meta["total"]), int(row_abs.max()) if len(row_abs) else 0)
+    def from_state(cls, words, arrays) -> "CountMinSketch":
+        width, depth, strategy, total, abs_total = words
+        s = cls(width=width, depth=depth, hash_strategy=serde.strategy_name(strategy))
+        (counts,) = arrays
+        s.counts = counts.reshape(s.depth, s.width)
+        s.total, s._abs_total = total, abs_total
         return s

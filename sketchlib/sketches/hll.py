@@ -12,7 +12,8 @@ import math
 
 import numpy as np
 
-from .base import MergeableSketch, hash_column, load_arrays, save_arrays
+from .. import serde
+from .base import MergeableSketch, hash_column
 
 U64 = np.uint64
 
@@ -31,6 +32,8 @@ def _clz64(x: np.ndarray) -> np.ndarray:
 
 
 class HyperLogLog(MergeableSketch):
+    KIND, DTYPE = 4, np.uint8  # sketchlib.serde
+
     def __init__(self, precision: int = 14, hash_strategy: str = "xx"):
         if not (4 <= precision <= 18):
             raise ValueError("precision must be in [4, 18]")
@@ -65,15 +68,15 @@ class HyperLogLog(MergeableSketch):
     def std_error(self) -> float:
         return 1.04 / math.sqrt(self.m)
 
-    def to_bytes(self) -> bytes:
-        meta = {"kind": "hll", "precision": self.precision, "hash_strategy": self.hash_strategy}
-        return save_arrays(meta, registers=self.registers)
+    def state(self):
+        return (self.precision, serde.STRATEGIES.index(self.hash_strategy)), [self.registers]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "HyperLogLog":
-        meta, arrays = load_arrays(blob)
-        s = cls(precision=meta["precision"], hash_strategy=meta["hash_strategy"])
-        s.registers = arrays["registers"].copy()
+    def from_state(cls, words, arrays) -> "HyperLogLog":
+        precision, strategy = words
+        s = cls(precision, serde.strategy_name(strategy))
+        (registers,) = arrays
+        s.registers = registers.reshape(s.m)
         return s
 
 

@@ -11,13 +11,15 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import MergeableSketch, load_arrays, save_arrays
+from .base import MergeableSketch
 
 _C = 2.0 / 3.0
 _M64 = (1 << 64) - 1
 
 
 class KLLSketch(MergeableSketch):
+    KIND, DTYPE = 5, np.float64  # sketchlib.serde
+
     def __init__(self, k: int = 200, seed: int = 42):
         if k < 8:
             raise ValueError("k must be >= 8")
@@ -164,21 +166,15 @@ class KLLSketch(MergeableSketch):
         cum = np.concatenate(([0], np.cumsum(w)))
         return cum[np.searchsorted(v, xs, side="right")]
 
-    def to_bytes(self) -> bytes:
-        meta = {
-            "kind": "kll",
-            "k": self.k,
-            "seed": self.seed,
-            "n": self.n,
-            "heights": len(self.compactors),
-        }
-        arrays = {f"c{h}": c for h, c in enumerate(self.compactors)}
-        return save_arrays(meta, **arrays)
+    def state(self):
+        return (self.k, self.seed, self.n), self.compactors
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "KLLSketch":
-        meta, arrays = load_arrays(blob)
-        s = cls(k=meta["k"], seed=meta["seed"])
-        s.compactors = [arrays[f"c{h}"].copy() for h in range(meta["heights"])]
-        s.n = meta["n"]
+    def from_state(cls, words, arrays) -> "KLLSketch":
+        k, seed, n = words
+        if not arrays:
+            raise ValueError("kll blob has no compactor level")
+        s = cls(k=k, seed=seed)
+        s.compactors = list(arrays)
+        s.n = n
         return s

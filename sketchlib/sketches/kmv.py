@@ -29,12 +29,15 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import MergeableSketch, hash_column, load_arrays, save_arrays
+from .. import serde
+from .base import MergeableSketch, hash_column
 
 _U64_SPAN = float(1 << 64)
 
 
 class KMVSketch(MergeableSketch):
+    KIND, DTYPE = 6, np.uint64  # sketchlib.serde
+
     def __init__(self, k: int = 1024, hash_strategy: str = "xx"):
         if k < 3:
             # k=2 would make std_error() = 1/sqrt(k-2) divide by zero,
@@ -68,15 +71,16 @@ class KMVSketch(MergeableSketch):
 
         return 1.0 / math.sqrt(self.k - 2)
 
-    def to_bytes(self) -> bytes:
-        meta = {"kind": "kmv", "k": self.k, "hash_strategy": self.hash_strategy}
-        return save_arrays(meta, values=self.values)
+    def state(self):
+        return (self.k, serde.STRATEGIES.index(self.hash_strategy)), [self.values]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "KMVSketch":
-        meta, arrays = load_arrays(blob)
-        s = cls(k=meta["k"], hash_strategy=meta["hash_strategy"])
-        s.values = arrays["values"].copy()
+    def from_state(cls, words, arrays) -> "KMVSketch":
+        k, strategy = words
+        s = cls(k, serde.strategy_name(strategy))
+        (s.values,) = arrays
+        if len(s.values) > k:
+            raise ValueError(f"kmv blob keeps {len(s.values)} hashes, k is {k}")
         return s
 
 

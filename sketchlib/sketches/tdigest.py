@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import MergeableSketch, load_arrays, save_arrays
+from .base import MergeableSketch
 
 
 class TDigest(MergeableSketch):
+    KIND, DTYPE = 7, np.float64  # sketchlib.serde
+
     def __init__(self, compression: float = 100.0):
         if compression < 20:
             raise ValueError("compression must be >= 20")
@@ -104,15 +106,16 @@ class TDigest(MergeableSketch):
         cum = np.cumsum(self.weights) - self.weights / 2.0
         return np.interp(xs, self.means, cum, left=0.0, right=self.weights.sum())
 
-    def to_bytes(self) -> bytes:
+    def state(self):
         self._flush()
-        meta = {"kind": "tdigest", "compression": self.compression}
-        return save_arrays(meta, means=self.means, weights=self.weights)
+        # the float compression travels as its float64 bit pattern
+        return (int(np.float64(self.compression).view(np.int64)),), [self.means, self.weights]
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "TDigest":
-        meta, arrays = load_arrays(blob)
-        s = cls(compression=meta["compression"])
-        s.means = arrays["means"].copy()
-        s.weights = arrays["weights"].copy()
+    def from_state(cls, words, arrays) -> "TDigest":
+        (compression,) = words
+        s = cls(float(np.int64(compression).view(np.float64)))
+        s.means, s.weights = arrays
+        if len(s.means) != len(s.weights):
+            raise ValueError("tdigest blob has unequal means and weights")
         return s

@@ -70,8 +70,9 @@ SKETCH_SCHEMA = from_arrow_schema(_state_schema("sketch", "part_id"))
 SHARD_SCHEMA = keyed_schema("shard_id")
 
 # Version of the state-row layout, pinned in checkpoint fingerprints:
-# rows published under an older layout must not be re-emitted.
-ROW_FORMAT = 2
+# rows published under an older layout must not be re-emitted. 3 is the
+# first whose state blobs are sketchlib.serde's checksummed frame.
+ROW_FORMAT = 3
 
 
 def state_row(sk, n_rows: int, **key) -> pa.RecordBatch:

@@ -103,31 +103,14 @@ def _shingle_hash_batch(
     return out, bounds.tolist(), W
 
 
-def _shingle_hashes(texts: pd.Series, k: int = 5) -> list[np.ndarray]:
-    """Per-doc view of _shingle_hash_batch (compat surface)."""
-    hashes, bounds, _ = _shingle_hash_batch(texts, k)
-    return [hashes[bounds[i] : bounds[i + 1]] for i in range(len(texts))]
-
-
-def _minhash_sig(sh_hashes: np.ndarray, perms_a: np.ndarray, perms_b: np.ndarray) -> np.ndarray:
-    """num_perm minima of the permuted shingle set.
-
-    Permutation family: h -> a*h + b mod 2^64 with a odd — a bijection
-    of the 64-bit keyspace (multiplicative group unit), no modulo in the
-    hot loop. (A '% Mersenne' after numpy's wrapping multiply would not
-    be a real Mersenne hash anyway, and u64 modulo is ~10x the cost of
-    the multiply.)"""
-    with np.errstate(over="ignore"):
-        vals = perms_a[:, None] * sh_hashes[None, :] + perms_b[:, None]
-    return vals.min(axis=1)
-
-
 def _minhash_sigs_batch(
     hashes: np.ndarray, bounds: list[int], perms_a: np.ndarray, perms_b: np.ndarray
 ) -> np.ndarray:
     """(n_docs, num_perm) signatures for all docs at once: one
     (num_perm, total_shingles) permute pass + per-doc segmented minima
-    via np.minimum.reduceat — no per-doc Python."""
+    via np.minimum.reduceat — no per-doc Python. Permutation family:
+    h -> a*h + b mod 2^64 with a odd, a bijection of the 64-bit
+    keyspace, with no modulo in the hot loop."""
     starts = np.asarray(bounds[:-1], np.intp)
     num_perm = len(perms_a)
     out = np.empty((len(starts), num_perm), np.uint64)

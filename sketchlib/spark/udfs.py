@@ -225,7 +225,6 @@ def cms_heavy_hitters(
 
     import pyarrow as pa
 
-    from ..serde import loads
     from ..sketches import CountMinSketch
 
     PARTIAL_SCHEMA = "cand array<string>, state binary"
@@ -269,7 +268,7 @@ def cms_heavy_hitters(
         cms = None
         cands: set = set()
         for cand, blob in rows:
-            other = loads(bytes(blob))
+            other = loads(blob)
             if cms is None:
                 cms = other
             else:

@@ -54,8 +54,9 @@ from ..spark.checkpoint import ensure_checkpoint_meta
 from ..spark.fsio import _fs_path, read_bytes, write_text
 
 # state_dir layout version, pinned in the fingerprint; 1 was the
-# pointer-file (sharded) and header-in-blob (incremental) layouts
-EPOCH_LAYOUT = 2
+# pointer-file (sharded) and header-in-blob (incremental) layouts, 2
+# held npz and cuckoo-header blobs instead of sketchlib.serde frames
+EPOCH_LAYOUT = 3
 
 _ENTRY = re.compile(r"epoch-(\d+)(\.commit)?(\.tmp)?")
 

@@ -303,5 +303,7 @@ def test_serde_roundtrip():
 
 
 def test_serde_rejects_garbage():
-    with pytest.raises(Exception):
+    from sketchlib.errors import CorruptBlobError
+
+    with pytest.raises(CorruptBlobError):
         CuckooFilter.from_bytes(b"garbage-not-a-filter-blob----")

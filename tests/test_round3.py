@@ -332,34 +332,6 @@ def test_cms_abs_total_merge_guard_and_serde_roundtrip():
         b.merge(CountMinSketch.from_bytes(blob))
 
 
-def test_cms_legacy_blob_mixed_sign_guard_reconstruction():
-    """A pre-abs_total blob with mixed-sign weights has total≈0;
-    reconstruction must NOT take abs(total)=0 (which would disable the
-    wrap guard) but bound Σ|w| from the per-row |bin| sums."""
-    from sketchlib.sketches import CountMinSketch
-    from sketchlib.sketches.base import save_arrays
-
-    s = CountMinSketch(width=8, depth=2)
-    s.update(["x"], weights=np.array([2**61], dtype=np.int64))
-    s.update(["y"], weights=np.array([-(2**61)], dtype=np.int64))
-    assert s.total == 0
-    legacy = save_arrays(
-        {
-            "kind": "cms",
-            "width": s.width,
-            "depth": s.depth,
-            "hash_strategy": s.hash_strategy,
-            "total": s.total,
-        },
-        counts=s.counts,
-    )
-    restored = CountMinSketch.from_bytes(legacy)
-    assert restored._abs_total >= 2**61  # guard stays armed
-    with pytest.raises(OverflowError):
-        for _ in range(8):  # compounding merges must trip before wrap
-            restored.merge(CountMinSketch.from_bytes(legacy))
-
-
 # ------------------------------------------------------ connected components
 
 

@@ -10,11 +10,13 @@ import math
 import numpy as np
 import pytest
 
+from sketchlib import CuckooConfig, CuckooFilter
 from sketchlib.sketches import (
     BloomFilter,
     CountMinSketch,
     HyperLogLog,
     KLLSketch,
+    KMVSketch,
     TDigest,
 )
 from sketchlib.serde import loads
@@ -174,6 +176,13 @@ def _factories():
         "hll": lambda: HyperLogLog(precision=12),
         "kll": lambda: KLLSketch(k=200),
         "tdigest": lambda: TDigest(100.0),
+        "kmv": lambda: KMVSketch(k=256),
+        # every field of a non-default config must survive serde: a
+        # merge into a reloaded filter kicks with its own seed
+        "cuckoo": lambda: CuckooFilter(
+            CuckooConfig(capacity=4096, bucket_size=8, fingerprint_bits=12, max_kicks=77,
+                         hash_strategy="crc32c", batch_size=1024, seed=7)
+        ),
     }
 
 
@@ -264,7 +273,7 @@ def test_merged_equals_single_build_exact_state(kind):
     assert a.to_bytes() == whole.to_bytes()
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cms", "hll", "kll", "tdigest"])
+@pytest.mark.parametrize("kind", ["bloom", "cms", "hll", "kll", "tdigest", "kmv", "cuckoo"])
 def test_sketch_serde_roundtrip(kind):
     fac = _factories()[kind]
     sk = fac()
@@ -273,6 +282,27 @@ def test_sketch_serde_roundtrip(kind):
     back = loads(blob)
     assert type(back) is type(sk)
     assert back.to_bytes() == blob
+    (words, arrays), (back_words, back_arrays) = sk.state(), back.state()
+    assert back_words == words
+    assert len(back_arrays) == len(arrays)
+    for a, b in zip(arrays, back_arrays):
+        assert b.dtype == a.dtype and b.shape == a.shape and (b == a).all()
+    assert getattr(back, "config", None) == getattr(sk, "config", None)
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cms", "hll", "kll", "tdigest", "kmv"])
+def test_reloaded_sketch_updates_like_original(kind):
+    """A reloaded sketch carries all the state its next update reads:
+    KLL's compaction coins (seed, n, buffer contents) and the t-digest
+    buffer, which to_bytes flushes on both sides."""
+    data = _data(kind, 9000)
+    sk = _factories()[kind]()
+    sk.update(data[:1500])  # below the t-digest flush threshold
+    back = loads(sk.to_bytes())
+    for chunk in (data[1500:4000], data[4000:]):
+        sk.update(chunk)
+        back.update(chunk)
+    assert back.to_bytes() == sk.to_bytes()
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cms", "hll", "kll", "tdigest"])

@@ -687,12 +687,14 @@ def test_build_sharded_input_already_partitioned_by_key(spark):
 
 
 def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
-    """State written under the previous row layout, shard routing
+    """State written under a previous row layout, shard routing
     (pmod(xxhash64(key), n)) or streaming state layout must raise the
     typed mismatch error, never be resumed, probed or misread: a
-    build_sharded checkpoint dir, a build_sketches checkpoint dir,
-    sharded stream state_dirs with a pointer file, and incremental
-    state files with an ISB1/ISB2 header or none."""
+    build_sharded checkpoint dir, build_sketches checkpoint dirs from
+    before the row format was fingerprinted and from row format 2 (npz
+    blobs), sharded stream state_dirs with a pointer file, incremental
+    state files with an ISB1/ISB2 header or none, and an incremental
+    epoch dir of layout 2 (npz blobs)."""
     import json
 
     from sketchlib.errors import CheckpointMismatchError
@@ -711,15 +713,15 @@ def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
     with pytest.raises(CheckpointMismatchError, match="different"):
         build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=str(shard_ck))
 
-    part_ck = tmp_path / "part-ck"
-    part_ck.mkdir()
-    (part_ck / "_meta.json").write_text(json.dumps(
-        {"op": "build_sketches", "kind": "HyperLogLog", "key_col": "key",
-         "numeric": False, "partitions": keys.rdd.getNumPartitions()}
-    ))
-    (part_ck / "part-00000.arrow").write_bytes(b"old")
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        build_sketches(keys, "key", lambda: HyperLogLog(10), checkpoint_dir=str(part_ck))
+    part_meta = {"op": "build_sketches", "kind": "HyperLogLog", "key_col": "key",
+                 "numeric": False, "partitions": keys.rdd.getNumPartitions()}
+    for name, meta in (("part-ck", part_meta), ("part-ck-v2", {**part_meta, "format": 2})):
+        part_ck = tmp_path / name
+        part_ck.mkdir()
+        (part_ck / "_meta.json").write_text(json.dumps(meta))
+        (part_ck / "part-00000.arrow").write_bytes(b"old")
+        with pytest.raises(CheckpointMismatchError, match="different"):
+            build_sketches(keys, "key", lambda: HyperLogLog(10), checkpoint_dir=str(part_ck))
 
     # pointer-file stream state_dirs: predating the fingerprint (none
     # at all) and fingerprinted before the epoch layout (no "layout")
@@ -756,6 +758,21 @@ def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
         with pytest.raises(CheckpointMismatchError, match="different"):
             b.current(spark)
         assert path.read_bytes() == raw  # nothing merged or moved
+
+    # an epoch dir of layout 2, whose epoch blobs are npz archives
+    state = tmp_path / "epochs-v2"
+    state.mkdir()
+    (state / "_meta.json").write_text(json.dumps(
+        {"op": "incremental_stream", "kind": "HyperLogLog", "key_col": "key", "layout": 2}
+    ))
+    (state / "epoch-0").write_bytes(b"PK\x03\x04old")
+    (state / "epoch-0.commit").write_text(json.dumps({"batch_id": 57, "lineage": 0}))
+    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", str(state))
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        b.process_batch(keys, 58)
+    with pytest.raises(CheckpointMismatchError, match="different"):
+        b.current(spark)
+    assert sorted(p.name for p in state.iterdir()) == ["_meta.json", "epoch-0", "epoch-0.commit"]
 
 
 def test_sharded_empty_shards_probe_and_delete(spark):

@@ -55,13 +55,16 @@ class CuckooFilter(MergeableSketch):
 
     # ------------------------------------------------------------ hashing
 
+    @property
+    def hash_strategy(self) -> str:
+        return self.config.hash_strategy
+
     def _indices(self, items) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        i1, i2, fp = kernels.indices_batch(
-            items,
-            self.config.num_buckets,
-            self.config.hash_strategy,
-            self.config.fingerprint_bits,
-        )
+        return self._indices_from(kernels.hash64_batch(items, self.hash_strategy))
+
+    def _indices_from(self, h: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        c = self.config
+        i1, i2, fp = kernels.indices_from_hashes(h, c.num_buckets, c.hash_strategy, c.fingerprint_bits)
         return i1.astype(np.int64), i2.astype(np.int64), fp
 
     def _alt(self, index: np.ndarray, fp: np.ndarray) -> np.ndarray:
@@ -215,13 +218,16 @@ class CuckooFilter(MergeableSketch):
     def lookup_batch(self, items) -> np.ndarray:
         """Vectorized LookupBatch (filter_amd64.go:18-34): fp present in
         either candidate bucket. No false negatives for inserted items."""
-        i1, i2, fp = self._indices(items)
-        return self._contains(i1, i2, fp)
+        return self.contains_hashes(kernels.hash64_batch(items, self.hash_strategy))
 
     # membership-protocol alias (Bloom's name), as update aliases insert_batch
     contains = lookup_batch
 
-    def _contains(self, i1, i2, fp) -> np.ndarray:
+    def contains_hashes(self, h: np.ndarray) -> np.ndarray:
+        """``contains`` of items whose ``hash64_batch`` under
+        ``hash_strategy`` is ``h`` (a caller hashing one batch for many
+        filters hashes it once)."""
+        i1, i2, fp = self._indices_from(h)
         f = fp[:, None]
         return ((self.table[i1] == f).any(1)) | ((self.table[i2] == f).any(1))
 

@@ -284,7 +284,14 @@ def indices_batch(
     Identical, element for element, to the scalar path
     (scalar.get_indices) — the reference's batch==scalar contract.
     """
-    h = hash64_batch(values, strategy)
+    return indices_from_hashes(hash64_batch(values, strategy), num_buckets, strategy, bits)
+
+
+def indices_from_hashes(
+    h: np.ndarray, num_buckets: int, strategy: str, bits: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(i1, i2, fp) of ``hash64_batch`` outputs: ``indices_batch`` after
+    its hash step, for a caller that hashed the batch already."""
     fp = fingerprint_batch(h, bits, strategy)
     i1 = h & U64(num_buckets - 1)
     i2 = alt_index_batch(i1, fp, num_buckets, strategy, bits)

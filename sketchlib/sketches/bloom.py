@@ -42,20 +42,25 @@ class BloomFilter(MergeableSketch):
         self.bits = np.zeros(self.num_bits // 8, np.uint8)
         self.num_items = 0  # items observed (not distinct)
 
-    def _positions(self, values) -> np.ndarray:
-        h = hash_column(values, self.hash_strategy)
+    def _positions(self, h: np.ndarray) -> np.ndarray:
+        """[num_hashes, n] bit positions of 64-bit item hashes."""
         lo, hi = split_hash(h)
         ks = np.arange(self.num_hashes, dtype=U64)[:, None]
         with np.errstate(over="ignore"):
             return (lo[None, :] + ks * hi[None, :]) % U64(self.num_bits)
 
     def update(self, values) -> None:
-        pos = self._positions(values).ravel()
+        pos = self._positions(hash_column(values, self.hash_strategy)).ravel()
         np.bitwise_or.at(self.bits, pos >> U64(3), np.uint8(1) << (pos & U64(7)).astype(np.uint8))
         self.num_items += pos.size // self.num_hashes
 
     def contains(self, values) -> np.ndarray:
-        pos = self._positions(values)
+        return self.contains_hashes(hash_column(values, self.hash_strategy))
+
+    def contains_hashes(self, h: np.ndarray) -> np.ndarray:
+        """``contains`` of items whose ``hash64_batch`` under
+        ``hash_strategy`` is ``h``."""
+        pos = self._positions(h)
         set_ = (self.bits[(pos >> U64(3)).astype(np.int64)] >> (pos & U64(7)).astype(np.uint8)) & 1
         return set_.all(axis=0).astype(bool)
 

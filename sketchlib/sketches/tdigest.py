@@ -9,6 +9,8 @@ np.add.at instead of a per-centroid loop).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from .base import MergeableSketch
@@ -18,8 +20,10 @@ class TDigest(MergeableSketch):
     KIND, DTYPE = 7, np.float64  # sketchlib.serde
 
     def __init__(self, compression: float = 100.0):
-        if compression < 20:
-            raise ValueError("compression must be >= 20")
+        # NaN passes a plain ``< 20`` and later casts to int64 garbage;
+        # inf never flushes the buffer
+        if not (math.isfinite(compression) and compression >= 20):
+            raise ValueError(f"compression must be finite and >= 20, got {compression}")
         self.compression = float(compression)
         self.means = np.empty(0, np.float64)
         self.weights = np.empty(0, np.float64)

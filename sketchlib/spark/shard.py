@@ -11,11 +11,15 @@ per-task memory constant at any scale:
   capacity/num_shards (``build.fold_keyed``); the result table
   (build.SHARD_SCHEMA state rows) is the filter.
 * probe: zero-shuffle broadcast lookup while total state fits the
-  broadcast budget (blobs broadcast once per executor, probes answered
-  on their scan partitions); above it, a cogroup on shard_id — probes
-  shuffle once (key bytes only), each shard's state moves exactly
-  once. State bytes are NEVER attached per probe row (a join would
-  shuffle |probes| × |shard state| bytes).
+  broadcast budget — blobs broadcast once per executor, and one scalar
+  Arrow UDF answers each probe batch on its scan partition: it takes
+  the key and shard_id columns, hashes the batch ONCE, groups rows by
+  shard with one stable argsort, lets each present shard answer from
+  the shared hashes (``contains_hashes``) and returns only the boolean
+  column. Above the budget, a cogroup on shard_id — probes shuffle
+  once (key bytes only), each shard's state moves exactly once. State
+  bytes are NEVER attached per probe row (a join would shuffle
+  |probes| × |shard state| bytes).
 
 No cross-shard merge exists or is needed — the shard table is the
 distributed filter, and per-shard merge (same geometry) still works
@@ -24,12 +28,16 @@ for combining incremental builds.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import replace
 
+import numpy as np
+import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
+from ..hashing import kernels
 from ..serde import loads
 from .build import ROW_FORMAT, SHARD_SCHEMA, fold_keyed, state_row
 from .merge import merge_keyed
@@ -197,8 +205,20 @@ class ShardedProbeIndex:
     the last probe result)."""
 
     def __init__(self, spark, blobs: dict[int, bytes]):
+        self._blobs = blobs  # held until hash_strategy has read them
         self.state_bytes = sum(len(b) for b in blobs.values())
         self.broadcast = spark.sparkContext.broadcast(blobs)
+
+    @functools.cached_property
+    def hash_strategy(self) -> str | None:
+        """The one strategy every shard hashes with (None for no
+        shards), read on the first probe. A probe batch is hashed once
+        for all its shards, so shards that disagree raise ValueError."""
+        strategies = {sid: loads(b).hash_strategy for sid, b in self._blobs.items()}
+        if len(set(strategies.values())) > 1:
+            raise ValueError(f"shards disagree on hash_strategy: {strategies}")
+        self._blobs = None
+        return next(iter(strategies.values()), None)
 
     @classmethod
     def from_shards(cls, shard_df: DataFrame) -> "ShardedProbeIndex":
@@ -222,6 +242,38 @@ class ShardedProbeIndex:
         self.broadcast.destroy()
 
 
+def _member_udf(index: ShardedProbeIndex):
+    """The broadcast probe: a scalar Arrow UDF (key, shard_id) → member.
+    Each batch is hashed once with the index's strategy; rows are
+    grouped by shard with one stable argsort, and each shard present in
+    the batch answers its rows from the shared hashes. A shard with no
+    state row answers False."""
+    bc, strategy = index.broadcast, index.hash_strategy
+    # driver-side JVM broadcast id: the worker-level deser cache key
+    # (udfs._sketch_from; id(bc) would alias after GC address reuse)
+    bid = bc._jbroadcast.id()
+
+    @F.arrow_udf("boolean")
+    def member(keys: pa.Array, shard_ids: pa.Array) -> pa.Array:
+        n = len(keys)
+        out = np.zeros(n, bool)
+        if n and strategy is not None:
+            h = kernels.hash64_batch(keys, strategy)
+            sids = shard_ids.to_numpy(zero_copy_only=False)
+            order = np.argsort(sids, kind="stable")
+            cuts = np.flatnonzero(np.diff(sids[order])) + 1
+            for rows in np.split(order, cuts):
+                f = _sketch_from(bid, bc, int(sids[rows[0]]))
+                if f is not None:
+                    out[rows] = f.contains_hashes(h[rows])
+        return pa.array(out)
+
+    # deterministic, but marked otherwise so the optimizer treats the UDF
+    # as a barrier: a filter on ``member`` would otherwise be pushed
+    # below the projection with a copy of the UDF — two Python passes
+    return member.asNondeterministic()
+
+
 def probe_sharded(
     probes: DataFrame,
     key_col: str,
@@ -230,26 +282,31 @@ def probe_sharded(
     broadcast_threshold_bytes: int = 64 << 20,
     index: ShardedProbeIndex | None = None,
 ) -> DataFrame:
-    """→ probes + boolean ``member`` column.
+    """→ probes + ``shard_id`` + boolean ``member`` column.
 
     Two plans, picked by total filter size (measured with one tiny
     aggregation — persist the shard table, it is the filter):
 
     * ≤ ``broadcast_threshold_bytes``: ZERO-SHUFFLE — the shard blobs
       broadcast once per executor (each worker deserializes a shard at
-      most once per call; the cache is bounded by the broadcast budget),
-      probes stay on their scan partitions and each Arrow batch is
-      answered in place, vectorized per shard group. Never attaches
-      state to probe rows: attaching via join would shuffle
-      |probes| × |shard state| bytes — data-scale × state-scale.
-      The broadcast lives as long as the returned DataFrame (callers
-      probing in a loop should materialize promptly).
+      most once per broadcast; the cache is bounded by the broadcast
+      budget), probes stay on their scan partitions, and one scalar
+      Arrow UDF over (key, shard_id) answers each batch in place: the
+      batch is hashed once, each shard in it answers its rows from
+      those hashes, and only the boolean column returns from Python —
+      Spark keeps the rest of the row. Never attaches state to probe
+      rows: attaching via join would shuffle |probes| × |shard state|
+      bytes — data-scale × state-scale. The broadcast lives as long as
+      the returned DataFrame (callers probing in a loop should
+      materialize promptly).
     * larger (the 10^12-key regime): COGROUP on shard_id — probes
       shuffle once (key bytes only), each shard's state moves exactly
       once to meet its probe group, per-task memory = one shard.
 
     Probes hashing to a shard with no state row (nothing was inserted
-    there) come back ``member = false`` — never dropped.
+    there) come back ``member = false`` — never dropped. Shards that
+    disagree on ``hash_strategy`` raise ValueError on the broadcast
+    path (see ``ShardedProbeIndex``).
 
     ``index``: a prebuilt ``ShardedProbeIndex`` — ALWAYS takes the
     broadcast path, skipping both the per-call collect+broadcast and
@@ -257,9 +314,6 @@ def probe_sharded(
     probe loops (one broadcast for the whole loop, explicitly
     destroyable); without it each call creates a broadcast that lives
     until the returned DataFrame is garbage-collected."""
-    import numpy as np
-    import pandas as pd
-
     if index is None and shard_df is None:
         raise ValueError("need shard_df or a prebuilt ShardedProbeIndex")
     if num_shards <= 0:
@@ -269,34 +323,17 @@ def probe_sharded(
             shard_df.select(F.sum(F.length("state")).alias("b")).first().b or 0
         )
     keyed = probes.withColumn("shard_id", _shard_col(key_col, num_shards))
+
+    if index is not None or state_bytes <= broadcast_threshold_bytes:
+        index = index or ShardedProbeIndex.from_shards(shard_df)
+        quoted = key_col.replace("`", "``")
+        return keyed.withColumn("member", _member_udf(index)(f"`{quoted}`", "shard_id"))
+
+    import pandas as pd
+
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in keyed.schema.fields
     ) + ", member boolean"
-
-    if index is not None or state_bytes <= broadcast_threshold_bytes:
-        bc = (
-            index.broadcast
-            if index is not None
-            else ShardedProbeIndex.from_shards(shard_df).broadcast
-        )
-        # driver-side JVM broadcast id: the worker-level deser cache key
-        # (udfs._sketch_from; id(bc) would alias after GC address reuse)
-        bid = bc._jbroadcast.id()
-
-        def probe_batches(batches):
-            for pdf in batches:
-                member = np.zeros(len(pdf), bool)
-                if len(pdf):
-                    for sid, idx in pdf.groupby("shard_id").indices.items():
-                        f = _sketch_from(bid, bc, int(sid))
-                        if f is None:
-                            continue  # empty shard: member stays False
-                        member[idx] = np.asarray(f.contains(pdf[key_col].iloc[idx]), bool)
-                out = pdf.copy()
-                out["member"] = member
-                yield out
-
-        return keyed.mapInPandas(probe_batches, out_schema)
 
     def lookup(probe_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
         if probe_pdf.empty:

@@ -3,7 +3,9 @@
 Pattern: the merged sketch blob is broadcast once; each executor
 deserializes it once (process-level cache) and every Arrow batch is
 answered by one vectorized numpy call — the distributed analogue of
-"query a built filter" (SURVEY.md §2.2 joins row).
+"query a built filter" (SURVEY.md §2.2 joins row). The UDFs are scalar
+``arrow_udf``s: each batch arrives as a ``pa.Array`` and only the
+answer column goes back, with no pandas conversion either way.
 
 The exact-oracle equivalents (used by the driver correctness gate):
 membership ↔ left-semi join, post-delete membership ↔ left-anti join.
@@ -11,9 +13,9 @@ membership ↔ left-semi join, post-delete membership ↔ left-anti join.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType
 
 from ..serde import loads
 
@@ -52,29 +54,31 @@ def _sketch_from(bid: int, bc, part=None):
     return sk
 
 
-def membership_udf(spark, sketch_or_blob):
-    """pandas UDF col→bool: cuckoo/bloom membership (no false negatives)."""
+def _broadcast_blob(spark, sketch_or_blob):
+    """(broadcast of the sketch blob, its JVM broadcast id)."""
     blob = sketch_or_blob if isinstance(sketch_or_blob, (bytes, bytearray)) else sketch_or_blob.to_bytes()
     bc = spark.sparkContext.broadcast(bytes(blob))
-    bid = bc._jbroadcast.id()  # stable unique key, captured driver-side
+    return bc, bc._jbroadcast.id()  # stable unique key, captured driver-side
 
-    @F.pandas_udf(BooleanType())
-    def contains(col: pd.Series) -> pd.Series:
-        return pd.Series(_sketch_from(bid, bc).contains(col))
+
+def membership_udf(spark, sketch_or_blob):
+    """Arrow UDF col→bool: cuckoo/bloom membership (no false negatives)."""
+    bc, bid = _broadcast_blob(spark, sketch_or_blob)
+
+    @F.arrow_udf("boolean")
+    def contains(col: pa.Array) -> pa.Array:
+        return pa.array(_sketch_from(bid, bc).contains(col))
 
     return contains
 
 
 def cms_estimate_udf(spark, sketch_or_blob):
-    """pandas UDF col→long: count-min frequency estimate (never under)."""
-    blob = sketch_or_blob if isinstance(sketch_or_blob, (bytes, bytearray)) else sketch_or_blob.to_bytes()
-    bc = spark.sparkContext.broadcast(bytes(blob))
-    bid = bc._jbroadcast.id()
+    """Arrow UDF col→long: count-min frequency estimate (never under)."""
+    bc, bid = _broadcast_blob(spark, sketch_or_blob)
 
-    @F.pandas_udf(LongType())
-    def estimate(col: pd.Series) -> pd.Series:
-        sk = _sketch_from(bid, bc)
-        return pd.Series(sk.estimate(col))
+    @F.arrow_udf("long")
+    def estimate(col: pa.Array) -> pa.Array:
+        return pa.array(_sketch_from(bid, bc).estimate(col))  # int64 counts
 
     return estimate
 
@@ -84,11 +88,12 @@ def hash_indices_udf(num_buckets: int, strategy: str = "fnv", bits: int = 8):
     (the reference's GetIndices exposed as a column function)."""
     from ..hashing import kernels
 
-    @F.pandas_udf("i1 long, i2 long, fp int")
-    def indices(col: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf("i1 long, i2 long, fp int")
+    def indices(col: pa.Array) -> pa.Array:
         i1, i2, fp = kernels.indices_batch(col, num_buckets, strategy, bits)
-        return pd.DataFrame(
-            {"i1": i1.astype("int64"), "i2": i2.astype("int64"), "fp": fp.astype("int32")}
+        return pa.StructArray.from_arrays(
+            [pa.array(i1.astype(np.int64)), pa.array(i2.astype(np.int64)), pa.array(fp.astype(np.int32))],
+            names=["i1", "i2", "fp"],
         )
 
     return indices

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from sketchlib import CuckooConfig, CuckooFilter
+from sketchlib.hashing import kernels, scalar
 
 STRATEGIES = ("fnv", "crc32c", "xx")
 
@@ -307,3 +309,43 @@ def test_serde_rejects_garbage():
 
     with pytest.raises(CorruptBlobError):
         CuckooFilter.from_bytes(b"garbage-not-a-filter-blob----")
+
+
+# ------------------------------------------------------------ hash once
+
+# empty, null, non-ASCII and 10 kB values: one probe batch may hold all
+PROBE_VALUES = st.lists(
+    st.one_of(
+        st.none(),
+        st.just(""),
+        st.text(max_size=12),
+        st.builds(lambda c, n: c * n, st.sampled_from("aé€"), st.integers(10_000, 10_240)),
+    ),
+    max_size=40,
+)
+
+
+@pytest.mark.parametrize("bits", (8, 12, 16))
+@pytest.mark.parametrize("strategy", STRATEGIES)
+@settings(max_examples=25, deadline=None)
+@given(values=PROBE_VALUES, inserted=st.integers(0, 40))
+def test_contains_equals_contains_hashes(strategy, bits, values, inserted):
+    """One lookup path: ``contains`` answers exactly what
+    ``contains_hashes`` answers from the batch's ``hash64_batch``, and
+    both match the scalar reference's (i1, i2, fp) looked up in the
+    table. Nulls hash as the empty string. 200 fixed keys fill the
+    table to ~0.8 load, so many entries live in their second bucket."""
+    fill = [f"fill-{i}" for i in range(200)]
+    f = mk(capacity=256, hash_strategy=strategy, fingerprint_bits=bits)
+    f.insert_batch(fill + values[:inserted])
+    probes = values + fill
+    got = f.contains(probes)
+    assert f.hash_strategy == strategy
+    assert got.tolist() == f.contains_hashes(kernels.hash64_batch(probes, strategy)).tolist()
+    want = []
+    for v in probes:
+        i1, i2, fp = scalar.get_indices((v or "").encode(), f.config.num_buckets, strategy, bits)
+        want.append(bool(fp in f.table[i1] or fp in f.table[i2]))
+    assert got.tolist() == want
+    if not f.insert_failures:  # a failed kick chain may drop a stored item
+        assert got[: min(inserted, len(values))].all() and got[len(values) :].all()

@@ -142,6 +142,8 @@ def test_lengths_that_do_not_fit_rejected():
     n_means = struct.unpack_from("<Q", tdigest, 32)[0]
     uneven = struct.pack("<QQ", n_means - 8, struct.unpack_from("<Q", tdigest, 40)[0] + 8)
     _rejected(_reframe(tdigest, 32, uneven), match="unequal")
+    for bad in (float("nan"), float("inf")):  # the compression word's float64 bits
+        _rejected(_reframe(tdigest, 24, struct.pack("<d", bad)), match="compression")
 
 
 def test_from_bytes_rejects_another_kind():

@@ -9,8 +9,10 @@ import math
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from sketchlib import CuckooConfig, CuckooFilter
+from sketchlib.hashing import kernels, scalar
 from sketchlib.sketches import (
     BloomFilter,
     CountMinSketch,
@@ -48,6 +50,42 @@ def test_bloom_merge_is_union():
     a.merge(b)
     assert a.contains(keys(1000, "a")).all()
     assert a.contains(keys(1000, "b")).all()
+
+
+# empty, null, non-ASCII and 10 kB values: one probe batch may hold all
+PROBE_VALUES = st.lists(
+    st.one_of(
+        st.none(),
+        st.just(""),
+        st.text(max_size=12),
+        st.builds(lambda c, n: c * n, st.sampled_from("aé€"), st.integers(10_000, 10_240)),
+    ),
+    max_size=40,
+)
+
+
+@pytest.mark.parametrize("strategy", ("fnv", "crc32c", "xx"))
+@settings(max_examples=25, deadline=None)
+@given(values=PROBE_VALUES, inserted=st.integers(0, 40))
+def test_bloom_contains_equals_contains_hashes(strategy, values, inserted):
+    """One lookup path: Bloom ``contains`` answers exactly what
+    ``contains_hashes`` answers from the batch's ``hash64_batch``, and
+    both match the k double-hashed bits of the scalar reference hash.
+    Nulls hash as the empty string. 20 fixed keys set ~40% of the bits,
+    so an absent probe often finds some of its bits set, not all."""
+    f = BloomFilter(capacity=64, hash_strategy=strategy, num_bits=128, num_hashes=3)
+    f.update([f"fill-{i}" for i in range(20)] + values[:inserted])
+    probes = values + [f"probe-{i}" for i in range(40)]
+    got = f.contains(probes)
+    assert got.tolist() == f.contains_hashes(kernels.hash64_batch(probes, strategy)).tolist()
+    want = []
+    for v in probes:
+        h = scalar.hash64((v or "").encode(), strategy)
+        lo, hi = h & 0xFFFFFFFF, h >> 32
+        pos = [(lo + k * hi) % (1 << 64) % f.num_bits for k in range(f.num_hashes)]
+        want.append(all(f.bits[p >> 3] >> (p & 7) & 1 for p in pos))
+    assert got.tolist() == want
+    assert got[: min(inserted, len(values))].all()  # no false negatives
 
 
 # ------------------------------------------------------------------ hll
@@ -158,6 +196,13 @@ def test_tdigest_rank_error_and_tails():
     assert quantile_rank_err(t, data, [0.5]) <= 0.02
     # tail accuracy is the t-digest selling point
     assert quantile_rank_err(t, data, [0.001, 0.999]) <= 0.005
+
+
+@pytest.mark.parametrize("compression", (float("nan"), float("inf"), float("-inf"), 19.9))
+def test_tdigest_rejects_nonfinite_or_small_compression(compression):
+    # NaN slipped past a plain ``< 20`` and inf never flushed its buffer
+    with pytest.raises(ValueError, match="compression"):
+        TDigest(compression)
 
 
 def test_kll_nan_filtered():

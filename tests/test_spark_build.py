@@ -629,8 +629,8 @@ def test_probe_sharded_broadcast_and_copartitioned_paths(spark, docs_df):
     shards.count()
     small = probe_sharded(keys, "key", shards, 4)
     plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_small
-    probe_side = plan_small.split("MapInPandas")[-1]
+    assert "ArrowEvalPython" in plan_small
+    probe_side = plan_small.split("ArrowEvalPython")[-1]
     assert "Exchange" not in probe_side  # zero-shuffle probe
     assert small.where("member").count() == 1000
     big = probe_sharded(keys, "key", shards, 4, broadcast_threshold_bytes=0)
@@ -639,6 +639,93 @@ def test_probe_sharded_broadcast_and_copartitioned_paths(spark, docs_df):
     assert "BroadcastHashJoin" not in plan_big
     assert big.where("member").count() == 1000
     shards.unpersist()
+
+
+def test_probe_sharded_evaluates_its_udf_once(spark):
+    """The broadcast probe's member UDF runs in ONE ArrowEvalPython
+    node holding one UDF: under the perfbench-shaped aggregate, which
+    reads ``member`` twice, and under a filter on ``member`` (a
+    deterministic UDF would be pushed into the filter AND kept in the
+    projection, a second Python pass over the batch)."""
+    from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
+
+    keys = spark.createDataFrame([(f"k{i}", i % 3 > 0) for i in range(300)], "key string, present boolean")
+    rows = build_sharded(keys.where("present"), "key", 4, cfg=_cfg()).collect()
+    idx = ShardedProbeIndex(spark, {int(r.shard_id): bytes(r.state) for r in rows})
+    try:
+        probed = probe_sharded(keys, "key", num_shards=4, index=idx)
+        m = F.col("member")
+        agg = probed.agg(
+            F.sum((m & F.col("present")).cast("long")).alias("hit"),
+            F.sum((m & ~F.col("present")).cast("long")).alias("fp"),
+        )
+        for df in (agg, probed.where("member")):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            (node,) = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+            udfs = node.split("ArrowEvalPython [", 1)[1].split("], [", 1)[0]
+            assert udfs.count("member(") == 1, node
+        assert agg.first().hit == 200
+        assert probed.where("member").count() >= 200
+    finally:
+        idx.destroy()
+
+
+@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
+@pytest.mark.parametrize("threshold", [64 << 20, 0], ids=["broadcast", "cogroup"])
+def test_probe_sharded_matches_each_shards_contains(spark, kind, threshold):
+    """Key by key, probe_sharded answers what the key's shard's own
+    ``contains`` answers, over 7-row Arrow batches that span several
+    shards: a shard whose state row is gone answers False, and a null
+    key probes as the empty string it was built as."""
+    from sketchlib.serde import loads
+    from sketchlib.spark.shard import build_sharded, probe_sharded
+
+    factory = {
+        "cuckoo": lambda: CuckooFilter(_cfg(1024)),
+        "bloom": lambda: BloomFilter(capacity=1024, fp_rate=0.01),
+    }[kind]
+    built = [f"k{i}" for i in range(300)] + [None, "héllo wörld", ""]
+    probes = built + [f"absent{i}" for i in range(300)]
+    shards = build_sharded(
+        spark.createDataFrame([(k,) for k in built], "key string"), "key", 4, factory=factory
+    )
+    state = {int(r.shard_id): loads(r.state) for r in shards.collect() if r.shard_id != 1}
+    kept = shards.where("shard_id != 1")  # shard 1 has no state row
+    conf = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        probe_df = spark.createDataFrame([(k,) for k in probes], "key string").repartition(3)
+        got = probe_sharded(probe_df, "key", kept, 4, broadcast_threshold_bytes=threshold).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", conf)
+    assert len(got) == len(probes)
+    answered = {r.key: (r.shard_id, r.member) for r in got}
+    assert set(answered) == set(probes)
+    assert {sid for sid, _ in answered.values()} == {0, 1, 2, 3}
+    for key, (sid, member) in answered.items():
+        want = sid in state and bool(state[sid].contains([key])[0])
+        assert member is want, (key, sid)
+    assert all(answered[k][1] for k in built if answered[k][0] != 1)
+
+
+def test_sharded_probe_index_rejects_mixed_hash_strategies(spark):
+    """A probe batch is hashed once for all its shards, so an index
+    whose shards hash differently must raise, not answer with the
+    wrong strategy's hashes."""
+    from sketchlib.spark.shard import ShardedProbeIndex, probe_sharded
+
+    blobs = {}
+    for sid, strategy in enumerate(("xx", "fnv")):
+        f = CuckooFilter(CuckooConfig(capacity=256, fingerprint_bits=16, hash_strategy=strategy))
+        f.insert_batch(["a", "b"])
+        blobs[sid] = f.to_bytes()
+    idx = ShardedProbeIndex(spark, blobs)
+    keys = spark.createDataFrame([("a",), ("b",)], "key string")
+    try:
+        with pytest.raises(ValueError, match="hash_strategy"):
+            probe_sharded(keys, "key", num_shards=2, index=idx)
+    finally:
+        idx.destroy()
 
 
 def test_sharded_build_checkpoint_resume(spark, docs_df, tmp_path):

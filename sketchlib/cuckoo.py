@@ -18,9 +18,12 @@ reset), re-expressed batch-first:
   re-homes every (bucket, fingerprint) pair of the other filter, which
   is lossless because an entry's two legal homes are recoverable from
   either index via the self-inverse alternate-index rule;
-* the kick RNG is deterministically seeded (config.seed) — intentional
-  divergence from the reference's entropy seeding (filter.go:47) so
-  distributed builds are reproducible and checkpoint-resumable.
+* the kick RNG is deterministically seeded — intentional divergence
+  from the reference's entropy seeding (filter.go:47) so distributed
+  builds are reproducible and checkpoint-resumable. Each kick loop seeds
+  its own generator from (config.seed, num_items, insert_failures), so
+  the kicks depend only on the filter's state, and a filter decoded
+  from a blob kicks exactly as its writer would have.
 
 Differences from the reference that are *not* semantic: there is no
 mutex (shared-nothing partitions) and no goroutine batch chunking
@@ -51,7 +54,6 @@ class CuckooFilter(MergeableSketch):
         self.fill = np.zeros(config.num_buckets, np.int32)
         self.num_items = 0
         self.insert_failures = 0
-        self._rng = np.random.Generator(np.random.PCG64(config.seed))
 
     # ------------------------------------------------------------ hashing
 
@@ -148,8 +150,11 @@ class CuckooFilter(MergeableSketch):
         m = len(fp)
         b = self.config.bucket_size
         success = np.zeros(m, bool)
+        rng = np.random.Generator(
+            np.random.PCG64([self.config.seed, self.num_items, self.insert_failures])
+        )
         # random starting side, like filter.go:75-78
-        start_alt = self._rng.integers(0, 2, m).astype(bool)
+        start_alt = rng.integers(0, 2, m).astype(bool)
         cur = np.where(start_alt, i2, i1)
         held = fp.copy()
         kicks = np.full(m, self.config.max_kicks, np.int64)
@@ -158,7 +163,7 @@ class CuckooFilter(MergeableSketch):
 
         while len(active):
             a = active
-            pos = self._rng.integers(0, b, len(a))
+            pos = rng.integers(0, b, len(a))
             evicted = self.table[cur[a], pos]
             alt = self._alt(cur[a], evicted)
             # claim both footprint buckets; winner = lowest pending index

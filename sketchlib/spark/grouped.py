@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import DataFrame, functions as F
 
 from ..serde import loads
@@ -83,17 +83,11 @@ def build_grouped_sketches(
 
 def grouped_estimates(grouped_df: DataFrame) -> DataFrame:
     """(group_key, n_rows, estimate) for estimate-bearing sketches
-    (HLL distinct; t-digest/KLL expose quantiles via mapInPandas
-    variants). Runs executor-side over the tiny state rows."""
+    (HLL distinct, KMV). One scalar Arrow UDF over the tiny ``state``
+    column, executor-side; Spark keeps the other two columns."""
 
-    def est(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            sk = loads(row["state"])
-            out.append((row["group_key"], int(row["n_rows"]), float(sk.estimate())))
-        return pd.DataFrame(out, columns=["group_key", "n_rows", "estimate"])
+    @F.arrow_udf("double")
+    def estimate(states: pa.Array) -> pa.Array:
+        return pa.array([float(loads(b).estimate()) for b in states.to_pylist()], pa.float64())
 
-    return grouped_df.mapInPandas(
-        lambda it: (est(pdf) for pdf in it),
-        "group_key string, n_rows long, estimate double",
-    )
+    return grouped_df.select("group_key", "n_rows", estimate("state").alias("estimate"))

@@ -20,6 +20,8 @@ per-task memory constant at any scale:
   once (key bytes only), each shard's state moves exactly once. State
   bytes are NEVER attached per probe row (a join would shuffle
   |probes| × |shard state| bytes).
+* delete: the same cogroup. Both are one cogrouped ``applyInArrow``
+  (``_per_shard``): Arrow in and out, each shard's sketch decoded once.
 
 No cross-shard merge exists or is needed — the shard table is the
 distributed filter, and per-shard merge (same geometry) still works
@@ -34,6 +36,7 @@ from dataclasses import replace
 import numpy as np
 import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
@@ -135,18 +138,31 @@ def build_sharded(
     return fold_keyed(keyed, "shard_id", factory, checkpoint_dir)
 
 
-def _has_state(state, op: str) -> bool:
-    """Whether a cogroup's shard group holds its state row. A
-    well-formed shard table has exactly one row per shard; duplicates
-    (unioned or unmerged shard tables, a double-emitting build) fail
-    loudly — using only one of them would silently drop the others'
-    filter state (false negatives after a probe or delete)."""
-    if len(state) > 1:
-        raise ValueError(
-            f"shard {int(state['shard_id'].iloc[0])} has {len(state)} state rows; "
-            f"merge duplicate shard rows (merge_sharded) before {op}"
-        )
-    return len(state) == 1
+def _per_shard(keyed: DataFrame, shard_df: DataFrame, op: str, answer, schema) -> DataFrame:
+    """One cogrouped ``applyInArrow`` on shard_id: each task gets one
+    shard's keys (``keyed`` rows) and its state rows as Arrow tables and
+    returns ``answer(keys, state, sketch)``. ``sketch`` is the shard's
+    decoded sketch, or None when the shard has no state row (nothing
+    was inserted there) or no keys. A well-formed shard table has
+    exactly one row per shard; duplicates (unioned or unmerged shard
+    tables, a double-emitting build) fail loudly — using only one of
+    them would silently drop the others' filter state (false negatives
+    after a probe or delete)."""
+
+    def run(keys: pa.Table, state: pa.Table) -> pa.Table:
+        if state.num_rows > 1:
+            raise ValueError(
+                f"shard {state['shard_id'][0].as_py()} has {state.num_rows} state rows; "
+                f"merge duplicate shard rows (merge_sharded) before {op}"
+            )
+        sketch = loads(state["state"][0].as_py()) if state.num_rows and keys.num_rows else None
+        return answer(keys, state, sketch)
+
+    return (
+        keyed.groupBy("shard_id")
+        .cogroup(shard_df.groupBy("shard_id"))
+        .applyInArrow(run, schema)
+    )
 
 
 def delete_sharded(
@@ -155,10 +171,11 @@ def delete_sharded(
     """Distributed delete against a sharded filter, fully executor-side.
 
     Deletes route to their shard by the build's hash; a COGROUP on
-    shard_id hands each task exactly (that shard's delete keys, that
-    shard's single state row) — one co-partitioned shuffle, no driver
-    collection of keys OR states, per-task memory = one shard. Untouched
-    shards pass through (empty delete group); delete keys routed to a
+    shard_id (``_per_shard``, Arrow in and out) hands each task exactly
+    (that shard's delete keys, that shard's single state row) — one
+    co-partitioned shuffle, no driver collection of keys OR states,
+    per-task memory = one shard. Untouched shards pass through
+    undecoded (empty delete group); delete keys routed to a
     shard that never emitted a row (key was never inserted) are dropped —
     there is nothing to delete in a nonexistent shard.
 
@@ -166,27 +183,18 @@ def delete_sharded(
     filter.go:116-133``) at any delete-set and filter size.
 
     Returns the updated shard table (same SHARD_SCHEMA)."""
-    import pandas as pd
-
     keyed = deletes.select(F.col(key_col).alias("key")).withColumn(
         "shard_id", _shard_col("key", num_shards)
     )
 
-    def apply_deletes(dels: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
-        # a shard with no row had nothing inserted, so there is nothing
-        # to delete; an untouched shard passes through undeserialized
-        if not _has_state(state, "delete") or dels.empty:
-            return state[SHARD_SCHEMA.names]
-        f = loads(state["state"].iloc[0])
-        f.delete_batch(dels["key"])
-        sid = int(state["shard_id"].iloc[0])
-        return state_row(f, int(state["n_rows"].iloc[0]), shard_id=sid).to_pandas()
+    def delete(keys: pa.Table, state: pa.Table, f) -> pa.Table:
+        if f is None:
+            return state.select(SHARD_SCHEMA.names)
+        f.delete_batch(keys["key"])
+        n_rows, sid = state["n_rows"][0].as_py(), state["shard_id"][0].as_py()
+        return pa.Table.from_batches([state_row(f, n_rows, shard_id=sid)])
 
-    return (
-        keyed.groupBy("shard_id")
-        .cogroup(shard_df.groupBy("shard_id"))
-        .applyInPandas(apply_deletes, SHARD_SCHEMA)
-    )
+    return _per_shard(keyed, shard_df, "delete", delete, SHARD_SCHEMA)
 
 
 def merge_sharded(shard_df: DataFrame) -> DataFrame:
@@ -299,9 +307,12 @@ def probe_sharded(
       bytes — data-scale × state-scale. The broadcast lives as long as
       the returned DataFrame (callers probing in a loop should
       materialize promptly).
-    * larger (the 10^12-key regime): COGROUP on shard_id — probes
-      shuffle once (key bytes only), each shard's state moves exactly
-      once to meet its probe group, per-task memory = one shard.
+    * larger (the 10^12-key regime): COGROUP on shard_id
+      (``_per_shard``) — probes shuffle once (key bytes only), each
+      shard's state moves exactly once to meet its probe group and is
+      decoded once, its probe group is hashed once by ``contains``,
+      and the group's Arrow table comes back with ``member`` appended;
+      per-task memory = one shard.
 
     Probes hashing to a shard with no state row (nothing was inserted
     there) come back ``member = false`` — never dropped. Shards that
@@ -329,25 +340,11 @@ def probe_sharded(
         quoted = key_col.replace("`", "``")
         return keyed.withColumn("member", _member_udf(index)(f"`{quoted}`", "shard_id"))
 
-    import pandas as pd
+    def member(keys: pa.Table, state: pa.Table, f) -> pa.Table:
+        hits = np.zeros(keys.num_rows, bool) if f is None else f.contains(keys[key_col])
+        return keys.append_column("member", pa.array(hits, pa.bool_()))
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in keyed.schema.fields
-    ) + ", member boolean"
-
-    def lookup(probe_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if probe_pdf.empty:
-            return pd.DataFrame({c: [] for c in list(probe_pdf.columns) + ["member"]})
-        out = probe_pdf.copy()
-        if not _has_state(state_pdf, "probing"):
-            out["member"] = False  # empty shard: key was never inserted
-            return out
-        f = loads(state_pdf["state"].iloc[0])
-        out["member"] = np.asarray(f.contains(probe_pdf[key_col]), bool)
-        return out
-
-    return (
-        keyed.groupBy("shard_id")
-        .cogroup(shard_df.groupBy("shard_id"))
-        .applyInPandas(lookup, out_schema)
-    )
+    # a new StructType: keyed.schema.add(...) would mutate the
+    # DataFrame's cached schema, after which ``member`` fails to resolve
+    schema = StructType([*keyed.schema.fields, StructField("member", BooleanType())])
+    return _per_shard(keyed, shard_df, "probing", member, schema)

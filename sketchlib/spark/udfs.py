@@ -69,7 +69,10 @@ def membership_udf(spark, sketch_or_blob):
     def contains(col: pa.Array) -> pa.Array:
         return pa.array(_sketch_from(bid, bc).contains(col))
 
-    return contains
+    # deterministic, but marked otherwise (as shard._member_udf) so a
+    # filter on the UDF's output column is not pushed below the
+    # projection with a copy of the UDF — two Python passes per batch
+    return contains.asNondeterministic()
 
 
 def cms_estimate_udf(spark, sketch_or_blob):
@@ -80,7 +83,7 @@ def cms_estimate_udf(spark, sketch_or_blob):
     def estimate(col: pa.Array) -> pa.Array:
         return pa.array(_sketch_from(bid, bc).estimate(col))  # int64 counts
 
-    return estimate
+    return estimate.asNondeterministic()  # one Python pass, as membership_udf
 
 
 def hash_indices_udf(num_buckets: int, strategy: str = "fnv", bits: int = 8):

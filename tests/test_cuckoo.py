@@ -304,6 +304,21 @@ def test_serde_roundtrip():
     assert g.lookup("new-item")
 
 
+def test_decoded_filter_kicks_as_its_writer():
+    """The kick stream depends only on the filter's state, so a filter
+    resumed from its blob (checkpoint, epoch fold, driver accumulator)
+    lays out the same table as an uninterrupted build once kicks run."""
+    f = mk(capacity=4096, fingerprint_bits=8, seed=7)
+    f.insert_batch([f"k{i}" for i in range(3600)])
+    g = CuckooFilter.from_bytes(f.to_bytes())
+    more = [f"m{i}" for i in range(400)]
+    f.insert_batch(more)
+    g.insert_batch(more)
+    assert f.insert_failures > 0  # the kick loop ran and ran out of room
+    assert (g.num_items, g.insert_failures) == (f.num_items, f.insert_failures)
+    assert (g.table == f.table).all()
+
+
 def test_serde_rejects_garbage():
     from sketchlib.errors import CorruptBlobError
 

@@ -553,35 +553,6 @@ def test_read_pages_parquet(spark, docs_parquet):
     assert df.count() == 1000
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Same-bucketed tables join without any shuffle Exchange — the
-    co-located join path big joins need at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from sketchlib.spark.bucketing import bucketed_join, plan_has_exchange, write_bucketed
-
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(o, "b_orders", "o_orderkey", 8)
-    write_bucketed(li, "b_lineitem", "o_orderkey", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-    try:
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-        assert not plan_has_exchange(
-            joined.select("o_orderkey", "o_totalprice", "l_quantity")
-        )
-        # and the same join on raw parquet DOES shuffle (control)
-        raw = o.join(li, "o_orderkey").select("o_orderkey", "o_totalprice", "l_quantity")
-        assert plan_has_exchange(raw)
-        # result parity
-        assert joined.count() == o.join(li, "o_orderkey").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_delete_sharded(spark, docs_df):
     from pyspark.sql import functions as F
 
@@ -613,7 +584,8 @@ def test_delete_sharded_plan_fully_distributed(spark, docs_df):
     drop = keys.limit(100)
     updated = delete_sharded(shards, drop, "key", num_shards=4)
     plan = updated._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
     assert "Broadcast" not in plan
 
 
@@ -635,7 +607,8 @@ def test_probe_sharded_broadcast_and_copartitioned_paths(spark, docs_df):
     assert small.where("member").count() == 1000
     big = probe_sharded(keys, "key", shards, 4, broadcast_threshold_bytes=0)
     plan_big = big._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan_big
+    assert "FlatMapCoGroupsInArrow" in plan_big
+    assert "FlatMapCoGroupsInPandas" not in plan_big
     assert "BroadcastHashJoin" not in plan_big
     assert big.where("member").count() == 1000
     shards.unpersist()
@@ -670,6 +643,32 @@ def test_probe_sharded_evaluates_its_udf_once(spark):
         idx.destroy()
 
 
+def test_column_udfs_evaluate_once(spark):
+    """``membership_udf`` and ``cms_estimate_udf`` each plan ONE
+    ArrowEvalPython node holding one UDF when the frame keeps and
+    filters on their output column (a deterministic UDF is copied into
+    the filter: a second Python pass that hashes every row again)."""
+    from sketchlib.spark import cms_estimate_udf, membership_udf
+
+    keys = spark.createDataFrame([(f"k{i}",) for i in range(200)], "key string")
+    f = CuckooFilter(_cfg(1024))
+    f.insert_batch([f"k{i}" for i in range(0, 200, 2)])
+    cms = CountMinSketch(width=256, depth=3)
+    cms.update(["k1", "k1", "k2"])
+    member, est = membership_udf(spark, f), cms_estimate_udf(spark, cms)
+    cases = [
+        (keys.withColumn("m", member("key")).where("m"), "contains("),
+        (keys.withColumn("e", est("key")).where("e > 0"), "estimate("),
+    ]
+    for df, call in cases:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        (node,) = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+        udfs = node.split("ArrowEvalPython [", 1)[1].split("], [", 1)[0]
+        assert udfs.count(call) == 1, node
+    assert cases[0][0].count() >= 100
+    assert {r.key for r in cases[1][0].collect()} >= {"k1", "k2"}
+
+
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
 @pytest.mark.parametrize("threshold", [64 << 20, 0], ids=["broadcast", "cogroup"])
 def test_probe_sharded_matches_each_shards_contains(spark, kind, threshold):
@@ -693,19 +692,26 @@ def test_probe_sharded_matches_each_shards_contains(spark, kind, threshold):
     kept = shards.where("shard_id != 1")  # shard 1 has no state row
     conf = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    got = {}
     try:
-        probe_df = spark.createDataFrame([(k,) for k in probes], "key string").repartition(3)
-        got = probe_sharded(probe_df, "key", kept, 4, broadcast_threshold_bytes=threshold).collect()
+        # a key column name that is no SQL identifier probes the same
+        for name in ("key", "my key"):
+            probe_df = spark.createDataFrame([(k,) for k in probes], f"`{name}` string")
+            got[name] = probe_sharded(
+                probe_df.repartition(3), name, kept, 4, broadcast_threshold_bytes=threshold
+            ).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", conf)
-    assert len(got) == len(probes)
-    answered = {r.key: (r.shard_id, r.member) for r in got}
-    assert set(answered) == set(probes)
-    assert {sid for sid, _ in answered.values()} == {0, 1, 2, 3}
-    for key, (sid, member) in answered.items():
-        want = sid in state and bool(state[sid].contains([key])[0])
-        assert member is want, (key, sid)
-    assert all(answered[k][1] for k in built if answered[k][0] != 1)
+    for name, rows in got.items():
+        assert len(rows) == len(probes)
+        assert rows[0].__fields__ == [name, "shard_id", "member"]
+        answered = {r[name]: (r.shard_id, r.member) for r in rows}
+        assert set(answered) == set(probes)
+        assert {sid for sid, _ in answered.values()} == {0, 1, 2, 3}
+        for key, (sid, member) in answered.items():
+            want = sid in state and bool(state[sid].contains([key])[0])
+            assert member is want, (key, sid)
+        assert all(answered[k][1] for k in built if answered[k][0] != 1)
 
 
 def test_sharded_probe_index_rejects_mixed_hash_strategies(spark):

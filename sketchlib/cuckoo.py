@@ -32,6 +32,8 @@ mutex (shared-nothing partitions) and no goroutine batch chunking
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from . import serde
@@ -51,9 +53,20 @@ class CuckooFilter(MergeableSketch):
     def __init__(self, config: CuckooConfig):
         self.config = config
         self.table = np.zeros((config.num_buckets, config.bucket_size), np.uint16)
-        self.fill = np.zeros(config.num_buckets, np.int32)
+        self.fill = np.zeros(config.num_buckets, np.int32)  # shadows the property
         self.num_items = 0
         self.insert_failures = 0
+
+    @functools.cached_property
+    def fill(self) -> np.ndarray:
+        """Per-bucket count of stored fingerprints (the table is compact,
+        so it is also each bucket's first empty slot). Only writes read
+        it: a decoded filter counts it from the table on its first
+        write, and a filter that is only probed never does."""
+        b = self.config.bucket_size
+        # flat indices: count_nonzero(axis=1) over the narrow bucket
+        # axis costs ~2x more
+        return np.bincount(np.flatnonzero(self.table) // b, minlength=self.config.num_buckets).astype(np.int32)
 
     # ------------------------------------------------------------ hashing
 
@@ -373,12 +386,11 @@ class CuckooFilter(MergeableSketch):
     def from_state(cls, words, arrays) -> "CuckooFilter":
         capacity, bucket_size, fp_bits, max_kicks, strategy, batch_size, seed, items, failures = words
         strategy = serde.strategy_name(strategy)
-        f = cls(CuckooConfig(capacity, bucket_size, fp_bits, max_kicks, strategy, batch_size, seed))
         (table,) = arrays
-        num_buckets = f.config.num_buckets
-        f.table = table.reshape(num_buckets, bucket_size)
-        # per-bucket count via flat indices: count_nonzero(axis=1) over
-        # the narrow bucket axis costs ~2x more per blob
-        f.fill = np.bincount(np.flatnonzero(table) // bucket_size, minlength=num_buckets).astype(np.int32)
+        # no __init__: its zero table would be replaced, and ``fill`` is
+        # counted from the decoded table only if the filter is written
+        f = cls.__new__(cls)
+        f.config = CuckooConfig(capacity, bucket_size, fp_bits, max_kicks, strategy, batch_size, seed)
+        f.table = table.reshape(f.config.num_buckets, bucket_size)
         f.num_items, f.insert_failures = items, failures
         return f

@@ -31,6 +31,7 @@ from collections.abc import Callable
 
 import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType
 
 from ..serde import loads
 from .build import fold_keyed
@@ -86,7 +87,7 @@ def grouped_estimates(grouped_df: DataFrame) -> DataFrame:
     (HLL distinct, KMV). One scalar Arrow UDF over the tiny ``state``
     column, executor-side; Spark keeps the other two columns."""
 
-    @F.arrow_udf("double")
+    @F.arrow_udf(DoubleType())
     def estimate(states: pa.Array) -> pa.Array:
         return pa.array([float(loads(b).estimate()) for b in states.to_pylist()], pa.float64())
 

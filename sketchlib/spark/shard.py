@@ -206,9 +206,10 @@ def merge_sharded(shard_df: DataFrame) -> DataFrame:
 
 class ShardedProbeIndex:
     """Reusable broadcast handle for probing in a loop: the shard blobs
-    are collected and broadcast ONCE; every ``probe_sharded`` call that
-    passes the handle reuses the broadcast — no per-call collect, no
-    state-size re-measure aggregation, no leaked broadcasts. Call
+    are collected and broadcast ONCE, and the member UDF is built (and
+    pickled) once, on the first probe; every ``probe_sharded`` call that
+    passes the handle reuses both — no per-call collect, no state-size
+    re-measure aggregation, no new UDF, no leaked broadcasts. Call
     ``destroy()`` when the probing loop is done (after materializing
     the last probe result)."""
 
@@ -227,6 +228,39 @@ class ShardedProbeIndex:
             raise ValueError(f"shards disagree on hash_strategy: {strategies}")
         self._blobs = None
         return next(iter(strategies.values()), None)
+
+    @functools.cached_property
+    def member_udf(self):
+        """The broadcast probe: a scalar Arrow UDF (key, shard_id) →
+        member. Each batch is hashed once with the index's strategy;
+        rows are grouped by shard with one stable argsort, and each
+        shard present in the batch answers its rows from the shared
+        hashes. A shard with no state row answers False."""
+        bc, strategy = self.broadcast, self.hash_strategy
+        # driver-side JVM broadcast id: the worker-level deser cache key
+        # (udfs._sketch_from; id(bc) would alias after GC address reuse)
+        bid = bc._jbroadcast.id()
+
+        @F.arrow_udf(BooleanType())
+        def member(keys: pa.Array, shard_ids: pa.Array) -> pa.Array:
+            n = len(keys)
+            out = np.zeros(n, bool)
+            if n and strategy is not None:
+                h = kernels.hash64_batch(keys, strategy)
+                sids = shard_ids.to_numpy(zero_copy_only=False)
+                order = np.argsort(sids, kind="stable")
+                cuts = np.flatnonzero(np.diff(sids[order])) + 1
+                for rows in np.split(order, cuts):
+                    f = _sketch_from(bid, bc, int(sids[rows[0]]))
+                    if f is not None:
+                        out[rows] = f.contains_hashes(h[rows])
+            return pa.array(out)
+
+        # deterministic, but marked otherwise so the optimizer treats the
+        # UDF as a barrier: a filter on ``member`` would otherwise be
+        # pushed below the projection with a copy of the UDF — two
+        # Python passes
+        return member.asNondeterministic()
 
     @classmethod
     def from_shards(cls, shard_df: DataFrame) -> "ShardedProbeIndex":
@@ -248,38 +282,6 @@ class ShardedProbeIndex:
 
     def destroy(self) -> None:
         self.broadcast.destroy()
-
-
-def _member_udf(index: ShardedProbeIndex):
-    """The broadcast probe: a scalar Arrow UDF (key, shard_id) → member.
-    Each batch is hashed once with the index's strategy; rows are
-    grouped by shard with one stable argsort, and each shard present in
-    the batch answers its rows from the shared hashes. A shard with no
-    state row answers False."""
-    bc, strategy = index.broadcast, index.hash_strategy
-    # driver-side JVM broadcast id: the worker-level deser cache key
-    # (udfs._sketch_from; id(bc) would alias after GC address reuse)
-    bid = bc._jbroadcast.id()
-
-    @F.arrow_udf("boolean")
-    def member(keys: pa.Array, shard_ids: pa.Array) -> pa.Array:
-        n = len(keys)
-        out = np.zeros(n, bool)
-        if n and strategy is not None:
-            h = kernels.hash64_batch(keys, strategy)
-            sids = shard_ids.to_numpy(zero_copy_only=False)
-            order = np.argsort(sids, kind="stable")
-            cuts = np.flatnonzero(np.diff(sids[order])) + 1
-            for rows in np.split(order, cuts):
-                f = _sketch_from(bid, bc, int(sids[rows[0]]))
-                if f is not None:
-                    out[rows] = f.contains_hashes(h[rows])
-        return pa.array(out)
-
-    # deterministic, but marked otherwise so the optimizer treats the UDF
-    # as a barrier: a filter on ``member`` would otherwise be pushed
-    # below the projection with a copy of the UDF — two Python passes
-    return member.asNondeterministic()
 
 
 def probe_sharded(
@@ -321,10 +323,11 @@ def probe_sharded(
 
     ``index``: a prebuilt ``ShardedProbeIndex`` — ALWAYS takes the
     broadcast path, skipping both the per-call collect+broadcast and
-    the state-size measuring aggregation. The recommended handle for
-    probe loops (one broadcast for the whole loop, explicitly
-    destroyable); without it each call creates a broadcast that lives
-    until the returned DataFrame is garbage-collected."""
+    the state-size measuring aggregation, and reuses the index's UDF.
+    The recommended handle for probe loops (one broadcast and one UDF
+    for the whole loop, explicitly destroyable); without it each call
+    creates a broadcast that lives until the returned DataFrame is
+    garbage-collected."""
     if index is None and shard_df is None:
         raise ValueError("need shard_df or a prebuilt ShardedProbeIndex")
     if num_shards <= 0:
@@ -333,17 +336,21 @@ def probe_sharded(
         state_bytes = (
             shard_df.select(F.sum(F.length("state")).alias("b")).first().b or 0
         )
-    keyed = probes.withColumn("shard_id", _shard_col(key_col, num_shards))
+    shard = _shard_col(key_col, num_shards)
 
     if index is not None or state_bytes <= broadcast_threshold_bytes:
         index = index or ShardedProbeIndex.from_shards(shard_df)
         quoted = key_col.replace("`", "``")
-        return keyed.withColumn("member", _member_udf(index)(f"`{quoted}`", "shard_id"))
+        # one projection, one analysis: the UDF takes the shard
+        # expression itself rather than the column it defines
+        member = index.member_udf(F.col(f"`{quoted}`"), shard)
+        return probes.withColumns({"shard_id": shard, "member": member})
 
     def member(keys: pa.Table, state: pa.Table, f) -> pa.Table:
         hits = np.zeros(keys.num_rows, bool) if f is None else f.contains(keys[key_col])
         return keys.append_column("member", pa.array(hits, pa.bool_()))
 
+    keyed = probes.withColumn("shard_id", shard)
     # a new StructType: keyed.schema.add(...) would mutate the
     # DataFrame's cached schema, after which ``member`` fails to resolve
     schema = StructType([*keyed.schema.fields, StructField("member", BooleanType())])

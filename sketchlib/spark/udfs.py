@@ -16,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
 from ..serde import loads
 
@@ -65,13 +66,14 @@ def membership_udf(spark, sketch_or_blob):
     """Arrow UDF col→bool: cuckoo/bloom membership (no false negatives)."""
     bc, bid = _broadcast_blob(spark, sketch_or_blob)
 
-    @F.arrow_udf("boolean")
+    @F.arrow_udf(BooleanType())
     def contains(col: pa.Array) -> pa.Array:
         return pa.array(_sketch_from(bid, bc).contains(col))
 
-    # deterministic, but marked otherwise (as shard._member_udf) so a
-    # filter on the UDF's output column is not pushed below the
-    # projection with a copy of the UDF — two Python passes per batch
+    # deterministic, but marked otherwise (as
+    # ShardedProbeIndex.member_udf) so a filter on the UDF's output
+    # column is not pushed below the projection with a copy of the
+    # UDF — two Python passes per batch
     return contains.asNondeterministic()
 
 
@@ -79,7 +81,7 @@ def cms_estimate_udf(spark, sketch_or_blob):
     """Arrow UDF col→long: count-min frequency estimate (never under)."""
     bc, bid = _broadcast_blob(spark, sketch_or_blob)
 
-    @F.arrow_udf("long")
+    @F.arrow_udf(LongType())
     def estimate(col: pa.Array) -> pa.Array:
         return pa.array(_sketch_from(bid, bc).estimate(col))  # int64 counts
 
@@ -91,7 +93,11 @@ def hash_indices_udf(num_buckets: int, strategy: str = "fnv", bits: int = 8):
     (the reference's GetIndices exposed as a column function)."""
     from ..hashing import kernels
 
-    @F.arrow_udf("i1 long, i2 long, fp int")
+    indices_type = StructType(
+        [StructField("i1", LongType()), StructField("i2", LongType()), StructField("fp", IntegerType())]
+    )
+
+    @F.arrow_udf(indices_type)
     def indices(col: pa.Array) -> pa.Array:
         i1, i2, fp = kernels.indices_batch(col, num_buckets, strategy, bits)
         return pa.StructArray.from_arrays(

@@ -319,6 +319,23 @@ def test_decoded_filter_kicks_as_its_writer():
     assert (g.table == f.table).all()
 
 
+def test_decoded_filter_counts_fill_only_when_written():
+    """A decoded filter that is only probed never counts its per-bucket
+    fill; its first write counts the writer's fill, deletes included,
+    and its blob stays byte-identical to the writer's."""
+    f = mk(capacity=2048, fingerprint_bits=12, seed=3)
+    f.insert_batch([f"k{i}" for i in range(1500)])
+    f.delete_batch([f"k{i}" for i in range(0, 1500, 7)])
+    g = CuckooFilter.from_bytes(f.to_bytes())
+    assert g.to_bytes() == f.to_bytes()
+    assert g.lookup_batch([f"k{i}" for i in range(1, 1500, 7)]).all()
+    assert "fill" not in vars(g)
+    g.insert("new")
+    f.insert("new")
+    assert g.to_bytes() == f.to_bytes()
+    assert (g.fill == f.fill).all()
+
+
 def test_serde_rejects_garbage():
     from sketchlib.errors import CorruptBlobError
 

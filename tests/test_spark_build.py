@@ -614,31 +614,41 @@ def test_probe_sharded_broadcast_and_copartitioned_paths(spark, docs_df):
     shards.unpersist()
 
 
-def test_probe_sharded_evaluates_its_udf_once(spark):
+def test_probe_sharded_evaluates_its_udf_once(spark, monkeypatch):
     """The broadcast probe's member UDF runs in ONE ArrowEvalPython
     node holding one UDF: under the perfbench-shaped aggregate, which
     reads ``member`` twice, and under a filter on ``member`` (a
     deterministic UDF would be pushed into the filter AND kept in the
-    projection, a second Python pass over the batch)."""
+    projection, a second Python pass over the batch). Repeated probe
+    calls on one index reuse one UDF object, built and pickled once."""
     from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
 
+    made = []
+    arrow_udf = F.arrow_udf
+    monkeypatch.setattr(F, "arrow_udf", lambda *a, **k: made.append(a) or arrow_udf(*a, **k))
     keys = spark.createDataFrame([(f"k{i}", i % 3 > 0) for i in range(300)], "key string, present boolean")
     rows = build_sharded(keys.where("present"), "key", 4, cfg=_cfg()).collect()
     idx = ShardedProbeIndex(spark, {int(r.shard_id): bytes(r.state) for r in rows})
     try:
         probed = probe_sharded(keys, "key", num_shards=4, index=idx)
+        udf, judf = idx.member_udf, idx.member_udf._unwrapped._judf
+        again = probe_sharded(keys, "key", num_shards=4, index=idx)
+        assert len(made) == 1
+        assert idx.member_udf is udf and udf._unwrapped._judf is judf
         m = F.col("member")
         agg = probed.agg(
             F.sum((m & F.col("present")).cast("long")).alias("hit"),
             F.sum((m & ~F.col("present")).cast("long")).alias("fp"),
         )
-        for df in (agg, probed.where("member")):
+        for df in (agg, probed.where("member"), again.where("member")):
             plan = df._jdf.queryExecution().executedPlan().toString()
             (node,) = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
             udfs = node.split("ArrowEvalPython [", 1)[1].split("], [", 1)[0]
             assert udfs.count("member(") == 1, node
         assert agg.first().hit == 200
         assert probed.where("member").count() >= 200
+        assert again.columns == [*keys.columns, "shard_id", "member"]
+        assert sorted(again.collect()) == sorted(probed.collect())
     finally:
         idx.destroy()
 

@@ -62,7 +62,9 @@ class CuckooFilter(MergeableSketch):
         """Per-bucket count of stored fingerprints (the table is compact,
         so it is also each bucket's first empty slot). Only writes read
         it: a decoded filter counts it from the table on its first
-        write, and a filter that is only probed never does."""
+        write, and a filter that is only probed never does. A write must
+        read it before it changes ``table``, or the count would see the
+        change."""
         b = self.config.bucket_size
         # flat indices: count_nonzero(axis=1) over the narrow bucket
         # axis costs ~2x more
@@ -258,6 +260,8 @@ class CuckooFilter(MergeableSketch):
         """Remove one stored occurrence per item (filter.go:116-133;
         bucket.Remove zeroes the first match only). Deleting items never
         inserted can, as upstream documents, induce false negatives."""
+        # count (a decoded filter's lazy) fill before any row changes
+        fill = self.fill
         i1, i2, fp = self._indices(items)
         n = len(fp)
         result = np.zeros(n, bool)
@@ -278,14 +282,14 @@ class CuckooFilter(MergeableSketch):
                 conflicted = np.isin(i1, bad_rows) | np.isin(i2, bad_rows)
                 uniq &= ~conflicted
         if uniq.any():
-            result[uniq] = self._delete_unique(i1[uniq], i2[uniq], fp[uniq])
+            result[uniq] = self._delete_unique(i1[uniq], i2[uniq], fp[uniq], fill)
         rest = np.nonzero(~uniq)[0]
         for j in rest:  # slow path: duplicates / shared buckets, rare
-            result[j] = self._delete_one(int(i1[j]), int(i2[j]), int(fp[j]))
+            result[j] = self._delete_one(int(i1[j]), int(i2[j]), int(fp[j]), fill)
         self.num_items -= int(result.sum())
         return result
 
-    def _delete_unique(self, i1, i2, fp) -> np.ndarray:
+    def _delete_unique(self, i1, i2, fp, fill) -> np.ndarray:
         f = fp[:, None]
         in1 = (self.table[i1] == f).any(1)
         use_row = np.where(in1, i1, i2)
@@ -300,10 +304,10 @@ class CuckooFilter(MergeableSketch):
             # re-compact: stable-sort zeros to the back
             order = np.argsort(sub == 0, kind="stable", axis=1)
             self.table[rows] = np.take_along_axis(sub, order, 1)
-            np.add.at(self.fill, rows, -1)
+            np.add.at(fill, rows, -1)
         return hit
 
-    def _delete_one(self, i1: int, i2: int, fp: int) -> bool:
+    def _delete_one(self, i1: int, i2: int, fp: int, fill: np.ndarray) -> bool:
         for row in (i1, i2):
             slots = self.table[row]
             pos = np.nonzero(slots == fp)[0]
@@ -311,7 +315,7 @@ class CuckooFilter(MergeableSketch):
                 slots[pos[0]] = 0
                 order = np.argsort(slots == 0, kind="stable")
                 self.table[row] = slots[order]
-                self.fill[row] -= 1
+                fill[row] -= 1
                 return True
         return False
 
@@ -331,7 +335,7 @@ class CuckooFilter(MergeableSketch):
 
     def reset(self) -> None:
         self.table[:] = 0
-        self.fill[:] = 0
+        self.fill = np.zeros(self.config.num_buckets, np.int32)
         self.num_items = 0
         self.insert_failures = 0
 

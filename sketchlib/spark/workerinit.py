@@ -10,13 +10,17 @@ spark-core jar that Spark also puts on the worker's path (5,359
 entries). Re-reading them cost ~130 ms per task on a 4-core host,
 however little the task did (``tools/task_cost.py`` measures it).
 
-The Spark install does not change while an application runs, so its
-archives need no re-read. Importing this module (``sketchlib.spark``
+The Spark install's archives do not change while an application runs,
+so they need no re-read. Importing this module (``sketchlib.spark``
 does) makes ``zipimporter.invalidate_caches`` skip archives inside the
-resolved ``$SPARK_HOME``. Every other archive is still re-read, above
-all the task's own ``userFiles-*`` zips. A worker's first task imports
-sketchlib and pays the re-read; the later tasks of that process do not.
-Without ``SPARK_HOME`` nothing is skipped.
+resolved ``$SPARK_HOME/python/lib`` and ``$SPARK_HOME/jars``. Every
+other archive is still re-read, above all the task's own
+``addPyFile``/``--py-files`` zips, wherever they are fetched to: on a
+standalone cluster that is ``$SPARK_HOME/work/<app>/<executor>``,
+inside the install, so the skip is limited to those two directories. A
+worker's first task imports sketchlib and pays the re-read; the later
+tasks of that process do not. Without ``SPARK_HOME`` nothing is
+skipped.
 """
 
 from __future__ import annotations
@@ -26,17 +30,19 @@ import os
 import zipimport
 
 _home = os.environ.get("SPARK_HOME")
-# the install's resolved path, with a trailing separator: Spark puts
+# the directories' resolved paths, with a trailing separator: Spark puts
 # both symlinked (``$SPARK_HOME/python/lib``) and resolved (the jar)
 # paths on the worker's path
-SPARK_ROOT = os.path.join(os.path.realpath(_home), "") if _home else None
+STATIC_DIRS = (
+    tuple(os.path.join(os.path.realpath(_home), *d, "") for d in (("python", "lib"), ("jars",))) if _home else ()
+)
 
 
 @functools.lru_cache(maxsize=None)
 def in_spark_install(archive: str) -> bool:
-    """Whether ``archive`` resolves to a file inside the Spark install
-    (resolved once per archive path)."""
-    return SPARK_ROOT is not None and os.path.realpath(archive).startswith(SPARK_ROOT)
+    """Whether ``archive`` resolves to a file in one of the Spark
+    install's ``STATIC_DIRS`` (resolved once per archive path)."""
+    return os.path.realpath(archive).startswith(STATIC_DIRS)
 
 
 _reread = zipimport.zipimporter.invalidate_caches

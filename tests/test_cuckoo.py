@@ -336,6 +336,31 @@ def test_decoded_filter_counts_fill_only_when_written():
     assert (g.fill == f.fill).all()
 
 
+def test_decoded_filter_deletes_then_inserts_as_its_writer():
+    """A decoded filter's first write may be a delete: it counts fill
+    from the table as it was before the delete, so the emptied slots
+    are refilled and no kept fingerprint is overwritten."""
+    keys = [f"k{i}" for i in range(1500)]
+    f = mk(capacity=2048, fingerprint_bits=12, seed=3)
+    f.insert_batch(keys)
+    blob = f.to_bytes()
+    # fast path (distinct buckets), then the slow path (one key twice)
+    for gone in (keys[::5], ["k1", "k1", "k2"]):
+        g = CuckooFilter.from_bytes(blob)
+        w = CuckooFilter.from_bytes(blob)
+        w.fill  # the writer counts fill before its delete
+        assert (g.delete_batch(gone) == w.delete_batch(gone)).all()
+        assert (g.fill == w.fill).all()
+        assert (g.fill >= 0).all()
+        again = [f"x{i}" for i in range(300)] + gone
+        placed = g.insert_batch(again)
+        assert placed.all()
+        assert (placed == w.insert_batch(again)).all()
+        assert g.to_bytes() == w.to_bytes()
+        kept = sorted(set(keys) - set(gone))
+        assert g.lookup_batch(kept + again).all()
+
+
 def test_serde_rejects_garbage():
     from sketchlib.errors import CorruptBlobError
 

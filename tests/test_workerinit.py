@@ -1,7 +1,7 @@
 """sketchlib.spark.workerinit: PySpark's per-task
-``importlib.invalidate_caches()`` re-reads no archive of the Spark
-install, and still re-reads every other archive (``addPyFile`` and
-``--py-files`` zips above all)."""
+``importlib.invalidate_caches()`` re-reads no archive in the Spark
+install's ``python/lib`` and ``jars``, and still re-reads every other
+archive (``addPyFile`` and ``--py-files`` zips above all)."""
 
 from __future__ import annotations
 
@@ -24,13 +24,20 @@ def _zip(path, module: str) -> str:
 
 def test_spark_install_is_matched_by_resolved_path(tmp_path):
     """Archives are matched after symlinks resolve, so the symlinked
-    ``$SPARK_HOME/python/lib`` and the resolved jar path both count;
-    a path that only starts with the install's name does not."""
-    assert workerinit.SPARK_ROOT == os.path.join(os.path.realpath(HOME), "")
+    ``$SPARK_HOME/python/lib`` and the resolved jar path both count; a
+    path that only starts with a matched directory's name does not, nor
+    does the rest of the install (a standalone executor's ``work``
+    directory, where ``addPyFile`` zips are fetched)."""
+    root = os.path.realpath(HOME)
+    assert workerinit.STATIC_DIRS == (os.path.join(root, "python", "lib", ""), os.path.join(root, "jars", ""))
     lib = os.path.join(HOME, "python", "lib", "pyspark.zip")
     assert workerinit.in_spark_install(lib)
     assert workerinit.in_spark_install(os.path.realpath(lib))
-    assert not workerinit.in_spark_install(workerinit.SPARK_ROOT.rstrip(os.sep) + "-other/x.zip")
+    assert workerinit.in_spark_install(os.path.join(HOME, "jars", "spark-core.jar"))
+    assert not workerinit.in_spark_install(os.path.join(root, "jars-other", "x.zip"))
+    assert not workerinit.in_spark_install(root + "-other/python/lib/x.zip")
+    assert not workerinit.in_spark_install(os.path.join(HOME, "work", "app-x", "0", "user.zip"))
+    assert not workerinit.in_spark_install(os.path.join(root, "work", "app-x", "0", "user.zip"))
     link = tmp_path / "link.zip"
     link.symlink_to(os.path.realpath(lib))
     assert workerinit.in_spark_install(str(link))
@@ -40,7 +47,8 @@ def test_spark_install_is_matched_by_resolved_path(tmp_path):
 def test_worker_rereads_only_archives_outside_the_spark_install(spark, tmp_path):
     """Inside a worker that has imported sketchlib,
     ``importlib.invalidate_caches()`` reads no archive under the
-    resolved ``$SPARK_HOME`` (pyspark.zip, py4j, the spark-core jar)
+    resolved ``$SPARK_HOME/python/lib`` or ``$SPARK_HOME/jars``
+    (pyspark.zip, py4j, the spark-core jar)
     and re-reads the zip shipped with ``sc.addPyFile``."""
     spark.sparkContext.addPyFile(_zip(tmp_path / "skl_workerinit_probe.zip", "skl_workerinit_probe"))
 
@@ -70,9 +78,11 @@ def test_worker_rereads_only_archives_outside_the_spark_install(spark, tmp_path)
         yield pa.RecordBatch.from_pydict({"archive": archives, "reread": [a in read for a in archives]})
 
     rows = spark.range(1, numPartitions=1).mapInArrow(probe, "archive string, reread boolean").collect()
-    root = os.path.join(os.path.realpath(HOME), "")
-    ours = {r.archive: r.reread for r in rows if os.path.realpath(r.archive).startswith(root)}
+    root = os.path.realpath(HOME)
+    static = tuple(os.path.join(root, *d, "") for d in (("python", "lib"), ("jars",)))
+    ours = {r.archive: r.reread for r in rows if os.path.realpath(r.archive).startswith(static)}
     assert any(a.endswith("pyspark.zip") for a in ours), rows
+    assert any(os.path.basename(a).startswith("spark-core") for a in ours), rows
     assert not any(ours.values()), ours
     (added,) = [r for r in rows if os.path.basename(r.archive) == "skl_workerinit_probe.zip"]
     assert added.reread

@@ -15,6 +15,7 @@ from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -357,7 +358,7 @@ def _embeddings_with_near_dups(spark, sf_dir) -> DataFrame:
     (vec_id, dim index): reproducible everywhere, no RNG state."""
     import numpy as np
 
-    @F.pandas_udf("array<double>")
+    @F.pandas_udf(ArrayType(DoubleType()))
     def perturb(vid: pd.Series, vec: pd.Series) -> pd.Series:
         if len(vec) == 0:
             return pd.Series([], dtype=object)

@@ -100,8 +100,14 @@ class CuckooFilter(MergeableSketch):
 
     def insert_batch(self, items) -> np.ndarray:
         """Vectorized InsertBatch (filter.go:168-174): per-item success."""
-        i1, i2, fp = self._indices(items)
-        return self._place(i1, i2, fp)
+        return self.insert_hashes(kernels.hash64_batch(items, self.hash_strategy))
+
+    def insert_hashes(self, h: np.ndarray) -> np.ndarray:
+        """``insert_batch`` of items whose ``hash64_batch`` under
+        ``hash_strategy`` is ``h``, the write-side twin of
+        ``contains_hashes`` (a caller routing one hashed batch to many
+        filters hashes it once)."""
+        return self._place(*self._indices_from(h))
 
     def update(self, items) -> None:
         """MergeableSketch-protocol alias so the Spark build layer can

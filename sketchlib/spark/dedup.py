@@ -13,6 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..hashing import kernels
 from .checkpoint import drop_materialized, materialize, propagate_materialized
@@ -138,7 +139,7 @@ def minhash_signatures(
     a = rng.integers(1, (1 << 63) - 1, num_perm, dtype=np.uint64) | np.uint64(1)
     b = rng.integers(0, (1 << 63) - 1, num_perm, dtype=np.uint64)
 
-    @F.pandas_udf("array<long>")
+    @F.pandas_udf(ArrayType(LongType()))
     def sig(texts: pd.Series) -> pd.Series:
         if len(texts) == 0:
             return pd.Series([], dtype=object)
@@ -161,6 +162,12 @@ def _band_keys_from_sigs(sigs: np.ndarray, bands: int, rows_per_band: int) -> np
             key = key * U64(1099511628211) + m[:, :, c]
         key ^= np.arange(bands, dtype=np.uint64)[None, :] << U64(56)
     return key.astype(np.int64)
+
+
+# sig_bands' return type: each doc's signature and its band keys
+_SIGNATURE_TYPE = StructType(
+    [StructField("minhash", ArrayType(LongType())), StructField("bands", ArrayType(LongType()))]
+)
 
 
 def _minhash_sigs_and_bands(
@@ -186,7 +193,7 @@ def _minhash_sigs_and_bands(
     a = rng.integers(1, (1 << 63) - 1, num_perm, dtype=np.uint64) | np.uint64(1)
     b = rng.integers(0, (1 << 63) - 1, num_perm, dtype=np.uint64)
 
-    @F.pandas_udf("minhash array<long>, bands array<long>")
+    @F.pandas_udf(_SIGNATURE_TYPE)
     def sig_bands(texts: pd.Series) -> pd.DataFrame:
         if len(texts) == 0:
             return pd.DataFrame({"minhash": [], "bands": []})
@@ -318,7 +325,7 @@ def simhash_udf(bits: int = 64):
     Vectorized: all tokens of the batch hashed in one kernel call;
     per-doc bit-vote via np.add.at on (doc, bit) pairs."""
 
-    @F.pandas_udf("long")
+    @F.pandas_udf(LongType())
     def simhash(texts: pd.Series) -> pd.Series:
         tokens: list[str] = []
         doc_ids: list[int] = []
@@ -754,7 +761,7 @@ def repeated_passages(
     doc-level dedup's job, and the fallback whole-text hash would
     produce out-of-range span arithmetic)."""
 
-    @F.pandas_udf("array<long>")
+    @F.pandas_udf(ArrayType(LongType()))
     def passage_grams(texts: pd.Series) -> pd.Series:
         if len(texts) == 0:
             return pd.Series([], dtype=object)

@@ -15,11 +15,12 @@ running_state + one incoming blob no matter how many scan partitions
 fed the group. Both dataframe-native shapes materialize multi-blob
 batches the UDF can't refuse: ``groupBy().applyInPandas`` builds the
 whole group as one pandas frame (~P/fanout blobs), and ``mapInArrow``
-materializes ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
-(default 10k) per input batch — with MB-scale CMS states that is tens
-of GB per task at the 100 TB / 128 MB-partition scale this library
-targets (and no byte-capped batch conf exists for mapInArrow in
-Spark 4.1; ``maxBytesPerBatch`` only applies to transformWithState).
+materializes up to ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (10k) per input batch. Spark 4.1 also cuts a ``mapInArrow`` batch
+at ``spark.sql.execution.arrow.maxBytesPerBatch`` (``get_spark`` sets
+4 MiB), but only after the row that crosses it: a batch still holds
+at least one whole blob, and the cap is a session-wide conf that every
+other Arrow stage of the job shares, so a merge cannot pick its own.
 
 Shuffle volume: fanout × state_size — KBs–MBs, never data-scale.
 """
@@ -204,9 +205,12 @@ def merge_sketches(
     pass ``direct_partitions=0`` for it. For giant membership state
     use ``shard.build_sharded`` instead (total state 2 B/key across
     ALL shards, nothing merges globally)."""
-    p = sketch_df.rdd.getNumPartitions()
+    # the gate reads the partitions of the Dataset it collects, so the
+    # direct path plans once
+    rows_df = sketch_df.select(*_FOLD_COLS)
+    p = rows_df.rdd.getNumPartitions()
     if direct_merge(p, state_bytes, direct_partitions, direct_bytes):
-        rows = _direct_collect(sketch_df.select(*_FOLD_COLS))
+        rows = _direct_collect(rows_df)
     else:
         rows = tree_merge_df(sketch_df, min(fanout, max(p, 1))).select(*_FOLD_COLS).collect()
     return {name: sk for name, (sk, _, _) in fold_states(rows).items()}

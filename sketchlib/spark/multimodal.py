@@ -233,9 +233,9 @@ def decode_media(
     because random bytes never carry a valid media magic).
 
     Batch shape matters at scale: media bytes dominate memory, so the
-    Arrow batch size for this stage should be set by bytes not rows
-    (spark.sql.execution.arrow.maxRecordsPerBatch down to ~100 for
-    multi-MB media)."""
+    Arrow batches of this stage are cut by bytes, not rows
+    (spark.sql.execution.arrow.maxBytesPerBatch, 4 MiB under
+    ``get_spark``; a batch ends after the row that crosses it)."""
     if codec_mode not in ("auto", "real", "stub"):
         raise ValueError(f"codec_mode must be auto|real|stub, got {codec_mode!r}")
 

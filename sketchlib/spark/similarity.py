@@ -12,6 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from .checkpoint import materialize, propagate_materialized
 
@@ -65,7 +66,7 @@ def hyperplane_signature_udf(dim: int, bits: int = 16, seed: int = 42):
     rng = np.random.Generator(np.random.PCG64(seed))
     planes = rng.standard_normal((bits, dim)).astype(np.float32)
 
-    @F.pandas_udf("int")
+    @F.pandas_udf(IntegerType())
     def sig(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
@@ -243,7 +244,7 @@ def ivf_assign_udf(centroids: np.ndarray):
     c = centroids.astype(np.float32)
     c_norms = (c**2).sum(1)
 
-    @F.pandas_udf("int")
+    @F.pandas_udf(IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
@@ -296,7 +297,7 @@ def banded_signature_udf(dim: int, bands: int = 12, bits_per_band: int = 6, seed
     planes = rng.standard_normal((bands * bits_per_band, dim)).astype(np.float32)
     weights = (1 << np.arange(bits_per_band, dtype=np.int64))[None, None, :]
 
-    @F.pandas_udf("array<long>")
+    @F.pandas_udf(ArrayType(LongType()))
     def sig(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)

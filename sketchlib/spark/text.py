@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import LongType
 
 # small deterministic stopword lists for the n-gram language heuristic
 LANG_MARKERS = {
@@ -117,7 +118,7 @@ def doc_fingerprint_udf(window: int = 8):
 
     from ..hashing import kernels
 
-    @F.pandas_udf("long")
+    @F.pandas_udf(LongType())
     def fingerprint(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), np.int64)
         windows: list[bytes] = []

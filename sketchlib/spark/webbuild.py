@@ -216,7 +216,11 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
     SKETCH_SCHEMA row per (partition, fixed sketch) and per
     (partition, shard) — the shard filters named ``_shard_name(sid)``.
     ``shard_id`` is SHARD_ROUTING, so each url lands in the shard
-    ``build_sharded`` and the probes route it to."""
+    ``build_sharded`` and the probes route it to. Each batch's urls are
+    hashed once and the hashes routed (``CuckooFilter.insert_hashes``):
+    a byte-capped batch spans every shard, and one hash call per shard
+    slice would cost more than hashing the batch."""
+    from ..hashing import kernels
     from .shard import shard_expr
 
     web = _web_update(("cms",), ("kll",))
@@ -224,10 +228,13 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
     fixed = tuple(factories)
 
     def step(sks: dict, batches: Iterator[pa.RecordBatch]) -> None:
+        strategy = sks[names[0]].hash_strategy  # one factory: one strategy
+
         def routed():
             for rb in batches:
-                for sid, urls in split_by_key(rb.column(2), rb.column(0)):
-                    sks[names[sid]].update(urls)
+                h = pa.array(kernels.hash64_batch(rb.column(0), strategy))
+                for sid, hs in split_by_key(rb.column(2), h):
+                    sks[names[sid]].insert_hashes(hs.to_numpy())
                 yield rb
 
         web({k: sks[k] for k in fixed}, routed())
@@ -239,12 +246,13 @@ def _single_pass(docs_df, factories: dict, num_shards: int, shard_fac):
     return fold_partitions(frame, {**factories, **{n: shard_fac for n in names}}, step)
 
 
-def _merge_single_pass(frame, fixed_names) -> dict:
+def _merge_single_pass(rows_df, fixed_names) -> dict:
     """Driver side of the single pass (it runs only under the direct
-    gate, so one collect): the fixed sketches fold row by row; each
-    shard's partition filters merge in ONE ``CuckooFilter.merge`` call,
-    one batched placement instead of one per partition."""
-    rows = _direct_collect(frame.select(*_FOLD_COLS))
+    gate, so one collect of the fold's ``_FOLD_COLS``): the fixed
+    sketches fold row by row; each shard's partition filters merge in
+    ONE ``CuckooFilter.merge`` call, one batched placement instead of
+    one per partition."""
+    rows = _direct_collect(rows_df)
     fixed = fold_states(r for r in rows if r[0] in fixed_names)
     merged = {name: sk for name, (sk, _, _) in fixed.items()}
     parts: dict[str, list] = {}
@@ -337,12 +345,14 @@ def build_web_pipeline(
     shard_fac = shard_factory(num_shards, cfg)
     fixed_bytes = state_bytes_hint(*factories.values())
     state_bytes = fixed_bytes + num_shards * state_bytes_hint(shard_fac)
-    frame = _single_pass(docs_df, factories, num_shards, shard_fac)
-    p = frame.rdd.getNumPartitions()
+    # the gate reads the partitions of the Dataset it collects, so the
+    # plan is built once
+    rows_df = _single_pass(docs_df, factories, num_shards, shard_fac).select(*_FOLD_COLS)
+    p = rows_df.rdd.getNumPartitions()
     if not (direct_merge(p, state_bytes) and p * num_shards <= SINGLE_PASS_FILTERS):
         return _exchange_plan(docs_df, factories, fixed_bytes, num_shards, cfg)
 
-    merged = _merge_single_pass(frame, set(factories))
+    merged = _merge_single_pass(rows_df, set(factories))
     shard_rows = []
     for sid in range(num_shards):
         f = merged.get(_shard_name(sid))

@@ -44,6 +44,9 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     from pyspark.sql import SparkSession
 
+    from sketchlib.spark.session import ARROW_BATCH_BYTES
+
+    # get_spark's Arrow caps, so tests see the batches a build sees
     s = (
         SparkSession.builder.master("local[2]")
         .appName("sketchlib-tests")
@@ -52,6 +55,7 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()

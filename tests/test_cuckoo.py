@@ -406,3 +406,24 @@ def test_contains_equals_contains_hashes(strategy, bits, values, inserted):
     assert got.tolist() == want
     if not f.insert_failures:  # a failed kick chain may drop a stored item
         assert got[: min(inserted, len(values))].all() and got[len(values) :].all()
+
+
+@pytest.mark.parametrize("bits", (8, 16))
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_insert_hashes_equals_insert_batch(strategy, bits):
+    """One insert path: ``insert_hashes(hash64_batch(x))`` leaves the
+    table, counters and blob that ``insert_batch(x)`` leaves, over
+    batches that fill the filter past its kick limit (so kicks and
+    failures happen) and hold nulls, empty and 10 kB values."""
+    keys = [f"k{i}" for i in range(330)] + [None, "", "é" * 10_000, "k7"]
+    by_items = mk(capacity=256, hash_strategy=strategy, fingerprint_bits=bits)
+    by_hashes = mk(capacity=256, hash_strategy=strategy, fingerprint_bits=bits)
+    for lo in range(0, len(keys), 97):
+        batch = keys[lo : lo + 97]
+        want = by_items.insert_batch(batch)
+        got = by_hashes.insert_hashes(kernels.hash64_batch(batch, strategy))
+        assert got.tolist() == want.tolist()
+    assert by_items.insert_failures > 0
+    assert (by_hashes.table == by_items.table).all()
+    assert (by_hashes.fill == by_items.fill).all()
+    assert by_hashes.to_bytes() == by_items.to_bytes()

@@ -6,6 +6,7 @@ and the end-to-end text invariant through Arrow (FIXTURES.md §4).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -22,8 +23,23 @@ from sketchlib.spark import (
 )
 
 
+ROWS_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+BYTES_CONF = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
 def _cfg(capacity=8192):
     return CuckooConfig(capacity=capacity, fingerprint_bits=16, hash_strategy="xx")
+
+
+@contextmanager
+def _conf(spark, key: str, value: str):
+    """``key`` set to ``value`` for the block, then restored."""
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 # --------------------------------------------------- build + merge == single
@@ -119,13 +135,13 @@ def test_web_sketch_composite_build(spark, docs_df):
 
 
 def test_web_sketches_token_slices_keep_cms_exact(spark, docs_df, monkeypatch):
-    """Tokenizing in slices, and in Arrow batches of any size, leaves
-    the CMS byte-identical to one whole-batch tokenization
-    (counters are additive)."""
+    """Tokenizing in slices, and in Arrow batches of any row or byte
+    cap, leaves the CMS byte-identical to one whole-batch tokenization
+    (counters are additive). A 4 kB cap is below the widest page
+    (29 kB), so some batches hold one row over the cap."""
     from sketchlib.spark import webbuild
     from sketchlib.spark.merge import merge_sketches
-
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    from sketchlib.spark.session import ARROW_BATCH_BYTES
 
     def cms_bytes():
         sks = webbuild.build_web_sketches(
@@ -133,16 +149,60 @@ def test_web_sketches_token_slices_keep_cms_exact(spark, docs_df, monkeypatch):
         )
         return merge_sketches(sks)["cms"].to_bytes()
 
-    whole = cms_bytes()
-    saved = spark.conf.get(conf)
-    try:
+    with _conf(spark, BYTES_CONF, str(1 << 30)):
+        whole = cms_bytes()
+    for batch_bytes in (str(ARROW_BATCH_BYTES), "65536", "4096"):
         for batch_rows in ("10000", "64", "7"):
-            spark.conf.set(conf, batch_rows)
-            for slice_docs in (2500, 37, 5):
-                monkeypatch.setattr(webbuild, "TOKEN_SLICE", slice_docs)
-                assert cms_bytes() == whole, (batch_rows, slice_docs)
-    finally:
-        spark.conf.set(conf, saved)
+            with _conf(spark, BYTES_CONF, batch_bytes), _conf(spark, ROWS_CONF, batch_rows):
+                for slice_docs in (2500, 37, 5):
+                    monkeypatch.setattr(webbuild, "TOKEN_SLICE", slice_docs)
+                    assert cms_bytes() == whole, (batch_bytes, batch_rows, slice_docs)
+
+
+def _batch_shapes(df) -> list:
+    """(rows, string bytes, widest string) of each Arrow batch a
+    ``mapInArrow`` over ``df``'s one string column receives."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def shapes(batches):
+        for rb in batches:
+            lens = pc.binary_length(rb.column(0))
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "rows": [rb.num_rows],
+                    "bytes": [pc.sum(lens).as_py()],
+                    "widest": [pc.max(lens).as_py()],
+                }
+            )
+
+    return [tuple(r) for r in df.mapInArrow(shapes, "rows long, bytes long, widest long").collect()]
+
+
+def test_arrow_batches_are_cut_by_bytes_and_rows(spark):
+    """Under the session's byte cap a task's batches of wide text stop
+    at the cap: each holds less than the cap without its widest row
+    (a row wider than the cap still arrives, over it). Narrow keys
+    still come in batches of the 10,000-row cap."""
+    from sketchlib.spark.session import ARROW_BATCH_BYTES
+
+    cap = ARROW_BATCH_BYTES
+    assert spark.conf.get(BYTES_CONF) == str(cap)
+    assert spark.conf.get(ROWS_CONF) == "10000"
+    # 20 kB pages, two of them 5 MB (wider than the cap), in one task
+    wide = spark.range(0, 500, 1, 1).selectExpr(
+        "repeat('x', CASE WHEN id IN (100, 101) THEN 5000000 ELSE 20000 END) AS text"
+    )
+    got = _batch_shapes(wide)
+    assert sum(rows for rows, _, _ in got) == 500
+    assert len(got) > 3
+    for rows, size, widest in got:
+        assert size - widest < cap, (rows, size)
+    assert max(widest for _, _, widest in got) > cap
+    keys = spark.range(0, 25_000, 1, 1).selectExpr(
+        "concat('https://h', id % 1000, '.example.org/p/', lpad(id, 8, '0')) AS key"
+    )
+    assert [rows for rows, _, _ in _batch_shapes(keys)] == [10_000, 10_000, 5_000]
 
 
 # ------------------------------------------------------------ flagship pipeline
@@ -161,7 +221,8 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
     """Both plans of build_web_pipeline — the gated single pass and the
     exchange plan above the gate — give build_sharded's per-shard
     counts, probe every url present, and give the HLL/CMS states of a
-    standalone build_web_sketches merge."""
+    standalone build_web_sketches merge, over byte-capped batches that
+    each span several shards."""
     from sketchlib.spark import webbuild
     from sketchlib.spark.merge import merge_sketches
     from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
@@ -169,9 +230,21 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
     if not single_pass:
         monkeypatch.setattr(webbuild, "direct_merge", lambda *a, **k: False)
     docs = docs_df.repartition(3)  # several partition filters per shard to merge
-    fixed, rows = webbuild.build_web_pipeline(
-        docs, 1000, num_shards=8, cms_width=1 << 12, capacity_slack=1.5
-    )
+    # a 16 kB byte cap: batches of a few pages, each spanning shards
+    with _conf(spark, BYTES_CONF, "16384"):
+        fixed, rows = webbuild.build_web_pipeline(
+            docs, 1000, num_shards=8, cms_width=1 << 12, capacity_slack=1.5
+        )
+        web = merge_sketches(
+            webbuild.build_web_sketches(
+                docs,
+                {
+                    "hll": lambda: HyperLogLog(14),
+                    "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
+                    "kll": lambda: KLLSketch(200),
+                },
+            )
+        )
     cfg = CuckooConfig(capacity=1500, fingerprint_bits=16, hash_strategy="xx")
     want = sorted(build_sharded(docs.select("url"), "url", 8, cfg=cfg).collect())
     assert _shard_counts(rows) == _shard_counts(want)
@@ -182,16 +255,6 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
     assert probe_sharded(keys, "key", num_shards=8, index=idx).where("member").count() == 1000
     idx.destroy()
 
-    web = merge_sketches(
-        webbuild.build_web_sketches(
-            docs,
-            {
-                "hll": lambda: HyperLogLog(14),
-                "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
-                "kll": lambda: KLLSketch(200),
-            },
-        )
-    )
     assert sorted(fixed) == ["cms", "hll", "kll"]
     assert _fixed_bytes(fixed) == _fixed_bytes(web)
     assert fixed["kll"].n == 1000

@@ -149,7 +149,7 @@ def q_web_sketch_family(spark, sf_dir):
     from sketchlib import CuckooConfig, CuckooFilter
     from sketchlib.sketches import BloomFilter, CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark import membership_udf
-    from sketchlib.spark.merge import merge_sketches, state_bytes_hint
+    from sketchlib.spark.merge import merge_sketches
     from sketchlib.spark.webbuild import build_web_sketches
 
     docs = _t(spark, sf_dir, "documents")
@@ -162,14 +162,11 @@ def q_web_sketch_family(spark, sf_dir):
         "cms": lambda: CountMinSketch(width=1 << 14, depth=4),
         "kll": lambda: KLLSketch(200),
     }
-    merged = merge_sketches(
-        build_web_sketches(docs, factories, url_col="text"),
-        # production shape: the byte-aware gate sized from real state
-        # widths (at this geometry the direct path still wins — the
-        # forced executor-fold branch itself is pinned by the byte-gate
-        # unit tests and the local-cluster fold parity test)
-        state_bytes=state_bytes_hint(*factories.values()),
-    )
+    # production shape: the byte-aware gate reads the real state widths
+    # off the built frame (at this geometry the direct path still wins —
+    # the forced executor-fold branch itself is pinned by the byte-gate
+    # unit tests and the local-cluster fold parity test)
+    merged = merge_sketches(build_web_sketches(docs, factories, url_col="text"))
     member = membership_udf(spark, merged["cuckoo"])
     texts = docs.select(F.col("text").alias("key")).distinct()
     hits = texts.withColumn("m", member("key")).where("m").count()
@@ -2049,13 +2046,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #       which consumes the pair edges); collect-once probe index ->
     #       sharded_membership (+ sharded_delete/sharded_bloom_
     #       membership siblings); byte-aware direct-merge gate (merge/
-    #       webbuild) -> web_sketch_family passes state_bytes=
-    #       state_bytes_hint(...) through merge_sketches (gate
-    #       arithmetic on the driver path; the forced executor-fold
-    #       BRANCH is pinned by the byte-gate unit tests + the
-    #       local-cluster fold-parity test, not by a driver query) +
+    #       webbuild) -> web_sketch_family's merge_sketches reads the
+    #       state size its build stamped on the frame (gate arithmetic
+    #       on the driver path; the forced executor-fold BRANCH is
+    #       pinned by the byte-gate unit tests + the local-cluster
+    #       fold-parity test, not by a driver query) +
     #       cuckoo_membership/hll_distinct_check/cms_frequency_check
-    #       (tree_merge users).
+    #       (tree_merge users, gated by the same stamped size).
     #   (b) no query goes two full rounds without a driver-green row:
     #       ALL 18 round-4 tail names (last green in CORRECTNESS_r03)
     #       rotate IN; the new tail holds ONLY names green in

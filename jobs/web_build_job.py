@@ -54,7 +54,7 @@ def _build_fixed(spark, docs, args):
 
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
     from sketchlib.spark.build import build_sketches
-    from sketchlib.spark.merge import merge_sketches, state_bytes_hint, tree_merge
+    from sketchlib.spark.merge import merge_sketches, tree_merge
     from sketchlib.spark.webbuild import build_web_sketches
 
     if not args.checkpoint:
@@ -63,14 +63,11 @@ def _build_fixed(spark, docs, args):
             "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
             "kll": lambda: KLLSketch(200),
         }
-        return merge_sketches(
-            build_web_sketches(docs, factories),
-            # byte-aware gate: --cms-width defaults to 1<<16 (2 MB
-            # state); at the 256-partition threshold the direct pull
-            # would be ~1.5 GB — the hint routes wide builds to the
-            # bounded executor fold
-            state_bytes=state_bytes_hint(*factories.values()),
-        )
+        # byte-aware gate: --cms-width defaults to 1<<16 (2 MB state);
+        # at the 256-partition threshold the direct pull would be
+        # ~1.5 GB — the state size the build stamps on its frame routes
+        # wide builds to the bounded executor fold
+        return merge_sketches(build_web_sketches(docs, factories))
     from pyspark.sql import functions as F
 
     # (?U) = Java UNICODE_CHARACTER_CLASS, so \S complements the
@@ -89,40 +86,34 @@ def _build_fixed(spark, docs, args):
     from concurrent.futures import ThreadPoolExecutor
 
     def hll():
-        fac = lambda: HyperLogLog(14)  # noqa: E731
         return tree_merge(
             build_sketches(
                 docs.select("url"),
                 "url",
-                fac,
+                lambda: HyperLogLog(14),
                 checkpoint_dir=os.path.join(args.checkpoint, "hll"),
-            ),
-            state_bytes=state_bytes_hint(fac),
+            )
         )
 
     def cms():
-        fac = lambda: CountMinSketch(width=args.cms_width, depth=4)  # noqa: E731
         return tree_merge(
             build_sketches(
                 toks,
                 "tok",
-                fac,
+                lambda: CountMinSketch(width=args.cms_width, depth=4),
                 checkpoint_dir=os.path.join(args.checkpoint, "cms"),
-            ),
-            state_bytes=state_bytes_hint(fac),
+            )
         )
 
     def kll():
-        fac = lambda: KLLSketch(200)  # noqa: E731
         return tree_merge(
             build_sketches(
                 docs.select(F.length("text").cast("double").alias("v")),
                 "v",
-                fac,
+                lambda: KLLSketch(200),
                 checkpoint_dir=os.path.join(args.checkpoint, "kll"),
                 numeric=True,
-            ),
-            state_bytes=state_bytes_hint(fac),
+            )
         )
 
     with ThreadPoolExecutor(max_workers=3) as ex:

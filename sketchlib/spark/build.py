@@ -37,6 +37,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 # the metric tail every state row carries, after its key columns
 _TAIL = [
@@ -69,6 +70,13 @@ def keyed_schema(key: str):
 SKETCH_SCHEMA = from_arrow_schema(_state_schema("sketch", "part_id"))
 SHARD_SCHEMA = keyed_schema("shard_id")
 
+# metadata key of the ``state`` field of a frame fold_partitions makes:
+# one partition's serialized state size (``state_bytes_hint``), which
+# the merge's byte gate reads (sketchlib.spark.merge). Spark keeps it
+# through select, repartition, persist and parquet; a union keeps the
+# first child's
+STATE_BYTES = "state_bytes"
+
 # Version of the state-row layout, pinned in checkpoint fingerprints:
 # rows published under an older layout must not be re-emitted. 3 is the
 # first whose state blobs are sketchlib.serde's checksummed frame.
@@ -91,13 +99,34 @@ def state_row(sk, n_rows: int, **key) -> pa.RecordBatch:
     return pa.RecordBatch.from_pylist([row], schema=_state_schema(*key))
 
 
+def state_bytes_hint(*factories) -> int:
+    """Driver-side estimate of ONE partition row group's serialized
+    state size: one empty instance of each distinct factory, serialized
+    and dropped at once. Costs ~ms and no Spark job. Exact for
+    array-backed sketches (CMS, HLL, cuckoo, Bloom — their state arrays
+    are config-sized, identical empty or full); an UNDER-estimate for
+    growing sketches (KLL, t-digest), which are KB-scale where the
+    array-backed ones are the MB-scale states the byte gate exists
+    for."""
+    size = {fac: len(fac().to_bytes()) for fac in set(factories)}
+    return sum(size[fac] for fac in factories)
+
+
+def state_field(*factories) -> StructField:
+    """The binary ``state`` field of a frame whose partitions each hold
+    one state of every factory, carrying ``state_bytes_hint`` as its
+    ``STATE_BYTES`` metadata."""
+    return StructField("state", BinaryType(), True, {STATE_BYTES: state_bytes_hint(*factories)})
+
+
 def fold_partitions(
     df,
     factories: dict[str, Callable[[], object]],
     step: Callable[[dict, Iterator[pa.RecordBatch]], None],
     checkpoint_dir: str | None = None,
 ):
-    """``df`` → one SKETCH_SCHEMA row per (partition, factory name).
+    """``df`` → one SKETCH_SCHEMA row per (partition, factory name),
+    its ``state`` field stamped with the factories' ``state_bytes_hint``.
 
     Each task builds one sketch per factory and hands ``step(sketches,
     batches)`` its partition's Arrow batch iterator, so a step can carry
@@ -128,7 +157,8 @@ def fold_partitions(
 
         yield from taskfs.checkpointed(checkpoint_dir, f"part-{pid:05d}", build)
 
-    return df.mapInArrow(fold, SKETCH_SCHEMA)
+    schema = StructType([*SKETCH_SCHEMA.fields[:-1], state_field(*factories.values())])
+    return df.mapInArrow(fold, schema)
 
 
 def split_by_key(keys: pa.Array, values: pa.Array):

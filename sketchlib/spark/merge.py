@@ -1,11 +1,21 @@
 """Adaptive two-level associative merge of state rows.
 
 The Spark analogue of ``treeAggregate`` (SURVEY.md §3.4 step 5):
-level 1 routes partition rows round-robin to ≤fanout groups and
+level 1 routes partition rows round-robin to ≤``FANOUT`` groups and
 STREAMS each group through a running merge executor-side; level 2
-merges the ≤fanout survivors on the driver. Merge order within a
+merges the ≤``FANOUT`` survivors on the driver. Merge order within a
 group is whatever the shuffle delivers — safe because every sketch's
 merge is associative + commutative (property-tested, north-rule gate).
+
+Depth is picked by ONE gate, ``_direct_merge``, over the Dataset to be
+collected: level 1 is skipped — one collect, folded driver-side —
+while the frame has ≤ ``direct_partitions`` partitions AND partitions ×
+one partition's state size ≤ ``DIRECT_BYTES``. The size rides on the
+frame: ``build.fold_partitions`` stamps ``state_bytes_hint`` of its
+factories into the ``state`` field's metadata (``build.STATE_BYTES``),
+so no caller passes it. A frame without it (``tree_merge_df`` output, a
+``createDataFrame(…, SKETCH_SCHEMA)`` table) is gated on partitions
+only.
 
 Level 1 is a deliberate RDD ``mapPartitions`` — one of the rare spots
 where the imperative per-partition escape hatch is the *correct* tool:
@@ -14,7 +24,7 @@ hands them over ONE AT A TIME, so task memory is exactly
 running_state + one incoming blob no matter how many scan partitions
 fed the group. Both dataframe-native shapes materialize multi-blob
 batches the UDF can't refuse: ``groupBy().applyInPandas`` builds the
-whole group as one pandas frame (~P/fanout blobs), and ``mapInArrow``
+whole group as one pandas frame (~P/FANOUT blobs), and ``mapInArrow``
 materializes up to ``spark.sql.execution.arrow.maxRecordsPerBatch``
 rows (10k) per input batch. Spark 4.1 also cuts a ``mapInArrow`` batch
 at ``spark.sql.execution.arrow.maxBytesPerBatch`` (``get_spark`` sets
@@ -22,7 +32,7 @@ at ``spark.sql.execution.arrow.maxBytesPerBatch`` (``get_spark`` sets
 at least one whole blob, and the cap is a session-wide conf that every
 other Arrow stage of the job shares, so a merge cannot pick its own.
 
-Shuffle volume: fanout × state_size — KBs–MBs, never data-scale.
+Shuffle volume: FANOUT × state_size — KBs–MBs, never data-scale.
 """
 
 from __future__ import annotations
@@ -31,13 +41,15 @@ from itertools import groupby
 from operator import itemgetter
 
 from ..serde import loads
-from .build import SKETCH_SCHEMA, keyed_schema, state_row
+from .build import SKETCH_SCHEMA, STATE_BYTES, keyed_schema, state_row
 
 _FOLD_COLS = ("sketch", "part_id", "n_rows", "state")
 
-# the merge knobs' defaults (see merge_sketches)
+# merge groups of the executor level
 FANOUT = 16
+# most partitions the direct path collects (merge_sketches' default)
 DIRECT_PARTITIONS = 256
+# most state bytes (partitions × one partition's state) it collects
 DIRECT_BYTES = 256 << 20
 
 
@@ -62,10 +74,11 @@ def fold_states(rows) -> dict:
     return acc
 
 
-def fold_groups_rdd(rdd, k: int, fold):
-    """Round-robin routing of an RDD's rows to ``k`` merge groups +
-    streaming per-group ``fold`` (shared by tree_merge_df and
-    udfs.cms_heavy_hitters — keep the routing in ONE place).
+def fold_groups_rdd(rdd, fold):
+    """Round-robin routing of an RDD's rows to ``k`` = min(FANOUT,
+    partitions) merge groups + streaming per-group ``fold`` (shared by
+    tree_merge_df and udfs.cms_heavy_hitters — keep the routing in ONE
+    place).
 
     Keyed by ``(source_partition_index + row_index) % k`` — balanced
     for ANY input, independent of the part_id column's diversity. A
@@ -79,6 +92,7 @@ def fold_groups_rdd(rdd, k: int, fold):
     ``partitionBy``'s portable_hash is the identity on small
     non-negative ints, so group j lands in partition j — exactly one
     group per task."""
+    k = min(FANOUT, max(rdd.getNumPartitions(), 1))
 
     def route(idx, it):
         for i, row in enumerate(it):
@@ -91,12 +105,12 @@ def _direct_collect(frame):
     """Collect a blob frame for a direct (driver-side) fold, turning a
     ``spark.driver.maxResultSize`` rejection into actionable guidance.
 
-    The direct path gates on PARTITION count — a fine proxy for
-    partition-build outputs (a handful of rows per partition) but not
-    for a blob table re-read from storage or coalesced after a union,
-    where few partitions can hold many MB-scale rows. maxResultSize
-    (default 1g) is the loud backstop for that shape; the remedy is
-    the executor-level path."""
+    The direct gate counts PARTITIONS × one partition's state — exact
+    for partition-build outputs (one row per partition per sketch) but
+    not for a blob table re-read from storage or coalesced after a
+    union, where few partitions can hold many MB-scale rows.
+    maxResultSize (default 1g) is the loud backstop for that shape; the
+    remedy is the executor-level path."""
     try:
         return frame.collect()
     except Exception as e:  # pragma: no cover - env-sized threshold
@@ -110,15 +124,15 @@ def _direct_collect(frame):
         raise
 
 
-def tree_merge_df(sketch_df, fanout: int = FANOUT):
-    """Level-1 merge: p partition rows → ≤fanout rows per sketch name,
+def tree_merge_df(sketch_df):
+    """Level-1 merge: p partition rows → ≤FANOUT rows per sketch name,
     executor-side."""
 
     def fold(rows):
         for name, (sk, part, n) in fold_states(rows).items():
             yield tuple(state_row(sk, n, sketch=name, part_id=part).to_pylist()[0].values())
 
-    rdd = fold_groups_rdd(sketch_df.select(*_FOLD_COLS).rdd, fanout, fold)
+    rdd = fold_groups_rdd(sketch_df.select(*_FOLD_COLS).rdd, fold)
     return sketch_df.sparkSession.createDataFrame(rdd, SKETCH_SCHEMA)
 
 
@@ -142,85 +156,59 @@ def merge_keyed(df, key: str):
     return df.sparkSession.createDataFrame(rows.rdd.mapPartitions(fold), keyed_schema(key))
 
 
-def state_bytes_hint(*factories) -> int:
-    """Driver-side estimate of ONE partition row group's serialized
-    state size: serialize one empty instance of each factory. Costs ~ms
-    and no Spark job. Exact for array-backed sketches (CMS, HLL,
-    cuckoo, Bloom — their state arrays are config-sized, identical
-    empty or full); an UNDER-estimate for growing sketches (KLL,
-    t-digest), which are KB-scale where the array-backed ones are the
-    MB-scale states the byte gate exists for."""
-    return sum(len(fac().to_bytes()) for fac in factories)
+def _direct_merge(frame, direct_partitions: int = DIRECT_PARTITIONS) -> bool:
+    """The adaptive-depth gate: may ``frame`` be folded on the driver in
+    one collect? Yes when it has ≤ ``direct_partitions`` partitions
+    and, where its ``state`` field carries ``STATE_BYTES``, partitions ×
+    that size ≤ ``DIRECT_BYTES``. Pass the Dataset that is collected:
+    then the gate and the collect share one plan."""
+    p = frame.rdd.getNumPartitions()
+    state_bytes = frame.schema["state"].metadata.get(STATE_BYTES)
+    return p <= direct_partitions and (state_bytes is None or p * state_bytes <= DIRECT_BYTES)
 
 
-def direct_merge(
-    p: int,
-    state_bytes: int | None = None,
-    direct_partitions: int = DIRECT_PARTITIONS,
-    direct_bytes: int = DIRECT_BYTES,
-) -> bool:
-    """The adaptive-depth gate: may a frame of ``p`` partitions, each
-    holding ``state_bytes`` of state rows, be folded on the driver in
-    one collect? See ``merge_sketches``."""
-    return p <= direct_partitions and (state_bytes is None or p * state_bytes <= direct_bytes)
-
-
-def merge_sketches(
-    sketch_df,
-    fanout: int = FANOUT,
-    direct_partitions: int = DIRECT_PARTITIONS,
-    state_bytes: int | None = None,
-    direct_bytes: int = DIRECT_BYTES,
-) -> dict[str, object]:
+def merge_sketches(sketch_df, direct_partitions: int = DIRECT_PARTITIONS) -> dict[str, object]:
     """Bounded-memory merge of a SKETCH_SCHEMA frame → {name: merged
     sketch object} on the driver.
 
-    Adaptive depth: when the frame has ≤ ``direct_partitions``
-    partitions the executor level is SKIPPED — one ``collect`` of the
-    state rows, folded driver-side one blob at a time. The driver
-    transient is p × state_size per name (≤ 256 × ~0.5 MB ≈ 128 MB at
-    the flagship's CMS geometry), and the build stage keeps its full
-    scan parallelism because ``collect`` is a plain job over the
-    existing partitions. Measured on the 800k-doc bench corpus (65
-    blob rows): the level-1 RDD route+partitionBy+fold costs 1.1-1.7 s
-    of pure task/python-shuffle overhead where the direct collect-fold
-    costs 0.6 s — two extra stages buy nothing until the blob count is
-    large enough that a single driver pull would be GBs.
+    Adaptive depth (``_direct_merge``): while the frame has ≤
+    ``direct_partitions`` partitions and their state fits in
+    ``DIRECT_BYTES`` (256 MB of driver transient), the executor level
+    is SKIPPED — one ``collect`` of the state rows, folded driver-side
+    one blob at a time. The build stage keeps its full scan parallelism
+    because ``collect`` is a plain job over the existing partitions.
+    Measured on the 800k-doc bench corpus (65 blob rows): the level-1
+    RDD route+partitionBy+fold costs 1.1-1.7 s of pure task/python-
+    shuffle overhead where the direct collect-fold costs 0.6 s — two
+    extra stages buy nothing until the blob count is large enough that
+    a single driver pull would be GBs.
 
-    Past the threshold (100 TB ⇒ ~10^5-10^6 scan partitions) level 1
-    (``tree_merge_df``) routes the rows round-robin to ≤fanout
-    streaming folds executor-side, so the driver never pulls more than
-    fanout rows per name.
+    Past the gate (100 TB ⇒ ~10^5-10^6 scan partitions, or a 2 MB-wide
+    CMS at a few hundred partitions, which would otherwise be a silent
+    ~0.5 GB driver pull) level 1 (``tree_merge_df``) routes the rows
+    round-robin to ≤``FANOUT`` streaming folds executor-side, so the
+    driver never pulls more than FANOUT rows per name.
 
-    ``state_bytes`` makes the gate BYTE-aware: pass
-    ``state_bytes_hint(*factories)`` (the summed empty-state size of
-    one partition's row group — exact for array-backed sketches, no
-    Spark job) and the direct path additionally requires
-    p × state_bytes ≤ ``direct_bytes`` (default 256 MB of driver
-    transient). Without it the gate counts partitions only, which a
-    2 MB-wide CMS at the threshold turns into a silent ~0.5 GB driver
-    pull — maxResultSize is the loud backstop, but the byte cap avoids
-    tripping it at all. The gate also counts PARTITIONS, not rows: a
-    blob table re-read from storage can pack many rows per partition;
-    pass ``direct_partitions=0`` for it. For giant membership state
-    use ``shard.build_sharded`` instead (total state 2 B/key across
-    ALL shards, nothing merges globally)."""
-    # the gate reads the partitions of the Dataset it collects, so the
-    # direct path plans once
+    The byte half of the gate needs no argument: the state size rides
+    on the frame's ``state`` field (see the module docstring). The gate
+    counts PARTITIONS, not rows: a blob table re-read from storage can
+    pack many rows per partition; pass ``direct_partitions=0`` for it.
+    For giant membership state use ``shard.build_sharded`` instead
+    (total state 2 B/key across ALL shards, nothing merges
+    globally)."""
     rows_df = sketch_df.select(*_FOLD_COLS)
-    p = rows_df.rdd.getNumPartitions()
-    if direct_merge(p, state_bytes, direct_partitions, direct_bytes):
+    if _direct_merge(rows_df, direct_partitions):
         rows = _direct_collect(rows_df)
     else:
-        rows = tree_merge_df(sketch_df, min(fanout, max(p, 1))).select(*_FOLD_COLS).collect()
+        rows = tree_merge_df(rows_df).select(*_FOLD_COLS).collect()
     return {name: sk for name, (sk, _, _) in fold_states(rows).items()}
 
 
-def tree_merge(sketch_df, **knobs):
+def tree_merge(sketch_df, direct_partitions: int = DIRECT_PARTITIONS):
     """Full merge of a one-sketch frame (``build_sketches`` output) →
-    the merged sketch, or None for an empty frame. ``knobs`` are
-    ``merge_sketches``'."""
-    merged = merge_sketches(sketch_df, **knobs)
+    the merged sketch, or None for an empty frame. See
+    ``merge_sketches``."""
+    merged = merge_sketches(sketch_df, direct_partitions)
     if len(merged) > 1:
         raise ValueError(
             f"tree_merge got state rows of {sorted(merged)}; "

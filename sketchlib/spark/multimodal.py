@@ -26,12 +26,15 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType
+from pyspark.sql.types import StructField, StructType
 
-MEDIA_SCHEMA = "doc_id long, media binary, media_type string"
+MEDIA_SCHEMA = StructType().add("doc_id", LongType()).add("media", BinaryType()).add("media_type", StringType())
 
-_DECODED_FIELDS = (
-    "doc_id long, media_type string, width int, height int, "
-    "n_frames int, feature array<float>"
+_DECODED_FIELDS = StructType(
+    [StructField("doc_id", LongType()), StructField("media_type", StringType())]
+    + [StructField(c, IntegerType()) for c in ("width", "height", "n_frames")]
+    + [StructField("feature", ArrayType(FloatType()))]
 )
 
 

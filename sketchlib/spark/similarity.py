@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
 from .checkpoint import materialize, propagate_materialized
 
@@ -148,7 +148,8 @@ def build_lsh_index(
         .parquet(f"{path}/data")
     )
     df.sparkSession.createDataFrame(
-        [(bits, seed, dim)], "bits int, seed int, dim int"
+        [(bits, seed, dim)],
+        StructType([StructField(c, IntegerType()) for c in ("bits", "seed", "dim")]),
     ).write.mode("overwrite").parquet(f"{path}/params")
 
 
@@ -393,7 +394,7 @@ def build_ann_index(
     spark = df.sparkSession
     spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
-        "cell int, centroid array<double>",
+        StructType([StructField("cell", IntegerType()), StructField("centroid", ArrayType(DoubleType()))]),
     ).write.mode("overwrite").parquet(f"{path}/centroids")
     return cent
 

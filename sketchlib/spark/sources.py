@@ -19,8 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
 
 def read_pages(
     spark: SparkSession,

@@ -16,7 +16,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa  # module scope: the arrow_udf type hints below resolve here
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, BooleanType, IntegerType, LongType, StringType
+from pyspark.sql.types import StructField, StructType
 
 from ..serde import loads
 
@@ -203,7 +204,6 @@ def cms_heavy_hitters(
     width: int = 1 << 14,
     depth: int = 4,
     candidate_factor: int = 4,
-    fanout: int = 16,
 ):
     """Approximate top-k heavy hitters (SURVEY §2.1 stretch goal).
 
@@ -222,12 +222,12 @@ def cms_heavy_hitters(
     the dict only RANK candidates — the CMS supplies the final
     estimates, so floor inflation never reaches the output. Partial
     rows then merge behind the same gate as every sketch frame
-    (``merge.direct_merge``, byte-aware with the CMS state size): one
-    collect + driver fold, or ``merge.fold_groups_rdd`` streaming
-    executor folds (the groupBy().applyInPandas shape merge.py
-    documents as the multi-blob materialization anti-pattern is exactly
-    what this replaced). Rows shuffled: ≤fanout × (state + candidate
-    list) — k-scale, not data-scale.
+    (``merge._direct_merge``; their ``state`` field carries the CMS
+    state size): one collect + driver fold, or ``merge.fold_groups_rdd``
+    streaming executor folds (the groupBy().applyInPandas shape
+    merge.py documents as the multi-blob materialization anti-pattern
+    is exactly what this replaced). Rows shuffled: ≤``merge.FANOUT`` ×
+    (state + candidate list) — k-scale, not data-scale.
 
     Any key type is accepted — keys are cast to string up front (the
     same canonicalization the CMS hash applies), so a bigint user_id
@@ -240,8 +240,11 @@ def cms_heavy_hitters(
     import pyarrow as pa
 
     from ..sketches import CountMinSketch
+    from .build import state_field
+    from .merge import _direct_collect, _direct_merge, fold_groups_rdd
 
-    PARTIAL_SCHEMA = "cand array<string>, state binary"
+    cms_state = state_field(lambda: CountMinSketch(width=width, depth=depth))
+    PARTIAL_SCHEMA = StructType([StructField("cand", ArrayType(StringType())), cms_state])
     emit_n = candidate_factor * k
     prune_keep = 8 * emit_n
     prune_at = 32 * emit_n
@@ -291,13 +294,10 @@ def cms_heavy_hitters(
         if cms is not None:
             yield (sorted(cands), cms.to_bytes())
 
-    from .merge import _direct_collect, direct_merge, fold_groups_rdd, state_bytes_hint
-
-    p = partials.rdd.getNumPartitions()
-    if direct_merge(p, state_bytes_hint(lambda: CountMinSketch(width=width, depth=depth))):
+    if _direct_merge(partials):
         rows = _direct_collect(partials)
     else:
-        rows = fold_groups_rdd(partials.rdd, min(fanout, p), _fold_partial_rows).collect()
+        rows = fold_groups_rdd(partials.rdd, _fold_partial_rows).collect()
     merged = list(_fold_partial_rows(rows))
     if not merged:
         return []

@@ -45,8 +45,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, LongType, StringType, StructType, TimestampType
 
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+PAGES_SCHEMA = (
+    StructType().add("url", StringType()).add("warc_ts", TimestampType()).add("html", BinaryType())
+    .add("text", StringType()).add("lang", StringType())
+)
 
 _CRLF2 = b"\r\n\r\n"
 _MARKER = b"WARC/"
@@ -417,7 +421,7 @@ def read_warc(
     # a zero-match glob a valid empty frame (inference raises on empty)
     indexed = spark.createDataFrame(
         files.rdd.map(lambda r: r.path).zipWithIndex(),
-        "path string, _i long",
+        StructType().add("path", StringType()).add("_i", LongType()),
     )
     return (
         indexed.repartitionByRange(n_files, "_i")

@@ -53,11 +53,11 @@ from ..serde import loads
 from .build import column_update, fold_partitions, split_by_key
 from .merge import (
     _FOLD_COLS,
+    DIRECT_PARTITIONS,
     _direct_collect,
-    direct_merge,
+    _direct_merge,
     fold_states,
     merge_sketches,
-    state_bytes_hint,
 )
 
 # docs tokenized at a time: bounds the per-task token-list transient
@@ -264,7 +264,7 @@ def _merge_single_pass(rows_df, fixed_names) -> dict:
     return merged
 
 
-def _exchange_plan(docs_df, factories: dict, fixed_bytes: int, num_shards: int, cfg):
+def _exchange_plan(docs_df, factories: dict, num_shards: int, cfg):
     """Above the gate: the fixed sketches on the scan partitions and the
     shards over a url-only exchange (``build_sharded``), submitted
     concurrently from two driver threads so the url shuffle overlaps
@@ -274,7 +274,7 @@ def _exchange_plan(docs_df, factories: dict, fixed_bytes: int, num_shards: int, 
     from .shard import build_sharded
 
     def fixed_job():
-        return merge_sketches(build_web_sketches(docs_df, factories), state_bytes=fixed_bytes)
+        return merge_sketches(build_web_sketches(docs_df, factories))
 
     def shard_job():
         return build_sharded(docs_df.select("url"), "url", num_shards, cfg=cfg).collect()
@@ -299,17 +299,19 @@ def build_web_pipeline(
     capacity × 2 bytes regardless of shard or partition count, and
     probes route by the same hash — no global filter materializes.
 
-    The plan is picked by the merge's byte gate (``merge.direct_merge``)
-    over one scan partition's state — the fixed sketches plus
-    ``num_shards`` empty shard filters — and by the count of partition
-    filters the driver would fold (partitions × ``num_shards`` ≤
-    ``SINGLE_PASS_FILTERS``, the measured crossover):
+    The plan is picked by the merge's one gate (``merge._direct_merge``)
+    on the single pass's frame. Its ``state`` field carries one scan
+    partition's state size (the fixed sketches plus ``num_shards``
+    empty shard filters), and its partition bound is lowered to
+    ``SINGLE_PASS_FILTERS // num_shards``, so the driver folds at most
+    ``SINGLE_PASS_FILTERS`` partition filters (the measured crossover):
 
-    * under both: ONE pass over the scan partitions. Each task folds the
-      fixed sketches and one filter per shard; the driver merges the
-      partition rows, re-homing each shard's partition filters into
-      one (``CuckooFilter.merge``, lossless, one batched call per
-      shard). One job, no shuffle, one Python task per scan partition.
+    * under the gate: ONE pass over the scan partitions. Each task
+      folds the fixed sketches and one filter per shard; the driver
+      merges the partition rows, re-homing each shard's partition
+      filters into one (``CuckooFilter.merge``, lossless, one batched
+      call per shard). One job, no shuffle, one Python task per scan
+      partition.
     * otherwise (the 100 TB regime, where one task must not hold every
       shard's filter, or so many partition filters that the serial
       driver fold costs more than the shard tasks): two concurrent
@@ -343,14 +345,10 @@ def build_web_pipeline(
         "kll": lambda: KLLSketch(200),
     }
     shard_fac = shard_factory(num_shards, cfg)
-    fixed_bytes = state_bytes_hint(*factories.values())
-    state_bytes = fixed_bytes + num_shards * state_bytes_hint(shard_fac)
-    # the gate reads the partitions of the Dataset it collects, so the
-    # plan is built once
+    # the gate reads the Dataset it collects, so the plan is built once
     rows_df = _single_pass(docs_df, factories, num_shards, shard_fac).select(*_FOLD_COLS)
-    p = rows_df.rdd.getNumPartitions()
-    if not (direct_merge(p, state_bytes) and p * num_shards <= SINGLE_PASS_FILTERS):
-        return _exchange_plan(docs_df, factories, fixed_bytes, num_shards, cfg)
+    if not _direct_merge(rows_df, min(DIRECT_PARTITIONS, SINGLE_PASS_FILTERS // num_shards)):
+        return _exchange_plan(docs_df, factories, num_shards, cfg)
 
     merged = _merge_single_pass(rows_df, set(factories))
     shard_rows = []

@@ -15,11 +15,12 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+from pyspark.sql.types import BinaryType, DoubleType, LongType, StringType, StructType
 
 from ..serde import loads
 
-OUTPUT_SCHEMA = "key string, n_rows long, estimate double"
-STATE_SCHEMA = "state binary, n_rows long"
+OUTPUT_SCHEMA = StructType().add("key", StringType()).add("n_rows", LongType()).add("estimate", DoubleType())
+STATE_SCHEMA = StructType().add("state", BinaryType()).add("n_rows", LongType())
 
 
 def hll_distinct_by_key(

@@ -5,7 +5,3 @@ MINOR = 1
 PATCH = 0
 
 __version__ = f"{MAJOR}.{MINOR}.{PATCH}"
-
-
-def version_info() -> dict:
-    return {"major": MAJOR, "minor": MINOR, "patch": PATCH, "version": __version__}

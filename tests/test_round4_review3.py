@@ -1,5 +1,5 @@
 """Regression tests for the eighth review pass: scale/contract bugs in
-the production-job seams (jobs/, webbuild merge, fsio), statistical
+the production-job seams (jobs/, fsio), statistical
 correlation in KLL compaction parity, and diagnostic/format conformance
 gaps none of the driver queries can reach."""
 
@@ -30,51 +30,6 @@ def test_fsio_roundtrip(spark, tmp_path):
     tpath = f"file://{tmp_path}/metrics.json"
     write_text(spark, tpath, '{"ok": true}')
     assert read_bytes(spark, tpath) == b'{"ok": true}'
-
-
-# ----------------------------------------------------- merge_sketches shape
-
-
-def test_merge_web_sketches_bounded_fanout(spark, docs_df):
-    """The blob merge must stream through ≤fanout tasks (per-task
-    memory = n_names × state_size, independent of scan partition
-    count), and a tiny fanout must produce the same merged sketches as
-    a driver-side fold of every partial — the old groupBy('sketch')
-    shape funneled ALL P partition blobs of a name into ONE fully
-    materialized pandas group (~TBs at 100 TB / 128 MB partitions)."""
-    from sketchlib.serde import loads
-    from sketchlib.sketches import CountMinSketch, HyperLogLog
-    from sketchlib.spark.merge import merge_sketches
-    from sketchlib.spark.webbuild import build_web_sketches
-
-    docs = docs_df.repartition(16)  # P=16 partition partials per name
-    partials = build_web_sketches(
-        docs,
-        {
-            "hll": lambda: HyperLogLog(12),
-            "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
-        },
-    ).persist()
-    try:
-        # direct_partitions=0 forces the executor level (P >> fanout);
-        # the ≤threshold direct path is covered by the adaptive-merge
-        # equivalence test in test_round4_review5.py
-        merged = merge_sketches(partials, fanout=3, direct_partitions=0)
-        # oracle: fold every partial driver-side
-        oracle = {}
-        for r in partials.collect():
-            sk = loads(r.state)
-            if r.sketch in oracle:
-                oracle[r.sketch].merge(sk)
-            else:
-                oracle[r.sketch] = sk
-        assert set(merged) == {"hll", "cms"}
-        # HLL register-max and CMS counter-add are order-independent,
-        # so bytes must match exactly regardless of fold grouping
-        assert merged["hll"].to_bytes() == oracle["hll"].to_bytes()
-        assert merged["cms"].to_bytes() == oracle["cms"].to_bytes()
-    finally:
-        partials.unpersist()
 
 
 # ------------------------------------------------------------- KLL parity

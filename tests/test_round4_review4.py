@@ -1,5 +1,4 @@
-"""Regression tests for the ninth review pass: the blob merges must
-stream per-ROW (not per-arrow-batch, not per-group), the KLL parity
+"""Regression tests for the ninth review pass: the KLL parity
 coin must stay decorrelated on clamped/saturated data, the checkpointed
 job's tokenizer must match the fused path on Unicode whitespace, and
 partition_sizes must not ship row payloads just to count them."""
@@ -8,120 +7,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
-
-# ------------------------------------------------ streaming blob folds
-
-
-class _Blob:
-    """Blob stand-in whose liveness is observable via weakref (bytes
-    itself refuses weak references). The folds only ever call
-    ``bytes(blob)``, so ``__bytes__`` is the whole contract."""
-
-    def __init__(self, payload: bytes):
-        self.payload = payload
-
-    def __bytes__(self) -> bytes:
-        return self.payload
-
-
-def _liveness_rows(n_rows_total: int, make_blob, alive):
-    """Generator that ASSERTS streaming: before handing out blob i+1,
-    at most ONE earlier blob may still be referenced (the fold's
-    current loop variable). An eager fold that materializes the group
-    (e.g. a reverted ``rows = list(rows)``, a pandas frame, or a
-    multi-row arrow batch) keeps every wrapper alive and trips the
-    assert on the second pull — CPython refcounting frees the dropped
-    ones immediately (no cycles), so no gc is needed."""
-    import weakref
-
-    for i in range(n_rows_total):
-        n_alive = sum(1 for w in alive if w() is not None)
-        assert n_alive <= 1, (
-            f"{n_alive} prior blobs alive before pull {i} — the fold "
-            "materializes its group instead of streaming per-row"
-        )
-        b = _Blob(make_blob(i))
-        alive.append(weakref.ref(b))
-        yield (i, 10, b)
-
-
-def test_tree_merge_streams_one_blob_at_a_time(spark):
-    """Level-1 of tree_merge/tree_merge_df must hand blobs to the fold
-    ONE AT A TIME (RDD iterator), never as a materialized multi-blob
-    batch: groupBy().applyInPandas builds the whole merge group as one
-    pandas frame and mapInArrow materializes 10k-row arrow batches —
-    both are tens-of-GB per task at MB-scale CMS states and 100 TB /
-    128 MB scan-partition counts. Pinned via weakref liveness: the
-    generator refuses to yield blob i+1 while >1 earlier blob is
-    still referenced."""
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark import build_sketches, tree_merge
-    from sketchlib.spark.merge import fold_states
-
-    alive = []
-
-    def make(i):
-        sk = HyperLogLog(10)
-        sk.update([f"u{i}-{j}" for j in range(10)])
-        return sk.to_bytes()
-
-    rows = (("key", pid, n, blob) for pid, n, blob in _liveness_rows(64, make, alive))
-    out = fold_states(rows)
-    assert list(out) == ["key"]
-    assert out["key"][2] == 640  # n_rows summed
-    assert len(alive) == 64  # generator fully consumed
-
-    # end-to-end: the distributed result still matches a driver fold
-    urls = spark.createDataFrame(
-        [(f"https://e{i}.com",) for i in range(2000)], "key string"
-    ).repartition(16)
-    # direct_partitions=0 forces the executor level — the streaming
-    # property under test lives there (≤ threshold skips it entirely)
-    merged = tree_merge(
-        build_sketches(urls, "key", lambda: HyperLogLog(12)),
-        fanout=4,
-        direct_partitions=0,
-    )
-    assert abs(merged.estimate() - 2000) / 2000 < 0.1
-
-
-def test_merge_web_sketches_fold_is_per_row(spark, docs_df):
-    """merge_sketches' level-1 fold streams its row iterator
-    per-ROW (weakref liveness pin, same harness as the tree_merge
-    test), and the merged bytes still match a driver-side fold for
-    order-independent sketches."""
-    from sketchlib.serde import loads
-    from sketchlib.sketches import HyperLogLog
-    from sketchlib.spark.merge import fold_states, merge_sketches
-    from sketchlib.spark.webbuild import build_web_sketches
-
-    alive = []
-
-    def make(i):
-        sk = HyperLogLog(10)
-        sk.update([f"u{i}-{j}" for j in range(5)])
-        return sk.to_bytes()
-
-    rows = (
-        ("hll", pid, 5, blob) for pid, _ten, blob in _liveness_rows(8, make, alive)
-    )
-    out = fold_states(rows)
-    assert list(out) == ["hll"] and out["hll"][2] == 40
-    assert len(alive) == 8
-
-    partials = build_web_sketches(
-        docs_df.repartition(8), {"hll": lambda: HyperLogLog(12)}
-    ).persist()
-    try:
-        merged = merge_sketches(partials, fanout=3, direct_partitions=0)
-        oracle = None
-        for r in partials.collect():
-            sk = loads(r.state)
-            oracle = sk if oracle is None else oracle.merge(sk)
-        assert merged["hll"].to_bytes() == oracle.to_bytes()
-    finally:
-        partials.unpersist()
-
 
 # ------------------------------------------------- KLL coin on clamped data
 

@@ -122,83 +122,6 @@ def test_partition_sizes_leaves_caller_conf_untouched(spark):
     spark.conf.unset(key)
 
 
-def test_tree_merge_byte_gate_forces_executor_fold(spark, monkeypatch):
-    """Wide per-partition states must route to the bounded executor
-    fold even at LOW partition counts (verdict r4 #5: the partition
-    gate alone turns a 2 MB CMS at the threshold into a ~0.5 GB silent
-    driver pull)."""
-    from sketchlib.sketches import CountMinSketch
-    from sketchlib.spark import merge as merge_mod
-    from sketchlib.spark.build import build_sketches
-
-    df = spark.createDataFrame(
-        [(f"k{i}",) for i in range(2000)], "key string"
-    ).repartition(4)
-    fac = lambda: CountMinSketch(width=1 << 12, depth=4)  # noqa: E731
-    hint = merge_mod.state_bytes_hint(fac)
-    assert hint >= (1 << 12) * 4 * 4  # config-sized, not empty-tiny
-
-    calls = {"direct": 0}
-    orig = merge_mod._direct_collect
-
-    def spy(frame):
-        calls["direct"] += 1
-        return orig(frame)
-
-    monkeypatch.setattr(merge_mod, "_direct_collect", spy)
-
-    # byte cap below p × state: executor fold despite p=4 ≤ 256
-    sk_fold = merge_mod.tree_merge(
-        build_sketches(df, "key", fac), state_bytes=hint, direct_bytes=2 * hint
-    )
-    assert calls["direct"] == 0
-    # roomy cap: the direct path as before
-    sk_direct = merge_mod.tree_merge(
-        build_sketches(df, "key", fac), state_bytes=hint
-    )
-    assert calls["direct"] == 1
-    # CMS merge is order-insensitive: both paths byte-identical
-    assert sk_fold.to_bytes() == sk_direct.to_bytes()
-
-
-def test_merge_web_sketches_byte_gate(spark, monkeypatch):
-    from sketchlib.sketches import CountMinSketch, HyperLogLog
-    from sketchlib.spark import merge as merge_mod
-    from sketchlib.spark.merge import merge_sketches
-    from sketchlib.spark.webbuild import build_web_sketches
-
-    docs = spark.createDataFrame(
-        [(f"https://h/{i}", f"tok{i} body text") for i in range(500)],
-        "url string, text string",
-    ).repartition(4)
-    factories = {
-        "hll": lambda: HyperLogLog(12),
-        "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
-    }
-    hint = merge_mod.state_bytes_hint(*factories.values())
-
-    calls = {"direct": 0}
-    orig = merge_mod._direct_collect
-
-    def spy(frame):
-        calls["direct"] += 1
-        return orig(frame)
-
-    monkeypatch.setattr(merge_mod, "_direct_collect", spy)
-    forced = merge_sketches(
-        build_web_sketches(docs, factories, size_sketches=()),
-        state_bytes=hint,
-        direct_bytes=2 * hint,
-    )
-    assert calls["direct"] == 0
-    direct = merge_sketches(
-        build_web_sketches(docs, factories, size_sketches=()), state_bytes=hint
-    )
-    assert calls["direct"] == 1
-    assert forced["hll"].to_bytes() == direct["hll"].to_bytes()
-    assert forced["cms"].to_bytes() == direct["cms"].to_bytes()
-
-
 # ------------------------------------------------- repeated passages
 
 

@@ -19,7 +19,6 @@ from sketchlib.spark import (
     cms_estimate_udf,
     membership_udf,
     tree_merge,
-    tree_merge_df,
 )
 
 
@@ -73,15 +72,6 @@ def test_hll_matches_spark_native_approx(spark, docs_df):
     merged = tree_merge(build_sketches(urls.repartition(4), "key", lambda: HyperLogLog(14)))
     native = docs_df.agg(F.approx_count_distinct("url", 0.01)).first()[0]
     assert abs(merged.estimate() - native) / native < 0.05
-
-
-def test_tree_merge_df_fanout(spark, docs_df):
-    urls = docs_df.select(F.col("url").alias("key")).repartition(8)
-    sketch_df = build_sketches(urls, "key", lambda: HyperLogLog(12))
-    level1 = tree_merge_df(sketch_df, fanout=4)
-    rows = level1.collect()
-    assert 0 < len(rows) <= 4
-    assert sum(r.n_rows for r in rows) == 1000
 
 
 def test_kll_numeric_build(spark, docs_df):
@@ -218,8 +208,9 @@ def _fixed_bytes(fixed: dict) -> dict:
 
 @pytest.mark.parametrize("single_pass", [True, False])
 def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch, single_pass):
-    """Both plans of build_web_pipeline — the gated single pass and the
-    exchange plan above the gate — give build_sharded's per-shard
+    """Both plans of build_web_pipeline — the single pass, which the
+    gate picks for this corpus, and the exchange plan above the gate —
+    give build_sharded's per-shard
     counts, probe every url present, and give the HLL/CMS states of a
     standalone build_web_sketches merge, over byte-capped batches that
     each span several shards."""
@@ -227,8 +218,11 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
     from sketchlib.spark.merge import merge_sketches
     from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
 
+    plans = []
+    exchange = webbuild._exchange_plan
+    monkeypatch.setattr(webbuild, "_exchange_plan", lambda *a: plans.append(a) or exchange(*a))
     if not single_pass:
-        monkeypatch.setattr(webbuild, "direct_merge", lambda *a, **k: False)
+        monkeypatch.setattr(webbuild, "_direct_merge", lambda *a: False)
     docs = docs_df.repartition(3)  # several partition filters per shard to merge
     # a 16 kB byte cap: batches of a few pages, each spanning shards
     with _conf(spark, BYTES_CONF, "16384"):
@@ -245,6 +239,7 @@ def test_web_pipeline_matches_sharded_and_web_builds(spark, docs_df, monkeypatch
                 },
             )
         )
+    assert len(plans) == (0 if single_pass else 1)
     cfg = CuckooConfig(capacity=1500, fingerprint_bits=16, hash_strategy="xx")
     want = sorted(build_sharded(docs.select("url"), "url", 8, cfg=cfg).collect())
     assert _shard_counts(rows) == _shard_counts(want)
@@ -295,7 +290,7 @@ def test_web_pipeline_empty_input_same_under_both_plans(spark, monkeypatch):
 
     empty = spark.createDataFrame([], "url string, text string")
     fixed, rows = webbuild.build_web_pipeline(empty, 0, num_shards=4)
-    monkeypatch.setattr(webbuild, "direct_merge", lambda *a, **k: False)
+    monkeypatch.setattr(webbuild, "_direct_merge", lambda *a: False)
     fixed2, rows2 = webbuild.build_web_pipeline(empty, 0, num_shards=4)
     assert rows == rows2 == []
     assert sorted(fixed) == sorted(fixed2)
@@ -1000,3 +995,85 @@ def test_docs_parquet_roundtrip_identical(spark, docs_table, tmp_path):
         )
     }
     assert got == want
+
+
+# ------------------------------------------------------------- schemas
+
+# Spark calls taking a schema or a return type: method → positions and
+# keywords of those arguments
+_SCHEMA_ARGS = {
+    "mapInArrow": ((1,), ("schema",)),
+    "mapInPandas": ((1,), ("schema",)),
+    "applyInArrow": ((1,), ("schema",)),
+    "applyInPandas": ((1,), ("schema",)),
+    "applyInPandasWithState": ((1, 2), ("outputStructType", "stateStructType")),
+    "createDataFrame": ((1,), ("schema",)),
+    "from_json": ((1,), ("schema",)),
+    "schema": ((0,), ("schema",)),
+    "arrow_udf": ((0, 1), ("returnType",)),
+    "pandas_udf": ((0, 1), ("returnType",)),
+    "udf": ((0, 1), ("returnType",)),
+}
+
+
+def _ddl_schema_args(source: str) -> list[int]:
+    """Lines of ``source`` where a Spark call gets its schema or return
+    type as a string, written inline or through a name bound to one."""
+    import ast
+
+    def is_str(node) -> bool:
+        if isinstance(node, ast.Constant):
+            return isinstance(node.value, str)
+        if isinstance(node, ast.BinOp):
+            return is_str(node.left) or is_str(node.right)
+        return isinstance(node, ast.JoinedStr)
+
+    tree = ast.parse(source)
+    str_names = {
+        t.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and is_str(node.value)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    lines = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        spec = _SCHEMA_ARGS.get(node.func.attr)
+        if spec is None:
+            continue
+        args = [node.args[i] for i in spec[0] if i < len(node.args)]
+        args += [k.value for k in node.keywords if k.arg in spec[1]]
+        if any(is_str(a) or (isinstance(a, ast.Name) and a.id in str_names) for a in args):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_ddl_schema_finder_catches_strings():
+    src = (
+        'S = "a long"\n'
+        "df.mapInArrow(f, S)\n"
+        'df.mapInPandas(f, schema="a " + "long")\n'
+        "df.mapInArrow(f, StructType([]))\n"
+        '@F.arrow_udf("boolean")\n'
+        "def g(x): pass\n"
+        "F.arrow_udf(BooleanType())\n"
+    )
+    assert _ddl_schema_args(src) == [2, 3, 5]
+
+
+def test_library_passes_no_ddl_schema_strings():
+    """Spark parses a DDL string in the JVM each time it is given one;
+    the library builds StructType/DataType objects instead."""
+    import pathlib
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    found = {
+        str(path.relative_to(root)): lines
+        for path in sorted(root.rglob("*.py"))
+        if (lines := _ddl_schema_args(path.read_text()))
+    }
+    assert found == {}

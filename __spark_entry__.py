@@ -217,6 +217,11 @@ def q_cuckoo_membership(spark, sf_dir):
     return keys.withColumn("m", member("key")).where("m").select("key")
 
 
+# most delete keys q_cuckoo_delete collects to the driver as Rows;
+# sf0.01 deletes 11,058
+DELETE_COLLECT_CAP = 1_000_000
+
+
 def q_cuckoo_delete(spark, sf_dir):
     """Cuckoo delete (SURVEY §2.1 #5,#12): insert distinct orderkeys,
     delete every key having an 'R' lineitem, probe the kept set.
@@ -224,8 +229,10 @@ def q_cuckoo_delete(spark, sf_dir):
     NOTE: this is the SCALAR Delete API demo (reference
     internal/filter/filter.go Delete) — the delete set is collected to
     the driver by design, because a single merged filter's state lives
-    in one place. The data-scale path is `sharded_delete`, where
-    deletes route executor-side with no driver collection."""
+    in one place. At most ``DELETE_COLLECT_CAP`` keys: one more raises
+    ValueError instead of pulling an unbounded set. The data-scale path
+    is `sharded_delete` (``shard.delete_sharded``), where deletes route
+    executor-side with no driver collection."""
     from sketchlib import CuckooFilter
     from sketchlib.spark import build_sketches, membership_udf, tree_merge
 
@@ -243,7 +250,13 @@ def q_cuckoo_delete(spark, sf_dir):
         build_sketches(keys, "key", lambda: CuckooFilter(cfg))
     )
     assert merged.insert_failures == 0  # sized to the keyset: loud if not
-    merged.delete_batch([r.key for r in deleted.collect()])
+    gone = [r.key for r in deleted.limit(DELETE_COLLECT_CAP + 1).collect()]
+    if len(gone) > DELETE_COLLECT_CAP:
+        raise ValueError(
+            f"more than {DELETE_COLLECT_CAP} delete keys for a driver-side delete; "
+            "delete at data scale with sketchlib.spark.shard.delete_sharded"
+        )
+    merged.delete_batch(gone)
     member = membership_udf(spark, merged)
     return kept.withColumn("m", member("key")).where("m").select("key")
 

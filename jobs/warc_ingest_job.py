@@ -82,10 +82,10 @@ def main() -> None:
     ).select(
         F.unhex(F.md5("text")).alias("_th"),
         F.struct(
-            # unicode=True: Python str.split semantics — Java's ASCII
-            # \s would glue '&nbsp;'-separated tokens, undercounting
-            # n_tokens and silently dropping docs at the min-tokens
-            # floor (same (?U) divergence web_build_job documents)
+            # unicode=True: Unicode whitespace splits tokens — Java's
+            # ASCII \s would glue '&nbsp;'-separated tokens,
+            # undercounting n_tokens and silently dropping docs at the
+            # min-tokens floor (text.token_count)
             "url", "warc_ts", "lang", "text",
             token_count("text", unicode=True).alias("n_tokens"),
         ).alias("m"),

@@ -10,9 +10,12 @@
 
 On a cluster, add the usual --master/--num-executors flags; the job
 itself is shape-agnostic (the north rule's N vs 4N executors is purely
-a submit-time choice). The build is the two-job pipeline of
-sketchlib.spark.webbuild: fixed-size sketches fold on scan partitions
-(zero shuffle), membership shards build over a url-only shuffle.
+a submit-time choice). It submits two concurrent jobs (driver threads):
+the fixed-size sketches fold on the scan partitions in one fused pass
+(``webbuild.build_web_sketches``, zero shuffle), and the membership
+shards build over a url-only shuffle of the DISTINCT urls
+(``shard.build_sharded``) and are written to parquet. Both run the same
+way with or without --checkpoint.
 
 Outputs under --output:
   shards/                parquet: the sharded cuckoo filter table
@@ -21,10 +24,17 @@ Outputs under --output:
   fixed/<name>.bin       merged HLL / CMS / KLL states
   metrics.json           row counts, load factors, estimates, timings
 
-Resume: with --checkpoint, each scan partition of the fixed-sketch job
-publishes its finished partial atomically; a rerun re-emits stored
-partials instead of recomputing (per-partition lineage,
-sketchlib.spark.checkpoint).
+Resume: with --checkpoint, each scan partition of the fused fold
+publishes its finished rows atomically as ``part-{pid}.arrow``; a rerun
+re-emits published rows instead of folding (per-partition lineage,
+``build.fold_partitions``), so fixed/*.bin are byte-identical with or
+without --checkpoint, fresh or resumed. The dir's ``_meta.json``
+fingerprint pins the row format, the columns, each sketch's kind and
+geometry (so a changed --cms-width), which sketches take tokens or
+sizes, and the scan's partition count; a mismatch raises
+CheckpointMismatchError. So does a dir in the layout of earlier
+versions of this job (``hll/ cms/ kll/`` subdirs, no top-level
+``_meta.json``): pass a fresh dir. The shard half is not checkpointed.
 """
 
 from __future__ import annotations
@@ -42,86 +52,24 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
-
-def _build_fixed(spark, docs, args):
-    """The fixed-size sketch half (hll/cms/kll): checkpointed per-sketch
-    builds with per-partition lineage when --checkpoint is set, else the
-    fused one-pass build. Same fixed/{hll,cms,kll}.bin contract either
-    way; the checkpointed CMS builds over exploded tokens because
-    build_sketches folds one column per pass — trading the fused fold's
-    value_counts map-side combine for per-partition resumability."""
-    import os
-
+def _build_fixed(docs, args):
+    """The fixed-size sketch half: HLL distinct urls, CMS token counts
+    and KLL page sizes in one fused fold over the scan partitions
+    (``build_web_sketches``), resumable per partition under
+    --checkpoint. The merge's byte gate reads the state size the build
+    stamps on its frame: at the default --cms-width (1<<16, a 2 MB CMS)
+    and the 256-partition threshold a direct pull would be ~1.5 GB, so
+    wide builds take the bounded executor fold."""
     from sketchlib.sketches import CountMinSketch, HyperLogLog, KLLSketch
-    from sketchlib.spark.build import build_sketches
-    from sketchlib.spark.merge import merge_sketches, tree_merge
+    from sketchlib.spark.merge import merge_sketches
     from sketchlib.spark.webbuild import build_web_sketches
 
-    if not args.checkpoint:
-        factories = {
-            "hll": lambda: HyperLogLog(14),
-            "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
-            "kll": lambda: KLLSketch(200),
-        }
-        # byte-aware gate: --cms-width defaults to 1<<16 (2 MB state);
-        # at the 256-partition threshold the direct pull would be
-        # ~1.5 GB — the state size the build stamps on its frame routes
-        # wide builds to the bounded executor fold
-        return merge_sketches(build_web_sketches(docs, factories))
-    from pyspark.sql import functions as F
-
-    # (?U) = Java UNICODE_CHARACTER_CLASS, so \S complements the
-    # Unicode White_Space set — the same set Arrow's
-    # utf8_split_whitespace uses in the fused path. Without it,
-    # Java \s is ASCII-only and a scraped '&nbsp;' (U+00A0) glues
-    # two tokens together, making cms.bin counts depend on whether
-    # --checkpoint was passed (tokenizer-parity pytest pins this).
-    toks = docs.select(
-        F.explode(
-            F.expr("regexp_extract_all(coalesce(text,''), '(?U)\\\\S+', 0)")
-        ).alias("tok")
-    )
-    # the three sketches are independent full scans — build them
-    # concurrently (driver threads) instead of serially
-    from concurrent.futures import ThreadPoolExecutor
-
-    def hll():
-        return tree_merge(
-            build_sketches(
-                docs.select("url"),
-                "url",
-                lambda: HyperLogLog(14),
-                checkpoint_dir=os.path.join(args.checkpoint, "hll"),
-            )
-        )
-
-    def cms():
-        return tree_merge(
-            build_sketches(
-                toks,
-                "tok",
-                lambda: CountMinSketch(width=args.cms_width, depth=4),
-                checkpoint_dir=os.path.join(args.checkpoint, "cms"),
-            )
-        )
-
-    def kll():
-        return tree_merge(
-            build_sketches(
-                docs.select(F.length("text").cast("double").alias("v")),
-                "v",
-                lambda: KLLSketch(200),
-                checkpoint_dir=os.path.join(args.checkpoint, "kll"),
-                numeric=True,
-            )
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = {"hll": ex.submit(hll), "cms": ex.submit(cms), "kll": ex.submit(kll)}
-        fixed = {k: f.result() for k, f in futs.items()}
-    # empty partitions yield no sketch rows: drop None merges so both
-    # branches return the same {present names} shape
-    return {k: v for k, v in fixed.items() if v is not None}
+    factories = {
+        "hll": lambda: HyperLogLog(14),
+        "cms": lambda: CountMinSketch(width=args.cms_width, depth=4),
+        "kll": lambda: KLLSketch(200),
+    }
+    return merge_sketches(build_web_sketches(docs, factories, checkpoint_dir=args.checkpoint))
 
 
 def main() -> None:
@@ -156,9 +104,6 @@ def _run(spark, args) -> None:
     n = docs.count()
     t0 = time.time()
 
-    def fixed_job():
-        return _build_fixed(spark, docs, args)
-
     def shard_job():
         # dedup BEFORE the membership build: a recrawl corpus repeats
         # urls, and >2×bucket_size (8) copies of one url exhaust its
@@ -191,7 +136,7 @@ def _run(spark, args) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_fixed, f_shard = ex.submit(fixed_job), ex.submit(shard_job)
+        f_fixed, f_shard = ex.submit(_build_fixed, docs, args), ex.submit(shard_job)
         fixed = f_fixed.result()
         f_shard.result()
     build_sec = time.time() - t0

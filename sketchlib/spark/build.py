@@ -25,12 +25,14 @@ Scale notes (100 TB / 10^12 docs):
   capacity/num_shards filter per shard, probes routed by the same
   partitioner — no cross-shard merge needed, memory per task constant.
 * Checkpoint/resume is per-partition (north-rule lineage): each task
-  writes its finished sketch row to ``checkpoint_dir/part-{pid}``;
-  a resumed run re-emits stored rows instead of recomputing.
+  writes its finished sketch rows to ``checkpoint_dir/part-{pid}``;
+  a resumed run re-emits stored rows instead of recomputing, once
+  ``fold_partitions`` has matched the dir's fingerprint.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -99,24 +101,51 @@ def state_row(sk, n_rows: int, **key) -> pa.RecordBatch:
     return pa.RecordBatch.from_pylist([row], schema=_state_schema(*key))
 
 
-def state_bytes_hint(*factories) -> int:
+def _empty_states(factories) -> dict:
+    """``{factory: (sketch class, serialized empty state)}``: one empty
+    instance of each DISTINCT factory (the flagship's shard filters
+    share one), dropped as soon as it is serialized. The merge's byte
+    gate (``state_bytes_hint``) and the checkpoint fingerprint
+    (``sketch_fingerprint``) read the same instances."""
+    states = {}
+    for fac in set(factories):
+        sk = fac()
+        states[fac] = type(sk), sk.to_bytes()
+    return states
+
+
+def state_bytes_hint(*factories, empty: dict | None = None) -> int:
     """Driver-side estimate of ONE partition row group's serialized
-    state size: one empty instance of each distinct factory, serialized
-    and dropped at once. Costs ~ms and no Spark job. Exact for
-    array-backed sketches (CMS, HLL, cuckoo, Bloom — their state arrays
-    are config-sized, identical empty or full); an UNDER-estimate for
+    state size, from ``_empty_states`` (``empty`` when the caller holds
+    them already). Costs ~ms and no Spark job. Exact for array-backed
+    sketches (CMS, HLL, cuckoo, Bloom — their state arrays are
+    config-sized, identical empty or full); an UNDER-estimate for
     growing sketches (KLL, t-digest), which are KB-scale where the
     array-backed ones are the MB-scale states the byte gate exists
     for."""
-    size = {fac: len(fac().to_bytes()) for fac in set(factories)}
-    return sum(size[fac] for fac in factories)
+    empty = empty or _empty_states(factories)
+    return sum(len(empty[fac][1]) for fac in factories)
 
 
-def state_field(*factories) -> StructField:
+def sketch_fingerprint(factories: dict[str, Callable[[], object]], empty: dict | None = None) -> dict:
+    """The checkpoint fingerprint of each named factory: its sketch
+    kind and a digest of its serialized empty state, which pins the
+    geometry (HLL precision, CMS width × depth, KLL k, cuckoo capacity
+    and fingerprint bits, ...). A resume under another geometry would
+    re-emit states of the old one; ``ensure_checkpoint_meta`` raises
+    instead. ``empty``: the caller's ``_empty_states``."""
+    empty = empty or _empty_states(factories.values())
+    return {
+        name: f"{empty[fac][0].__name__}:{hashlib.sha256(empty[fac][1]).hexdigest()[:16]}"
+        for name, fac in factories.items()
+    }
+
+
+def state_field(state_bytes: int) -> StructField:
     """The binary ``state`` field of a frame whose partitions each hold
-    one state of every factory, carrying ``state_bytes_hint`` as its
+    ``state_bytes`` of state (``state_bytes_hint``), carrying it as its
     ``STATE_BYTES`` metadata."""
-    return StructField("state", BinaryType(), True, {STATE_BYTES: state_bytes_hint(*factories)})
+    return StructField("state", BinaryType(), True, {STATE_BYTES: state_bytes})
 
 
 def fold_partitions(
@@ -124,6 +153,7 @@ def fold_partitions(
     factories: dict[str, Callable[[], object]],
     step: Callable[[dict, Iterator[pa.RecordBatch]], None],
     checkpoint_dir: str | None = None,
+    step_meta: dict | None = None,
 ):
     """``df`` → one SKETCH_SCHEMA row per (partition, factory name),
     its ``state`` field stamped with the factories' ``state_bytes_hint``.
@@ -133,7 +163,29 @@ def fold_partitions(
     work across batches and finish it when the partition ends. With
     ``checkpoint_dir`` each task atomically publishes its rows as
     ``part-{pid}.arrow`` and a rerun re-emits published rows instead of
-    folding (sketchlib/spark/taskfs.py)."""
+    folding (sketchlib/spark/taskfs.py).
+
+    Resume is only valid against the SAME build, so the dir is
+    fingerprinted here, once per call (``ensure_checkpoint_meta``): the
+    row layout (``ROW_FORMAT``), ``df``'s columns, each sketch's kind
+    and geometry (``sketch_fingerprint``), ``step_meta`` (what ``step``
+    does with the columns) and the partition count — partition ids are
+    the lineage key, so a changed ``maxPartitionBytes`` would remap rows
+    to ids and double-count or drop them on resume. A mismatch raises
+    ``CheckpointMismatchError``. The empty sketches the fingerprint
+    reads are the ones the state size is taken from."""
+    empty = _empty_states(factories.values())
+    if checkpoint_dir:
+        from .checkpoint import ensure_checkpoint_meta
+
+        meta = {
+            "format": ROW_FORMAT,
+            "columns": list(df.columns),
+            "sketches": sketch_fingerprint(factories, empty),
+            **(step_meta or {}),
+            "partitions": df.rdd.getNumPartitions(),
+        }
+        ensure_checkpoint_meta(df.sparkSession, checkpoint_dir, meta)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -157,8 +209,8 @@ def fold_partitions(
 
         yield from taskfs.checkpointed(checkpoint_dir, f"part-{pid:05d}", build)
 
-    schema = StructType([*SKETCH_SCHEMA.fields[:-1], state_field(*factories.values())])
-    return df.mapInArrow(fold, schema)
+    state = state_field(state_bytes_hint(*factories.values(), empty=empty))
+    return df.mapInArrow(fold, StructType([*SKETCH_SCHEMA.fields[:-1], state]))
 
 
 def split_by_key(keys: pa.Array, values: pa.Array):
@@ -256,28 +308,10 @@ def build_sketches(
     (hoist e.g. ``capacity=df.count()`` into a local first, or the
     closure capture fails with CONTEXT_ONLY_VALID_ON_DRIVER).
     ``numeric`` converts the key column to float64 (KLL/t-digest
-    inputs).
+    inputs). ``checkpoint_dir``: per-partition resume, fingerprinted by
+    ``fold_partitions``; this step adds its ``key_col`` and ``numeric``.
     """
-    sel = df.select(key_col)
-    if checkpoint_dir:
-        # resume is only valid against the SAME build: row layout,
-        # sketch kind, key column, value dtype AND partition count
-        # (partition ids are the lineage key — a changed
-        # maxPartitionBytes remaps rows to ids, silently
-        # double-counting/dropping on resume). Fingerprint the dir
-        # once, loudly reject mismatches.
-        from .checkpoint import ensure_checkpoint_meta
-
-        ensure_checkpoint_meta(
-            df.sparkSession,
-            checkpoint_dir,
-            {
-                "op": "build_sketches",
-                "format": ROW_FORMAT,
-                "kind": type(factory()).__name__,
-                "key_col": key_col,
-                "numeric": bool(numeric),
-                "partitions": sel.rdd.getNumPartitions(),
-            },
-        )
-    return fold_partitions(sel, {key_col: factory}, column_update(numeric), checkpoint_dir)
+    step_meta = {"key_col": key_col, "numeric": bool(numeric)}
+    return fold_partitions(
+        df.select(key_col), {key_col: factory}, column_update(numeric), checkpoint_dir, step_meta
+    )

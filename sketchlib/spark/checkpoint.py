@@ -1,13 +1,15 @@
 """Checkpoint-resumable build lineage (north-rule requirement).
 
-build_sketches / build_sharded(checkpoint_dir=...): each task
-atomically publishes its finished sketch row as ``part-{pid}.arrow``
-(``shard-{id}.arrow``); a rerun re-emits stored rows instead of
-recomputing (the anti-join on completed lineage happens implicitly by
-file existence, with identical input partitioning guaranteed by
-deterministic parquet splits under fixed maxPartitionBytes). The
+build_sketches / build_web_sketches / build_sharded(checkpoint_dir=...):
+each task atomically publishes its finished sketch rows as
+``part-{pid}.arrow`` (``build.fold_partitions``) or
+``shard-{id}.arrow`` (``build.fold_keyed``); a rerun re-emits stored
+rows instead of recomputing (the anti-join on completed lineage happens
+implicitly by file existence, with identical input partitioning
+guaranteed by deterministic parquet splits under fixed
+maxPartitionBytes, which the fingerprint's partition count checks). The
 streaming sinks' state dirs (``streaming.epochs``) share the
-fingerprint below.
+fingerprint below; each sketch in it is ``build.sketch_fingerprint``.
 
 Paths may be URIs (hdfs://, s3a://): every driver-side helper routes
 through the session's Hadoop FileSystem; the executor-side

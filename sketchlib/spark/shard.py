@@ -42,7 +42,7 @@ from ..config import CuckooConfig
 from ..cuckoo import CuckooFilter
 from ..hashing import kernels
 from ..serde import loads
-from .build import ROW_FORMAT, SHARD_SCHEMA, fold_keyed, state_row
+from .build import ROW_FORMAT, SHARD_SCHEMA, fold_keyed, sketch_fingerprint, state_row
 from .merge import merge_keyed
 from .udfs import _sketch_from
 
@@ -78,12 +78,13 @@ def _shard_exchange(df: DataFrame, key_col: str, num_shards: int) -> DataFrame:
 
 def shard_fingerprint(op: str, key_col: str, num_shards: int, factory) -> dict:
     """The ``ensure_checkpoint_meta`` fingerprint of a shard table's
-    lineage: row layout, routing, sketch kind, key and shard count."""
+    lineage: row layout, routing, the shard sketch's kind and geometry
+    (``build.sketch_fingerprint``), key and shard count."""
     return {
         "op": op,
         "format": ROW_FORMAT,
         "routing": SHARD_ROUTING,
-        "kind": type(factory()).__name__,
+        "sketches": sketch_fingerprint({"shard": factory}),
         "key_col": key_col,
         "num_shards": int(num_shards),
     }
@@ -123,7 +124,8 @@ def build_sharded(
     published rows instead of re-folding those shards. Valid because
     the shard→rows assignment is the key hash (stable for a given key
     set and num_shards, unlike scan-partition ids), so the fingerprint
-    pins routing/kind/shards/key but NOT input partition count."""
+    (``shard_fingerprint``) pins routing, the shard sketch's kind and
+    geometry, shard count and key but NOT input partition count."""
     factory = shard_factory(num_shards, cfg, factory)
     if checkpoint_dir:
         from .checkpoint import ensure_checkpoint_meta

@@ -38,8 +38,11 @@ def token_count(col, unicode: bool = False) -> Column:
     semantics where U+00A0 &nbsp; etc. separate tokens — what a
     production web corpus wants (a scraped &nbsp; otherwise glues two
     tokens into one, undercounting and mis-filtering; warc_ingest_job
-    uses this mode for its n_tokens column and --min-tokens floor,
-    matching the (?U) tokenizer web_build_job documents for its CMS)."""
+    uses this mode for its n_tokens column and --min-tokens floor). It
+    splits at the Unicode White_Space set, which is the whitespace of
+    the flagship's CMS tokens (``webbuild._tokens``, Arrow's
+    ``utf8_split_whitespace``) except U+001C-001F, which only Arrow
+    splits at."""
     c = F.col(col) if isinstance(col, str) else col
     c = F.coalesce(c, F.lit(""))
     pat = r"(?U)(\S+)" if unicode else r"(\S+)"

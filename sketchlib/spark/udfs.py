@@ -240,10 +240,10 @@ def cms_heavy_hitters(
     import pyarrow as pa
 
     from ..sketches import CountMinSketch
-    from .build import state_field
+    from .build import state_bytes_hint, state_field
     from .merge import _direct_collect, _direct_merge, fold_groups_rdd
 
-    cms_state = state_field(lambda: CountMinSketch(width=width, depth=depth))
+    cms_state = state_field(state_bytes_hint(lambda: CountMinSketch(width=width, depth=depth)))
     PARTIAL_SCHEMA = StructType([StructField("cand", ArrayType(StringType())), cms_state])
     emit_n = candidate_factor * k
     prune_keep = 8 * emit_n

@@ -182,6 +182,7 @@ def build_web_sketches(
     text_col: str = "text",
     token_sketches: tuple[str, ...] = ("cms",),
     size_sketches: tuple[str, ...] = ("kll", "tdigest"),
+    checkpoint_dir: str | None = None,
 ):
     """One pass over (url, text): every factory name updates from its
     input kind — url sketches from the url column, ``token_sketches``
@@ -189,9 +190,18 @@ def build_web_sketches(
 
     Returns a DataFrame of build.SKETCH_SCHEMA rows (one per partition
     per sketch). Merge with ``merge.merge_sketches``.
+
+    ``checkpoint_dir``: per-partition resume (``build.fold_partitions``
+    publishes each task's rows and a rerun re-emits them); the
+    fingerprint records which sketches take tokens and which sizes.
     """
     step = _web_update(token_sketches, size_sketches)
-    return fold_partitions(docs_df.select(url_col, text_col), factories, step)
+    step_meta = {
+        "tokens": [n for n in factories if n in token_sketches],
+        "sizes": [n for n in factories if n in size_sketches],
+    }
+    frame = docs_df.select(url_col, text_col)
+    return fold_partitions(frame, factories, step, checkpoint_dir, step_meta)
 
 
 def build_column_sketches(

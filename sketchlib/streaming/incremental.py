@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..serde import loads
-from ..spark.build import build_sketches
+from ..spark.build import build_sketches, sketch_fingerprint
 from ..spark.fsio import read_bytes, write_bytes
 from ..spark.merge import tree_merge
 from .epochs import EpochSink
@@ -28,8 +28,8 @@ class IncrementalSketchBuilder(EpochSink):
     def __init__(self, factory, key_col: str, state_dir: str):
         self.factory = factory
         self.key_col = key_col
-        meta = {"op": "incremental_stream", "kind": type(factory()).__name__, "key_col": key_col}
-        super().__init__(state_dir, meta)
+        sketches = sketch_fingerprint({"state": factory})
+        super().__init__(state_dir, {"op": "incremental_stream", "sketches": sketches, "key_col": key_col})
 
     def current(self, spark=None):
         """The sketch after the last applied batch (an empty one before

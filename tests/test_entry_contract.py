@@ -126,3 +126,21 @@ def test_sharded_index_cache_evicts_oldest_keeps_live_broadcasts(spark):
 def test_query_returns_rows(spark, name):
     fn = entry_mod.queries()[name]
     assert fn(spark, SF).count() > 0
+
+
+def test_cuckoo_delete_caps_its_driver_collect(spark, monkeypatch):
+    """q_cuckoo_delete collects its delete keys to the driver: exactly
+    DELETE_COLLECT_CAP keys still run, one more raises and names the
+    data-scale path."""
+    n = (
+        spark.read.parquet(f"{SF}/lineitem.parquet")
+        .where("l_returnflag = 'R'")
+        .select("l_orderkey")
+        .distinct()
+        .count()
+    )
+    monkeypatch.setattr(entry_mod, "DELETE_COLLECT_CAP", n)
+    assert entry_mod.q_cuckoo_delete(spark, SF).count() > 0
+    monkeypatch.setattr(entry_mod, "DELETE_COLLECT_CAP", n - 1)
+    with pytest.raises(ValueError, match="delete_sharded"):
+        entry_mod.q_cuckoo_delete(spark, SF)

@@ -37,6 +37,57 @@ def test_salt_grouped_bounds_groups(spark, docs_df):
     assert top_salted <= top_sz / 8 * 2.5
 
 
+def test_partition_sizes_does_not_ship_payloads(spark, monkeypatch):
+    """partition_sizes must count the narrow `_count_projection` frame
+    (constant-only rows), never df.rdd's full pickled payloads. Pinned
+    by SPYING on the wiring: a revert to counting df.rdd directly
+    never calls _count_projection and fails the spy assert; the spy
+    also checks the projected frame really is 1 constant column."""
+    import sketchlib.spark.salt as salt
+
+    seen = {}
+    orig = salt._count_projection
+
+    def spy(frame):
+        out = orig(frame)
+        seen["cols"] = out.columns
+        return out
+
+    monkeypatch.setattr(salt, "_count_projection", spy)
+    df = (
+        spark.range(100)
+        .withColumn("payload", F.repeat(F.lit("x"), 10_000))
+        .repartition(8)
+    )
+    sizes = salt.partition_sizes(df)
+    assert sum(sizes) == 100 and len(sizes) == 8
+    assert seen.get("cols") == ["one"], "partition_sizes bypassed _count_projection"
+
+
+def test_partition_sizes_reports_declared_partitioning_under_aqe(spark):
+    """On an AQE-coalescible frame (repartition(col), no explicit
+    count) the narrow count projection shrinks shuffle map outputs to
+    ~4 B/row, so AQE would coalesce the measurement job's partitions
+    far harder than the full-width frame the caller consumes —
+    partition_sizes must instead report the DECLARED pre-coalescing
+    boundaries (shuffle.partitions buckets, empties included) and
+    restore the coalescing conf afterwards."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key, "true")
+    df = (
+        spark.range(2000)
+        .withColumn("host", (F.col("id") % 3).cast("string"))
+        .repartition(F.col("host"))
+    )
+    sizes = partition_sizes(df)
+    assert sum(sizes) == 2000
+    # declared partitioning: exactly shuffle.partitions buckets, the
+    # ≥1 empty ones (3 distinct hosts) included, no AQE coalescing
+    assert len(sizes) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert any(s == 0 for s in sizes)
+    assert spark.conf.get(key, "true") == before  # conf restored
+
+
 # -------------------------------------------------------------- grouped/salted
 
 

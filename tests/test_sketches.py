@@ -211,6 +211,52 @@ def test_kll_nan_filtered():
     assert k.n == 2
 
 
+def test_kll_coins_decorrelated_on_clamped_data():
+    """Length-capped page sizes with empty pages give every large
+    sorted buffer buf[0]=0 and buf[-1]=cap; a boundary-only coin digest
+    collapses to one shared parity sequence across uniform-sized
+    partitions (the exact ~P coherent-error correlation the data-mixed
+    coin exists to break), and an XOR whole-buffer digest cancels the
+    duplicate values clamped data is made of. The wrap-around SUM of
+    bit patterns is linear in element counts, so partitions with the
+    same boundaries but different zero/cap mixes must draw different
+    parity sequences."""
+    cap = 100.0
+    seqs = []
+    for part in range(8):
+        # deterministic mix: partition p holds (1000 + 250p) zeros and
+        # the rest cap — same n, same boundaries, different interiors
+        n_zero = 1000 + 250 * part
+        data = np.concatenate([np.zeros(n_zero), np.full(4000 - n_zero, cap)])
+        # interleave so every update chunk spans both values (keeps
+        # buf[0]=0, buf[-1]=cap in every compaction buffer)
+        rng_free_order = np.empty_like(data)
+        rng_free_order[0::2] = data[: 2000]
+        rng_free_order[1::2] = data[2000:]
+
+        sk = KLLSketch(128)
+        seq = []
+        orig = sk._coin
+
+        def spy(h, buf, _orig=orig, _seq=seq):
+            c = _orig(h, buf)
+            _seq.append(c)
+            return c
+
+        sk._coin = spy
+        for chunk in np.split(rng_free_order, 40):
+            sk.update(chunk)
+        seqs.append(seq)
+
+    k = min(len(s) for s in seqs)
+    assert k > 10  # compactions actually happened
+    prefixes = {tuple(s[:k]) for s in seqs}
+    assert len(prefixes) >= 6, (
+        "clamped-data partitions share parity sequences: boundary-collapse "
+        f"regression ({len(prefixes)} distinct of 8)"
+    )
+
+
 # ------------------------------------------------- merge properties (all)
 
 

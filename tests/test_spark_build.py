@@ -1,11 +1,10 @@
 """Spark-layer tests: per-partition build + tree merge == single build,
-checkpoint/resume lineage, sharded build/probe, broadcast UDFs,
+sharded build/probe, broadcast UDFs, page sources,
 and the end-to-end text invariant through Arrow (FIXTURES.md §4).
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 import numpy as np
@@ -340,22 +339,6 @@ def test_cms_estimate_udf_never_under(spark, docs_df):
     assert bad == 0
 
 
-# ------------------------------------------------------------ checkpoint/resume
-
-
-def test_checkpoint_resume(spark, docs_df, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    urls = docs_df.select(F.col("url").alias("key")).repartition(4)
-    df1 = build_sketches(urls, "key", lambda: HyperLogLog(12), checkpoint_dir=ckpt)
-    merged1 = tree_merge(df1)
-    done = [f for f in os.listdir(ckpt) if f.startswith("part-") and f.endswith(".arrow")]
-    assert len(done) == 4
-    # resume: identical result without recompute (stored rows re-emitted)
-    df2 = build_sketches(urls, "key", lambda: HyperLogLog(12), checkpoint_dir=ckpt)
-    merged2 = tree_merge(df2)
-    assert merged1.to_bytes() == merged2.to_bytes()
-
-
 # ------------------------------------------------------------------- sharded
 
 
@@ -611,6 +594,18 @@ def test_read_pages_parquet(spark, docs_parquet):
     assert df.count() == 1000
 
 
+def test_read_pages_rejects_snapshot_on_parquet(spark, tmp_path):
+    """A silently dropped snapshot pin hands resume code an UNPINNED
+    read — must raise instead."""
+    from sketchlib.spark.sources import read_pages
+
+    p = str(tmp_path / "pages")
+    spark.createDataFrame([("u", "t")], "url string, text string").write.parquet(p)
+    with pytest.raises(ValueError, match="iceberg"):
+        read_pages(spark, p, fmt="parquet", snapshot_id=42)
+    assert read_pages(spark, p, fmt="parquet").count() == 1
+
+
 def test_delete_sharded(spark, docs_df):
     from pyspark.sql import functions as F
 
@@ -802,32 +797,6 @@ def test_sharded_probe_index_rejects_mixed_hash_strategies(spark):
         idx.destroy()
 
 
-def test_sharded_build_checkpoint_resume(spark, docs_df, tmp_path):
-    """North-rule lineage on the sharded path: a resumed build re-emits
-    the atomically published shard rows byte-identically instead of
-    re-folding, and partial checkpoints only skip the finished shards."""
-    import os
-
-    from sketchlib.spark.shard import build_sharded
-
-    keys = docs_df.select(F.col("url").alias("key"))
-    ck = str(tmp_path / "shard-ck")
-    first = build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=ck)
-    rows1 = {r.shard_id: bytes(r.state) for r in first.collect()}
-    # one published row per shard (plus the _meta.json fingerprint)
-    assert len([f for f in os.listdir(ck) if f.endswith(".arrow")]) == 4
-    resumed = build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=ck)
-    rows2 = {r.shard_id: bytes(r.state) for r in resumed.collect()}
-    assert rows1 == rows2  # byte-identical resume
-    # partial lineage: drop one shard's record -> only that shard rebuilds
-    victim = sorted(rows1)[0]
-    os.remove(os.path.join(ck, f"shard-{victim:06d}.arrow"))
-    partial = build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=ck)
-    rows3 = {r.shard_id: bytes(r.state) for r in partial.collect()}
-    assert rows3 == rows1  # deterministic rebuild matches the original
-    assert len([f for f in os.listdir(ck) if f.endswith(".arrow")]) == 4  # republished
-
-
 def test_build_sharded_input_already_partitioned_by_key(spark):
     """Input already hash-partitioned by the key into num_shards
     partitions (a distinct() at shuffle.partitions == num_shards): Spark
@@ -845,95 +814,6 @@ def test_build_sharded_input_already_partitioned_by_key(spark):
     assert sum(r.n_rows for r in rows) == 1000
     shards = spark.createDataFrame(rows)
     assert probe_sharded(keys, "key", shards, n).where("member").count() == 1000
-
-
-def test_old_format_state_dirs_fail_loudly(spark, tmp_path):
-    """State written under a previous row layout, shard routing
-    (pmod(xxhash64(key), n)) or streaming state layout must raise the
-    typed mismatch error, never be resumed, probed or misread: a
-    build_sharded checkpoint dir, build_sketches checkpoint dirs from
-    before the row format was fingerprinted and from row format 2 (npz
-    blobs), sharded stream state_dirs with a pointer file, incremental
-    state files with an ISB1/ISB2 header or none, and an incremental
-    epoch dir of layout 2 (npz blobs)."""
-    import json
-
-    from sketchlib.errors import CheckpointMismatchError
-    from sketchlib.spark.shard import build_sharded, shard_factory, shard_fingerprint
-    from sketchlib.streaming.incremental import IncrementalSketchBuilder
-    from sketchlib.streaming.sharded import ShardedStreamBuilder
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(100)], "key string")
-
-    shard_ck = tmp_path / "shard-ck"
-    shard_ck.mkdir()
-    (shard_ck / "_meta.json").write_text(json.dumps(
-        {"op": "build_sharded", "kind": "CuckooFilter", "key_col": "key", "num_shards": 4}
-    ))
-    (shard_ck / "shard-000000.arrow").write_bytes(b"old")
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        build_sharded(keys, "key", num_shards=4, cfg=_cfg(), checkpoint_dir=str(shard_ck))
-
-    part_meta = {"op": "build_sketches", "kind": "HyperLogLog", "key_col": "key",
-                 "numeric": False, "partitions": keys.rdd.getNumPartitions()}
-    for name, meta in (("part-ck", part_meta), ("part-ck-v2", {**part_meta, "format": 2})):
-        part_ck = tmp_path / name
-        part_ck.mkdir()
-        (part_ck / "_meta.json").write_text(json.dumps(meta))
-        (part_ck / "part-00000.arrow").write_bytes(b"old")
-        with pytest.raises(CheckpointMismatchError, match="different"):
-            build_sketches(keys, "key", lambda: HyperLogLog(10), checkpoint_dir=str(part_ck))
-
-    # pointer-file stream state_dirs: predating the fingerprint (none
-    # at all) and fingerprinted before the epoch layout (no "layout")
-    old_meta = shard_fingerprint("sharded_stream", "key", 4, shard_factory(4, _cfg()))
-    for name, meta in (("stream", None), ("stream-fp", old_meta)):
-        state = tmp_path / name
-        (state / "epoch-0").mkdir(parents=True)
-        (state / "epoch-0" / "_SUCCESS").write_text("")
-        (state / "CURRENT").write_text("0")
-        if meta is not None:
-            (state / "_meta.json").write_text(json.dumps(meta))
-        b = ShardedStreamBuilder("key", num_shards=4, state_dir=str(state), cfg=_cfg())
-        with pytest.raises(CheckpointMismatchError, match="different"):
-            b.process_batch(keys, 1)
-        with pytest.raises(CheckpointMismatchError, match="different"):
-            b.current_shards(spark)
-        assert (state / "CURRENT").read_text() == "0"  # nothing merged or moved
-
-    # incremental state files: ISB1 (batch id), ISB2 (batch id +
-    # lineage) and headerless blobs, given as the state path as before
-    old = HyperLogLog(12)
-    old.update([f"o{i}" for i in range(100)])
-    blob = old.to_bytes()
-    for name, raw in (
-        ("isb1.bin", b"ISB1" + (57).to_bytes(8, "little") + blob),
-        ("isb2.bin", b"ISB2" + (57).to_bytes(8, "little") + (7).to_bytes(8, "little") + blob),
-        ("raw.bin", blob),
-    ):
-        path = tmp_path / name
-        path.write_bytes(raw)
-        b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", str(path))
-        with pytest.raises(CheckpointMismatchError, match="different"):
-            b.process_batch(keys, 58)
-        with pytest.raises(CheckpointMismatchError, match="different"):
-            b.current(spark)
-        assert path.read_bytes() == raw  # nothing merged or moved
-
-    # an epoch dir of layout 2, whose epoch blobs are npz archives
-    state = tmp_path / "epochs-v2"
-    state.mkdir()
-    (state / "_meta.json").write_text(json.dumps(
-        {"op": "incremental_stream", "kind": "HyperLogLog", "key_col": "key", "layout": 2}
-    ))
-    (state / "epoch-0").write_bytes(b"PK\x03\x04old")
-    (state / "epoch-0.commit").write_text(json.dumps({"batch_id": 57, "lineage": 0}))
-    b = IncrementalSketchBuilder(lambda: HyperLogLog(12), "key", str(state))
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        b.process_batch(keys, 58)
-    with pytest.raises(CheckpointMismatchError, match="different"):
-        b.current(spark)
-    assert sorted(p.name for p in state.iterdir()) == ["_meta.json", "epoch-0", "epoch-0.commit"]
 
 
 def test_sharded_empty_shards_probe_and_delete(spark):

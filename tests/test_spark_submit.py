@@ -128,60 +128,90 @@ def test_spark_submit_warc_ingest_job(tmp_path):
     assert os.path.isdir(tmp_path / "out" / "shards")
 
 
+def _web_corpus(path, n: int = 3000, parts: int = 3) -> None:
+    """``parts`` parquet files (one scan partition each) of generated
+    pages whose first token break is U+00A0, U+2003 or U+3000 in turn,
+    ``n`` large enough that each partition's KLL compacts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.datagen import generate_documents
+
+    t = generate_documents(n, seed=7)
+    spaces = ("\u00a0", "\u2003", "\u3000")
+    text = [s.replace(" ", spaces[i % 3], 1) for i, s in enumerate(t.column("text").to_pylist())]
+    t = t.set_column(t.schema.get_field_index("text"), "text", pa.array(text, pa.string()))
+    path.mkdir()
+    for i in range(parts):
+        pq.write_table(t.slice(i * n // parts, n // parts), path / f"d{i}.parquet")
+
+
 @pytest.mark.skipif(
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not installed"
 )
 def test_spark_submit_web_build_job(tmp_path):
-    """web_build_job E2E through spark-submit, CHECKPOINTED path: the
-    resumable branch must honor the same fixed/{hll,cms,kll}.bin
-    contract as the fused path (a prior version silently dropped
-    cms.bin when --checkpoint was given), and every sidecar artifact
-    must land under --output via the Hadoop FS writer (metrics.json,
-    fixed/*.bin), not on the driver's local cwd."""
-    import pyarrow.parquet as pq
-
-    from sketchlib.datagen import generate_documents
+    """web_build_job E2E through spark-submit, three times on one
+    corpus: without --checkpoint, with a fresh --checkpoint dir, and
+    again on that dir, which resumes from the published partition rows.
+    fixed/{hll,cms,kll}.bin must be byte-identical across the three
+    (the flag decides only whether the build can resume), with non-ASCII
+    whitespace between tokens and KLLs that compact; every sidecar
+    artifact must land under --output via the Hadoop FS writer
+    (metrics.json, fixed/*.bin), not on the driver's local cwd."""
     from sketchlib.serde import loads
 
-    n = 300
-    (tmp_path / "in").mkdir()
-    pq.write_table(generate_documents(n, seed=7), tmp_path / "in" / "d.parquet")
+    n = 3000
+    _web_corpus(tmp_path / "in", n)
     job = tmp_path / "job.py"
     shutil.copy(os.path.join(REPO, "jobs", "web_build_job.py"), job)
-    out = subprocess.run(
-        [
-            SPARK_SUBMIT,
-            "--master", "local[4]",
-            "--conf", "spark.sql.shuffle.partitions=4",
-            "--conf", "spark.ui.enabled=false",
-            "--py-files", _build_zip(tmp_path),
-            str(job),
-            "--input", str(tmp_path / "in"),
-            "--output", str(tmp_path / "out"),
-            "--shards", "4",
-            "--checkpoint", str(tmp_path / "ckpt"),
-            "--cms-width", "4096",
-        ],
-        cwd=tmp_path,
-        env=_submit_env(),
-        capture_output=True,
-        text=True,
-        timeout=420,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    res = json.loads(out.stdout.splitlines()[-1])
-    assert res["rows"] == n
-    assert res["cuckoo_items"] == n  # urls are unique in the fixture
-    assert res["cuckoo_failures"] == 0
-    # full three-sketch contract on the checkpointed branch
-    for name in ("hll", "cms", "kll"):
-        blob = (tmp_path / "out" / "fixed" / f"{name}.bin").read_bytes()
-        assert len(blob) > 0
-        loads(blob)  # deserializes as a sketch
-    assert abs(res["hll_distinct_urls"] - n) / n < 0.1
-    assert (tmp_path / "out" / "metrics.json").exists()
-    kll = loads((tmp_path / "out" / "fixed" / "kll.bin").read_bytes())
+    zip_path = _build_zip(tmp_path)
+    ck = tmp_path / "ckpt"
+
+    def run(out_dir, *extra):
+        out = subprocess.run(
+            [
+                SPARK_SUBMIT,
+                "--master", "local[4]",
+                "--conf", "spark.sql.shuffle.partitions=4",
+                "--conf", "spark.ui.enabled=false",
+                # a partition's ~2 MB of text arrives as several batches,
+                # its page sizes alone would fit in one: a fold that
+                # scanned the sizes on their own got another KLL
+                "--conf", "spark.sql.execution.arrow.maxBytesPerBatch=1048576",
+                "--py-files", zip_path,
+                str(job),
+                "--input", str(tmp_path / "in"),
+                "--output", str(out_dir),
+                "--shards", "4",
+                "--cms-width", "4096",
+                *extra,
+            ],
+            cwd=tmp_path,
+            env=_submit_env(),
+            capture_output=True,
+            text=True,
+            timeout=420,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        res = json.loads(out.stdout.splitlines()[-1])
+        assert res["rows"] == n
+        assert res["cuckoo_failures"] == 0
+        assert abs(res["hll_distinct_urls"] - n) / n < 0.1
+        assert (out_dir / "metrics.json").exists()
+        return {
+            name: (out_dir / "fixed" / f"{name}.bin").read_bytes()
+            for name in ("hll", "cms", "kll")
+        }
+
+    plain = run(tmp_path / "plain")
+    fresh = run(tmp_path / "fresh", "--checkpoint", str(ck))
+    published = sorted(f for f in os.listdir(ck) if f.endswith(".arrow"))
+    assert published == [f"part-{pid:05d}.arrow" for pid in range(3)]
+    resumed = run(tmp_path / "resumed", "--checkpoint", str(ck))
+    assert fresh == plain and resumed == plain
+    kll = loads(plain["kll"])
     assert kll.n == n  # one page-size observation per doc
+    assert len(kll.compactors) > 1  # compacted: the merge order shows in the bytes
 
 
 @pytest.mark.skipif(
@@ -211,6 +241,10 @@ def test_spark_submit_py_files_two_cluster_sizes(tmp_path):
                 "--master", f"local-cluster[{workers},2,1024]",
                 "--conf", "spark.sql.shuffle.partitions=4",
                 "--conf", "spark.ui.enabled=false",
+                # a partition's ~2 MB of text arrives as several batches,
+                # its page sizes alone would fit in one: a fold that
+                # scanned the sizes on their own got another KLL
+                "--conf", "spark.sql.execution.arrow.maxBytesPerBatch=1048576",
                 "--py-files", zip_path,
                 str(job),
             ],

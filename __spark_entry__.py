@@ -245,12 +245,17 @@ def q_cuckoo_delete(spark, sf_dir):
     )
     keys = keys.localCheckpoint(eager=True)  # count + build + anti-join, one scan
     kept = keys.join(deleted, "key", "left_anti")
-    cfg = _sized_cuckoo_cfg(keys.count(), fingerprint_bits=16, hash_strategy="xx")
+    n_keys = keys.count()
+    cfg = _sized_cuckoo_cfg(n_keys, fingerprint_bits=16, hash_strategy="xx")
     merged = tree_merge(
         build_sketches(keys, "key", lambda: CuckooFilter(cfg))
     )
     assert merged.insert_failures == 0  # sized to the keyset: loud if not
-    gone = [r.key for r in deleted.limit(DELETE_COLLECT_CAP + 1).collect()]
+    # deleted is a subset of keys: within the cap a plain collect (one
+    # job) is bounded already; a CollectLimit runs more jobs
+    if n_keys > DELETE_COLLECT_CAP:
+        deleted = deleted.limit(DELETE_COLLECT_CAP + 1)
+    gone = [r.key for r in deleted.collect()]
     if len(gone) > DELETE_COLLECT_CAP:
         raise ValueError(
             f"more than {DELETE_COLLECT_CAP} delete keys for a driver-side delete; "

@@ -101,44 +101,38 @@ def state_row(sk, n_rows: int, **key) -> pa.RecordBatch:
     return pa.RecordBatch.from_pylist([row], schema=_state_schema(*key))
 
 
-def _empty_states(factories) -> dict:
-    """``{factory: (sketch class, serialized empty state)}``: one empty
-    instance of each DISTINCT factory (the flagship's shard filters
-    share one), dropped as soon as it is serialized. The merge's byte
-    gate (``state_bytes_hint``) and the checkpoint fingerprint
-    (``sketch_fingerprint``) read the same instances."""
-    states = {}
-    for fac in set(factories):
-        sk = fac()
-        states[fac] = type(sk), sk.to_bytes()
-    return states
+def _empty_states(factories: dict[str, Callable[[], object]]) -> tuple[int, dict]:
+    """One empty instance of each DISTINCT factory (the flagship's shard
+    filters share one), serialized and dropped at once. Returns ONE
+    partition's state size (every name's empty state) and each name's
+    ``Kind:digest`` of that state, which pins the geometry (HLL
+    precision, CMS width × depth, KLL k, cuckoo capacity and
+    fingerprint bits, ...)."""
+    empty = {}
+    for fac in set(factories.values()):
+        blob = (sk := fac()).to_bytes()
+        empty[fac] = len(blob), f"{type(sk).__name__}:{hashlib.sha256(blob).hexdigest()[:16]}"
+    size = sum(empty[fac][0] for fac in factories.values())
+    return size, {name: empty[fac][1] for name, fac in factories.items()}
 
 
-def state_bytes_hint(*factories, empty: dict | None = None) -> int:
+def state_bytes_hint(*factories) -> int:
     """Driver-side estimate of ONE partition row group's serialized
-    state size, from ``_empty_states`` (``empty`` when the caller holds
-    them already). Costs ~ms and no Spark job. Exact for array-backed
-    sketches (CMS, HLL, cuckoo, Bloom — their state arrays are
-    config-sized, identical empty or full); an UNDER-estimate for
-    growing sketches (KLL, t-digest), which are KB-scale where the
-    array-backed ones are the MB-scale states the byte gate exists
-    for."""
-    empty = empty or _empty_states(factories)
-    return sum(len(empty[fac][1]) for fac in factories)
+    state size (``_empty_states``). Costs ~ms and no Spark job. Exact
+    for array-backed sketches (CMS, HLL, cuckoo, Bloom — their state
+    arrays are config-sized, identical empty or full); an
+    UNDER-estimate for growing sketches (KLL, t-digest), which are
+    KB-scale where the array-backed ones are the MB-scale states the
+    byte gate exists for."""
+    return _empty_states(dict(enumerate(factories)))[0]
 
 
-def sketch_fingerprint(factories: dict[str, Callable[[], object]], empty: dict | None = None) -> dict:
+def sketch_fingerprint(factories: dict[str, Callable[[], object]]) -> dict:
     """The checkpoint fingerprint of each named factory: its sketch
-    kind and a digest of its serialized empty state, which pins the
-    geometry (HLL precision, CMS width × depth, KLL k, cuckoo capacity
-    and fingerprint bits, ...). A resume under another geometry would
-    re-emit states of the old one; ``ensure_checkpoint_meta`` raises
-    instead. ``empty``: the caller's ``_empty_states``."""
-    empty = empty or _empty_states(factories.values())
-    return {
-        name: f"{empty[fac][0].__name__}:{hashlib.sha256(empty[fac][1]).hexdigest()[:16]}"
-        for name, fac in factories.items()
-    }
+    kind and a digest of its serialized empty state (``_empty_states``).
+    A resume under another geometry would re-emit states of the old
+    one; ``ensure_checkpoint_meta`` raises instead."""
+    return _empty_states(factories)[1]
 
 
 def state_field(state_bytes: int) -> StructField:
@@ -174,14 +168,14 @@ def fold_partitions(
     to ids and double-count or drop them on resume. A mismatch raises
     ``CheckpointMismatchError``. The empty sketches the fingerprint
     reads are the ones the state size is taken from."""
-    empty = _empty_states(factories.values())
+    state_bytes, sketches = _empty_states(factories)
     if checkpoint_dir:
         from .checkpoint import ensure_checkpoint_meta
 
         meta = {
             "format": ROW_FORMAT,
             "columns": list(df.columns),
-            "sketches": sketch_fingerprint(factories, empty),
+            "sketches": sketches,
             **(step_meta or {}),
             "partitions": df.rdd.getNumPartitions(),
         }
@@ -209,7 +203,7 @@ def fold_partitions(
 
         yield from taskfs.checkpointed(checkpoint_dir, f"part-{pid:05d}", build)
 
-    state = state_field(state_bytes_hint(*factories.values(), empty=empty))
+    state = state_field(state_bytes)
     return df.mapInArrow(fold, StructType([*SKETCH_SCHEMA.fields[:-1], state]))
 
 

@@ -195,13 +195,17 @@ def test_spark_submit_web_build_job(tmp_path):
         assert out.returncode == 0, out.stderr[-2000:]
         res = json.loads(out.stdout.splitlines()[-1])
         assert res["rows"] == n
+        assert res["cuckoo_items"] == n  # urls are unique in the corpus
         assert res["cuckoo_failures"] == 0
         assert abs(res["hll_distinct_urls"] - n) / n < 0.1
         assert (out_dir / "metrics.json").exists()
-        return {
+        blobs = {
             name: (out_dir / "fixed" / f"{name}.bin").read_bytes()
             for name in ("hll", "cms", "kll")
         }
+        for blob in blobs.values():
+            loads(blob)  # deserializes as a sketch
+        return blobs
 
     plain = run(tmp_path / "plain")
     fresh = run(tmp_path / "fresh", "--checkpoint", str(ck))
@@ -241,10 +245,6 @@ def test_spark_submit_py_files_two_cluster_sizes(tmp_path):
                 "--master", f"local-cluster[{workers},2,1024]",
                 "--conf", "spark.sql.shuffle.partitions=4",
                 "--conf", "spark.ui.enabled=false",
-                # a partition's ~2 MB of text arrives as several batches,
-                # its page sizes alone would fit in one: a fold that
-                # scanned the sizes on their own got another KLL
-                "--conf", "spark.sql.execution.arrow.maxBytesPerBatch=1048576",
                 "--py-files", zip_path,
                 str(job),
             ],

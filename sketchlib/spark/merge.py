@@ -17,20 +17,15 @@ so no caller passes it. A frame without it (``tree_merge_df`` output, a
 ``createDataFrame(…, SKETCH_SCHEMA)`` table) is gated on partitions
 only.
 
-Level 1 is a deliberate RDD ``mapPartitions`` — one of the rare spots
-where the imperative per-partition escape hatch is the *correct* tool:
-the rows are KB–MB sketch blobs (never data rows), and an RDD iterator
-hands them over ONE AT A TIME, so task memory is exactly
-running_state + one incoming blob no matter how many scan partitions
-fed the group. Both dataframe-native shapes materialize multi-blob
-batches the UDF can't refuse: ``groupBy().applyInPandas`` builds the
-whole group as one pandas frame (~P/FANOUT blobs), and ``mapInArrow``
-materializes up to ``spark.sql.execution.arrow.maxRecordsPerBatch``
-rows (10k) per input batch. Spark 4.1 also cuts a ``mapInArrow`` batch
-at ``spark.sql.execution.arrow.maxBytesPerBatch`` (``get_spark`` sets
-4 MiB), but only after the row that crosses it: a batch still holds
-at least one whole blob, and the cap is a session-wide conf that every
-other Arrow stage of the job shares, so a merge cannot pick its own.
+Every executor-level merge (``tree_merge_df``, ``merge_keyed`` and
+``udfs.cms_heavy_hitters``) has one shape: the JVM does the exchange,
+then one ``mapInArrow`` task pulls the rows out of each Arrow batch one
+at a time (``arrow_rows``) and streams them through a running fold.
+A task's memory is its running states plus ONE Arrow input batch; a
+batch ends after the row that crosses
+``spark.sql.execution.arrow.maxBytesPerBatch``, so it holds at most
+that cap plus one whole blob: 4 MiB under ``get_spark``, 64 MiB at
+Spark's default.
 
 Shuffle volume: FANOUT × state_size — KBs–MBs, never data-scale.
 """
@@ -59,9 +54,10 @@ def fold_states(rows) -> dict:
 
     One running sketch per name; each incoming blob is merged, then
     dropped. Fed by an iterator that hands rows over one at a time
-    (an RDD partition, a collected list), memory is n_names ×
-    state_size + ONE blob no matter how many rows it yields. The same
-    fold runs on the driver (direct merge) and inside level-1 tasks."""
+    (``arrow_rows`` of a task's batches, a collected list), memory is
+    n_names × state_size + ONE blob no matter how many rows it yields.
+    The same fold runs on the driver (direct merge) and inside level-1
+    tasks."""
     acc: dict = {}
     for name, part, n, blob in rows:
         sk = loads(bytes(blob))
@@ -74,31 +70,38 @@ def fold_states(rows) -> dict:
     return acc
 
 
-def fold_groups_rdd(rdd, fold):
-    """Round-robin routing of an RDD's rows to ``k`` = min(FANOUT,
-    partitions) merge groups + streaming per-group ``fold`` (shared by
-    tree_merge_df and udfs.cms_heavy_hitters — keep the routing in ONE
-    place).
+def arrow_rows(batches):
+    """The rows of a ``mapInArrow`` task's batches as tuples, ONE row at
+    a time. The last column (the state) comes out as a zero-copy
+    ``pa.Buffer`` view into its batch, so a fold that drops each blob
+    after merging it holds one batch and the blob it is merging."""
+    for rb in batches:
+        *keys, state = rb.columns
+        for i in range(rb.num_rows):
+            yield (*(c[i].as_py() for c in keys), state[i].as_buffer())
 
-    Keyed by ``(source_partition_index + row_index) % k`` — balanced
-    for ANY input, independent of the part_id column's diversity. A
-    ``part_id % k`` key (an earlier shape) collapses whenever part_id
-    is constant or low-cardinality — e.g. re-merging a frame that
-    already went through level 1 (its part_id is each group's minimum:
-    ≤k distinct values), or unioned/synthesized rows sharing part_id=0
-    — routing everything to a few tasks while the rest idle. The
-    grouping itself is arbitrary: every fold is associative +
-    commutative, so only balance matters. Keys are 0..k-1 ints and
-    ``partitionBy``'s portable_hash is the identity on small
-    non-negative ints, so group j lands in partition j — exactly one
-    group per task."""
-    k = min(FANOUT, max(rdd.getNumPartitions(), 1))
 
-    def route(idx, it):
-        for i, row in enumerate(it):
-            yield ((idx + i) % k, row)
+def fold_groups(df, fold, schema):
+    """Round-robin routing of ``df``'s rows to ``k`` = min(FANOUT,
+    partitions) merge groups, then ``fold`` over each group's rows
+    (``arrow_rows``; ``fold`` yields Arrow batches of ``schema``).
+    Shared by tree_merge_df and udfs.cms_heavy_hitters — keep the
+    routing in ONE place.
 
-    return rdd.mapPartitionsWithIndex(route).partitionBy(k).values().mapPartitions(fold)
+    The group of a row is ``(source partition + row index) % k``,
+    computed in the JVM (``monotonically_increasing_id`` carries the
+    row index in its low 33 bits), and ``repartitionById`` sends group
+    j to task j: one group per task, balanced for ANY input. A key on
+    ``part_id`` collapses when part_id is constant or low-cardinality
+    (a re-merged level-1 output, unioned part_id=0 rows); hashing the k
+    group ids puts several groups on one task and none on others; the
+    bare id modulo 16 sends every one-row partition to group 0 (2^33 ≡
+    0 mod 16). Every fold is associative + commutative, so only
+    balance matters."""
+    k = min(FANOUT, max(df.rdd.getNumPartitions(), 1))
+    g = f"pmod(spark_partition_id() + (monotonically_increasing_id() & {(1 << 33) - 1}), {k})"
+    routed = df.selectExpr("*", f"CAST({g} AS INT) AS _g").repartitionById(k, "_g").drop("_g")
+    return routed.mapInArrow(lambda batches: fold(arrow_rows(batches)), schema)
 
 
 def _direct_collect(frame):
@@ -130,10 +133,13 @@ def tree_merge_df(sketch_df):
 
     def fold(rows):
         for name, (sk, part, n) in fold_states(rows).items():
-            yield tuple(state_row(sk, n, sketch=name, part_id=part).to_pylist()[0].values())
+            yield state_row(sk, n, sketch=name, part_id=part)
 
-    rdd = fold_groups_rdd(sketch_df.select(*_FOLD_COLS).rdd, fold)
-    return sketch_df.sparkSession.createDataFrame(rdd, SKETCH_SCHEMA)
+    # merge_sketches passes the frame its gate read: selecting again
+    # would drop its cached RDD, and under AQE re-run upstream shuffles
+    # to count partitions
+    rows = sketch_df if tuple(sketch_df.columns) == _FOLD_COLS else sketch_df.select(*_FOLD_COLS)
+    return fold_groups(rows, fold, SKETCH_SCHEMA)
 
 
 def merge_keyed(df, key: str):
@@ -142,18 +148,18 @@ def merge_keyed(df, key: str):
     per key the states merge associatively and the row counts add.
     Rows are hash-partitioned by ``key``, sorted within each task and
     streamed through ``fold_states`` one key at a time — per-task
-    memory is ONE running state plus ONE incoming blob however many
-    keys the task holds, never a materialized group."""
+    memory is ONE running state plus one Arrow input batch however
+    many keys the task holds, never a materialized group."""
 
-    def fold(rows):
-        for _, run in groupby(rows, itemgetter(0)):
+    def fold(batches):
+        for _, run in groupby(arrow_rows(batches), itemgetter(0)):
             for k, (sk, _, n) in fold_states(run).items():
-                yield tuple(state_row(sk, n, **{key: k}).to_pylist()[0].values())
+                yield state_row(sk, n, **{key: k})
 
     # fold_states' min-part column means nothing for keyed tables
     rows = df.repartition(key).sortWithinPartitions(key)
     rows = rows.selectExpr(key, "0 AS part", "n_rows", "state")
-    return df.sparkSession.createDataFrame(rows.rdd.mapPartitions(fold), keyed_schema(key))
+    return rows.mapInArrow(fold, keyed_schema(key))
 
 
 def _direct_merge(frame, direct_partitions: int = DIRECT_PARTITIONS) -> bool:
@@ -177,8 +183,8 @@ def merge_sketches(sketch_df, direct_partitions: int = DIRECT_PARTITIONS) -> dic
     is SKIPPED — one ``collect`` of the state rows, folded driver-side
     one blob at a time. The build stage keeps its full scan parallelism
     because ``collect`` is a plain job over the existing partitions.
-    Measured on the 800k-doc bench corpus (65 blob rows): the level-1
-    RDD route+partitionBy+fold costs 1.1-1.7 s of pure task/python-
+    Measured on the 800k-doc bench corpus (65 blob rows), when level 1
+    was an RDD shuffle and fold: it cost 1.1-1.7 s of pure task/python-
     shuffle overhead where the direct collect-fold costs 0.6 s — two
     extra stages buy nothing until the blob count is large enough that
     a single driver pull would be GBs.

@@ -223,11 +223,11 @@ def cms_heavy_hitters(
     estimates, so floor inflation never reaches the output. Partial
     rows then merge behind the same gate as every sketch frame
     (``merge._direct_merge``; their ``state`` field carries the CMS
-    state size): one collect + driver fold, or ``merge.fold_groups_rdd``
-    streaming executor folds (the groupBy().applyInPandas shape
-    merge.py documents as the multi-blob materialization anti-pattern
-    is exactly what this replaced). Rows shuffled: ≤``merge.FANOUT`` ×
-    (state + candidate list) — k-scale, not data-scale.
+    state size): one collect + driver fold, or the executor level
+    every blob merge shares (``merge.fold_groups``: a JVM round-robin
+    exchange, then one ``mapInArrow`` streaming each group's rows).
+    Rows shuffled: ≤``merge.FANOUT`` × (state + candidate list) —
+    k-scale, not data-scale.
 
     Any key type is accepted — keys are cast to string up front (the
     same canonicalization the CMS hash applies), so a bigint user_id
@@ -237,17 +237,19 @@ def cms_heavy_hitters(
     """
     from collections.abc import Iterator
 
-    import pyarrow as pa
-
     from ..sketches import CountMinSketch
     from .build import state_bytes_hint, state_field
-    from .merge import _direct_collect, _direct_merge, fold_groups_rdd
+    from .merge import _direct_collect, _direct_merge, fold_groups
 
     cms_state = state_field(state_bytes_hint(lambda: CountMinSketch(width=width, depth=depth)))
     PARTIAL_SCHEMA = StructType([StructField("cand", ArrayType(StringType())), cms_state])
+    arrow_partial = pa.schema([("cand", pa.list_(pa.string())), ("state", pa.binary())])
     emit_n = candidate_factor * k
     prune_keep = 8 * emit_n
     prune_at = 32 * emit_n
+
+    def partial(cands, cms) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict({"cand": [cands], "state": [cms.to_bytes()]}, schema=arrow_partial)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cms = CountMinSketch(width=width, depth=depth)
@@ -270,38 +272,32 @@ def cms_heavy_hitters(
                 counts, floor, vals, cnts, prune_at, prune_keep
             )
         top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:emit_n]
-        yield pa.RecordBatch.from_pydict(
-            {"cand": [[t[0] for t in top]], "state": [cms.to_bytes()]},
-            schema=pa.schema([("cand", pa.list_(pa.string())), ("state", pa.binary())]),
-        )
+        yield partial([t[0] for t in top], cms)
 
     keys = df.select(F.col(key_col).cast("string").alias("key"))
     partials = keys.mapInArrow(fold, PARTIAL_SCHEMA)
 
-    def _fold_partial_rows(rows):
-        """Streaming per-row fold of (cand, state) tuples — one running
+    def merge_partials(rows):
+        """Streaming per-row fold of (cand, state) rows → (sorted
+        candidates, merged CMS), or nothing for no rows — one running
         (cms, cand-set), one incoming blob resident at a time (same
         memory contract as merge.fold_states)."""
-        cms = None
-        cands: set = set()
+        cms, cands = None, set()
         for cand, blob in rows:
-            other = loads(blob)
-            if cms is None:
-                cms = other
-            else:
-                cms.merge(other)
+            cms = loads(blob) if cms is None else cms.merge(loads(blob))
             cands.update(cand)
         if cms is not None:
-            yield (sorted(cands), cms.to_bytes())
+            yield sorted(cands), cms
 
     if _direct_merge(partials):
         rows = _direct_collect(partials)
     else:
-        rows = fold_groups_rdd(partials.rdd, _fold_partial_rows).collect()
-    merged = list(_fold_partial_rows(rows))
-    if not merged:
+        groups = fold_groups(partials, lambda rs: (partial(*m) for m in merge_partials(rs)), PARTIAL_SCHEMA)
+        rows = groups.collect()
+    merged = next(merge_partials(rows), None)
+    if merged is None:
         return []
-    cand_list, blob = merged[0]
-    est = loads(blob).estimate(cand_list)
+    cand_list, cms = merged
+    est = cms.estimate(cand_list)
     ranked = sorted(zip(cand_list, est), key=lambda kv: (-int(kv[1]), kv[0]))
     return [(c, int(e)) for c, e in ranked[:k]]

@@ -408,7 +408,8 @@ def read_warc(
     # binaryFile prunes unrequested columns: selecting only `path` is a
     # listing, not a read (the count below is a metadata-only job, paid
     # once at plan-construction). EXACTLY one task per archive: a
-    # contiguous 0..n-1 index range-partitioned into n_files partitions
+    # contiguous 0..n-1 index used as the partition id of n_files
+    # partitions (``repartitionById``: no range-bounds sampling job)
     # — hash-partitioning paths would put 2-3 archives on some tasks
     # and none on ~1/e of them (balls in bins), making wall-clock 2-3×
     # the slowest archive instead of 1×. The index comes from
@@ -424,7 +425,7 @@ def read_warc(
         StructType().add("path", StringType()).add("_i", LongType()),
     )
     return (
-        indexed.repartitionByRange(n_files, "_i")
+        indexed.repartitionById(n_files, F.col("_i").cast("int"))
         .drop("_i")
         .mapInPandas(parse, PAGES_SCHEMA)
     )

@@ -3,15 +3,16 @@
 Every other test runs ``local[n]`` — one JVM, one Python-worker pool,
 shared lifecycle. The code round 4 added exists for multi-JVM clusters:
 ``taskfs.py`` task-side pyarrow.fs checkpoint writes, the broadcast
-worker probe cache keyed by JVM broadcast id (``shard.py``), and
-``fold_groups_rdd`` executor merges. ``local-cluster[2,2,1024]`` runs
+worker probe cache keyed by JVM broadcast id (``shard.py``), and the
+executor merge (``merge.fold_groups``: a JVM exchange, then
+``mapInArrow`` folds). ``local-cluster[2,2,1024]`` runs
 REAL separate executor JVMs with no cluster manager — the cheapest
 honest test of exactly those paths. These tests run ``tools/lc_job.py``
 at local[4] and local-cluster[2,2,1024] and assert:
 
 * order-insensitive sketch states (HLL registers, CMS counters) are
   BYTE-IDENTICAL across masters and across merge strategies (adaptive
-  direct vs forced fold_groups_rdd);
+  direct vs the forced executor merge);
 * order-sensitive state (KLL compaction, cuckoo kick sequences) agrees
   semantically — same n, rank-valid quantiles, same per-shard
   row/item/failure counts, no-false-negative probes;
@@ -95,15 +96,15 @@ def test_flagship_order_insensitive_sketches_byte_identical(flagship):
     """HLL (register max) and CMS (counter add) are order-insensitive:
     the merged state must be byte-identical no matter how many JVMs the
     partials were built in, and no matter which merge strategy folded
-    them (adaptive direct collect vs forced fold_groups_rdd)."""
+    them (adaptive direct collect vs the forced executor merge)."""
     lc, l4 = flagship["cluster"], flagship["local"]
     assert lc["hll_digest"] == l4["hll_digest"]
     assert lc["cms_digest"] == l4["cms_digest"]
     # direct path == executor-fold path, within AND across masters
-    assert lc["hll_digest_rdd"] == lc["hll_digest"]
-    assert lc["cms_digest_rdd"] == lc["cms_digest"]
-    assert l4["hll_digest_rdd"] == l4["hll_digest"]
-    assert l4["cms_digest_rdd"] == l4["cms_digest"]
+    assert lc["hll_digest_exec"] == lc["hll_digest"]
+    assert lc["cms_digest_exec"] == lc["cms_digest"]
+    assert l4["hll_digest_exec"] == l4["hll_digest"]
+    assert l4["cms_digest_exec"] == l4["cms_digest"]
 
 
 def test_flagship_kll_rank_valid_both_masters(flagship, docs_parquet):
@@ -121,7 +122,7 @@ def test_flagship_kll_rank_valid_both_masters(flagship, docs_parquet):
     n = len(sizes)
     for tag in ("cluster", "local"):
         r = flagship[tag]
-        assert r["kll_n"] == n and r["kll_n_rdd"] == n
+        assert r["kll_n"] == n and r["kll_n_exec"] == n
         for q, v in zip((0.1, 0.5, 0.9), r["kll_quantiles"]):
             rank = np.searchsorted(sizes, v) / n
             assert abs(rank - q) < 0.05, (tag, q, v, rank)

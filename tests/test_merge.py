@@ -3,16 +3,20 @@
 One gate (``merge._direct_merge``) picks the depth: a frame with ≤
 ``direct_partitions`` partitions whose state fits in ``DIRECT_BYTES``
 is collected and folded on the driver; past it the executor level
-(``tree_merge_df``, ``fold_groups_rdd``) streams the rows through ≤
-``FANOUT`` groups. The byte half reads one partition's state size from
-the metadata that ``build.fold_partitions`` stamps on the ``state``
-field. These tests pin:
+(``tree_merge_df`` over ``fold_groups``) routes the rows to ≤
+``FANOUT`` groups in the JVM and streams each group through one
+``mapInArrow`` fold. The byte half reads one partition's state size
+from the metadata that ``build.fold_partitions`` stamps on the
+``state`` field. These tests pin:
 
 * both depths give the same merged sketches (byte-identical for HLL,
   CMS and cuckoo; within the rank bound for KLL/t-digest);
 * the direct path never launches the executor level, and the executor
   level runs past the gate with ≤ FANOUT groups;
-* the executor folds stream one blob at a time;
+* every executor merge (``tree_merge_df``, ``merge_keyed``,
+  ``cms_heavy_hitters``) is one JVM exchange and one Arrow fold, with
+  no RDD scan, and survives task retries of the stage that feeds it;
+* the executor folds pull one row at a time out of each Arrow batch;
 * the stamped size survives what a caller does to a frame, and every
   gated caller (``tree_merge``, ``merge_sketches``,
   ``cms_heavy_hitters``, and ``build_web_pipeline`` in
@@ -62,16 +66,16 @@ def direct_calls(monkeypatch):
 
 @pytest.fixture
 def executor_groups(monkeypatch):
-    """The group count of each executor-level run (``fold_groups_rdd``)."""
+    """The group count of each executor-level run (``fold_groups``)."""
     groups = []
-    real = merge_mod.fold_groups_rdd
+    real = merge_mod.fold_groups
 
-    def spy(rdd, fold):
-        out = real(rdd, fold)
-        groups.append(out.getNumPartitions())
+    def spy(df, fold, schema):
+        out = real(df, fold, schema)
+        groups.append(out.rdd.getNumPartitions())
         return out
 
-    monkeypatch.setattr(merge_mod, "fold_groups_rdd", spy)
+    monkeypatch.setattr(merge_mod, "fold_groups", spy)
     return groups
 
 
@@ -90,7 +94,7 @@ def test_tree_merge_direct_equals_tree(spark, monkeypatch):
 
 
 def test_tree_merge_direct_skips_executor_level(spark, executor_groups):
-    """≤ threshold: fold_groups_rdd must not run at all."""
+    """≤ threshold: fold_groups must not run at all."""
     merged = tree_merge(build_sketches(_keys(spark, "d", 500, 8), "key", lambda: HyperLogLog(12)))
     assert executor_groups == []
     assert abs(merged.estimate() - 500) / 500 < 0.2
@@ -229,37 +233,47 @@ class _Blob:
         return self.payload
 
 
-def _liveness_rows(name: str, n_rows_total: int, n_items: int, alive: list):
-    """``(name, part, n_items, blob)`` rows of HLL(10) blobs that ASSERT
-    streaming: before handing out blob i+1, at most ONE earlier blob may
-    still be referenced (the fold's current loop variable). An eager
-    fold that materializes the group (e.g. a reverted ``rows =
-    list(rows)``, a pandas frame, or a multi-row arrow batch) keeps
-    every wrapper alive and trips the assert on the second pull —
-    CPython refcounting frees the dropped ones immediately (no cycles),
-    so no gc is needed."""
+def _one_at_a_time(rows, alive: list):
+    """Pass ``(…, blob)`` rows through, ASSERTING streaming: before
+    handing out row i+1, at most ONE earlier blob may still be
+    referenced (the fold's current loop variable). A fold or row source
+    that materializes the group (e.g. a reverted ``rows = list(rows)``,
+    a pandas frame, or ``to_pylist`` of an Arrow batch) keeps every
+    blob alive and trips the assert on the second pull — CPython
+    refcounting frees the dropped ones immediately (no cycles), so no
+    gc is needed."""
     import weakref
 
-    for i in range(n_rows_total):
+    for i, row in enumerate(rows):
         n_alive = sum(1 for w in alive if w() is not None)
         assert n_alive <= 1, (
             f"{n_alive} prior blobs alive before pull {i} — the fold "
             "materializes its group instead of streaming per-row"
         )
-        sk = HyperLogLog(10)
-        sk.update([f"u{i}-{j}" for j in range(n_items)])
-        b = _Blob(sk.to_bytes())
-        alive.append(weakref.ref(b))
-        yield (name, i, n_items, b)
+        alive.append(weakref.ref(row[-1]))
+        yield row
+
+
+def _hll_blob(i: int, n_items: int) -> bytes:
+    sk = HyperLogLog(10)
+    sk.update([f"u{i}-{j}" for j in range(n_items)])
+    return sk.to_bytes()
+
+
+def _liveness_rows(name: str, n_rows_total: int, n_items: int, alive: list):
+    """``(name, part, n_items, blob)`` rows of HLL(10) blobs, made one
+    at a time and handed out by ``_one_at_a_time``."""
+    rows = ((name, i, n_items, _Blob(_hll_blob(i, n_items))) for i in range(n_rows_total))
+    return _one_at_a_time(rows, alive)
 
 
 def test_tree_merge_streams_one_blob_at_a_time(spark, monkeypatch):
     """The executor level of tree_merge/tree_merge_df hands blobs to
-    the fold ONE AT A TIME (RDD iterator), never as a materialized
-    multi-blob batch: groupBy().applyInPandas builds the whole merge
-    group as one pandas frame and mapInArrow materializes 10k-row
-    arrow batches — both are tens-of-GB per task at MB-scale CMS
-    states and 100 TB / 128 MB scan-partition counts."""
+    the fold ONE AT A TIME, never as a materialized group:
+    groupBy().applyInPandas builds the whole merge group as one pandas
+    frame, tens of GB per task at MB-scale CMS states and 100 TB /
+    128 MB scan-partition counts. Its mapInArrow task holds one Arrow
+    input batch (``test_arrow_rows_hand_over_one_blob_at_a_time``)."""
     from sketchlib.spark.merge import fold_states
 
     alive = []
@@ -276,6 +290,33 @@ def test_tree_merge_streams_one_blob_at_a_time(spark, monkeypatch):
         direct_partitions=0,
     )
     assert abs(merged.estimate() - 2000) / 2000 < 0.1
+
+
+def test_arrow_rows_hand_over_one_blob_at_a_time():
+    """``merge.arrow_rows``, the row source of every executor merge,
+    pulls the rows out of a multi-row Arrow batch one at a time: each
+    state is a view into the batch that ``fold_states`` drops once
+    merged. Materializing the batch's rows trips the check."""
+    import pyarrow as pa
+
+    from sketchlib.serde import loads
+    from sketchlib.spark.merge import arrow_rows, fold_states
+
+    blobs = [_hll_blob(i, 10) for i in range(64)]
+    batch = pa.RecordBatch.from_pydict(
+        {"sketch": ["key"] * 64, "part_id": list(range(64)), "n_rows": [10] * 64, "state": blobs}
+    )
+    alive = []
+    out = fold_states(_one_at_a_time(arrow_rows([batch, batch.slice(0, 8)]), alive))
+    assert len(alive) == 72
+    sk, part, n = out["key"]
+    assert (part, n) == (0, 720)
+    oracle = loads(blobs[0])
+    for b in blobs[1:]:
+        oracle.merge(loads(b))
+    assert sk.to_bytes() == oracle.to_bytes()
+    with pytest.raises(AssertionError, match="prior blobs alive"):
+        fold_states(_one_at_a_time(iter(list(arrow_rows([batch]))), []))
 
 
 def test_merge_web_sketches_fold_is_per_row(spark, docs_df, monkeypatch):
@@ -448,3 +489,169 @@ def test_cms_heavy_hitters_routes_by_the_gate(spark, monkeypatch, direct_calls, 
     assert len(direct_calls) == 1 and executor_groups == [4]
     assert folded == direct
     assert [k for k, _ in direct] == ["hot0", "hot1", "hot2"]
+
+
+# ------------------------------------------------ executor merge plans
+
+
+def _exchanges(frame) -> int:
+    # a fresh Dataset: an executed one prints its final and initial plans
+    return frame.select("*")._jdf.queryExecution().executedPlan().toString().count("Exchange ")
+
+
+def test_executor_merges_are_one_exchange_and_one_arrow_fold(spark, monkeypatch):
+    """``tree_merge_df``, ``merge_keyed`` and ``cms_heavy_hitters`` past
+    the gate each add ONE JVM exchange and fold over it with
+    ``mapInArrow``: no rows come back through an RDD, whose
+    ``createDataFrame(rdd)`` would show as an ExistingRDD scan."""
+    from sketchlib.config import CuckooConfig
+    from sketchlib.spark.merge import merge_keyed
+    from sketchlib.spark.shard import build_sharded
+    from sketchlib.spark.udfs import cms_heavy_hitters
+
+    keys = spark.range(2000).selectExpr("concat('k', id % 500) AS key").repartition(8)
+    built = build_sketches(keys, "key", lambda: HyperLogLog(12))
+    cfg = CuckooConfig(capacity=4096, fingerprint_bits=16, hash_strategy="xx")
+    shards = build_sharded(keys, "key", 4, cfg=cfg)
+    shards = shards.unionByName(shards)
+
+    def one_exchange_one_fold(before, after):
+        plan = after.select("*")._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "MapInArrow" in plan, plan
+        assert _exchanges(after) == _exchanges(before) + 1, plan
+
+    one_exchange_one_fold(built, tree_merge_df(built))
+    one_exchange_one_fold(shards, merge_keyed(shards, "shard_id"))
+    levels = []
+    real = merge_mod.fold_groups
+
+    def spy(df, fold, schema):
+        levels.append((df, real(df, fold, schema)))
+        return levels[-1][1]
+
+    monkeypatch.setattr(merge_mod, "fold_groups", spy)
+    monkeypatch.setattr(merge_mod, "DIRECT_BYTES", 0)
+    assert len(cms_heavy_hitters(keys, "key", k=3, width=1 << 10)) == 3
+    (level,) = levels
+    one_exchange_one_fold(*level)
+
+
+# ------------------------------------------------ task retries
+
+_RETRY_JOB = r"""
+import json, os, sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+
+from sketchlib.config import CuckooConfig
+from sketchlib.cuckoo import CuckooFilter
+from sketchlib.sketches import HyperLogLog
+from sketchlib.spark.grouped import build_grouped_sketches, grouped_estimates
+from sketchlib.spark.shard import build_sharded, merge_sharded, probe_sharded
+
+faults = sys.argv[1]
+cfg = CuckooConfig(capacity=4096, fingerprint_bits=16, hash_strategy="xx")
+
+
+class FaultyHLL(HyperLogLog):
+    # a task's first attempt fails after folding a batch; the fault
+    # leaves a marker per (stage, partition)
+    def update(self, values):
+        super().update(values)
+        ctx = TaskContext.get()
+        if ctx.attemptNumber() == 0:
+            open(os.path.join(faults, f"hll-{ctx.stageId()}-{ctx.partitionId()}"), "w").close()
+            raise RuntimeError("injected fault")
+
+
+class FaultyCuckoo(CuckooFilter):
+    def update(self, values):
+        super().update(values)
+        ctx = TaskContext.get()
+        if ctx.attemptNumber() == 0:
+            open(os.path.join(faults, f"cuckoo-{ctx.stageId()}-{ctx.partitionId()}"), "w").close()
+            raise RuntimeError("injected fault")
+
+
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "1g")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    .getOrCreate()
+)
+rows = spark.range(3000).selectExpr("concat('h', id % 23) AS host", "concat('u', id % 2000) AS url")
+a = spark.range(400).selectExpr("concat('a', id) AS key")
+b = spark.range(400).selectExpr("concat('b', id) AS key")
+
+
+def grouped(hll):
+    g = build_grouped_sketches(rows, "host", "url", hll, salt_buckets=3)
+    return sorted((r.group_key, r.n_rows, r.state.hex()) for r in g.collect()), sorted(
+        tuple(r) for r in grouped_estimates(g).collect()
+    )
+
+
+def sharded(cuckoo):
+    m = merge_sharded(
+        build_sharded(a, "key", 4, factory=cuckoo).unionByName(build_sharded(b, "key", 4, factory=cuckoo))
+    )
+    m = spark.createDataFrame(m.collect(), m.schema)
+    hits = probe_sharded(a.unionByName(b), "key", m, 4).where("member").count()
+    return sorted((r.shard_id, r.n_rows, r.item_count) for r in m.collect()), hits
+
+
+clean_g, clean_s = grouped(lambda: HyperLogLog(12)), sharded(lambda: CuckooFilter(cfg))
+retried_g, retried_s = grouped(lambda: FaultyHLL(12)), sharded(lambda: FaultyCuckoo(cfg))
+print("RETRY_RESULT " + json.dumps({
+    "grouped_same": clean_g == retried_g,
+    "groups": len(clean_g[1]),
+    "shards_same": clean_s[0] == retried_s[0],
+    "shards": clean_s[0],
+    "hits": [clean_s[1], retried_s[1]],
+}))
+spark.stop()
+"""
+
+
+def test_executor_merges_survive_task_retries(tmp_path):
+    """Under ``local[2,2]`` (one retry per task) every first attempt of
+    a stage-1 ``fold_keyed`` task fails after folding a batch: the
+    grouped build's states and HLL ``grouped_estimates`` are
+    byte-identical to a fault-free run, and ``merge_sharded`` of two
+    ``build_sharded`` tables keeps each shard's rows and items and
+    answers every key."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    faults = tmp_path / "faults"
+    faults.mkdir()
+    env = {**os.environ, "PYTHONPATH": repo, "PYSPARK_PYTHON": sys.executable}
+    out = subprocess.run(
+        [sys.executable, "-c", _RETRY_JOB, str(faults)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=420,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = next(ln for ln in out.stdout.splitlines() if ln.startswith("RETRY_RESULT "))
+    res = json.loads(line.removeprefix("RETRY_RESULT "))
+    # in every stage that ran a faulty fold, each task failed once: 4
+    # shuffle partitions or shards, 8 where the union of two sharded
+    # builds runs as one stage
+    stages: dict = {}
+    for m in os.listdir(faults):
+        kind, stage, part = m.split("-")
+        stages.setdefault((kind, stage), set()).add(int(part))
+    assert {kind for kind, _ in stages} == {"hll", "cuckoo"}
+    assert all(parts in ({0, 1, 2, 3}, set(range(8))) for parts in stages.values()), stages
+    assert res["grouped_same"] and res["groups"] == 23
+    assert res["shards_same"] and sum(n for _, n, _ in res["shards"]) == 800
+    assert res["hits"] == [800, 800]

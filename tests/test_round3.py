@@ -1,16 +1,10 @@
 """Round-3 regression tests: Manku SimHash blocking, dedup_exact_hash
-single-shuffle shape, shard merge / probe-index / duplicate-state
-guards, CMS int64 headroom, connected-components wrap-proof fixpoint."""
+single-shuffle shape, CMS int64 headroom, connected-components
+wrap-proof fixpoint."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-from sketchlib.config import CuckooConfig
-
-
-def _cfg(capacity=4096):
-    return CuckooConfig(capacity=capacity, fingerprint_bits=16, hash_strategy="xx")
 
 
 # ----------------------------------------------------------- simhash (Manku)
@@ -104,60 +98,6 @@ def test_dedup_exact_hash_no_text_joinback(spark):
     # AQE repeats the plan under "== Initial Plan =="; count the final only
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange") == 1  # exactly the digest shuffle
-
-
-# ----------------------------------------------------------------- sharding
-
-
-def test_merge_sharded_union_of_builds(spark):
-    """Two incremental sharded builds union + merge_sharded into one
-    row per shard whose filter answers BOTH key sets."""
-    from sketchlib.spark.shard import build_sharded, merge_sharded, probe_sharded
-
-    a = spark.createDataFrame([(f"a{i}",) for i in range(300)], "key string")
-    b = spark.createDataFrame([(f"b{i}",) for i in range(300)], "key string")
-    sa = build_sharded(a, "key", num_shards=4, cfg=_cfg())
-    sb = build_sharded(b, "key", num_shards=4, cfg=_cfg())
-    merged = merge_sharded(sa.unionByName(sb)).persist()
-    per_shard = merged.groupBy("shard_id").count().where("count > 1").count()
-    assert per_shard == 0
-    both = a.unionByName(b)
-    hits = probe_sharded(both, "key", merged, num_shards=4).where("member").count()
-    assert hits == 600  # no false negatives across the merge
-    merged.unpersist()
-
-
-def test_delete_sharded_rejects_duplicate_state_rows(spark):
-    """A malformed shard table (two state rows for one shard) must fail
-    loudly instead of silently dropping the extra rows' state."""
-    from sketchlib.spark.shard import build_sharded, delete_sharded
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(200)], "key string")
-    shards = build_sharded(keys, "key", num_shards=2, cfg=_cfg())
-    doubled = shards.unionByName(shards)
-    dels = spark.createDataFrame([("k1",)], "key string")
-    with pytest.raises(Exception, match="state\\s+rows|state rows"):
-        delete_sharded(doubled, dels, "key", num_shards=2).collect()
-
-
-def test_sharded_probe_index_reuse(spark):
-    """A prebuilt ShardedProbeIndex answers repeated probe calls with
-    ONE broadcast (no per-call collect) and identical results to the
-    direct path; destroy() releases it."""
-    from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(500)], "key string")
-    shards = build_sharded(keys, "key", num_shards=4, cfg=_cfg()).persist()
-    idx = ShardedProbeIndex.from_shards(shards)
-    assert idx.state_bytes > 0
-    for _ in range(3):  # loop probing: reuses the one broadcast
-        hits = probe_sharded(keys, "key", num_shards=4, index=idx).where("member").count()
-        assert hits == 500
-    absent = spark.createDataFrame([(f"zz{i}",) for i in range(500)], "key string")
-    fp = probe_sharded(absent, "key", num_shards=4, index=idx).where("member").count()
-    assert fp <= 5  # FPR bound at 16-bit fingerprints
-    idx.destroy()
-    shards.unpersist()
 
 
 # ----------------------------------------------------------------- sampling
@@ -277,27 +217,6 @@ def test_hll_set_ops_estimates_within_bound():
     # inputs must be untouched (copy-merge)
     assert abs(a.estimate() - 20000) <= sig * 20000 + 1
     assert abs(b.estimate() - 20000) <= sig * 20000 + 1
-
-
-# ------------------------------------------------------ generic shard factory
-
-
-def test_build_sharded_generic_factory_bloom(spark):
-    """The shard layer is sketch-generic: a Bloom factory builds and
-    probes through the same routed layout (update/contains protocol)."""
-    from sketchlib.sketches import BloomFilter
-    from sketchlib.spark.shard import build_sharded, probe_sharded
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(400)], "key string")
-    shards = build_sharded(
-        keys, "key", num_shards=4, factory=lambda: BloomFilter(capacity=4096, fp_rate=0.001)
-    ).persist()
-    hits = probe_sharded(keys, "key", shards, num_shards=4).where("member").count()
-    assert hits == 400
-    absent = spark.createDataFrame([(f"zz{i}",) for i in range(1000)], "key string")
-    fp = probe_sharded(absent, "key", shards, num_shards=4).where("member").count()
-    assert fp <= 10  # fp_rate 1e-3 at n=400 per 4096-cap shards
-    shards.unpersist()
 
 
 # ---------------------------------------------------------------------- CMS

@@ -243,43 +243,6 @@ def test_lsh_candidate_pairs_checkpoint_dir(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in out.collect()} == {(1, 2)}
 
 
-def _cfg(capacity=4096):
-    from sketchlib import CuckooConfig
-
-    return CuckooConfig(capacity=capacity, fingerprint_bits=16, hash_strategy="xx")
-
-
-def test_probe_sharded_rejects_duplicate_state_rows_broadcast(spark):
-    """Mirror of delete_sharded's guard on the broadcast probe path: a
-    unioned/unmerged shard table (two state rows per shard) probed via
-    ShardedProbeIndex.from_shards would silently answer from PARTIAL
-    state (false negatives) — it must fail loudly instead, pointing at
-    merge_sharded."""
-    from sketchlib.spark.shard import ShardedProbeIndex, build_sharded, probe_sharded
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(200)], "key string")
-    shards = build_sharded(keys, "key", num_shards=2, cfg=_cfg())
-    doubled = shards.unionByName(shards)
-    with pytest.raises(Exception, match="merge_sharded"):
-        probe_sharded(keys, "key", doubled, num_shards=2).collect()
-    with pytest.raises(Exception, match="merge_sharded"):
-        ShardedProbeIndex.from_shards(doubled)
-
-
-def test_probe_sharded_rejects_duplicate_state_rows_cogroup(spark):
-    """Same guard on the cogroup (large-state) path — forced by a zero
-    broadcast threshold."""
-    from sketchlib.spark.shard import build_sharded, probe_sharded
-
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(200)], "key string")
-    shards = build_sharded(keys, "key", num_shards=2, cfg=_cfg())
-    doubled = shards.unionByName(shards)
-    with pytest.raises(Exception, match="merge_sharded"):
-        probe_sharded(
-            keys, "key", doubled, num_shards=2, broadcast_threshold_bytes=0
-        ).collect()
-
-
 def test_warc_open_archive_stream_non_seekable(tmp_path):
     """Object-store streams are frequently forward-only: the gzip sniff
     must use peek, never seek. A raw stream whose seek raises must

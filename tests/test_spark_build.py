@@ -434,6 +434,22 @@ def test_read_warc_roundtrip(spark, tmp_path):
         assert all(r.warc_ts is not None for r in rows)
 
 
+def test_read_warc_one_archive_per_task(spark, tmp_path):
+    """Each archive of a multi-file read is parsed by its own task: the
+    i-th listed file goes to partition i, none shares or is split."""
+    from pyspark.sql.functions import spark_partition_id
+
+    from sketchlib.datagen import write_warc
+    from sketchlib.spark.warc import read_warc
+
+    for i in range(5):
+        write_warc(str(tmp_path / f"w{i}.warc"), 10 + i, seed=i)
+    df = read_warc(spark, str(tmp_path / "*.warc"))
+    sizes = sorted(r[0] for r in df.groupBy(spark_partition_id()).count().select("count").collect())
+    assert df.rdd.getNumPartitions() == 5
+    assert sizes == [10, 11, 12, 13, 14]
+
+
 def test_warc_parser_negative_content_length_terminates(spark):
     """A corrupt/malicious negative Content-Length must not move the
     cursor backward (previously an infinite loop re-yielding the same

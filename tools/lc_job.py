@@ -6,8 +6,8 @@ JSON result file the test compares across masters.
 Why this exists: every other test runs ``local[n]`` — ONE JVM, one
 Python-worker pool, one filesystem lifecycle. The cluster-shaped code
 (taskfs pyarrow.fs task-side checkpoint writes, the broadcast
-worker-level probe cache keyed by JVM broadcast id, fold_groups_rdd
-executor merges) exists for MULTI-JVM clusters, and
+worker-level probe cache keyed by JVM broadcast id, the executor
+merge's JVM exchange and mapInArrow folds) exists for MULTI-JVM clusters, and
 ``local-cluster[W,C,MB]`` is Spark's in-box way to run real separate
 executor JVMs without a cluster manager. tests/test_local_cluster.py
 runs this script at local[4] and local-cluster[2,2,1024] and asserts
@@ -17,7 +17,7 @@ semantically identical elsewhere).
 Modes:
   flagship  — build_web_pipeline (HLL/CMS/KLL + sharded cuckoo), merge
               through BOTH the adaptive direct path and the forced
-              fold_groups_rdd executor path, probe every url through
+              executor path (merge.fold_groups), probe every url through
               the broadcast index, record the shard exchange's
               partition → shard layout. Emits digests/counts.
   sharded   — build_sharded with optional --checkpoint (taskfs path)
@@ -76,15 +76,16 @@ def run_flagship(spark, docs_path: str) -> dict:
     )
 
     # same sketches merged through the FORCED executor fold path
-    # (direct_partitions=0): on local-cluster this runs fold_groups_rdd
-    # tasks in separate executor JVMs — the round-4 routing code the
-    # single-JVM suite never exercised across processes
+    # (direct_partitions=0): on local-cluster the JVM exchange routes
+    # the state rows to merge.fold_groups' mapInArrow tasks in separate
+    # executor JVMs — routing the single-JVM suite never exercises
+    # across processes
     factories = {
         "hll": lambda: HyperLogLog(14),
         "cms": lambda: CountMinSketch(width=1 << 12, depth=4),
         "kll": lambda: KLLSketch(200),
     }
-    rdd_fixed = merge_sketches(
+    exec_fixed = merge_sketches(
         build_web_sketches(docs, factories), direct_partitions=0
     )
 
@@ -122,12 +123,12 @@ def run_flagship(spark, docs_path: str) -> dict:
         "executors_plus_driver": _executor_count(spark),
         "hll_digest": _digest(fixed["hll"].to_bytes()),
         "cms_digest": _digest(fixed["cms"].to_bytes()),
-        "hll_digest_rdd": _digest(rdd_fixed["hll"].to_bytes()),
-        "cms_digest_rdd": _digest(rdd_fixed["cms"].to_bytes()),
+        "hll_digest_exec": _digest(exec_fixed["hll"].to_bytes()),
+        "cms_digest_exec": _digest(exec_fixed["cms"].to_bytes()),
         "hll_estimate": fixed["hll"].estimate(),
         "kll_n": int(kll.n),
         "kll_quantiles": [float(kll.quantile(q)) for q in (0.1, 0.5, 0.9)],
-        "kll_n_rdd": int(rdd_fixed["kll"].n),
+        "kll_n_exec": int(exec_fixed["kll"].n),
         "shards": {
             str(int(r.shard_id)): [int(r.n_rows), int(r.item_count), int(r.fail_count)]
             for r in shard_rows
